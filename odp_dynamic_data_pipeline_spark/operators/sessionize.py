@@ -14,10 +14,13 @@ Two implementations:
 
 ``pair_page_views``  -- window algebra, fully JVM-side (whole-stage codegen,
 no Python in the hot path).  Identity used: at any row, the register is
-non-empty iff the latest prior *start* is more recent than the latest prior
-*end* -- because every end either consumes the register or finds it already
-empty.  So an end emits iff ``prev_start > prev_end`` (or no prior end), with
-duration ``ts - prev_start``.
+non-empty iff the latest prior *start* comes after the latest prior *end*
+in walk order -- because every end either consumes the register or finds
+it already empty.  Walk order is ``(ts, input ordinal)``, the reference's
+stable sort by timestamp, so "after" compares positions in that order, not
+timestamps: a start in the same second as the preceding end is still
+after it.  An end emits iff ``prev_start_pos > prev_end_pos`` (or no prior
+end), with duration ``ts - ts of the latest prior start``.
 
 ``pair_page_views_exact`` -- applyInPandas running the literal register loop
 per group; the semantic reference the algebraic version is property-tested
@@ -51,23 +54,29 @@ def pair_page_views(
     duration_col: str = "page_view_duration",
 ) -> DataFrame:
     """Emit one row per consumed (start, end) pair:
-    (group_col, end ts, duration seconds as double)."""
-    order = [F.col(ts_col)] + ([F.col(tiebreak_col)] if tiebreak_col else [])
-    w = (
-        Window.partitionBy(group_col)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev_start = F.max(F.when(F.col(type_col) == start_type, F.col(ts_col))).over(w)
-    prev_end = F.max(F.when(F.col(type_col) == end_type, F.col(ts_col))).over(w)
+    (group_col, end ts, duration seconds as double).
+
+    ``tiebreak_col`` is the input ordinal that orders same-timestamp
+    events (input row order when None)."""
+    ordinal = F.col(tiebreak_col) if tiebreak_col else F.monotonically_increasing_id()
+    ordered = Window.partitionBy(group_col).orderBy(F.col(ts_col), F.col("__ord"))
+    w = ordered.rowsBetween(Window.unboundedPreceding, -1)
+    is_start = F.col(type_col) == start_type
+    is_end = F.col(type_col) == end_type
+    # ts is non-decreasing in walk order: the latest prior start has the max ts
+    prev_start = F.max(F.when(is_start, F.col(ts_col))).over(w)
+    prev_start_pos = F.max(F.when(is_start, F.col("__pos"))).over(w)
+    prev_end_pos = F.max(F.when(is_end, F.col("__pos"))).over(w)
     is_emit = (
-        (F.col(type_col) == end_type)
-        & prev_start.isNotNull()
-        & (prev_end.isNull() | (prev_start > prev_end))
+        is_end
+        & prev_start_pos.isNotNull()
+        & (prev_end_pos.isNull() | (prev_start_pos > prev_end_pos))
     )
     dur = F.col(ts_col).cast("double") - prev_start.cast("double")
     return (
-        df.withColumn("__dur", F.when(is_emit, dur))
+        df.withColumn("__ord", ordinal)
+        .withColumn("__pos", F.row_number().over(ordered))
+        .withColumn("__dur", F.when(is_emit, dur))
         .filter(F.col("__dur").isNotNull())
         .select(
             F.col(group_col),
@@ -87,6 +96,7 @@ def pair_page_views_exact(
     end_type: str = "page_view_end",
     duration_col: str = "page_view_duration",
     buckets: int | None = None,
+    tiebreak_col: str | None = None,
 ) -> DataFrame:
     """The literal register-walk (reference: src/batch_tlb.py:50-62) as an
     Arrow-batched per-group pandas function.
@@ -98,7 +108,11 @@ def pair_page_views_exact(
     in an in-kernel pandas groupby loop (~50 us per group) -- identical
     semantics, same output, one batch per bucket instead of one per key.
     None (default) keeps the one-group-per-key shape, right for
-    bounded-cardinality keys like the TLB clientId universe."""
+    bounded-cardinality keys like the TLB clientId universe.
+
+    ``tiebreak_col`` orders same-timestamp events, as in
+    :func:`pair_page_views`; without it they keep their row order within
+    the group, which a shuffle does not tie to input order."""
     out_schema = StructType(
         [
             df.schema[group_col],
@@ -119,7 +133,7 @@ def pair_page_views_exact(
         # That is three accumulate/shift passes over numpy arrays -- no
         # Python loop, identical semantics (overwrite on double start,
         # consume-once, ignore unmatched end).
-        pdf = pdf.sort_values(ts_col, kind="mergesort")
+        pdf = pdf.sort_values([ts_col] + ([tiebreak_col] if tiebreak_col else []), kind="mergesort")
         ts = pdf[ts_col].to_numpy()  # datetime64[ns]
         tp = pdf[type_col].to_numpy()
         n = len(ts)

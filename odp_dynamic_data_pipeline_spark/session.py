@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from odp_dynamic_data_pipeline_spark import class_archive
+
 # Confs that are safe (and required) to set at runtime on an externally
 # provided session, e.g. the driver's.
 RUNTIME_CONFS: dict[str, str] = {
@@ -154,18 +156,22 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard policy."""
+    """Build (or fetch) a SparkSession with the engine's standard policy.
+
+    A driver JVM this call launches starts on the class archive of
+    :mod:`.class_archive`, built here on first use."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    for k, v in {**BUILD_CONFS, **RUNTIME_CONFS}.items():
-        builder = builder.config(k, v)
+    confs = {**BUILD_CONFS, **RUNTIME_CONFS}
     if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for k, v in (extra_confs or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    confs.update(extra_confs or {})
+    with class_archive.launch(confs) as launch_confs:
+        for k, v in launch_confs.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
     return ensure_runtime_confs(spark)

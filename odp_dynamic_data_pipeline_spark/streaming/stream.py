@@ -43,24 +43,40 @@ def _parallel_sink_writes(*thunks) -> None:
     others read).  Retry semantics are unchanged -- every sink is an
     overwrite of a batch-keyed path (or a manifest commit whose replay
     rule already covers a crash between sinks), so a partially-written
-    fold replays identically whatever order the writes landed in.  Any
-    write failure propagates after all submitted writes settle, so the
-    enclosing foreachBatch still fails loudly."""
+    fold replays identically whatever order the writes landed in.  The
+    writes run on ``InheritableThread``s, so the caller's job group and
+    local properties (and cancellation by job group) reach their jobs.
+    Every write failure propagates after all writes settle, so the
+    enclosing foreachBatch still fails loudly: the first is raised, each
+    other one attached to it as a note."""
     if len(thunks) == 1:
         thunks[0]()
         return
-    from concurrent.futures import ThreadPoolExecutor
+    from pyspark import InheritableThread
 
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        errs = []
-        for f in futures:
-            try:
-                f.result()
-            except BaseException as e:  # noqa: BLE001 -- collect, raise below
-                errs.append(e)
-    if errs:
-        raise errs[0]
+    errs: list[BaseException | None] = [None] * len(thunks)
+
+    def run(i):
+        try:
+            thunks[i]()
+        except BaseException as e:  # noqa: BLE001 -- collect, raise below
+            errs[i] = e
+
+    threads = [InheritableThread(target=run, args=(i,)) for i in range(len(thunks))]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    failed = [e for e in errs if e is not None]
+    if failed:
+        import traceback
+
+        first = failed[0]
+        for other in failed[1:]:
+            first.add_note(
+                "concurrent sink write also failed:\n" + "".join(traceback.format_exception(other))
+            )
+        raise first
 
 
 def windowed_event_counts(

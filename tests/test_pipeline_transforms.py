@@ -188,6 +188,26 @@ def test_shipped_corpus_pipeline_compiles_and_curates(spark):
     assert chunks.count() == hand.count() > 0
 
 
+def test_shipped_curate_stage_chunks_scrubbed_text(spark, tmp_path):
+    """PII planted in a document never reaches a chunk of the shipped
+    curate stage: its chunk op reads scrub_pii's output, not the raw text."""
+    from pyspark.sql import functions as F
+
+    spec = yaml.safe_load(open("pipelines/corpus_curation_pipeline.yaml"))
+    spec["stages"] = {"curate": spec["stages"]["curate"]}
+    planted = ["alice.smith@example.com", "+1 (555) 010-4477"]
+    docs = load_table(spark, SF, "documents").orderBy("doc_id").limit(40)
+    docs = docs.withColumn("text", F.concat_ws(" ", F.lit(planted[0]), "text", F.lit(planted[1])))
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+
+    outs, _ = Pipeline(spec).compile(spark, path_vars={"sf": str(tmp_path)})
+    chunks = [r["chunk_text"] for r in outs["curate"].select("chunk_text").collect()]
+    assert chunks
+    text = " ".join(chunks)
+    assert "[EMAIL]" in text and "[PHONE]" in text
+    assert not any(p in c or "example.com" in c or "010-4477" in c for c in chunks for p in planted)
+
+
 def test_yaml_cyclic_mapping_dependency_raises(spark):
     """Two stages each consuming the mapping the other produces must fail
     LOUDLY at plan time (graphlib.CycleError), never hang or pick an

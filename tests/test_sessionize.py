@@ -19,7 +19,7 @@ T0 = dt.datetime(2024, 11, 16, 12, 0, 0)
 def mk_events(spark, seq):
     """seq: list of (client, offset_seconds, event_type)."""
     rows = [
-        (c, f"e{i}", T0 + dt.timedelta(seconds=off), t)
+        (c, f"e{i:06d}", T0 + dt.timedelta(seconds=off), t)
         for i, (c, off, t) in enumerate(seq)
     ]
     return spark.createDataFrame(rows, "clientId string, eventId string, event_time timestamp, eventType string")
@@ -27,13 +27,14 @@ def mk_events(spark, seq):
 
 def reference_walk(seq):
     """The reference's 13-line register loop (src/batch_tlb.py:50-62), in
-    plain Python, as ground truth."""
+    plain Python, as ground truth: a stable sort by time, so same-second
+    events keep their input order."""
     out = {}
     by_client = {}
     for c, off, t in seq:
         by_client.setdefault(c, []).append((off, t))
     for c, evs in by_client.items():
-        evs.sort()
+        evs.sort(key=lambda e: e[0])
         last_start = None
         total = []
         for off, t in evs:
@@ -111,20 +112,24 @@ def test_exact_pandas_matches_reference(spark, case):
 
 def test_property_random_sequences(spark):
     """Randomized property test: both implementations == plain-Python
-    reference on arbitrary event soups (unique timestamps per client)."""
+    reference on arbitrary event soups, with unique timestamps per client
+    (a, b) and with many same-second ties (c, d, e), where an end and the
+    next start in the same second pair in input order."""
     rng = random.Random(42)
     seq = []
     for c in ["a", "b", "c", "d"]:
-        offs = rng.sample(range(10_000), 120)
+        offs = rng.sample(range(10_000), 120) if c in "ab" else [rng.randrange(40) for _ in range(120)]
         for off in offs:
             t = rng.choice(["page_view_start", "page_view_end", "error", "click"])
             seq.append((c, off, t))
+    seq += [("e", 0, "page_view_start"), ("e", 5, "page_view_end"), ("e", 5, "page_view_start"), ("e", 9, "page_view_end")]
     df = mk_events(spark, seq)
     expected = {c: sorted(d) for c, d in reference_walk(seq).items() if d}
+    assert expected["e"] == [4.0, 5.0]
 
-    for impl in (lambda d: pair_page_views(d, tiebreak_col="eventId"), pair_page_views_exact):
+    for impl in (pair_page_views, pair_page_views_exact):
         actual = {}
-        for r in impl(df).collect():
+        for r in impl(df, tiebreak_col="eventId").collect():
             actual.setdefault(r["clientId"], []).append(r["page_view_duration"])
         assert {k: sorted(v) for k, v in actual.items()} == expected
 

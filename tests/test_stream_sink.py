@@ -40,3 +40,48 @@ def test_stream_to_partitioned_parquet(spark, tmp_path):
     pruned = read_parquet(spark, out, hour="2024111613")
     got = [r["eventId"] for r in pruned.collect()]
     assert got == ["e2"]
+
+
+def test_parallel_sink_writes_raise_every_failure(spark):
+    """Two failing writes both surface: the first is raised, the other
+    rides along as a note; the successful write still ran."""
+    import pytest
+
+    from odp_dynamic_data_pipeline_spark.streaming.stream import _parallel_sink_writes
+
+    ran = []
+
+    def fail(msg):
+        def thunk():
+            raise ValueError(msg)
+
+        return thunk
+
+    with pytest.raises(ValueError) as info:
+        _parallel_sink_writes(fail("first sink"), lambda: ran.append(1), fail("second sink"))
+    assert str(info.value) == "first sink"
+    assert "second sink" in "\n".join(info.value.__notes__)
+    assert ran == [1]
+
+
+def test_parallel_sink_writes_keep_callers_job_group(spark):
+    """The caller's job group reaches the writes' threads and their jobs."""
+    from odp_dynamic_data_pipeline_spark.streaming.stream import _parallel_sink_writes
+
+    sc = spark.sparkContext
+    seen = []
+
+    def write():
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+        spark.range(3).count()
+
+    sc.setJobGroup("fold-sinks", "sink writes")
+    try:
+        _parallel_sink_writes(write, write)
+        jobs = sc.statusTracker().getJobIdsForGroup("fold-sinks")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert seen == ["fold-sinks", "fold-sinks"]
+    assert len(jobs) >= 2
