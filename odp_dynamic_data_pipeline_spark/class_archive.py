@@ -34,8 +34,11 @@ reason: a truncated, junk or mismatched archive is caught before the JVM
 sees it (a truncated one would crash it with SIGBUS, a junk one would
 silently turn off even base CDS) and deleted so the next session rebuilds
 it; an archive the JVM still refuses is caught after start from the
-JVM's memory map.  A failed build leaves a ``.failed`` marker with the
-reason and is not retried until the marker is deleted.
+JVM's memory map.  A build that timed out or whose training run was
+killed (by the OOM killer, say) may not fail again, so the next session
+retries it; a training run that exited with an error leaves a ``.failed``
+marker with the reason, and the build is retried once the marker is a day
+old or deleted.
 """
 
 from __future__ import annotations
@@ -63,6 +66,8 @@ _DYNAMIC_MAGIC = 0xF00BABA8
 # bytes hashed at each end of the archive to fingerprint it
 _EDGE = 1 << 20
 _BUILD_TIMEOUT_S = 300
+# age of a .failed marker after which the build is tried again
+_RETRY_FAILED_S = 24 * 3600
 # JVM flags the archive depends on: heap size decides compressed oops
 _HEAP_FLAG = re.compile(
     r"^-(Xmx\S+|XX:MaxHeapSize=\S+|XX:[+-]UseCompressed(Oops|ClassPointers)"
@@ -296,15 +301,21 @@ def _resolve(paths: Paths, key: dict, confs: dict[str, str], empty: str) -> str 
 def _build(paths: Paths, key: dict, confs: dict[str, str], empty: str) -> str | None:
     """Build and publish the archive of ``paths`` (the caller holds its
     lock); return :func:`_problem` of the result."""
-    if os.path.exists(paths.failed):
-        with open(paths.failed) as f:
-            return f"build failed earlier: {f.read().strip()}; delete {paths.failed} to retry"
+    with contextlib.suppress(FileNotFoundError):
+        if time.time() - os.path.getmtime(paths.failed) < _RETRY_FAILED_S:
+            with open(paths.failed) as f:
+                reason = f.read().strip()
+            return f"build failed earlier: {reason}; retried a day later, or once {paths.failed} is deleted"
+        _remove(paths.failed)
     out = f"{paths.jsa}.tmp-{os.getpid()}"
     t = time.perf_counter()
     rc = _run_training(paths, confs, empty, out)
     if rc != 0 or not os.path.exists(out):
         _remove(out)
-        reason = f"training run {'exited ' if isinstance(rc, int) else ''}{rc}, see {paths.log}"
+        if isinstance(rc, str) or rc < 0:  # timed out or killed: may not repeat
+            reason = rc if isinstance(rc, str) else f"killed by signal {-rc}"
+            return f"build failed: training run {reason}, see {paths.log}; the next session retries"
+        reason = f"training run exited {rc}, see {paths.log}"
         with open(paths.failed, "w") as f:
             f.write(reason + "\n")
         return f"build failed: {reason}"

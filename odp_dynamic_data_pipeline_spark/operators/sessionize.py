@@ -42,6 +42,17 @@ from pyspark.sql.types import (
 )
 
 
+def _with_ordinal(df: DataFrame, tiebreak_col: str | None) -> DataFrame:
+    """``df`` plus ``__ord``, the order in which the walk takes events of
+    one timestamp: ``tiebreak_col`` when given, else the input ordinal --
+    ``monotonically_increasing_id`` taken here, before the pairing's
+    shuffle, so it follows the rows of each input partition in order and
+    the partitions in index order.  For a file scan that is file order
+    within a file (the reference reads one file per hour); rows of
+    different files order by Spark's file packing, not by name."""
+    return df.withColumn("__ord", F.col(tiebreak_col) if tiebreak_col else F.monotonically_increasing_id())
+
+
 def pair_page_views(
     df: DataFrame,
     *,
@@ -56,9 +67,8 @@ def pair_page_views(
     """Emit one row per consumed (start, end) pair:
     (group_col, end ts, duration seconds as double).
 
-    ``tiebreak_col`` is the input ordinal that orders same-timestamp
-    events (input row order when None)."""
-    ordinal = F.col(tiebreak_col) if tiebreak_col else F.monotonically_increasing_id()
+    Same-timestamp events walk in input order (:func:`_with_ordinal`);
+    ``tiebreak_col`` names a column that orders them instead."""
     ordered = Window.partitionBy(group_col).orderBy(F.col(ts_col), F.col("__ord"))
     w = ordered.rowsBetween(Window.unboundedPreceding, -1)
     is_start = F.col(type_col) == start_type
@@ -74,7 +84,7 @@ def pair_page_views(
     )
     dur = F.col(ts_col).cast("double") - prev_start.cast("double")
     return (
-        df.withColumn("__ord", ordinal)
+        _with_ordinal(df, tiebreak_col)
         .withColumn("__pos", F.row_number().over(ordered))
         .withColumn("__dur", F.when(is_emit, dur))
         .filter(F.col("__dur").isNotNull())
@@ -110,9 +120,8 @@ def pair_page_views_exact(
     None (default) keeps the one-group-per-key shape, right for
     bounded-cardinality keys like the TLB clientId universe.
 
-    ``tiebreak_col`` orders same-timestamp events, as in
-    :func:`pair_page_views`; without it they keep their row order within
-    the group, which a shuffle does not tie to input order."""
+    Same-timestamp events walk in input order, or by ``tiebreak_col``,
+    as in :func:`pair_page_views`."""
     out_schema = StructType(
         [
             df.schema[group_col],
@@ -133,7 +142,7 @@ def pair_page_views_exact(
         # That is three accumulate/shift passes over numpy arrays -- no
         # Python loop, identical semantics (overwrite on double start,
         # consume-once, ignore unmatched end).
-        pdf = pdf.sort_values([ts_col] + ([tiebreak_col] if tiebreak_col else []), kind="mergesort")
+        pdf = pdf.sort_values([ts_col, "__ord"], kind="mergesort")
         ts = pdf[ts_col].to_numpy()  # datetime64[ns]
         tp = pdf[type_col].to_numpy()
         n = len(ts)
@@ -159,6 +168,7 @@ def pair_page_views_exact(
             }
         )
 
+    df = _with_ordinal(df, tiebreak_col)
     if buckets is None:
         return df.groupBy(group_col).applyInPandas(walk, schema=out_schema)
 

@@ -36,7 +36,7 @@ def tlb_metrics(user_exp: DataFrame, traces: DataFrame, logs: DataFrame) -> Data
 
     ev = with_event_time(user_exp)
     pv = (
-        pair_page_views(ev, tiebreak_col="eventId")
+        pair_page_views(ev)
         .groupBy("clientId")
         .agg(F.sum("page_view_duration").alias("page_view_time"))
     )

@@ -211,29 +211,51 @@ def test_concurrent_misses_build_once(tmp_path):
 
 FAILING = textwrap.dedent(
     """
-    import os, sys
+    import json, os, sys, time
     sys.path.insert(0, {repo!r})
     from odp_dynamic_data_pipeline_spark import class_archive as ca
 
     def failing_training(paths, confs, empty, out):
         with open(os.path.join(paths.root, "trainings"), "a") as f:
             f.write("x")
-        return 1
+        return json.loads(sys.argv[2])
 
     ca._run_training = failing_training
     key = {{"fake": 2}}
     paths = ca.Paths(sys.argv[1], ca._digest(key))
     print(ca._resolve(paths, key, {{}}, sys.argv[1]))
     print(ca._resolve(paths, key, {{}}, sys.argv[1]))
+    if os.path.exists(paths.failed):
+        aged = time.time() - ca._RETRY_FAILED_S - 1
+        os.utime(paths.failed, (aged, aged))
+        print(ca._resolve(paths, key, {{}}, sys.argv[1]))
     """
 ).format(repo=REPO)
 
 
-def test_failed_build_is_reported_and_not_retried(tmp_path):
+def failing_builds(tmp_path, rc):
+    """The results of resolving an archive whose training run returns
+    ``rc``: twice, then once more after aging any ``.failed`` marker."""
     run = subprocess.run(
-        [sys.executable, "-c", FAILING, str(tmp_path)], capture_output=True, text=True, timeout=120
+        [sys.executable, "-c", FAILING, str(tmp_path), json.dumps(rc)],
+        capture_output=True, text=True, timeout=120,
     )
-    first, second = run.stdout.strip().splitlines()
+    assert run.returncode == 0, run.stderr[-3000:]
+    return run.stdout.strip().splitlines()
+
+
+def test_failed_build_is_retried_once_its_marker_is_a_day_old(tmp_path):
+    first, second, aged = failing_builds(tmp_path, 1)
     assert first.startswith("build failed: training run exited 1")
-    assert second.startswith("build failed earlier: training run exited 1") and ".failed to retry" in second
-    assert (tmp_path / "trainings").read_text() == "x"
+    assert second.startswith("build failed earlier: training run exited 1") and "a day later" in second
+    assert aged.startswith("build failed: training run exited 1")
+    assert (tmp_path / "trainings").read_text() == "xx"
+
+
+@pytest.mark.parametrize("rc", ["timed out after 300 s", -9], ids=["timeout", "killed"])
+def test_interrupted_build_is_retried_next_session(tmp_path, rc):
+    first, second = failing_builds(tmp_path, rc)
+    for result in (first, second):
+        assert result.startswith("build failed: training run") and "the next session retries" in result
+    assert (tmp_path / "trainings").read_text() == "xx"
+    assert not [n for n in os.listdir(tmp_path) if n.endswith(".failed")]

@@ -4,6 +4,7 @@ match the literal register-walk on every edge case."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import random
 
 import pytest
@@ -19,7 +20,7 @@ T0 = dt.datetime(2024, 11, 16, 12, 0, 0)
 def mk_events(spark, seq):
     """seq: list of (client, offset_seconds, event_type)."""
     rows = [
-        (c, f"e{i:06d}", T0 + dt.timedelta(seconds=off), t)
+        (c, f"e{i}", T0 + dt.timedelta(seconds=off), t)
         for i, (c, off, t) in enumerate(seq)
     ]
     return spark.createDataFrame(rows, "clientId string, eventId string, event_time timestamp, eventType string")
@@ -86,7 +87,7 @@ CASES = {
 def test_window_algebra_matches_reference(spark, case):
     seq = CASES[case]
     df = mk_events(spark, seq)
-    got = pair_page_views(df, tiebreak_col="eventId")
+    got = pair_page_views(df)
     actual = {}
     for r in got.collect():
         actual.setdefault(r["clientId"], []).append(r["page_view_duration"])
@@ -110,28 +111,106 @@ def test_exact_pandas_matches_reference(spark, case):
     }
 
 
-def test_property_random_sequences(spark):
-    """Randomized property test: both implementations == plain-Python
-    reference on arbitrary event soups, with unique timestamps per client
-    (a, b) and with many same-second ties (c, d, e), where an end and the
-    next start in the same second pair in input order."""
+def tie_sequence():
+    """Event soups with many same-second ties (c, d; first, so that their
+    ids span e0..e239), with unique timestamps per client (a, b), and
+    with an end and the next start in one second (e)."""
     rng = random.Random(42)
     seq = []
-    for c in ["a", "b", "c", "d"]:
+    for c in ["c", "d", "a", "b"]:
         offs = rng.sample(range(10_000), 120) if c in "ab" else [rng.randrange(40) for _ in range(120)]
         for off in offs:
             t = rng.choice(["page_view_start", "page_view_end", "error", "click"])
             seq.append((c, off, t))
     seq += [("e", 0, "page_view_start"), ("e", 5, "page_view_end"), ("e", 5, "page_view_start"), ("e", 9, "page_view_end")]
+    return seq
+
+
+def durations(df):
+    out = {}
+    for r in df.collect():
+        out.setdefault(r["clientId"], []).append(r["page_view_duration"])
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def test_property_random_sequences(spark):
+    """Randomized property test: both implementations == plain-Python
+    reference, same-second events in input order.  The eventIds are
+    unpadded like the reference's, so their string order is not input
+    order, and the rows span several partitions."""
+    seq = tie_sequence()
     df = mk_events(spark, seq)
+    assert df.rdd.getNumPartitions() > 1
     expected = {c: sorted(d) for c, d in reference_walk(seq).items() if d}
     assert expected["e"] == [4.0, 5.0]
 
     for impl in (pair_page_views, pair_page_views_exact):
-        actual = {}
-        for r in impl(df, tiebreak_col="eventId").collect():
-            actual.setdefault(r["clientId"], []).append(r["page_view_duration"])
-        assert {k: sorted(v) for k, v in actual.items()} == expected
+        assert durations(impl(df)) == expected
+        # the ties are dense enough that eventId string order breaks them
+        assert durations(impl(df, tiebreak_col="eventId")) != expected
+
+
+def test_input_order_survives_a_split_file_scan(spark, tmp_path):
+    """The input ordinal of a JSON-lines file read in several splits is
+    file order."""
+    from tests.conftest import temp_confs
+
+    seq = tie_sequence()
+    with open(tmp_path / "events.json", "w") as f:
+        for i, (c, off, t) in enumerate(seq):
+            ts = (T0 + dt.timedelta(seconds=off)).isoformat()
+            f.write(json.dumps({"clientId": c, "eventId": f"e{i}", "event_time": ts, "eventType": t}) + "\n")
+    expected = {c: sorted(d) for c, d in reference_walk(seq).items() if d}
+    with temp_confs(spark, {"spark.sql.files.maxPartitionBytes": "4096"}):
+        df = spark.read.schema(
+            "clientId string, eventId string, event_time timestamp, eventType string"
+        ).json(str(tmp_path / "events.json"))
+        assert df.rdd.getNumPartitions() > 4
+        for impl in (pair_page_views, pair_page_views_exact):
+            assert durations(impl(df)) == expected
+
+
+def test_tlb_metrics_pairs_same_second_end_and_start(spark, tmp_path):
+    """A reference-shaped hour (unpadded ids event1..event11) in which
+    client1's end event9 and next start event10 share a second: the TLB
+    job pairs both views, as the reference's stable sort by time does."""
+    from odp_dynamic_data_pipeline_spark.plans import tlb_metrics
+    from odp_dynamic_data_pipeline_spark.sources import readers, schemas
+
+    seq = [
+        ("client1", 0, "page_view_start"),
+        ("client2", 1, "page_view_start"),
+        ("client2", 4, "page_view_end"),
+    ] + [("client3", 5 + i, "click") for i in range(5)] + [
+        ("client1", 10, "page_view_end"),
+        ("client1", 10, "page_view_start"),
+        ("client1", 30, "page_view_end"),
+    ]
+    rows = [
+        {
+            "eventId": f"event{i + 1}",
+            "clientId": c,
+            "traceId": f"trace{i + 1}",
+            "timestamp": (T0 + dt.timedelta(seconds=off)).strftime("%Y-%m-%dT%H:%M:%SZ"),
+            "page": "/home",
+            "eventType": t,
+        }
+        for i, (c, off, t) in enumerate(seq)
+    ]
+    (tmp_path / "user_exp.json").write_text(json.dumps(rows, indent=1))
+    (tmp_path / "trace.json").write_text("[]")
+    (tmp_path / "log.json").write_text("[]")
+    user_exp = readers.read_json(spark, str(tmp_path / "user_exp.json"), schemas.USER_EXP_SCHEMA)
+    traces = readers.read_json(spark, str(tmp_path / "trace.json"), schemas.TRACE_SCHEMA)
+    logs = readers.read_json(spark, str(tmp_path / "log.json"), schemas.LOG_SCHEMA)
+    got = {r["clientId"]: r["page_view_time"] for r in tlb_metrics(user_exp, traces, logs).collect()}
+
+    want = {c: sum(d) for c, d in reference_walk(seq).items()}
+    assert want == {"client1": 30.0, "client2": 3.0, "client3": 0.0}
+    assert got == want
+    # ordering the tie by eventId string would take event10 before event9
+    by_id = sorted(range(len(seq)), key=lambda i: (seq[i][1], f"event{i + 1}"))
+    assert reference_walk([seq[i] for i in by_id])["client1"] != [10.0, 20.0]
 
 
 def test_bucketed_walk_equals_per_key_walk(spark):
