@@ -1015,7 +1015,8 @@ def assign_two_level(
     tie-breaks, no join, no shuffle, and the per-point constant drops
     from interpreted higher-order lambdas to vectorized C.  Callers
     should pass only the columns they need (mapInArrow is opaque to
-    column pruning).
+    column pruning).  On both paths a row with a null vector passes
+    through with null topic and distance.
     """
     from pyspark.sql.types import (
         ArrayType,
@@ -1108,9 +1109,12 @@ def assign_two_level(
         f" CAST(0 AS BIGINT), (acc, x) -> acc + x),"
         f" 'j', c.j)))[0]"
     )
+    # a null vector still meets a group (ivf_assign's coalesce) but has
+    # no distance to anything: null topic and d2, as on the Arrow path
+    assignable = F.col(vec_col).isNotNull()
     return (
-        joined.withColumn(topic_col, best["j"])
-        .withColumn(dist_col, best["d"])
+        joined.withColumn(topic_col, F.when(assignable, best["j"]))
+        .withColumn(dist_col, F.when(assignable, best["d"]))
         .drop("__sup", "__members")
     )
 
@@ -1140,10 +1144,11 @@ def _assign_two_level_arrow(
 
     The member matrices travel inside the serialized function (Spark
     broadcasts large Python commands automatically); k*dim int64 at the
-    k ~ sqrt(N)/(N/c) design points is MBs, not GBs.  Input vectors must
-    be non-null, fixed-dim (the quantized() contract for non-null
-    embeddings); a null/ragged batch fails loudly in the reshape rather
-    than silently mis-assigning."""
+    k ~ sqrt(N)/(N/c) design points is MBs, not GBs.  A null vector (a
+    null embedding through quantized()) passes through with null topic
+    and d2, as on the SQL path; input vectors must otherwise be
+    fixed-dim, and a ragged batch fails loudly in the reshape rather than
+    silently mis-assigning."""
     import numpy as np
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
@@ -1171,13 +1176,10 @@ def _assign_two_level_arrow(
         import pyarrow as pa
 
         for batch in batches:
-            n = batch.num_rows
             col = batch.column(vec_idx)
-            if col.null_count:
-                raise ValueError(
-                    "assign_two_level: null vectors are not assignable"
-                    f" ({col.null_count} null {vec_idx}-col rows in batch)"
-                )
+            null = col.is_null().to_numpy(zero_copy_only=False) if col.null_count else None
+            # flatten() skips null lists: V holds the non-null rows only
+            n = batch.num_rows - col.null_count
             V = np.asarray(col.flatten(), dtype=np.int64).reshape(n, dim)
             Vn = (V * V).sum(axis=1)
             sup = np.argmin(V @ (S.T * -2) + Sn[None, :], axis=1)
@@ -1194,8 +1196,12 @@ def _assign_two_level_arrow(
                 am = np.argmin(dists, axis=1)
                 topic[rows] = J[am]
                 d2[rows] = dists[np.arange(len(rows)), am]
+            if null is not None:
+                full = [np.zeros(batch.num_rows, a.dtype) for a in (topic, d2)]
+                full[0][~null], full[1][~null] = topic, d2
+                topic, d2 = full
             yield pa.RecordBatch.from_arrays(
-                list(batch.columns) + [pa.array(topic), pa.array(d2)],
+                list(batch.columns) + [pa.array(topic, mask=null), pa.array(d2, mask=null)],
                 names=list(batch.schema.names) + [topic_col, dist_col],
             )
 

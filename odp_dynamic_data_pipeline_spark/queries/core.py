@@ -32,17 +32,22 @@ def _cents(col: str) -> Column:
 # ---------------------------------------------------------------------------
 
 TLB_ORACLE = """
-WITH w AS (
-  SELECT user_id, event_id, event_type, ts,
-         MAX(CASE WHEN event_type = 'view' THEN ts END) OVER win AS prev_start,
-         MAX(CASE WHEN event_type = 'purchase' THEN ts END) OVER win AS prev_end
+WITH p AS (
+  SELECT user_id, event_type, ts,
+         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pos
   FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
+), w AS (
+  SELECT user_id, event_type, ts,
+         MAX(CASE WHEN event_type = 'view' THEN ts END) OVER win AS prev_start,
+         MAX(CASE WHEN event_type = 'view' THEN pos END) OVER win AS prev_start_pos,
+         MAX(CASE WHEN event_type = 'purchase' THEN pos END) OVER win AS prev_end_pos
+  FROM p
+  WINDOW win AS (PARTITION BY user_id ORDER BY pos
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 ), d AS (
   SELECT user_id, event_type,
-         CASE WHEN event_type = 'purchase' AND prev_start IS NOT NULL
-                   AND (prev_end IS NULL OR prev_start > prev_end)
+         CASE WHEN event_type = 'purchase' AND prev_start_pos IS NOT NULL
+                   AND (prev_end_pos IS NULL OR prev_start_pos > prev_end_pos)
               THEN epoch_us(ts) - epoch_us(prev_start) END AS dur_us
   FROM w
 )
@@ -62,24 +67,27 @@ def tlb_session_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     'purchase' consumes-once, unmatched ends ignored) + per-user conditional
     counts with zero defaults (A2/A4).
 
-    Window identity: the register is live iff the latest prior start is newer
-    than the latest prior end; see operators.sessionize."""
+    Window identity: the register is live iff the latest prior start comes
+    after the latest prior end in walk order ``(ts, event_id)``, compared by
+    position so a start in the same second as the end before it still
+    counts; see operators.sessionize."""
     ev = load_table(spark, sf_dir, "events")
-    win = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prev_start = F.max(F.when(F.col("event_type") == "view", F.col("ts"))).over(win)
-    prev_end = F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))).over(win)
+    ordered = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    win = ordered.rowsBetween(Window.unboundedPreceding, -1)
+    is_start = F.col("event_type") == "view"
+    is_end = F.col("event_type") == "purchase"
+    prev_start = F.max(F.when(is_start, F.col("ts"))).over(win)
+    prev_start_pos = F.max(F.when(is_start, F.col("__pos"))).over(win)
+    prev_end_pos = F.max(F.when(is_end, F.col("__pos"))).over(win)
     emit = (
-        (F.col("event_type") == "purchase")
-        & prev_start.isNotNull()
-        & (prev_end.isNull() | (prev_start > prev_end))
+        is_end
+        & prev_start_pos.isNotNull()
+        & (prev_end_pos.isNull() | (prev_start_pos > prev_end_pos))
     )
     dur_us = F.when(emit, F.unix_micros(F.col("ts")) - F.unix_micros(prev_start))
     return (
-        ev.withColumn("dur_us", dur_us)
+        ev.withColumn("__pos", F.row_number().over(ordered))
+        .withColumn("dur_us", dur_us)
         .groupBy("user_id")
         .agg(
             (F.coalesce(F.sum("dur_us"), F.lit(0)).cast("double") / F.lit(1000000.0)).alias(
@@ -562,18 +570,23 @@ def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sessionize_exact_pandas",
     """
-WITH w AS (
-  SELECT user_id, event_id, event_type, ts,
-         MAX(CASE WHEN event_type = 'view' THEN ts END) OVER win AS prev_start,
-         MAX(CASE WHEN event_type = 'purchase' THEN ts END) OVER win AS prev_end
+WITH p AS (
+  SELECT user_id, event_type, ts,
+         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pos
   FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
+), w AS (
+  SELECT user_id, event_type, ts,
+         MAX(CASE WHEN event_type = 'view' THEN ts END) OVER win AS prev_start,
+         MAX(CASE WHEN event_type = 'view' THEN pos END) OVER win AS prev_start_pos,
+         MAX(CASE WHEN event_type = 'purchase' THEN pos END) OVER win AS prev_end_pos
+  FROM p
+  WINDOW win AS (PARTITION BY user_id ORDER BY pos
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 )
 SELECT user_id, epoch_us(ts) AS end_us, epoch_us(ts) - epoch_us(prev_start) AS dur_us
 FROM w
-WHERE event_type = 'purchase' AND prev_start IS NOT NULL
-  AND (prev_end IS NULL OR prev_start > prev_end)
+WHERE event_type = 'purchase' AND prev_start_pos IS NOT NULL
+  AND (prev_end_pos IS NULL OR prev_start_pos > prev_end_pos)
 """,
 )
 def sessionize_exact_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -585,12 +598,14 @@ def sessionize_exact_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     pairs = pair_page_views_exact(
-        ev.select(F.col("user_id").cast("string").alias("user_key"), "ts", "event_type"),
+        ev.select(F.col("user_id").cast("string").alias("user_key"), "ts", "event_type", "event_id"),
         group_col="user_key",
         ts_col="ts",
         type_col="event_type",
         start_type="view",
         end_type="purchase",
+        # same-second events walk in the oracle's (ts, event_id) order
+        tiebreak_col="event_id",
         # high-cardinality key: bucket the Arrow stage (see PLANS.md
         # cogroup adjudication -- ~4 ms/group machinery otherwise)
         buckets=64,

@@ -19,6 +19,7 @@ from odp_dynamic_data_pipeline_spark.operators import similarity as sim
 from odp_dynamic_data_pipeline_spark.operators import text as tx
 from odp_dynamic_data_pipeline_spark.queries import register
 from odp_dynamic_data_pipeline_spark.queries import xxh64_sql as _xx
+from odp_dynamic_data_pipeline_spark.queries.core import TLB_ORACLE
 from odp_dynamic_data_pipeline_spark.sources.catalog import load_table
 
 
@@ -801,33 +802,7 @@ def shared_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register(
-    "sql_frontend_tlb",
-    # same oracle as tlb_session_metrics (queries/core.py TLB_ORACLE)
-    """
-WITH w AS (
-  SELECT user_id, event_id, event_type, ts,
-         MAX(CASE WHEN event_type = 'view' THEN ts END) OVER win AS prev_start,
-         MAX(CASE WHEN event_type = 'purchase' THEN ts END) OVER win AS prev_end
-  FROM events
-  WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-), d AS (
-  SELECT user_id, event_type,
-         CASE WHEN event_type = 'purchase' AND prev_start IS NOT NULL
-                   AND (prev_end IS NULL OR prev_start > prev_end)
-              THEN epoch_us(ts) - epoch_us(prev_start) END AS dur_us
-  FROM w
-)
-SELECT user_id,
-       CAST(COALESCE(SUM(dur_us), 0) AS DOUBLE) / 1000000.0 AS page_view_time,
-       COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error_count,
-       COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup_count,
-       COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click_count
-FROM d
-GROUP BY user_id
-""",
-)
+@register("sql_frontend_tlb", TLB_ORACLE)
 def sql_frontend_tlb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship W2 register algebra as PURE SQL TEXT on the Spark SQL
     frontend -- near-verbatim the DuckDB oracle (named WINDOW clause,
@@ -839,17 +814,22 @@ def sql_frontend_tlb(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir, ["events"])
     return spark.sql(
         """
-        WITH w AS (
-          SELECT user_id, event_id, event_type, ts,
-                 MAX(CASE WHEN event_type = 'view' THEN ts END) OVER win AS prev_start,
-                 MAX(CASE WHEN event_type = 'purchase' THEN ts END) OVER win AS prev_end
+        WITH p AS (
+          SELECT user_id, event_type, ts,
+                 ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pos
           FROM events
-          WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id
+        ), w AS (
+          SELECT user_id, event_type, ts,
+                 MAX(CASE WHEN event_type = 'view' THEN ts END) OVER win AS prev_start,
+                 MAX(CASE WHEN event_type = 'view' THEN pos END) OVER win AS prev_start_pos,
+                 MAX(CASE WHEN event_type = 'purchase' THEN pos END) OVER win AS prev_end_pos
+          FROM p
+          WINDOW win AS (PARTITION BY user_id ORDER BY pos
                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
         ), d AS (
           SELECT user_id, event_type,
-                 CASE WHEN event_type = 'purchase' AND prev_start IS NOT NULL
-                           AND (prev_end IS NULL OR prev_start > prev_end)
+                 CASE WHEN event_type = 'purchase' AND prev_start_pos IS NOT NULL
+                           AND (prev_end_pos IS NULL OR prev_start_pos > prev_end_pos)
                       THEN unix_micros(ts) - unix_micros(prev_start) END AS dur_us
           FROM w
         )

@@ -61,12 +61,16 @@ BUILD_CONFS: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
     "spark.sql.files.maxPartitionBytes": "128m",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
-    # every query compiles fresh whole-stage-codegen classes; a long-lived
-    # session (bench runs 100+) fills the default 240m JIT code cache, after
+    # The driver's JIT policy.  The pipeline runs as one fresh process per
+    # hour, so the JVM exits before C2-optimised code pays back its compile:
+    # C1 only (TieredStopAtLevel=1) halves the CPU of the cold batch, at the
+    # price of slower hot loops in a long-lived session (README "The driver
+    # JVM's JIT policy").  Every query also compiles fresh whole-stage-codegen
+    # classes; a long-lived session fills the default 240m code cache, after
     # which the JVM silently stops compiling and row-at-a-time operators
     # (BNLJ, sort) fall off a cliff (measured: same query 0.8s early in the
-    # session, 9s+ after ~90 queries)
-    "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g",
+    # session, 9s+ after ~90 queries), hence the 1g reservation.
+    "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:TieredStopAtLevel=1",
 }
 
 

@@ -32,10 +32,14 @@ SESSION = textwrap.dedent(
     from pyspark import SparkContext
     spark = get_spark("archive-test", master="local[1]", extra_confs={{"spark.ui.enabled": "false"}})
     mapped = ca._mapped_archives(SparkContext._gateway.proc.pid)
+    jvm = spark._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
     print(json.dumps({{
         "count": spark.range(3).count(),
         "mapped": sorted(mapped),
         "conf": dict(spark.sparkContext.getConf().getAll()),
+        "vm": {{f: hotspot.getVMOption(f).getValue() for f in ("TieredStopAtLevel", "ReservedCodeCacheSize")}},
     }}))
     spark.stop()
     """
@@ -104,6 +108,45 @@ def test_built_once_then_mapped(archive):
     out, warnings = start(archive["cache"], archive["cwd"])
     assert warnings == [] and archive["jsa"] in out["mapped"] and base_mapped(out)
     assert out["conf"]["spark.driver.extraJavaOptions"].endswith(f"-XX:SharedArchiveFile={archive['jsa']}")
+
+
+def test_driver_jvm_runs_c1_only_on_the_archive(archive):
+    """The driver's JIT policy (session.BUILD_CONFS): C1 only, a 1 GB
+    code cache, and the class archive still mapped under both flags."""
+    out, warnings = start(archive["cache"], archive["cwd"])
+    assert warnings == [] and archive["jsa"] in out["mapped"] and base_mapped(out)
+    assert out["vm"] == {"TieredStopAtLevel": "1", "ReservedCodeCacheSize": str(1 << 30)}
+
+
+def test_training_run_takes_the_sessions_jit_flags(tmp_path, monkeypatch):
+    """The archive's training JVM starts with the session's Java options,
+    so it compiles under the same JIT policy as the driver it trains for."""
+    from odp_dynamic_data_pipeline_spark import class_archive as ca
+    from odp_dynamic_data_pipeline_spark.session import BUILD_CONFS, RUNTIME_CONFS
+
+    training = {}
+
+    class Training:
+        """Stands in for the training process: reads its confs, exits 0."""
+
+        pid = 0
+
+        def __init__(self, args, cwd, **kwargs):
+            with open(os.path.join(cwd, "confs.json")) as f:
+                training.update(json.load(f))
+
+        def wait(self, timeout=None):
+            return 0
+
+    monkeypatch.setattr(ca.subprocess, "Popen", Training)
+    confs = {**BUILD_CONFS, **RUNTIME_CONFS}
+    out = str(tmp_path / "driver.jsa")
+    assert ca._run_training(ca.Paths(str(tmp_path), "k"), confs, str(tmp_path), out) == 0
+    session_opts = confs["spark.driver.extraJavaOptions"].split()
+    assert "-XX:TieredStopAtLevel=1" in session_opts
+    opts = training["spark.driver.extraJavaOptions"].split()
+    assert opts[: len(session_opts)] == session_opts
+    assert opts[len(session_opts)] == f"-XX:ArchiveClassesAtExit={out}"
 
 
 def test_truncated_archive_falls_back(archive):

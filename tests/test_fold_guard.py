@@ -236,6 +236,27 @@ def test_two_level_sql_path_equals_arrow_path(spark, monkeypatch):
     assert arrow == sql
 
 
+@pytest.mark.parametrize("k", [8, 24])
+def test_two_level_null_vectors_pass_through_on_both_paths(spark, monkeypatch, k):
+    """Which path runs depends on k alone, so a null vector must come out
+    the same on both: its row kept, with null topic and d2."""
+    random.seed(29)
+    cents = [[random.randint(-5_000_000, 5_000_000) for _ in range(8)] for _ in range(k)]
+    rows = [(i, None if i % 7 == 3 else [float(random.randint(-4, 4)) for _ in range(8)]) for i in range(40)]
+    q = sim.quantized(
+        spark.createDataFrame(rows, "vec_id int, embedding array<double>"), "embedding"
+    ).select("vec_id", "qvec", "qnorm")
+
+    def assigned(arrow_min):
+        monkeypatch.setattr(sim, "TWO_LEVEL_ARROW_MIN", arrow_min)
+        return sorted(map(tuple, sim.assign_two_level(q, cents).select("vec_id", "topic", "d2").collect()))
+
+    arrow, sql = assigned(0), assigned(10**9)
+    assert arrow == sql
+    assert [r[0] for r in arrow] == list(range(40))
+    assert [(r[1] is None, r[2] is None) for r in arrow] == [(e is None, e is None) for _, e in rows]
+
+
 def test_dsir_ships_model_as_broadcast_join(spark):
     """dsir_select's per-bucket LLR model must reach executors as a
     broadcast relation (data), not a plan literal: the optimized plan
