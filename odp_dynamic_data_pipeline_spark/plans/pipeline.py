@@ -40,19 +40,23 @@ Spec schema (see pipelines/observability_correlation_pipeline.yaml):
               key: <dot-path, may cross arrays>
               value: <field | [fields]>
         transforms:                          # optional, applied in order
-          - op: filter | select | with_column      # expression transforms
-          - op: scrub_pii | fingerprint | quality  # text operators
-          - op: dedup_exact | chunk | stratified_sample
-          - op: pack_sequences | boilerplate_scrub
+          - op: <a key of TRANSFORMS>
+            <argument>: <value>              # the operator's keyword arguments
         output:
           path: <path, may contain {hour}>   # optional
-          format: json | parquet | json_array
+          format: <a key of OUTPUT_FORMATS>  # parquet (default) | json | json_array
 
 ``transforms`` makes the operator library itself config-driven: the same
 YAML surface the reference drives enrichment with now composes curation
 stages (scrub -> fingerprint -> dedup -> chunk) with no Python authored by
-the pipeline owner -- each op compiles to the corresponding
-``operators/*`` call inside the stage's single lazy plan.
+the pipeline owner.  ``TRANSFORMS`` maps each op name to its operator; the
+op's other keys pass straight through as the operator's keyword arguments,
+so its defaults are the operator's signature defaults and a key the
+operator does not take is an error.  E.g. ``dedup_exact`` takes
+``key_cols`` and ``id_col``, the parameter names of
+``operators.dedup.exact_dedup`` (formerly the YAML keys ``keys`` and
+``id``).  ``Pipeline`` checks every op, its arguments and every output
+format when it is built, so a bad spec fails before any stage runs.
 
 Streaming stages (``input.format: stream``): the reference describes its
 stage_1 as CONSUMING a stream -- "Process user experience data" fed by a
@@ -72,12 +76,18 @@ poll-until-file-exists sensor with exactly-once file-source bookkeeping.
 
 from __future__ import annotations
 
+import inspect
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
 import yaml
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from odp_dynamic_data_pipeline_spark.operators import dedup as _dedup
+from odp_dynamic_data_pipeline_spark.operators import similarity as _sim
+from odp_dynamic_data_pipeline_spark.operators import text as _text
 from odp_dynamic_data_pipeline_spark.operators.enrich import enrich
 from odp_dynamic_data_pipeline_spark.operators.mappings import extract_mapping
 from odp_dynamic_data_pipeline_spark.sources import readers, schemas, writers
@@ -95,95 +105,44 @@ def _as_list(x):
     return x if isinstance(x, list) else [x]
 
 
-def _apply_transform(df: DataFrame, t: dict) -> DataFrame:
-    """One declarative transform -> one operator call (lazy)."""
-    from pyspark.sql import functions as F
+def _with_char_entropy(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Each row with its document's character entropy columns."""
+    return df.join(_text.char_entropy(df, id_col, text_col), id_col)
 
-    from odp_dynamic_data_pipeline_spark.operators import dedup as _dedup
-    from odp_dynamic_data_pipeline_spark.operators import text as _text
 
-    op = t["op"]
-    if op == "filter":
-        return df.where(t["expr"])
-    if op == "select":
-        return df.selectExpr(*_as_list(t["exprs"]))
-    if op == "with_column":
-        return df.withColumn(t["name"], F.expr(t["expr"]))
-    if op == "scrub_pii":
-        return _text.scrub_pii(df, t.get("text_col", "text"))
-    if op == "fingerprint":
-        return _text.fingerprint(df, t.get("text_col", "text"))
-    if op == "quality":
-        return _text.quality_features(df, t.get("text_col", "text"))
-    if op == "dedup_exact":
-        return _dedup.exact_dedup(df, t["keys"], t["id"])
-    if op == "chunk":
-        return _text.chunk_documents(
-            df,
-            t.get("text_col", "text"),
-            chunk_tokens=t.get("chunk_tokens", 64),
-            stride=t.get("stride", 48),
-            id_cols=_as_list(t.get("id_cols")) or None,
-        )
-    if op == "stratified_sample":
-        return _text.stratified_sample(
-            df, t["strata_col"], t["rates_16ths"], t.get("id_col", "doc_id")
-        )
-    if op == "pack_sequences":
-        return _text.pack_sequences(
-            df,
-            t.get("text_col", "text"),
-            seq_tokens=t.get("seq_tokens", 2048),
-            part_col=t.get("part_col", "lang"),
-            id_col=t.get("id_col", "doc_id"),
-        )
-    if op == "boilerplate_scrub":
-        return _text.boilerplate_scrub(
-            df,
-            t.get("text_col", "text"),
-            block_tokens=t.get("block_tokens", 8),
-            min_docs=t.get("min_docs", 3),
-            id_col=t.get("id_col", "doc_id"),
-        )
-    if op == "language_id":
-        return _text.language_id(df, t.get("text_col", "text"), t.get("out_col", "pred_lang"))
-    if op == "allocate_token_budget":
-        return _text.allocate_token_budget(
-            df,
-            t.get("group_col", "lang"),
-            t.get("text_col", "text"),
-            budget=t.get("budget", 10_000_000),
-        )
-    if op == "random_projection":
-        from odp_dynamic_data_pipeline_spark.operators import similarity as _sim
+# transform op -> operator, called as TRANSFORMS[op](df, **args) with the
+# op's YAML keys as ``args``; each op's defaults are its operator's own
+TRANSFORMS: dict[str, Callable[..., DataFrame]] = {
+    "filter": lambda df, expr: df.where(expr),
+    "select": lambda df, exprs: df.selectExpr(*_as_list(exprs)),
+    "with_column": lambda df, name, expr: df.withColumn(name, F.expr(expr)),
+    "scrub_pii": _text.scrub_pii,
+    "fingerprint": _text.fingerprint,
+    "quality": _text.quality_features,
+    "dedup_exact": _dedup.exact_dedup,
+    "chunk": _text.chunk_documents,
+    "stratified_sample": _text.stratified_sample,
+    "pack_sequences": _text.pack_sequences,
+    "boilerplate_scrub": _text.boilerplate_scrub,
+    "language_id": _text.language_id,
+    "allocate_token_budget": _text.allocate_token_budget,
+    "random_projection": _sim.random_projection,
+    "quantize_int8": _sim.quantize_int8,
+    "with_char_entropy": _with_char_entropy,
+    "weighted_sample": _text.weighted_sample,
+}
 
-        return _sim.random_projection(
-            df,
-            t.get("vec_col", "embedding"),
-            t.get("out_col", "proj"),
-            out_dim=t.get("out_dim", 16),
-            scale=t.get("scale", 10000),
-            in_dim=t.get("in_dim"),
-        )
-    if op == "quantize_int8":
-        from odp_dynamic_data_pipeline_spark.operators import similarity as _sim
+# output format -> name of its writer in ``sources.writers``, looked up at
+# write time so that a wrapper installed on the module is the one called
+OUTPUT_FORMATS = {
+    "parquet": "write_parquet",
+    "json": "write_json",
+    "json_array": "write_json_array",
+}
 
-        return _sim.quantize_int8(df, t.get("vec_col", "embedding"))
-    if op == "with_char_entropy":
-        id_col = t.get("id_col", "doc_id")
-        ent = _text.char_entropy(
-            df.select(id_col, t.get("text_col", "text")), id_col, t.get("text_col", "text")
-        )
-        return df.join(ent, id_col)
-    if op == "weighted_sample":
-        return _text.weighted_sample(
-            df,
-            t["stratum_col"],
-            t["weight_col"],
-            id_col=t.get("id_col", "doc_id"),
-            k=t.get("k", 20),
-        )
-    raise ValueError(f"unknown transform op: {op}")
+
+def _op_args(t: dict) -> tuple[str, dict]:
+    return t["op"], {k: v for k, v in t.items() if k != "op"}
 
 
 @dataclass
@@ -203,6 +162,21 @@ class Stage:
             writes=_as_list(m.get("write")),
         )
 
+    def check(self) -> None:
+        """Raise on a transform op, an op argument or an output format
+        that the tables do not accept, before any stage runs."""
+        for t in _as_list(self.spec.get("transforms")):
+            op, args = _op_args(t)
+            if op not in TRANSFORMS:
+                raise ValueError(f"stage {self.name}: unknown transform op {op!r}")
+            try:
+                inspect.signature(TRANSFORMS[op]).bind(None, **args)
+            except TypeError as e:
+                raise TypeError(f"stage {self.name}: transform op {op!r}: {e}") from None
+        fmt = (self.spec.get("output") or {}).get("format", "parquet")
+        if fmt not in OUTPUT_FORMATS:
+            raise ValueError(f"stage {self.name}: unknown output format {fmt!r}")
+
 
 class Pipeline:
     """Compiled pipeline: lazy stage DataFrames + mapping DataFrames."""
@@ -210,6 +184,8 @@ class Pipeline:
     def __init__(self, spec: dict):
         self.name = spec.get("pipeline_name", "pipeline")
         self.stages = {n: Stage.parse(n, s) for n, s in spec["stages"].items()}
+        for st in self.stages.values():
+            st.check()
         self.order = self._topo_order()
 
     def _topo_order(self) -> list[str]:
@@ -240,14 +216,20 @@ class Pipeline:
         return path, None
 
     @staticmethod
-    def _resolve_schema(st: Stage, inp: dict, what: str):
+    def _schema(inp: dict):
+        """The input's schema: a registry name resolved, or as given."""
         schema = inp.get("schema")
+        return SCHEMA_REGISTRY[schema] if isinstance(schema, str) else schema
+
+    @classmethod
+    def _resolve_schema(cls, st: Stage, inp: dict, what: str):
+        schema = cls._schema(inp)
         if schema is None:
             raise ValueError(
                 f"stage {st.name}: a {what} input needs an explicit schema"
                 " (streaming sources cannot infer one)"
             )
-        return SCHEMA_REGISTRY[schema] if isinstance(schema, str) else schema
+        return schema
 
     def _read_input(
         self, spark: SparkSession, st: Stage, hour: str | None, path_vars: dict[str, str]
@@ -290,9 +272,7 @@ class Pipeline:
                 fmt=inp.get("stream_format", "json"), glob=glob,
                 multiline=inp.get("multiline", True),
             )
-        schema = inp.get("schema")
-        struct = SCHEMA_REGISTRY[schema] if isinstance(schema, str) else schema
-        return readers.read_json(spark, path, struct, hour=hour)
+        return readers.read_json(spark, path, self._schema(inp), hour=hour)
 
     def _run_stream_stage(
         self, spark: SparkSession, st: Stage, df: DataFrame, hour: str | None,
@@ -381,7 +361,8 @@ class Pipeline:
                     m = _static_table(r["name"], m)
                 df = enrich(df, m, key_col=r["key_field"], mapping_key="key")
             for t in _as_list(st.spec.get("transforms")):
-                df = _apply_transform(df, t)
+                op, args = _op_args(t)
+                df = TRANSFORMS[op](df, **args)
             if df.isStreaming:
                 df = self._run_stream_stage(spark, st, df, hour, work_dir)
             for w in st.writes:
@@ -406,19 +387,12 @@ class Pipeline:
         """Compile and execute sinks (S5)."""
         outputs, _ = self.compile(spark, hour, path_vars, work_dir=work_dir)
         for name, df in outputs.items():
-            out = self.stages[name].spec.get("output")
-            if not out:
+            sink = self.stages[name].spec.get("output")
+            if not sink:
                 continue
-            path = self._fmt(out["path"], hour, path_vars or {})
-            fmt = out.get("format", "parquet")
-            if fmt == "parquet":
-                writers.write_parquet(df, path)
-            elif fmt == "json":
-                writers.write_json(df, path)
-            elif fmt == "json_array":
-                writers.write_json_array(df, path)
-            else:  # pragma: no cover
-                raise ValueError(f"unknown output format: {fmt}")
+            path = self._fmt(sink["path"], hour, path_vars or {})
+            write = getattr(writers, OUTPUT_FORMATS[sink.get("format", "parquet")])
+            write(df, path)
         return outputs
 
 

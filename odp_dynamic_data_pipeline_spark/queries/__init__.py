@@ -18,54 +18,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
-# correctness-GATE queries that deliberately run maintenance at an
-# adversarial teaching cadence (threshold-0 compaction, double expiry +
-# superset replay) -- their wall time measures the gate, not production
-# cost.  bench.py annotates them in every map and publishes ex-gating
-# aggregates; tools/bench_drift.py labels their flags accordingly.  Each
-# has a production-cadence twin in the registry (default thresholds):
-# cdc_upsert_expiry_replay_stream -> cdc_upsert_deletes_stream (one
-# retention expiry), incremental_clusters_compacted_stream ->
-# incremental_clusters_stream (auto-compaction at the 10k default).
-GATING_CADENCE: set[str] = set()
-
-# Explicit stream-query -> kvstore store-family table (r12 advisor: the
-# old substring heuristic in tools/bench_drift.py silently picked the
-# wrong family's fixed drain cost for names where a substring appears
-# incidentally -- e.g. session_gap_windows_stream uses NATIVE
-# session_window, not the kvstore sessions protocol).  Keys must be
-# registered queries; values must be families with a measured
-# stream_cost_split__{family} receipt (tools/stream_cost_split.py).
-# Queries absent here either use native Spark streaming state or a
-# runner whose fixed drain cost has no measured split -- the drift gate
-# then applies no fixed-cost subtraction (the conservative default).
-STORE_FAMILY: dict[str, str] = {
-    "incremental_agg_stream": "agg",
-    "incremental_agg_bucketed_stream": "agg",
-    "incremental_postings_stream": "agg",
-    "incremental_topk_stream": "agg",
-    "incremental_dedup_stream": "dedup",
-    "incremental_neardup_stream": "neardup",
-    "incremental_neardup_md5_stream": "neardup",
-    "cdc_upsert_stream": "upsert",
-    "cdc_upsert_deletes_stream": "upsert",
-    "cdc_upsert_expiry_replay_stream": "upsert",
-    "session_cap_windows_stream": "sessions",
-    "incremental_clusters_stream": "cc",
-    "incremental_clusters_compacted_stream": "cc",
-    "incremental_semdedup_stream": "semdedup",
-}
 
 
-def register(name: str, oracle: str | None = None, *, gating_cadence: bool = False):
+def register(name: str, oracle: str | None = None):
     """Decorator: add a (spark_fn, oracle_sql) pair to the registry."""
 
     def deco(fn):
         SPARK_QUERIES[name] = fn
         if oracle is not None:
             ORACLE_SQL[name] = oracle
-        if gating_cadence:
-            GATING_CADENCE.add(name)
         return fn
 
     return deco
@@ -85,7 +46,5 @@ from odp_dynamic_data_pipeline_spark.queries import surfaces as _surfaces  # noq
 __all__ = [
     "SPARK_QUERIES",
     "ORACLE_SQL",
-    "GATING_CADENCE",
-    "STORE_FAMILY",
     "register",
 ]

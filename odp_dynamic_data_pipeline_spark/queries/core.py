@@ -3698,7 +3698,6 @@ SELECT user_id, ts_us, event_id, value_cents FROM (
   FROM events WHERE user_id IS NOT NULL
 ) WHERE rn = 1 AND event_type <> 'purchase'
 """,
-    gating_cadence=True,
 )
 def cdc_upsert_expiry_replay_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC upsert with tombstone expiry AND a post-maintenance REPLAY ==

@@ -214,9 +214,7 @@ def incremental_clusters_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register(
-    "incremental_clusters_compacted_stream", DEDUP_CLUSTERS_ORACLE, gating_cadence=True
-)
+@register("incremental_clusters_compacted_stream", DEDUP_CLUSTERS_ORACLE)
 def incremental_clusters_compacted_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental CC with the MAINTENANCE path exercised mid-stream ==
     one-shot batch CC, driver-verified against the same recursive-CTE

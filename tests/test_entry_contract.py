@@ -36,6 +36,12 @@ def test_queries_cover_registry_exactly_once():
     # generated XXH64 SQL replay (queries/xxh64_sql.py).  Every
     # registered query now carries a hash-exact oracle.
     assert set(q) - set(o) == set()
+    # the store-maintenance gates (threshold-0 compaction; double expiry
+    # + replay) and their default-cadence twins
+    assert {
+        "cdc_upsert_expiry_replay_stream", "cdc_upsert_deletes_stream",
+        "incremental_clusters_compacted_stream", "incremental_clusters_stream",
+    } <= set(o)
 
 
 def test_rotation_frontloads_uncovered_queries():

@@ -24,8 +24,8 @@ stages:
         expr: "n_tokens >= 10"
       - op: fingerprint
       - op: dedup_exact
-        keys: fingerprint
-        id: doc_id
+        key_cols: fingerprint
+        id_col: doc_id
       - op: chunk
         chunk_tokens: 32
         stride: 24
@@ -56,6 +56,50 @@ def test_yaml_transform_unknown_op_raises(spark):
     bad = yaml.safe_load(SPEC.replace("op: quality", "op: frobnicate"))
     with pytest.raises(ValueError, match="frobnicate"):
         Pipeline(bad).compile(spark, path_vars={"sf": SF})
+
+
+def test_yaml_transform_misspelled_argument_raises(spark):
+    """A key the op's operator does not take is an error naming the op,
+    not a silent fall-back to the operator's default column."""
+    import pytest
+
+    bad = yaml.safe_load(SPEC.replace("chunk_tokens: 32", "text_column: scrubbed\n        chunk_tokens: 32"))
+    with pytest.raises(TypeError, match="'chunk'.*text_column"):
+        Pipeline(bad).compile(spark, path_vars={"sf": SF})
+
+
+def test_bad_output_format_fails_before_any_sink(spark, tmp_path):
+    """An unknown output format on the last stage fails before the
+    earlier stages drain or write anything."""
+    import pytest
+
+    spec = yaml.safe_load(open("pipelines/observability_correlation_pipeline.yaml"))
+    spec["stages"]["stage_3"]["output"]["format"] = "jsonl"
+    out_dir = tmp_path / "out"
+    out_dir.mkdir()
+    with pytest.raises(ValueError, match="stage_3.*jsonl"):
+        Pipeline(spec).run(
+            spark, hour="2024111612",
+            path_vars={"data_dir": "tests/fixtures/reference_hour", "out_dir": str(out_dir)},
+            work_dir=str(tmp_path / "work"),
+        )
+    assert list(out_dir.iterdir()) == []
+
+
+def test_op_table_covers_shipped_and_traced_ops():
+    """Every op the shipped YAMLs use and every op the benchmark traces a
+    self time for is in TRANSFORMS: renaming an op fails here, not as a
+    silently zero traced metric."""
+    from perfbench.workloads import CORPUS_OPS
+
+    from odp_dynamic_data_pipeline_spark.plans.pipeline import TRANSFORMS
+
+    assert set(CORPUS_OPS) <= set(TRANSFORMS)
+    for path in ("pipelines/corpus_curation_pipeline.yaml",
+                 "pipelines/observability_correlation_pipeline.yaml"):
+        stages = yaml.safe_load(open(path))["stages"].values()
+        ops = {t["op"] for st in stages for t in st.get("transforms") or []}
+        assert ops <= set(TRANSFORMS), (path, ops - set(TRANSFORMS))
 
 
 PACK_SPEC = """

@@ -10,8 +10,7 @@ work (it is NOT a timing tool).
 
 Streaming-twin queries (*_stream) EXECUTE their streaming drain inside the
 query function before returning the read-back DataFrame, so their captured
-plan covers only the final batch read-back; the drain itself is measured by
-tools/stream_cost_split.py instead.
+plan covers only the final batch read-back, not the drain.
 """
 
 from __future__ import annotations
