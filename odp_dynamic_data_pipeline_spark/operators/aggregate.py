@@ -112,7 +112,7 @@ def winsorized_stats(
     """Winsorized (clipped) statistics per group: values below the p_lo-th
     / above the p_hi-th percentile are clamped to those bounds before
     summing -- the robust mean that tames heavy tails without dropping
-    rows (the action-side sibling of the MAD outlier REPORT).
+    rows.
 
     Bounds are NEAREST-RANK percentiles (smallest value whose cumulative
     count reaches ceil(p * n / 100)), so they are actual data values and

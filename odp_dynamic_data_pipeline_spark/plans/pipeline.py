@@ -42,8 +42,8 @@ Spec schema (see pipelines/observability_correlation_pipeline.yaml):
         transforms:                          # optional, applied in order
           - op: <a key of TRANSFORMS>
             <argument>: <value>              # the operator's keyword arguments
-        output:
-          path: <path, may contain {hour}>   # optional
+        output:                              # optional
+          path: <path, may contain {hour}>   # required in an output block
           format: <a key of OUTPUT_FORMATS>  # parquet (default) | json | json_array
 
 ``transforms`` makes the operator library itself config-driven: the same
@@ -56,7 +56,9 @@ operator does not take is an error.  E.g. ``dedup_exact`` takes
 ``key_cols`` and ``id_col``, the parameter names of
 ``operators.dedup.exact_dedup`` (formerly the YAML keys ``keys`` and
 ``id``).  ``Pipeline`` checks every op, its arguments and every output
-format when it is built, so a bad spec fails before any stage runs.
+format and every output path when it is built, and ``compile`` checks
+that every mapping a stage reads is written by a stage (or can come from
+``mappings_dir``), so a bad spec fails before any stage runs.
 
 Streaming stages (``input.format: stream``): the reference describes its
 stage_1 as CONSUMING a stream -- "Process user experience data" fed by a
@@ -164,7 +166,8 @@ class Stage:
 
     def check(self) -> None:
         """Raise on a transform op, an op argument or an output format
-        that the tables do not accept, before any stage runs."""
+        that the tables do not accept, or an output without a path,
+        before any stage runs."""
         for t in _as_list(self.spec.get("transforms")):
             op, args = _op_args(t)
             if op not in TRANSFORMS:
@@ -173,7 +176,10 @@ class Stage:
                 inspect.signature(TRANSFORMS[op]).bind(None, **args)
             except TypeError as e:
                 raise TypeError(f"stage {self.name}: transform op {op!r}: {e}") from None
-        fmt = (self.spec.get("output") or {}).get("format", "parquet")
+        out = self.spec.get("output") or {}
+        if out and "path" not in out:
+            raise ValueError(f"stage {self.name}: output has no path")
+        fmt = out.get("format", "parquet")
         if fmt not in OUTPUT_FORMATS:
             raise ValueError(f"stage {self.name}: unknown output format {fmt!r}")
 
@@ -325,6 +331,15 @@ class Pipeline:
 
         ``work_dir``: staging + checkpoint root for streaming stages; pass
         a stable path to make hourly re-runs incremental."""
+        if not mappings_dir:
+            produced = {w["name"] for st in self.stages.values() for w in st.writes}
+            for st in self.stages.values():
+                for r in st.reads:
+                    if r["name"] not in produced:
+                        raise ValueError(
+                            f"stage {st.name}: mapping {r['name']!r} is read but"
+                            " no stage writes it and no mappings_dir is set"
+                        )
         path_vars = path_vars or {}
         outputs: dict[str, DataFrame] = {}
         mappings: dict[str, DataFrame] = {}

@@ -526,48 +526,6 @@ def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "data_quality_report",
-    """
-SELECT 'not_null:o_custkey' AS check_name,
-       COUNT(CASE WHEN o_custkey IS NULL THEN 1 END) AS n_violations FROM orders
-UNION ALL
-SELECT 'condition:positive_price' AS check_name,
-       COUNT(CASE WHEN NOT (o_totalprice > 0) THEN 1 END) AS n_violations FROM orders
-UNION ALL
-SELECT 'unique:o_orderkey' AS check_name,
-       CAST(COALESCE(SUM(n - 1), 0) AS BIGINT) AS n_violations
-FROM (SELECT o_orderkey, COUNT(*) AS n FROM orders GROUP BY o_orderkey)
-UNION ALL
-SELECT 'ref:o_custkey->c_custkey' AS check_name, COUNT(*) AS n_violations
-FROM orders o WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-""",
-)
-def data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative data-quality sweep (operators.quality_checks): null /
-    invariant checks fused into ONE scan, plus uniqueness and referential
-    checks with their own shuffles; unioned into a (check, violations)
-    report."""
-    from odp_dynamic_data_pipeline_spark.operators import quality_checks as qc
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    single = qc.run_single_pass_checks(
-        o,
-        {
-            **qc.violations_not_null(o, ["o_custkey"]),
-            **qc.violations_condition(o, "positive_price", F.col("o_totalprice") > 0),
-        },
-    )
-    return qc.union_reports(
-        [
-            single,
-            qc.violations_unique(o, ["o_orderkey"]),
-            qc.violations_referential(o, "o_custkey", c, "c_custkey"),
-        ]
-    )
-
-
-@register(
     "sessionize_exact_pandas",
     """
 WITH p AS (
@@ -3212,90 +3170,6 @@ def kmv_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_overlap(ev, "user_id", "event_type", k=64)
 
 
-def _fd_block(tag: str, table: str, lhs: list[str], rhs: str, name: str) -> str:
-    """One approximate-FD g3 block (operators.quality_checks.approx_fd_report
-    twin): per-(lhs, rhs) counts, per-lhs rollup, single-row fold."""
-    lhs_sql = ", ".join(lhs)
-    return f"""
-{tag}v AS (
-  SELECT {lhs_sql}, {rhs}, CAST(COUNT(*) AS BIGINT) AS c
-  FROM {table} GROUP BY {lhs_sql}, {rhs}
-),
-{tag}k AS (
-  SELECT {lhs_sql}, SUM(c) AS tot, MAX(c) AS mx, COUNT(*) AS nv
-  FROM {tag}v GROUP BY {lhs_sql}
-),
-{tag} AS (
-  SELECT '{name}' AS fd,
-         CAST(SUM(tot) AS BIGINT) AS n_rows,
-         CAST(COUNT(*) AS BIGINT) AS n_keys,
-         CAST(SUM(CASE WHEN nv > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating_keys,
-         CAST(SUM(tot - mx) AS BIGINT) AS g3_removals,
-         CAST((1000000 * SUM(tot - mx)) // SUM(tot) AS BIGINT) AS g3_e6
-  FROM {tag}k
-)"""
-
-
-_FD_ORACLE = (
-    "WITH "
-    + ",".join(
-        [
-            _fd_block("fd1", "documents", ["source"], "lang", "documents.source->lang"),
-            _fd_block("fd2", "documents", ["lang"], "source", "documents.lang->source"),
-            _fd_block(
-                "fd3", "orders JOIN customer ON o_custkey = c_custkey",
-                ["o_custkey"], "c_mktsegment", "orders*customer.o_custkey->c_mktsegment",
-            ),
-            _fd_block(
-                "fd4", "customer", ["c_nationkey"], "c_mktsegment",
-                "customer.c_nationkey->c_mktsegment",
-            ),
-            _fd_block("fd5", "events", ["event_type"], "user_id", "events.event_type->user_id"),
-        ]
-    )
-    + """
-SELECT * FROM fd1 UNION ALL SELECT * FROM fd2 UNION ALL SELECT * FROM fd3
-UNION ALL SELECT * FROM fd4 UNION ALL SELECT * FROM fd5
-"""
-)
-
-
-@register("fd_violation_report", _FD_ORACLE)
-def fd_violation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate-functional-dependency audit
-    (operators.quality_checks.approx_fd_report): the g3 error measure
-    (minimum row deletions for the FD to hold -- the metric TANE-style FD
-    discovery ranks by) for five candidate dependencies, one holding
-    exactly over a DERIVED relation (orders x customer: o_custkey ->
-    c_mktsegment, g3 = 0) and four violated to different degrees.  Each
-    FD costs two partial-aggregated shuffles over DISTINCT value
-    combinations, never data rows twice -- the profiling pass you run
-    before trusting a key for dedup or enrichment joins."""
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import (
-        approx_fd_report,
-        union_reports,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    ev = load_table(spark, sf_dir, "events")
-    oc = orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
-    return union_reports(
-        [
-            approx_fd_report(docs, "documents.source->lang", ["source"], "lang"),
-            approx_fd_report(docs, "documents.lang->source", ["lang"], "source"),
-            approx_fd_report(
-                oc, "orders*customer.o_custkey->c_mktsegment", ["o_custkey"], "c_mktsegment"
-            ),
-            approx_fd_report(
-                cust, "customer.c_nationkey->c_mktsegment", ["c_nationkey"], "c_mktsegment"
-            ),
-            approx_fd_report(ev, "events.event_type->user_id", ["event_type"], "user_id"),
-        ]
-    )
-
-
 @register(
     "session_cap_windows",
     """
@@ -3460,50 +3334,6 @@ def asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "mad_outlier_report",
-    """
-WITH x AS (
-  SELECT event_type, 2 * CAST(ROUND(value * 100, 0) AS BIGINT) AS x2 FROM events
-),
-m AS (
-  SELECT event_type, CAST(quantile_cont(x2, 0.5) AS BIGINT) AS med2
-  FROM x GROUP BY event_type
-),
-d AS (
-  SELECT x.event_type, med2, 2 * ABS(x2 - med2) AS dev4
-  FROM x JOIN m USING (event_type)
-),
-md AS (
-  SELECT event_type, CAST(quantile_cont(dev4, 0.5) AS BIGINT) AS mad4
-  FROM d GROUP BY event_type
-)
-SELECT d.event_type,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(MAX(med2) AS BIGINT) AS median_cents_x2,
-       CAST(MAX(mad4) AS BIGINT) AS mad_cents_x4,
-       CAST(SUM(CASE WHEN dev4 > 3 * mad4 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-       CAST(MAX(dev4) AS BIGINT) AS max_dev_x4
-FROM d JOIN md USING (event_type)
-GROUP BY d.event_type
-""",
-)
-def mad_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robust outlier audit (operators.quality_checks.mad_outliers):
-    per event type, median / MAD and the count of values beyond 3 MADs --
-    the scale-free gate that survives heavy tails where mean/stddev
-    z-scores drown.  Values pre-scale x2 (then deviations x2 again) so
-    both interpolated medians stay integer-exact; every number replays
-    bit-for-bit in the oracle.  This exact variant IS the oracle twin; a
-    100 TB pass swaps percentile -> approx_percentile and keeps the gate."""
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import mad_outliers
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type", _cents("value").alias("cents")
-    )
-    return mad_outliers(ev, "event_type", "cents", k=3)
-
-
-@register(
     "weighted_median_price",
     """
 WITH pv AS (
@@ -3575,8 +3405,7 @@ def cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutative, deliberately unlike the sessionizer's guard) folded into
     a bucketed last-wins store; the final store is checked against the
     one-shot window oracle.  The streaming face of MERGE WHEN MATCHED
-    UPDATE (batch twin merge_cdc_snapshot), with (ts, event_id) as the
-    deterministic sequence."""
+    UPDATE, with (ts, event_id) as the deterministic sequence."""
     from odp_dynamic_data_pipeline_spark.streaming.stream import (
         read_incremental_upsert,
         run_incremental_upsert,
@@ -3812,11 +3641,10 @@ def winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized per-type value statistics
     (operators.aggregate.winsorized_stats): values clamped to the
     nearest-rank p05/p95 bounds before summing -- the robust mean that
-    tames heavy tails without dropping rows (action-side sibling of the
-    MAD outlier report).  Nearest-rank bounds are actual data values, so
-    the clipped sum stays integer-exact end to end -- deliberately NOT
-    the interpolated quantile, whose fractional bounds would push the
-    sum into float territory."""
+    tames heavy tails without dropping rows.  Nearest-rank bounds are
+    actual data values, so the clipped sum stays integer-exact end to
+    end -- deliberately NOT the interpolated quantile, whose fractional
+    bounds would push the sum into float territory."""
     from odp_dynamic_data_pipeline_spark.operators.aggregate import winsorized_stats
 
     ev = load_table(spark, sf_dir, "events").select(

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators import dedup as dd
-from odp_dynamic_data_pipeline_spark.operators import multimodal as mm
 from odp_dynamic_data_pipeline_spark.operators import similarity as sim
 from odp_dynamic_data_pipeline_spark.operators import text as tx
 from odp_dynamic_data_pipeline_spark.queries import register
@@ -1111,52 +1110,6 @@ def containment_quotes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "udtf_lateral_shingles",
-    """
-WITH t AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS tk
-           FROM documents WHERE doc_id % 20 = 0),
-s AS (SELECT doc_id, array_to_string(list_slice(tk, i, i + 2), ' ') AS shingle
-      FROM (SELECT doc_id, tk,
-                   unnest(generate_series(1, greatest(len(tk) - 2, 0))) AS i
-            FROM t))
-SELECT doc_id, COUNT(*) AS n_shingles,
-       COUNT(DISTINCT shingle) AS n_distinct,
-       MIN(shingle) AS first_shingle
-FROM s GROUP BY doc_id
-""",
-)
-def udtf_lateral_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Python UDTF exercised the way a user actually reaches it: a LATERAL
-    join in SQL fanning each document row out through the registered table
-    function (functions/udfs.py ShingleUDTF), then a relational aggregate
-    on top -- the full register -> plan -> execute path of the Spark 4 UDTF
-    API, driver-hash-verified against a pure-SQL shingle replay.
-
-    UDTFs are the Python-row extension surface, NOT the hot path (the
-    engine-native shingle operator is operators/dedup.py `shingles`, all
-    JVM expressions); the deterministic doc thinning keeps the demo's
-    Python fan-out bounded while still proving semantics.  At scale a UDTF
-    runs per-partition like any Python worker stage -- acceptable at the
-    ingest/extension boundary, never inside a shuffle-heavy transform."""
-    from odp_dynamic_data_pipeline_spark.functions.udfs import register_engine_udfs
-    from odp_dynamic_data_pipeline_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir, ["documents"])
-    register_engine_udfs(spark)
-    return spark.sql(
-        """
-        SELECT d.doc_id, COUNT(*) AS n_shingles,
-               COUNT(DISTINCT s.shingle) AS n_distinct,
-               MIN(s.shingle) AS first_shingle
-        FROM documents d, LATERAL shingle_udtf(d.text) s
-        WHERE d.doc_id % 20 = 0
-        GROUP BY d.doc_id
-        """
-    )
-
-
-
-@register(
     "occurrence_dup_spans",
     """
 WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents),
@@ -1728,78 +1681,5 @@ def scrub_char_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return tx.scrub_char_exact(docs, "text", min_tokens=8, min_count=2, max_ext=64)
 
-
-
-@register(
-    "blocking_quality_report",
-    """
-WITH t AS (
-  SELECT event_id, CAST(user_id AS VARCHAR) AS truth,
-         CAST(epoch_us(ts) // 3600000000 AS VARCHAR) AS b_hour,
-         CAST(epoch_us(ts) // 86400000000 AS VARCHAR) AS b_day,
-         event_type || ':' || CAST(epoch_us(ts) // 86400000000 AS VARCHAR) AS b_type_day
-  FROM events
-),
-base AS (
-  SELECT event_id, truth, 'hour' AS scheme, b_hour AS block FROM t
-  UNION ALL
-  SELECT event_id, truth, 'day', b_day FROM t
-  UNION ALL
-  SELECT event_id, truth, 'type_day', b_type_day FROM t
-),
-totals AS (
-  -- NULL truth keys are unlabeled, not one giant entity: they contribute to
-  -- n_docs (candidate space) but never to true_pairs (mirrors the operator)
-  SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM t) AS n_docs,
-         CAST(COALESCE(SUM(n * (n - 1) // 2), 0) AS BIGINT) AS true_pairs
-  FROM (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM t
-        WHERE truth IS NOT NULL GROUP BY truth)
-),
-pb AS (SELECT scheme, block, CAST(COUNT(*) AS BIGINT) AS n FROM base GROUP BY scheme, block),
-cand AS (
-  SELECT scheme, CAST(COUNT(*) AS BIGINT) AS n_blocks,
-         CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS cand_pairs
-  FROM pb GROUP BY scheme
-),
-pc AS (SELECT scheme, block, truth, CAST(COUNT(*) AS BIGINT) AS n FROM base
-       WHERE truth IS NOT NULL GROUP BY scheme, block, truth),
-cap AS (SELECT scheme, CAST(SUM(n * (n - 1) // 2) AS BIGINT) AS captured_pairs FROM pc GROUP BY scheme)
-SELECT cand.scheme, n_blocks, cand_pairs,
-       CAST((1000000 * (n_docs * (n_docs - 1) // 2 - cand_pairs))
-            // (n_docs * (n_docs - 1) // 2) AS BIGINT) AS reduction_e6,
-       true_pairs,
-       CAST(COALESCE(captured_pairs, 0) AS BIGINT) AS captured_pairs,
-       CAST(CASE WHEN true_pairs > 0 THEN (1000000 * COALESCE(captured_pairs, 0)) // true_pairs
-                 ELSE 1000000 END AS BIGINT) AS completeness_e6
-FROM cand LEFT JOIN cap USING (scheme) CROSS JOIN totals
-""",
-)
-def blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocking-scheme evaluation for the dedup/ER stack
-    (operators.quality_checks.blocking_quality), in the classic
-    record-linkage setup: records = events, ground-truth entity =
-    user_id (records of one entity scattered over a month), schemes
-    under eval = hour buckets, day buckets, and (event_type, day)
-    composite blocks.  Reports reduction ratio and pairs completeness
-    PER SCHEME by counting group sizes -- C(n,2) algebra on two groupBy
-    rollups, no pair ever materialized, which is what makes the report
-    runnable on the full corpus before committing to an O(candidates)
-    matcher pass (finer blocks prune more but lose cross-block truth
-    pairs; the report quantifies that trade)."""
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import blocking_quality
-
-    ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
-    hour = "CAST(unix_micros(ts) div 3600000000 AS STRING)"
-    day = "CAST(unix_micros(ts) div 86400000000 AS STRING)"
-    return blocking_quality(
-        ev,
-        schemes={
-            "hour": F.expr(hour),
-            "day": F.expr(day),
-            "type_day": F.expr(f"concat(event_type, ':', {day})"),
-        },
-        truth_key=F.col("user_id"),
-        id_col="event_id",
-    )
 
 

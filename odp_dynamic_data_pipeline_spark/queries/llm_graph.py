@@ -9,7 +9,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators import dedup as dd
-from odp_dynamic_data_pipeline_spark.operators import multimodal as mm
 from odp_dynamic_data_pipeline_spark.operators import similarity as sim
 from odp_dynamic_data_pipeline_spark.operators import text as tx
 from odp_dynamic_data_pipeline_spark.queries import register

@@ -1,16 +1,15 @@
 """Embedding-space retrieval and clustering queries: exact/ANN top-k
 (IVF, SRP-LSH, PQ, IVF-PQ), k-means/k-center training, SemDeDup (batch,
-scaled, broadcast-path, streaming), BM25 + fusion + retrieval eval, and
-Arrow embedding plumbing.  Split from queries/llm.py in r13 (size only;
-no behavior change).
+scaled, broadcast-path, streaming), BM25 scoring, and Arrow embedding
+plumbing.  Split from queries/llm.py in r13 (size only; no behavior
+change).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators import dedup as dd
-from odp_dynamic_data_pipeline_spark.operators import multimodal as mm
 from odp_dynamic_data_pipeline_spark.operators import similarity as sim
 from odp_dynamic_data_pipeline_spark.operators import text as tx
 from odp_dynamic_data_pipeline_spark.queries import register
@@ -1440,307 +1439,3 @@ def mapinarrow_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
         arrow_embedding_norm_batches,
         "vec_id bigint, label int, norm_sq_e12 bigint, component_sum_e6 bigint",
     )
-
-
-
-EVAL_QUERIES: dict[str, list[str]] = {
-    # BIGRAM phrases: the corpus vocabulary is ~30 words each in ~78% of
-    # docs (negative Robertson idf -- a degenerate unigram run), while
-    # individual bigrams sit at 5-8% document frequency: positive idf,
-    # >k relevant docs per query (recall@10 < 1), graded 0..2 gains.
-    "q_hash_join": ["hash join", "join hash"],
-    "q_scan_speed": ["fast scan", "slow scan"],
-    "q_sort_merge": ["sort merge", "merge join"],
-    "q_window_agg": ["window agg", "group key"],
-}
-
-# token derivation shared by the Spark operator call and the oracle: the
-# adjacent-bigram phrase stream over lowercase unigrams
-
-EVAL_TOKEN_SQL_SPARK = (
-    "CASE WHEN size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) < 2"
-    " THEN array()"
-    " ELSE zip_with("
-    "   slice(regexp_extract_all(lower(text), '[a-z0-9]+', 0), 1,"
-    "         size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) - 1),"
-    "   slice(regexp_extract_all(lower(text), '[a-z0-9]+', 0), 2,"
-    "         size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) - 1),"
-    "   (a, b) -> concat(a, ' ', b)) END"
-)
-
-EVAL_TOKEN_SQL_DUCK = (
-    "list_transform(range(1, len(regexp_extract_all(lower(text), '[a-z0-9]+'))),"
-    " i -> regexp_extract_all(lower(text), '[a-z0-9]+')[i] || ' ' ||"
-    " regexp_extract_all(lower(text), '[a-z0-9]+')[i+1])"
-)
-
-
-
-def _retrieval_eval_oracle(queries: dict[str, list[str]], k: int = 10, rel_tf: int = 2) -> str:
-    """Multi-query BM25 run + graded-relevance eval oracle: the bm25
-    fixed-point idf recursion (same lgr CTE), a second log2 recursion for
-    the nDCG rank discounts (ranks 1..k -- the identical fp20 values the
-    Spark side broadcasts from ilog2_fp20), then pure-integer metric
-    arithmetic.  Mirrors operators.ranking.retrieval_eval exactly."""
-    all_terms = sorted({t for ts in queries.values() for t in ts})
-    terms_sql = ", ".join(f"'{t}'" for t in all_terms)
-    qt_values = ", ".join(
-        f"('{qid}', '{t}')" for qid in sorted(queries) for t in queries[qid]
-    )
-    return f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, UNNEST({EVAL_TOKEN_SQL_DUCK}) AS t
-  FROM documents
-),
-dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) // COUNT(*) AS avgdl FROM dl
-),
-tf AS (
-  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM tok WHERE t IN ({terms_sql}) GROUP BY doc_id, t
-),
-dfs AS (SELECT t, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM tf GROUP BY t),
-vals AS (
-  SELECT dfs.t, 'num' AS w, CAST(2 * stats.n - 2 * dfs.df + 1 AS BIGINT) AS x FROM dfs, stats
-  UNION ALL
-  SELECT dfs.t, 'den', CAST(2 * dfs.df + 1 AS BIGINT) FROM dfs, stats
-),
-lgr(t, w, it, e, m, frac) AS (
-  SELECT t, w, 0, length(format('{{:b}}', x)) - 1,
-         (x << 30) >> (length(format('{{:b}}', x)) - 1), CAST(0 AS BIGINT)
-  FROM vals
-  UNION ALL
-  SELECT t, w, it + 1, e,
-         CASE WHEN ((m * m) >> 30) >= (CAST(1 AS BIGINT) << 31)
-              THEN ((m * m) >> 30) >> 1 ELSE (m * m) >> 30 END,
-         frac * 2 + CASE WHEN ((m * m) >> 30) >= (CAST(1 AS BIGINT) << 31)
-                         THEN 1 ELSE 0 END
-  FROM lgr WHERE it < 20
-),
-lfp AS (SELECT t, w, (CAST(e AS BIGINT) << 20) + frac AS v FROM lgr WHERE it = 20),
-idf AS (
-  SELECT nv.t, nv.v - dv.v AS idf_fp
-  FROM (SELECT t, v FROM lfp WHERE w = 'num') nv
-  JOIN (SELECT t, v FROM lfp WHERE w = 'den') dv USING (t)
-),
-qt(query_id, t) AS (VALUES {qt_values}),
-qd AS (
-  SELECT qt.query_id, tf.doc_id,
-         CAST(SUM(idf.idf_fp * ((1000000 * (44 * tf.tf * stats.avgdl))
-              // (20 * tf.tf * stats.avgdl + 6 * stats.avgdl + 18 * dl.dl))) AS BIGINT) AS score_fp,
-         CAST(SUM(CASE WHEN tf.tf >= {rel_tf} THEN 1 ELSE 0 END) AS BIGINT) AS gain
-  FROM tf
-  JOIN qt ON qt.t = tf.t
-  JOIN idf ON idf.t = tf.t
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats
-  GROUP BY qt.query_id, tf.doc_id
-),
-dvals AS (SELECT CAST(i AS BIGINT) AS r, CAST(i + 1 AS BIGINT) AS x FROM range(1, {k + 1}) t(i)),
-dlgr(r, it, e, m, frac) AS (
-  SELECT r, 0, length(format('{{:b}}', x)) - 1,
-         (x << 30) >> (length(format('{{:b}}', x)) - 1), CAST(0 AS BIGINT)
-  FROM dvals
-  UNION ALL
-  SELECT r, it + 1, e,
-         CASE WHEN ((m * m) >> 30) >= (CAST(1 AS BIGINT) << 31)
-              THEN ((m * m) >> 30) >> 1 ELSE (m * m) >> 30 END,
-         frac * 2 + CASE WHEN ((m * m) >> 30) >= (CAST(1 AS BIGINT) << 31)
-                         THEN 1 ELSE 0 END
-  FROM dlgr WHERE it < 20
-),
-disc AS (
-  SELECT r, (CAST(1 AS BIGINT) << 40) // ((CAST(e AS BIGINT) << 20) + frac) AS disc_fp
-  FROM dlgr WHERE it = 20
-),
-run AS (
-  SELECT query_id, doc_id, gain,
-         row_number() OVER (PARTITION BY query_id ORDER BY score_fp DESC, doc_id) AS rnk
-  FROM qd QUALIFY rnk <= {k}
-),
-run_agg AS (
-  SELECT query_id, CAST(COUNT(*) AS BIGINT) AS n_retrieved,
-         CAST(SUM(CASE WHEN gain >= 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_rel_topk,
-         CAST(COALESCE(MIN(CASE WHEN gain >= 1 THEN rnk END), 0) AS BIGINT) AS first_rel_rank,
-         CAST(SUM(CASE WHEN gain >= 1 THEN gain * disc.disc_fp ELSE 0 END) AS BIGINT) AS dcg_fp
-  FROM run JOIN disc ON disc.r = run.rnk GROUP BY query_id
-),
-ideal AS (
-  SELECT query_id, CAST(SUM(gain * disc.disc_fp) AS BIGINT) AS idcg_fp FROM (
-    SELECT query_id, gain,
-           row_number() OVER (PARTITION BY query_id ORDER BY gain DESC, doc_id) AS rnk
-    FROM qd WHERE gain >= 1 QUALIFY rnk <= {k}
-  ) i JOIN disc ON disc.r = i.rnk GROUP BY query_id
-),
-totals AS (
-  SELECT query_id, CAST(SUM(CASE WHEN gain >= 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_rel_total
-  FROM qd GROUP BY query_id
-)
-SELECT run_agg.query_id, n_retrieved,
-       CAST(COALESCE(totals.n_rel_total, 0) AS BIGINT) AS n_rel_total,
-       n_rel_topk, first_rel_rank,
-       CAST(CASE WHEN first_rel_rank > 0 THEN 1000000 // first_rel_rank ELSE 0 END AS BIGINT) AS mrr_e6,
-       CAST((1000000 * n_rel_topk) // {k} AS BIGINT) AS p_at_k_e6,
-       CAST(CASE WHEN COALESCE(totals.n_rel_total, 0) > 0
-                 THEN (1000000 * n_rel_topk) // totals.n_rel_total ELSE 0 END AS BIGINT) AS r_at_k_e6,
-       CAST(CASE WHEN COALESCE(ideal.idcg_fp, 0) > 0
-                 THEN (1000000 * dcg_fp) // ideal.idcg_fp ELSE 0 END AS BIGINT) AS ndcg_e6
-FROM run_agg
-LEFT JOIN totals USING (query_id)
-LEFT JOIN ideal USING (query_id)
-"""
-
-
-
-@register("retrieval_eval_report", _retrieval_eval_oracle(EVAL_QUERIES, rel_tf=1))
-def retrieval_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Offline retrieval evaluation (operators.ranking.retrieval_eval):
-    a 4-query PHRASE-BM25 run (adjacent-bigram tokens -- the corpus's
-    unigram vocabulary is too common for positive idf), scored against
-    graded relevance labels that are INDEPENDENT of the ranker's exact
-    arithmetic (gain = number of query phrases present), producing
-    per-query nDCG@10 / MRR / P@10 / R@10 in exact integer arithmetic --
-    the fp20 log2 discount table is the same fixed-point recurrence as
-    the BM25 idf, so the DuckDB oracle replays every metric
-    bit-for-bit.  One corpus pass serves all queries (shared tokenize +
-    stats, a (query, phrase, idf) broadcast); per-query top-k goes
-    through WindowGroupLimit, so partitions ship k rows, not hit sets."""
-    from odp_dynamic_data_pipeline_spark.operators.ranking import retrieval_eval
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return retrieval_eval(
-        docs, EVAL_QUERIES, k=10, rel_tf=1, token_sql=EVAL_TOKEN_SQL_SPARK
-    )
-
-
-
-def _rrf_oracle(terms: list[str], n_deep: int = 100, k: int = 10, c: int = 60) -> str:
-    """RRF oracle: the bm25 scored CTE (same lgr idf recursion) and a
-    length-normalized term-density ranking, each cut to its top-n_deep
-    run, fused by summed reciprocal ranks in exact integers."""
-    terms_sql = ", ".join(f"'{t}'" for t in terms)
-    return f"""
-WITH RECURSIVE tok AS (
-  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t
-  FROM documents
-),
-dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY doc_id),
-stats AS (
-  SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(dl) AS BIGINT) // COUNT(*) AS avgdl FROM dl
-),
-tf AS (
-  SELECT doc_id, t, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM tok WHERE t IN ({terms_sql}) GROUP BY doc_id, t
-),
-dfs AS (SELECT t, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df FROM tf GROUP BY t),
-vals AS (
-  SELECT dfs.t, 'num' AS w, CAST(2 * stats.n - 2 * dfs.df + 1 AS BIGINT) AS x FROM dfs, stats
-  UNION ALL
-  SELECT dfs.t, 'den', CAST(2 * dfs.df + 1 AS BIGINT) FROM dfs, stats
-),
-lgr(t, w, it, e, m, frac) AS (
-  SELECT t, w, 0, length(format('{{:b}}', x)) - 1,
-         (x << 30) >> (length(format('{{:b}}', x)) - 1), CAST(0 AS BIGINT)
-  FROM vals
-  UNION ALL
-  SELECT t, w, it + 1, e,
-         CASE WHEN ((m * m) >> 30) >= (CAST(1 AS BIGINT) << 31)
-              THEN ((m * m) >> 30) >> 1 ELSE (m * m) >> 30 END,
-         frac * 2 + CASE WHEN ((m * m) >> 30) >= (CAST(1 AS BIGINT) << 31)
-                         THEN 1 ELSE 0 END
-  FROM lgr WHERE it < 20
-),
-lfp AS (SELECT t, w, (CAST(e AS BIGINT) << 20) + frac AS v FROM lgr WHERE it = 20),
-idf AS (
-  SELECT nv.t, nv.v - dv.v AS idf_fp
-  FROM (SELECT t, v FROM lfp WHERE w = 'num') nv
-  JOIN (SELECT t, v FROM lfp WHERE w = 'den') dv USING (t)
-),
-scored AS (
-  SELECT tf.doc_id,
-         CAST(SUM(idf.idf_fp * ((1000000 * (44 * tf.tf * stats.avgdl))
-              // (20 * tf.tf * stats.avgdl + 6 * stats.avgdl + 18 * dl.dl))) AS BIGINT) AS score_fp
-  FROM tf
-  JOIN idf ON idf.t = tf.t
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats
-  GROUP BY tf.doc_id
-),
-bmtop AS (SELECT doc_id, score_fp FROM scored ORDER BY score_fp DESC, doc_id LIMIT {n_deep}),
-bmrun AS (SELECT doc_id, row_number() OVER (ORDER BY score_fp DESC, doc_id) AS rnk FROM bmtop),
-dens AS (
-  SELECT tf.doc_id,
-         (1000000 * CAST(SUM(tf.tf) AS BIGINT)) // CAST(MAX(dl.dl) AS BIGINT) AS dscore
-  FROM tf JOIN dl ON dl.doc_id = tf.doc_id GROUP BY tf.doc_id
-),
-dtop AS (SELECT doc_id, dscore FROM dens ORDER BY dscore DESC, doc_id LIMIT {n_deep}),
-drun AS (SELECT doc_id, row_number() OVER (ORDER BY dscore DESC, doc_id) AS rnk FROM dtop),
-u AS (
-  SELECT doc_id, 'bm25' AS sys, rnk FROM bmrun
-  UNION ALL
-  SELECT doc_id, 'density', rnk FROM drun
-),
-f AS (
-  SELECT doc_id,
-         CAST(MIN(CASE WHEN sys = 'bm25' THEN rnk END) AS BIGINT) AS rank_bm25,
-         CAST(MIN(CASE WHEN sys = 'density' THEN rnk END) AS BIGINT) AS rank_density,
-         CAST(SUM(1000000000 // ({c} + rnk)) AS BIGINT) AS rrf_e9
-  FROM u GROUP BY doc_id
-)
-SELECT doc_id, rank_bm25, rank_density, rrf_e9
-FROM f ORDER BY rrf_e9 DESC, doc_id LIMIT {k}
-"""
-
-
-
-@register("rrf_fusion_topk", _rrf_oracle(["hash", "join", "fast", "dup"]))
-def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid-retrieval rank fusion (operators.ranking.rrf_fuse): the
-    BM25 run for [hash, join, fast, dup] fused with a length-normalized
-    term-density run by reciprocal-rank fusion (1e9 // (60 + rank), the
-    Cormack 2009 constant), exact integers end to end.  Each system is
-    cut to its top-100 FIRST (TakeOrderedAndProject -- never a global
-    sort), so the fusion aggregates 200 rows regardless of corpus size;
-    the row_number that turns each bounded run into dense ranks is a
-    global window over <= 100 rows by construction (GLOBAL_WINDOW_BOUNDED
-    in the plan audit)."""
-    from odp_dynamic_data_pipeline_spark.operators.ranking import rrf_fuse
-
-    terms = ["hash", "join", "fast", "dup"]
-    terms_arr = "array(" + ",".join(f"'{t}'" for t in terms) + ")"
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    bm = tx.bm25_scores(docs, terms, k=100)
-    run_a = bm.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("score_fp").desc(), F.col("doc_id").asc()))
-        .cast("long")
-        .alias("rank"),
-    )
-
-    tok = docs.select(
-        "doc_id",
-        F.explode(F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).alias("__t"),
-    )
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("dl"))
-    dens = (
-        tok.where(F.expr(f"array_contains({terms_arr}, __t)"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("__tf"))
-        .join(dl, "doc_id")
-        .select("doc_id", F.expr("(1000000 * __tf) div dl").alias("dscore"))
-        .orderBy(F.col("dscore").desc(), F.col("doc_id").asc())
-        .limit(100)
-    )
-    run_b = dens.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("dscore").desc(), F.col("doc_id").asc()))
-        .cast("long")
-        .alias("rank"),
-    )
-    return rrf_fuse({"bm25": run_a, "density": run_b}, id_col="doc_id", k=10, c=60)
-
-

@@ -1625,90 +1625,6 @@ def dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@register(
-    "classifier_auc_report",
-    r"""
-WITH t AS (
-  SELECT doc_id, source, regexp_extract_all(text, '\S+') AS toks
-  FROM documents WHERE len(regexp_extract_all(text, '\S+')) > 0
-),
-sc AS (
-  SELECT source,
-         (1000000 * CAST(len(list_filter(toks, x -> list_contains(['the','and','of','a','to'], x))) AS BIGINT))
-           // CAST(len(toks) AS BIGINT) >= 30000 AS lab,
-         (1000000 * CAST(list_sum(list_transform(toks,
-             x -> ('0x' || substr(md5(x), 1, 8))::BIGINT % 2001 - 1000)) AS BIGINT))
-           // CAST(len(toks) AS BIGINT) AS model_e6,
-         (1000000 * CAST(len(list_distinct(toks)) AS BIGINT))
-           // CAST(len(toks) AS BIGINT) AS uniq_e6
-  FROM t
-),
-rm AS (
-  SELECT source, lab,
-         2 * rank() OVER (PARTITION BY source ORDER BY model_e6)
-           + COUNT(*) OVER (PARTITION BY source, model_e6) - 1 AS r2
-  FROM sc
-),
-am AS (
-  SELECT source,
-         CAST(SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         CAST(SUM(CASE WHEN lab THEN 0 ELSE 1 END) AS BIGINT) AS n_neg,
-         CAST(SUM(CASE WHEN lab THEN r2 ELSE 0 END) AS BIGINT) AS r2s
-  FROM rm GROUP BY source
-),
-ru AS (
-  SELECT source, lab,
-         2 * rank() OVER (PARTITION BY source ORDER BY uniq_e6)
-           + COUNT(*) OVER (PARTITION BY source, uniq_e6) - 1 AS r2
-  FROM sc
-),
-au AS (
-  SELECT source,
-         CAST(SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS BIGINT) AS n_pos,
-         CAST(SUM(CASE WHEN lab THEN 0 ELSE 1 END) AS BIGINT) AS n_neg,
-         CAST(SUM(CASE WHEN lab THEN r2 ELSE 0 END) AS BIGINT) AS r2s
-  FROM ru GROUP BY source
-)
-SELECT am.source, am.n_pos, am.n_neg,
-       (1000000 * (am.r2s - am.n_pos * (am.n_pos + 1))) // (2 * am.n_pos * am.n_neg) AS auc_model_e6,
-       (1000000 * (au.r2s - au.n_pos * (au.n_pos + 1))) // (2 * au.n_pos * au.n_neg) AS auc_unique_e6
-FROM am JOIN au USING (source)
-WHERE am.n_pos > 0 AND am.n_neg > 0
-""",
-)
-def classifier_auc_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-based filter evaluation (operators.quality_checks.binary_auc):
-    exact tie-aware ROC-AUC per source, via the Mann-Whitney rank-sum
-    identity in pure integer arithmetic -- no threshold sweep.  Two scores
-    are evaluated against the rule-gate label (stopword ratio >= 3%): the
-    hashed linear model's mean token weight and the unique-token ratio.
-    This is the eval loop that decides whether a cheap classifier can
-    replace a heuristic gate before a 100 TB filtering pass."""
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import binary_auc
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    qf = tx.quality_features(docs).where(F.col("n_tokens") > 0)
-    scored = qf.select(
-        "source",
-        (
-            F.expr("(1000000 * CAST(n_stopwords AS BIGINT)) div CAST(n_tokens AS BIGINT)")
-            >= 30000
-        ).alias("lab"),
-        F.expr(
-            "(1000000 * aggregate(transform(tokens,"
-            " t -> CAST(conv(substr(md5(t), 1, 8), 16, 10) AS BIGINT) % 2001 - 1000),"
-            " CAST(0 AS BIGINT), (a, x) -> a + x)) div CAST(n_tokens AS BIGINT)"
-        ).alias("model_e6"),
-        F.expr(
-            "(1000000 * CAST(n_unique_tokens AS BIGINT)) div CAST(n_tokens AS BIGINT)"
-        ).alias("uniq_e6"),
-    )
-    auc_m = binary_auc(scored, "source", "model_e6", "lab", out_col="auc_model_e6")
-    auc_u = binary_auc(scored, "source", "uniq_e6", "lab", out_col="auc_unique_e6")
-    return auc_m.join(auc_u.select("source", "auc_unique_e6"), "source")
-
-
-
 def duck_ilog2_sql(x: str) -> str:
     """DuckDB twin of functions.scalars.ilog2_fp20_sql: the identical
     square-and-extract-bit fixed-point log2 recurrence as a list_reduce
@@ -2018,7 +1934,7 @@ def calibration_curve_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability (calibration) curve for a document-quality scorer: bin
     predictions into deciles, compare each bin's mean predicted score to
     its empirical positive rate -- the companion diagnostic to ROC-AUC
-    (classifier_auc_report ranks; THIS checks whether the scores mean what
+    (AUC measures ranking; THIS checks whether the scores mean what
     they say, which is what sampling-by-score assumes).  Scorer = stopword
     ratio, reference label = token-uniqueness threshold, both e6 integer
     ratios with truncating division; bin = score*10 div 1000001 keeps the
@@ -2512,75 +2428,3 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered top-k."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return tx.pmi_collocations(docs, min_count=5, k=20)
-
-
-
-@register(
-    "pr_curve_report",
-    r"""
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
-  FROM documents WHERE len(regexp_extract_all(text, '\S+')) > 0
-),
-sc AS (
-  SELECT (1000000 * CAST(len(list_filter(toks, x -> list_contains(['the','and','of','a','to'], x))) AS BIGINT))
-           // CAST(len(toks) AS BIGINT) >= 30000 AS lab,
-         (1000000 * CAST(list_sum(list_transform(toks,
-             x -> ('0x' || substr(md5(x), 1, 8))::BIGINT % 2001 - 1000)) AS BIGINT))
-           // CAST(len(toks) AS BIGINT) AS model_e6
-  FROM t
-),
-bk AS (
-  SELECT LEAST(CAST(63 AS BIGINT), GREATEST(CAST(0 AS BIGINT),
-           (model_e6 + 1000000000) // 31250000)) AS b,
-         lab
-  FROM sc
-),
-agg AS (
-  SELECT b, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS BIGINT) AS pos
-  FROM bk GROUP BY b
-),
-c AS (
-  SELECT b,
-         SUM(n) OVER (ORDER BY b DESC ROWS UNBOUNDED PRECEDING) AS n_ge,
-         SUM(pos) OVER (ORDER BY b DESC ROWS UNBOUNDED PRECEDING) AS tp_ge,
-         SUM(pos) OVER () AS totpos
-  FROM agg
-)
-SELECT CAST(-1000000000 + b * 31250000 AS BIGINT) AS threshold_e6,
-       CAST(n_ge AS BIGINT) AS n_ge,
-       CAST(tp_ge AS BIGINT) AS tp_ge,
-       CAST((1000000 * tp_ge) // n_ge AS BIGINT) AS precision_e6,
-       CAST(CASE WHEN totpos > 0 THEN (1000000 * tp_ge) // totpos ELSE 0 END AS BIGINT) AS recall_e6
-FROM c
-""",
-)
-def pr_curve_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precision/recall curve for the model-based filter
-    (operators.quality_checks.pr_curve): the same hashed-linear-model
-    score and stopword-gate label as classifier_auc_report, swept over a
-    FIXED 64-bucket threshold grid on the score's [-1e9, 1e9) domain --
-    AUC says the ranking is good; this says where to cut it before a
-    100 TB filtering pass.  Domain-fixed buckets keep the heavy pass one
-    map-side-combined groupBy; the cumulative window runs over <= 64
-    pre-aggregated rows (bounded-global-window class).  All integers,
-    value-replayed by the oracle."""
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import pr_curve
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    qf = tx.quality_features(docs).where(F.col("n_tokens") > 0)
-    scored = qf.select(
-        (
-            F.expr("(1000000 * CAST(n_stopwords AS BIGINT)) div CAST(n_tokens AS BIGINT)")
-            >= 30000
-        ).alias("lab"),
-        F.expr(
-            "(1000000 * aggregate(transform(tokens,"
-            " t -> CAST(conv(substr(md5(t), 1, 8), 16, 10) AS BIGINT) % 2001 - 1000),"
-            " CAST(0 AS BIGINT), (a, x) -> a + x)) div CAST(n_tokens AS BIGINT)"
-        ).alias("model_e6"),
-    )
-    return pr_curve(
-        scored, "model_e6", "lab", lo=-1_000_000_000, hi=1_000_000_000, n_buckets=64
-    )

@@ -1054,56 +1054,6 @@ def correlation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "merge_cdc_snapshot",
-    """
-WITH snap AS (SELECT c_custkey AS k, CAST(ROUND(c_acctbal * 100, 0) AS BIGINT) AS bal_cents,
-                     c_mktsegment AS seg
-              FROM customer),
-chg AS (
-  SELECT k, 'D' AS op, CAST(NULL AS BIGINT) AS bal_cents, CAST(NULL AS VARCHAR) AS seg
-  FROM snap WHERE k % 97 = 0
-  UNION ALL
-  SELECT k, 'U', bal_cents + 1000, seg FROM snap WHERE k % 10 = 3 AND k % 97 <> 0
-  UNION ALL
-  SELECT k + 10000000, 'I', CAST(0 AS BIGINT), 'NEW' FROM snap WHERE k % 500 = 1
-)
-SELECT COALESCE(s.k, c.k) AS c_custkey,
-       CASE WHEN c.op IS NOT NULL THEN c.bal_cents ELSE s.bal_cents END AS bal_cents,
-       CASE WHEN c.op IS NOT NULL THEN c.seg ELSE s.seg END AS seg
-FROM snap s FULL OUTER JOIN chg c ON s.k = c.k
-WHERE NOT (c.op IS NOT NULL AND c.op = 'D')
-""",
-)
-def merge_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative MERGE (operators.merge.merge_upsert): deletes, balance
-    updates, and new-key inserts folded into the customer snapshot in ONE
-    full-outer join -- the warehouse replacement for the reference's
-    per-key Redis SET loop (src/data_processor.py:90-92)."""
-    from odp_dynamic_data_pipeline_spark.operators.merge import merge_upsert
-
-    snap = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey"),
-        _cents("c_acctbal").alias("bal_cents"),
-        F.col("c_mktsegment").alias("seg"),
-    )
-    k = F.col("c_custkey")
-    deletes = snap.where(k % 97 == 0).select(
-        "c_custkey", F.lit("D").alias("op"),
-        F.lit(None).cast("long").alias("bal_cents"), F.lit(None).cast("string").alias("seg"),
-    )
-    updates = snap.where((k % 10 == 3) & (k % 97 != 0)).select(
-        "c_custkey", F.lit("U").alias("op"),
-        (F.col("bal_cents") + 1000).alias("bal_cents"), "seg",
-    )
-    inserts = snap.where(k % 500 == 1).select(
-        (k + 10_000_000).alias("c_custkey"), F.lit("I").alias("op"),
-        F.lit(0).cast("long").alias("bal_cents"), F.lit("NEW").alias("seg"),
-    )
-    changes = deletes.unionByName(updates).unionByName(inserts)
-    return merge_upsert(snap, changes, "c_custkey")
-
-
-@register(
     "sample_k_per_group",
     """
 WITH r AS (

@@ -3347,52 +3347,6 @@ def linkpred_topk_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "udtf_polymorphic_fields",
-    """
-WITH t AS (
-  SELECT lang, regexp_extract_all(text, '\\S+') AS tk
-  FROM documents WHERE doc_id % 10 = 0
-),
-f AS (
-  SELECT lang,
-         CASE WHEN len(tk) >= 1 THEN tk[1] END AS f1,
-         CASE WHEN len(tk) >= 2 THEN tk[2] END AS f2,
-         CASE WHEN len(tk) >= 3 THEN tk[3] END AS f3
-  FROM t
-)
-SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COUNT(DISTINCT f1) AS BIGINT) AS n_first,
-       MIN(f2) AS min_second, MAX(f3) AS max_third
-FROM f GROUP BY lang
-""",
-)
-def udtf_polymorphic_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """POLYMORPHIC Python UDTF (Spark 4 ``analyze``): fields_udtf(text, 3)
-    has no fixed returnType -- its schema (f1..f3, string) is computed at
-    PLAN time from the constant argument by the class's static analyze()
-    (functions/udfs.py FieldsUDTF), the extension surface for
-    schema-parameterized table functions a static UDTF cannot express.
-    Exercised end to end through SQL LATERAL + relational aggregate, like
-    the static-shape twin udtf_lateral_shingles; same extension-boundary
-    caveat (Python fan-out bounded by the deterministic doc thinning,
-    never a shuffle-heavy hot path)."""
-    from odp_dynamic_data_pipeline_spark.functions.udfs import register_engine_udfs
-
-    register_views(spark, sf_dir, ["documents"])
-    register_engine_udfs(spark)
-    return spark.sql(
-        """
-        SELECT d.lang, COUNT(*) AS n_docs,
-               COUNT(DISTINCT s.f1) AS n_first,
-               MIN(s.f2) AS min_second, MAX(s.f3) AS max_third
-        FROM documents d, LATERAL fields_udtf(d.text, 3) s
-        WHERE d.doc_id % 10 = 0
-        GROUP BY d.lang
-        """
-    )
-
-
-@register(
     "file_provenance_report",
     """
 SELECT 'documents.parquet' AS file_name,
@@ -3843,51 +3797,4 @@ def fim_transform_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "md5(concat('<PRE>', pre, '<SUF>', suf, '<MID>', mid))"
         ).alias("psm_md5"),
-    )
-
-
-@register(
-    "udtf_table_partition_args",
-    """
-WITH l AS (
-  SELECT lang, doc_id, n_chars,
-         CASE WHEN n_chars > lag(n_chars) OVER (PARTITION BY lang ORDER BY doc_id)
-              THEN 1 ELSE 0 END AS is_asc
-  FROM documents
-),
-g AS (
-  SELECT lang, is_asc,
-         SUM(CASE WHEN is_asc = 0 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY lang ORDER BY doc_id) AS grp
-  FROM l
-),
-r AS (SELECT lang, grp, COUNT(*) AS run_len FROM g GROUP BY lang, grp)
-SELECT l.lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(is_asc) AS BIGINT) AS n_incr,
-       CAST((SELECT MAX(run_len) FROM r WHERE r.lang = l.lang) AS BIGINT) AS max_run
-FROM l GROUP BY l.lang
-""",
-)
-def udtf_table_partition_args(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PARTITION-scoped Python UDTF via Spark 4 TABLE() arguments:
-    ``lang_runs_udtf(TABLE(documents) PARTITION BY lang ORDER BY doc_id)``
-    hands each UDTF instance one whole lang partition in doc_id order --
-    eval() streams the rows with O(1) Python state, terminate() emits the
-    per-partition summary (ascent count + longest ascent run of n_chars,
-    deliberately order-dependent so the oracle's lag/gaps-and-islands
-    replay breaks if partition/order table-arg semantics regress).  The
-    missing piece between udtf_lateral_shingles (per-row fan-out) and the
-    grouped-pandas kernels (whole group as ONE Arrow batch): sequential
-    per-group algorithms over partitions too big to batch.  Scale shape:
-    one hash shuffle on the partition key, state O(1) per instance."""
-    from odp_dynamic_data_pipeline_spark.functions.udfs import register_engine_udfs
-
-    register_views(spark, sf_dir, ["documents"])
-    register_engine_udfs(spark)
-    return spark.sql(
-        """
-        SELECT lang, n_docs, n_incr, max_run
-        FROM lang_runs_udtf(TABLE(documents) PARTITION BY lang ORDER BY doc_id)
-        """
     )

@@ -121,15 +121,22 @@ def compact_parquet(spark, path: str, *, target_files: int, sort_within_by: list
     fs.delete(p_aside, True)
 
 
+def _dump_json(obj, path: str, indent: int) -> None:
+    """Write ``obj`` as indented JSON, creating the parent directory when
+    the path names one (a bare filename writes to the working directory)."""
+    parent = os.path.dirname(path)
+    if parent:
+        os.makedirs(parent, exist_ok=True)
+    with open(path, "w") as f:
+        json.dump(obj, f, indent=indent, default=str)
+
+
 def write_json_array(df: DataFrame, path: str) -> None:
     """Edge-compatible sink reproducing the reference's pretty-printed JSON
     array files (reference: src/data_processor.py:38-40).  Driver-side
     collect -- only for edge outputs known to be small (golden-file parity);
     large outputs use write_json/write_parquet."""
-    rows = [r.asDict(recursive=True) for r in df.collect()]
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(rows, f, indent=4, default=str)
+    _dump_json([r.asDict(recursive=True) for r in df.collect()], path, indent=4)
 
 
 def write_keyed_object(df: DataFrame, key_col: str, path: str | None = None) -> dict:
@@ -140,9 +147,7 @@ def write_keyed_object(df: DataFrame, key_col: str, path: str | None = None) -> 
     rows = [r.asDict(recursive=True) for r in df.collect()]
     keyed = {str(r[key_col]): {k: v for k, v in r.items() if k != key_col} for r in rows}
     if path:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "w") as f:
-            json.dump(keyed, f, indent=2, default=str)
+        _dump_json(keyed, path, indent=2)
     return keyed
 
 

@@ -2367,8 +2367,8 @@ def apply_incremental_upsert_batch(
 ) -> None:
     """One micro-batch of the streaming CDC upsert (last-wins materialized
     table): keep, per key, the row with the highest ``seq_cols`` tuple
-    seen so far -- the streaming face of MERGE ... WHEN MATCHED UPDATE
-    (batch twin: merge_cdc_snapshot).  Unlike the sessionizer there is NO
+    seen so far -- the streaming face of MERGE ... WHEN MATCHED UPDATE.
+    Unlike the sessionizer there is NO
     chronology requirement: max-by-seq is commutative, so late and
     out-of-order batches fold correctly by construction.
 

@@ -158,32 +158,6 @@ def test_audio_segments_overlap(spark):
     ]
 
 
-def test_binary_auc_hand_computed_with_ties(spark):
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import binary_auc
-
-    # ranks ascending: 1(pos) 2(neg) {3,3}(pos,neg -> avg 3.5) 5(pos)
-    # U = (1 + 3.5 + 5) - 3*4/2 = 3.5 ; AUC = 3.5 / (3*2) = 0.5833..
-    rows = [("g", 1, True), ("g", 2, False), ("g", 3, True), ("g", 3, False), ("g", 4, True)]
-    # a one-class group must be dropped (AUC undefined)
-    rows += [("h", 1, True), ("h", 2, True)]
-    df = spark.createDataFrame(rows, "grp string, score long, lab boolean")
-    out = {r["grp"]: r for r in binary_auc(df, "grp", "score", "lab").collect()}
-    assert set(out) == {"g"}
-    assert out["g"]["n_pos"] == 3 and out["g"]["n_neg"] == 2
-    assert out["g"]["auc_e6"] == 583333  # floor(1e6 * 3.5 / 6)
-
-
-def test_binary_auc_perfect_and_inverted(spark):
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import binary_auc
-
-    perfect = [("g", s, s >= 3) for s in range(1, 7)]
-    inverted = [("g", s, s < 3) for s in range(1, 7)]
-    df_p = spark.createDataFrame(perfect, "grp string, score long, lab boolean")
-    df_i = spark.createDataFrame(inverted, "grp string, score long, lab boolean")
-    assert binary_auc(df_p, "grp", "score", "lab").collect()[0]["auc_e6"] == 1_000_000
-    assert binary_auc(df_i, "grp", "score", "lab").collect()[0]["auc_e6"] == 0
-
-
 def test_jaccard_join_exact_no_false_negatives(spark):
     from odp_dynamic_data_pipeline_spark.operators.dedup import jaccard_join
 

@@ -3,6 +3,7 @@ config, equal to the hand-built operator composition."""
 
 from __future__ import annotations
 
+import pytest
 import yaml
 
 from odp_dynamic_data_pipeline_spark.operators import dedup as dd
@@ -68,22 +69,44 @@ def test_yaml_transform_misspelled_argument_raises(spark):
         Pipeline(bad).compile(spark, path_vars={"sf": SF})
 
 
-def test_bad_output_format_fails_before_any_sink(spark, tmp_path):
-    """An unknown output format on the last stage fails before the
-    earlier stages drain or write anything."""
-    import pytest
+def _bad_output_format(stages):
+    stages["stage_3"]["output"]["format"] = "jsonl"
 
+
+def _output_without_path(stages):
+    del stages["stage_3"]["output"]["path"]
+
+
+def _read_unwritten_mapping(stages):
+    stages["stage_2"]["mappings"]["read"][0]["name"] = "no_such_mapping"
+
+
+@pytest.mark.parametrize(
+    "mutate, match",
+    [
+        (_bad_output_format, "stage_3.*jsonl"),
+        (_output_without_path, "stage_3.*path"),
+        (_read_unwritten_mapping, "stage_2.*no_such_mapping"),
+    ],
+    ids=["bad_format", "output_without_path", "read_unwritten_mapping"],
+)
+def test_bad_output_format_fails_before_any_sink(spark, tmp_path, mutate, match):
+    """A bad spec -- an unknown output format, an output without a path, or
+    a read of a mapping no stage writes -- fails before any stage drains
+    or writes anything."""
     spec = yaml.safe_load(open("pipelines/observability_correlation_pipeline.yaml"))
-    spec["stages"]["stage_3"]["output"]["format"] = "jsonl"
+    mutate(spec["stages"])
     out_dir = tmp_path / "out"
     out_dir.mkdir()
-    with pytest.raises(ValueError, match="stage_3.*jsonl"):
+    work_dir = tmp_path / "work"
+    with pytest.raises(ValueError, match=match):
         Pipeline(spec).run(
             spark, hour="2024111612",
             path_vars={"data_dir": "tests/fixtures/reference_hour", "out_dir": str(out_dir)},
-            work_dir=str(tmp_path / "work"),
+            work_dir=str(work_dir),
         )
     assert list(out_dir.iterdir()) == []
+    assert not work_dir.exists() or list(work_dir.iterdir()) == []
 
 
 def test_op_table_covers_shipped_and_traced_ops():

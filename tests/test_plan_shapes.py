@@ -91,12 +91,6 @@ def test_decontaminate_broadcasts_benchmark(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_merge_cdc_single_join(spark):
-    """MERGE compiles to exactly one full-outer join pass."""
-    plan = plan_of(spark, "merge_cdc_snapshot")
-    assert plan.count("FullOuter") == 1
-
-
 def test_chunking_is_map_only(spark):
     """Document chunking must stay shuffle-free (sequence/slice + explode)."""
     plan = plan_of(spark, "doc_chunks")

@@ -1,120 +1,13 @@
-"""Unit tests for the r9 second-wave operators: retrieval evaluation
-(nDCG/MRR/P/R), reciprocal-rank fusion, blocking-scheme quality,
-approximate-FD g3, and gap+cap sessionization -- crafted inputs with
-hand-computed expectations."""
+"""Unit tests for gap+cap sessionization, PMI collocations, weighted
+median, winsorized stats, and the streaming upsert store's ordering,
+tombstone and expiry semantics -- crafted inputs with hand-computed
+expectations."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from odp_dynamic_data_pipeline_spark.operators.quality_checks import (
-    approx_fd_report,
-    blocking_quality,
-)
-from odp_dynamic_data_pipeline_spark.operators.ranking import (
-    ndcg_discounts_fp20,
-    retrieval_eval,
-    rrf_fuse,
-)
 from odp_dynamic_data_pipeline_spark.operators.sessionize import sessionize_capped
-from odp_dynamic_data_pipeline_spark.operators.text import ilog2_fp20
-
-
-def test_ndcg_discounts_exact():
-    # rank 1 -> 1/log2(2) = 1.0 exactly in fp20
-    d = dict(ndcg_discounts_fp20(3))
-    assert d[1] == 1 << 20
-    # rank 3 -> 1/log2(4) = 0.5 exactly
-    assert d[3] == (1 << 40) // ilog2_fp20(4) == (1 << 20) // 2
-    # monotone decreasing
-    vals = [v for _, v in ndcg_discounts_fp20(10)]
-    assert vals == sorted(vals, reverse=True)
-
-
-def test_retrieval_eval_crafted(spark):
-    # d1: 'cat' x3 (relevant, high tf); d2: 'cat' x1 (hit but NOT relevant);
-    # d3: 'cat' x2 'dog' x2 (relevant, gain 2); d4: no query terms.
-    rows = [
-        (1, "cat cat cat filler filler"),
-        (2, "cat filler filler filler"),
-        (3, "cat cat dog dog filler"),
-        (4, "filler filler filler filler"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = retrieval_eval(df, {"q": ["cat", "dog"]}, k=3, rel_tf=2)
-    r = out.collect()[0]
-    assert r["query_id"] == "q"
-    assert r["n_retrieved"] == 3  # d1, d2, d3 have hits
-    assert r["n_rel_total"] == 2  # d1 (gain 1), d3 (gain 2)
-    assert r["n_rel_topk"] == 2
-    assert r["p_at_k_e6"] == 2 * 1000000 // 3
-    assert r["r_at_k_e6"] == 1000000
-    assert r["first_rel_rank"] >= 1
-    assert r["mrr_e6"] == 1000000 // r["first_rel_rank"]
-    # ideal ordering is gain desc => idcg >= dcg => ndcg <= 1
-    assert 0 < r["ndcg_e6"] <= 1000000
-
-
-def test_retrieval_eval_perfect_ranking_is_1(spark):
-    # single relevant doc ranked first => DCG == IDCG exactly
-    rows = [(1, "cat cat cat"), (2, "filler words here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    r = retrieval_eval(df, {"q": ["cat"]}, k=5, rel_tf=2).collect()[0]
-    assert r["ndcg_e6"] == 1000000
-    assert r["mrr_e6"] == 1000000
-    assert r["first_rel_rank"] == 1
-
-
-def test_rrf_fuse_exact(spark):
-    a = spark.createDataFrame([(10, 1), (20, 2), (30, 3)], "doc_id long, rank long")
-    b = spark.createDataFrame([(20, 1), (10, 2), (40, 3)], "doc_id long, rank long")
-    out = rrf_fuse({"a": a, "b": b}, id_col="doc_id", k=4, c=60).collect()
-    by_id = {r["doc_id"]: r for r in out}
-    # doc 10: 1e9//61 + 1e9//62; doc 20 identical sum; tie broken by id
-    s = 10**9 // 61 + 10**9 // 62
-    assert by_id[10]["rrf_e9"] == s and by_id[20]["rrf_e9"] == s
-    assert [r["doc_id"] for r in out[:2]] == [10, 20]
-    assert by_id[30]["rrf_e9"] == 10**9 // 63
-    assert by_id[40]["rank_a"] is None and by_id[40]["rank_b"] == 3
-
-
-def test_blocking_quality_counts(spark):
-    # truth groups: {1,2} (same tokens, different order), {3}, {4}
-    # block 'first char': 1,3 share 'a...'; 2 'b...'; 4 'c...'
-    rows = [
-        (1, "aa bb"),
-        (2, "bb aa"),
-        (3, "aa zz"),
-        (4, "cc dd"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    toks = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-    out = blocking_quality(
-        df,
-        schemes={"first2": F.expr("substring(text, 1, 2)")},
-        truth_key=F.expr(f"array_join(array_sort({toks}), ' ')"),
-    ).collect()
-    r = out[0]
-    # blocks: 'aa' -> {1,3}, 'bb' -> {2}, 'cc' -> {4}; cand pairs = 1
-    assert r["n_blocks"] == 3 and r["cand_pairs"] == 1
-    # true pairs: (1,2); captured: none (1 and 2 in different blocks)
-    assert r["true_pairs"] == 1 and r["captured_pairs"] == 0
-    assert r["completeness_e6"] == 0
-    # reduction: 1 - 1/6
-    assert r["reduction_e6"] == 1000000 * 5 // 6
-
-
-def test_approx_fd_g3(spark):
-    # key A: 3 rows, values x,x,y -> max 2, removals 1, violating
-    # key B: 2 rows, values z,z -> holds
-    rows = [("A", "x"), ("A", "x"), ("A", "y"), ("B", "z"), ("B", "z")]
-    df = spark.createDataFrame(rows, "k string, v string")
-    r = approx_fd_report(df, "t.k->v", ["k"], "v").collect()[0]
-    assert r["n_rows"] == 5 and r["n_keys"] == 2
-    assert r["n_violating_keys"] == 1 and r["g3_removals"] == 1
-    assert r["g3_e6"] == 1000000 // 5
 
 
 def _ts(h: float) -> dt.datetime:
@@ -173,23 +66,6 @@ def test_pmi_collocations_crafted(spark):
     assert r2["pmi_fp20"] == ilog2_fp20(14 * 2) - ilog2_fp20(2 * 4)
 
 
-def test_mad_outliers_crafted(spark):
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import mad_outliers
-
-    # values 1..9 plus an outlier 1000 (cents): median of 10 values = 5.5
-    # -> med_x2 = 11; deviations |x-5.5| = 4.5,3.5,...,3.5,994.5 ->
-    # dev_x4 = 2*|2x - 11|; mad = median of devs
-    rows = [("a", v) for v in [1, 2, 3, 4, 5, 6, 7, 8, 9, 1000]]
-    df = spark.createDataFrame(rows, "g string, cents long")
-    r = mad_outliers(df, "g", "cents", k=3).collect()[0]
-    assert r["n"] == 10 and r["median_cents_x2"] == 11
-    devs4 = sorted(2 * abs(2 * v - 11) for v in [1, 2, 3, 4, 5, 6, 7, 8, 9, 1000])
-    mad4 = (devs4[4] + devs4[5]) // 2  # even count, both even values
-    assert r["mad_cents_x4"] == mad4
-    assert r["n_outliers"] == sum(1 for d in devs4 if d > 3 * mad4)
-    assert r["max_dev_x4"] == devs4[-1]
-
-
 def test_weighted_median_crafted(spark):
     from odp_dynamic_data_pipeline_spark.operators.aggregate import weighted_median
 
@@ -246,24 +122,6 @@ def test_incremental_upsert_seq_tiebreak(spark, tmp_path):
     assert (r["tie"], r["val"]) == (2, "b")  # deterministic tiebreak on the 2nd seq col
 
 
-def test_pr_curve_crafted(spark):
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import pr_curve
-
-    # scores 0..9 in a [0, 10) domain with 5 buckets (width 2);
-    # labels: positives at scores 6..9
-    rows = [(s, s >= 6) for s in range(10)]
-    df = spark.createDataFrame(rows, "score long, lab boolean")
-    out = {r["threshold_e6"]: r for r in pr_curve(df, "score", "lab", lo=0, hi=10, n_buckets=5).collect()}
-    # threshold 8 (bucket 4): scores 8,9 -> n_ge 2, tp 2, precision 1.0, recall 2/4
-    assert (out[8]["n_ge"], out[8]["tp_ge"]) == (2, 2)
-    assert out[8]["precision_e6"] == 1000000 and out[8]["recall_e6"] == 500000
-    # threshold 4 (bucket 2): scores 4..9 -> n 6, tp 4 -> precision 4/6, recall 1.0
-    assert (out[4]["n_ge"], out[4]["tp_ge"]) == (6, 4)
-    assert out[4]["precision_e6"] == 4 * 1000000 // 6 and out[4]["recall_e6"] == 1000000
-    # threshold 0: everything -> precision = base rate
-    assert out[0]["n_ge"] == 10 and out[0]["precision_e6"] == 400000
-
-
 def test_winsorized_stats_crafted(spark):
     from odp_dynamic_data_pipeline_spark.operators.aggregate import winsorized_stats
 
@@ -286,46 +144,6 @@ def test_sessionize_capped_buckets_mode_identical(spark):
     a = {tuple(r) for r in sessionize_capped(df, **kw).collect()}
     b = {tuple(r) for r in sessionize_capped(df, buckets=3, **kw).collect()}
     assert a == b and len(a) > 7
-
-
-def test_pr_curve_degenerate_domain_raises(spark):
-    import pytest
-
-    from odp_dynamic_data_pipeline_spark.operators.quality_checks import pr_curve
-
-    df = spark.createDataFrame([(1, True)], "score long, lab boolean")
-    with pytest.raises(ValueError, match="n_buckets"):
-        pr_curve(df, "score", "lab", lo=0, hi=5, n_buckets=10)
-
-
-def test_retrieval_eval_empty_corpus_raises(spark):
-    import pytest
-
-    from odp_dynamic_data_pipeline_spark.operators.ranking import retrieval_eval
-
-    docs = spark.createDataFrame([], "doc_id string, text string")
-    with pytest.raises(ValueError, match="empty"):
-        retrieval_eval(docs, queries={"q1": ["hello"]})
-
-
-def test_blocking_quality_null_truth_not_an_entity(spark):
-    # Two NULL-truth rows share a block: they must NOT count as a true
-    # pair (or a captured pair), but they DO stay in n_docs/cand space.
-    rows = [
-        (1, "e1", "blk"),
-        (2, "e1", "blk"),
-        (3, None, "blk"),
-        (4, None, "blk"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, ent string, blk string")
-    r = blocking_quality(
-        df, schemes={"s": F.col("blk")}, truth_key=F.col("ent")
-    ).collect()[0]
-    # truth pairs: only (1,2); the two NULL rows are unlabeled
-    assert r["true_pairs"] == 1 and r["captured_pairs"] == 1
-    # candidate space counts all 4 docs: one block of 4 -> C(4,2)=6 pairs
-    assert r["cand_pairs"] == 6 and r["reduction_e6"] == 0
-    assert r["completeness_e6"] == 1000000
 
 
 def test_upsert_delete_tombstone_blocks_resurrection(spark, tmp_path):

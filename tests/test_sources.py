@@ -41,6 +41,16 @@ def test_json_array_sink(spark, tmp_path):
     assert data == [{"k": "a", "v": 1}, {"k": "b", "v": 2}]
 
 
+def test_json_sinks_write_a_bare_filename(spark, tmp_path, monkeypatch):
+    """A path with no directory part writes to the working directory."""
+    monkeypatch.chdir(tmp_path)
+    df = spark.createDataFrame([("a", 1)], "k string, v long")
+    write_json_array(df, "arr.json")
+    write_keyed_object(df, "k", "keyed.json")
+    assert json.loads((tmp_path / "arr.json").read_text()) == [{"k": "a", "v": 1}]
+    assert json.loads((tmp_path / "keyed.json").read_text()) == {"a": {"v": 1}}
+
+
 def test_keyed_object_sink(spark, tmp_path):
     df = spark.createDataFrame(
         [("c1", 120.0, 0), ("c2", 0.0, 1)], "clientId string, page_view_time double, error_count long"

@@ -1,43 +1,7 @@
+"""Direct tests of the Arrow batch kernels that the registry's
+mapInArrow / applyInArrow queries run on the Python workers."""
+
 from __future__ import annotations
-
-from odp_dynamic_data_pipeline_spark.functions.udfs import register_engine_udfs
-
-
-def test_pandas_udf_and_udtf_from_sql(spark):
-    register_engine_udfs(spark)
-    spark.createDataFrame(
-        [("a b c d",), ("x y",)], "text string"
-    ).createOrReplaceTempView("t_udf")
-    rows = spark.sql("SELECT token_count_udf(text) AS n FROM t_udf ORDER BY n").collect()
-    assert [r["n"] for r in rows] == [2, 4]
-
-    shingles = spark.sql("SELECT s.shingle FROM shingle_udtf('a b c d') s ORDER BY s.idx").collect()
-    assert [r["shingle"] for r in shingles] == ["a b c", "b c d"]
-
-
-def test_grouped_agg_pandas_udaf(spark):
-    from pyspark.sql import functions as F
-
-    from odp_dynamic_data_pipeline_spark.functions.udfs import median_abs_dev_udf
-
-    register_engine_udfs(spark)
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("a", 3.0), ("a", 100.0), ("b", 5.0), ("b", 5.0)],
-        "k string, v double",
-    )
-    got = {
-        r["k"]: r["mad"]
-        for r in df.groupBy("k").agg(median_abs_dev_udf("v").alias("mad")).collect()
-    }
-    # a: median 2.5, |v - 2.5| = [1.5, 0.5, 0.5, 97.5] -> median 1.0 (robust to the outlier)
-    assert got == {"a": 1.0, "b": 0.0}
-    sql_got = {
-        r["k"]: r["mad"]
-        for r in spark.sql(
-            "SELECT k, median_abs_dev_udf(v) AS mad FROM {df} GROUP BY k", df=df
-        ).collect()
-    }
-    assert sql_got == got
 
 
 def test_arrow_norm_kernel_empty_and_sliced_lists():
@@ -100,58 +64,3 @@ def test_applyinarrow_kernel_direct():
     assert out.to_pylist() == [
         {"lang": "en", "n_docs": 3, "sum_chars": 35, "max_chars": 20, "n_sources": 2}
     ]
-
-
-def test_fields_udtf_analyze_schema_and_padding(spark):
-    """Polymorphic UDTF: schema f1..fn comes from analyze() at plan time;
-    short rows NULL-pad; a non-positive n is rejected at ANALYSIS, not at
-    execution."""
-    import pytest
-
-    from odp_dynamic_data_pipeline_spark.functions.udfs import register_engine_udfs
-
-    register_engine_udfs(spark)
-    df = spark.sql(
-        "SELECT s.* FROM VALUES ('a b c d'), ('x') AS t(txt),"
-        " LATERAL fields_udtf(t.txt, 3) s"
-    )
-    assert df.columns == ["f1", "f2", "f3"]
-    rows = {tuple(r) for r in df.collect()}
-    assert rows == {("a", "b", "c"), ("x", None, None)}
-    two = spark.sql(
-        "SELECT s.* FROM VALUES ('p q r') AS t(txt), LATERAL fields_udtf(t.txt, 2) s"
-    )
-    assert two.columns == ["f1", "f2"]
-    with pytest.raises(Exception, match="positive integer"):
-        spark.sql(
-            "SELECT s.* FROM VALUES ('a') AS t(txt), LATERAL fields_udtf(t.txt, 0) s"
-        ).collect()
-
-
-def test_lang_runs_udtf_partition_order_semantics(spark):
-    """Crafted partitions pin the TABLE(...) PARTITION BY / ORDER BY UDTF:
-    ascents count strictly-increasing steps in doc_id order, equal values
-    RESET the run, a single-row partition reports max_run 1."""
-    from odp_dynamic_data_pipeline_spark.functions.udfs import register_engine_udfs
-
-    register_engine_udfs(spark)
-    rows = [
-        # lang a: 10,20,20,30,40 -> ascents at 20,30,40 = 3; runs: [10,20]
-        # len2, reset at =20, [20,30,40] len3 -> max_run 3
-        (0, "a", 10), (1, "a", 20), (2, "a", 20), (3, "a", 30), (4, "a", 40),
-        # lang b: single doc -> 0 ascents, max_run 1
-        (5, "b", 7),
-        # lang c: strictly decreasing -> 0 ascents, max_run 1
-        (6, "c", 9), (7, "c", 8), (8, "c", 1),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, lang string, n_chars long"
-    ).createOrReplaceTempView("udtf_part_docs")
-    got = {
-        r.lang: (r.n_docs, r.n_incr, r.max_run)
-        for r in spark.sql(
-            "SELECT * FROM lang_runs_udtf(TABLE(udtf_part_docs)"
-            " PARTITION BY lang ORDER BY doc_id)"
-        ).collect()
-    }
-    assert got == {"a": (5, 3, 3), "b": (1, 0, 1), "c": (3, 0, 1)}

@@ -34,9 +34,6 @@ PANDAS_BY_DESIGN = {
     "multimodal_real_decode",  # mapInPandas WAV/PPM decode IS the operator
     "multimodal_resize",       # mapInPandas box-mean resize IS the operator
     "multimodal_ahash_dedup",  # mapInPandas perceptual hash IS the operator
-    "udtf_lateral_shingles",   # Python UDTF LATERAL fan-out IS the §2.8 extension surface under test
-    "udtf_polymorphic_fields", # polymorphic (analyze-schema) UDTF IS the extension surface under test
-    "udtf_table_partition_args",  # partition-scoped TABLE(... PARTITION BY) UDTF IS the extension surface under test
     "mapinarrow_embedding_norms",  # mapInArrow Arrow-native kernel IS the operator
     "session_cap_windows",         # anchor-restart cap walk: data-dependent recurrence, no window-algebra closed form
     "topic_assign_two_level",      # r14: Arrow int64-matmul two-level assignment IS the operator (similarity._assign_two_level_arrow)
@@ -77,7 +74,6 @@ BROADCAST_NLJ_BY_DESIGN = {
     "cluster_aware_split",         # two single-row report halves (split sizes x leak counts) crossed
     "randomization_test_means",    # single-row observed-totals + single-row extreme-count broadcasts
     "exact_quantiles_events",      # single-row grand-total broadcast over the distinct-value rollup
-    "blocking_quality_report",     # single-row (n_docs, true_pairs) totals broadcast over 2 scheme rows
 }
 # queries where a GLOBAL (unpartitioned) window is safe: its input is
 # already bounded to <= top_k rows by TakeOrderedAndProject / limit, or to a
@@ -106,8 +102,6 @@ GLOBAL_WINDOW_BOUNDED = {
     "topk_sketch_tokens",      # rank over the VOCAB table (corpus already reduced), limit 20
     "cusum_changepoints",      # prefix/min/max frames over the calendar-hour rollup (bounded by horizon, not data)
     "pareto_frontier_parts",   # running min over the distinct-size rollup (bounded by the size domain, not data)
-    "rrf_fusion_topk",         # dense ranks over each system's top-100 run (limit 100 feeds the window)
-    "pr_curve_report",         # cumulative pass over the 64-bucket threshold rollup (domain-fixed, not data)
 }
 
 
