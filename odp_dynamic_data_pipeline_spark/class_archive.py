@@ -431,8 +431,12 @@ def launch(confs: dict[str, str]) -> Iterator[dict[str, str]]:
 
 def _train(spark, work: str) -> None:
     """A tiny in-memory JSON -> groupBy/window/join -> parquet round trip,
-    with Arrow both ways: the class set of a session's start and of the
-    package's first batches."""
+    with Arrow both ways: the class set of a session's start and of one
+    generic batch query (JSON scan, window, explode, aggregate, broadcast
+    join, parquet write, ``collect``, ``toPandas``, ``mapInArrow``).  It
+    runs no streaming drain, YAML stage, TLB job or curate operator; the
+    classes only those need load from the jars at their first use.  A
+    wider run did not pay: ROADMAP "Where the time goes now"."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

@@ -416,10 +416,15 @@ class Pipeline:
         spark: SparkSession,
         hours: list[str],
         path_vars: dict[str, str] | None = None,
+        work_dir: str | None = None,
     ) -> dict[str, dict[str, DataFrame]]:
         """Backfill a list of hourly batches (the reference's Airflow DAG
-        re-runs; each hour is an independent pipeline run)."""
-        return {h: self.run(spark, hour=h, path_vars=path_vars) for h in hours}
+        re-runs; each hour is an independent pipeline run).  ``work_dir``
+        is each run's staging root, as in :meth:`run`."""
+        return {
+            h: self.run(spark, hour=h, path_vars=path_vars, work_dir=work_dir)
+            for h in hours
+        }
 
 
 def load_pipeline(path: str) -> Pipeline:

@@ -5,17 +5,13 @@ Split from queries/llm.py in r13 (size only; no behavior change).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators import dedup as dd
-from odp_dynamic_data_pipeline_spark.operators import similarity as sim
-from odp_dynamic_data_pipeline_spark.operators import text as tx
 from odp_dynamic_data_pipeline_spark.queries import register
-from odp_dynamic_data_pipeline_spark.queries import xxh64_sql as _xx
 from odp_dynamic_data_pipeline_spark.sources.catalog import load_table
 from odp_dynamic_data_pipeline_spark.queries.llm import MINHASH_MD5_ORACLE, dedup_minhash_md5  # noqa: E501
-from odp_dynamic_data_pipeline_spark.queries.llm_text import duck_ilog2_sql  # noqa: E501
 
 
 def _pagerank_oracle(iters: int = 5) -> str:

@@ -7,14 +7,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from odp_dynamic_data_pipeline_spark.operators import dedup as dd
 from odp_dynamic_data_pipeline_spark.operators import multimodal as mm
-from odp_dynamic_data_pipeline_spark.operators import similarity as sim
 from odp_dynamic_data_pipeline_spark.operators import text as tx
 from odp_dynamic_data_pipeline_spark.queries import register
-from odp_dynamic_data_pipeline_spark.queries import xxh64_sql as _xx
 from odp_dynamic_data_pipeline_spark.sources.catalog import load_table
-from odp_dynamic_data_pipeline_spark.queries.llm import corpus_curation_pipeline  # noqa: E501
 
 
 @register(

@@ -49,6 +49,16 @@ RUNTIME_CONFS: dict[str, str] = {
     # empty arrays, which Generate already handles; semantics unchanged.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # lower/upper/initcap on UTF8_BINARY strings through the JVM's
+    # String.toLowerCase/toUpperCase instead of ICU.  With ICU (Spark 4's
+    # default) the first case mapping in a JVM runs a static initializer
+    # that builds a title-case table code point by code point, loading the
+    # word BreakIterator and the CJK dictionary on the way: ~3 CPU-s of the
+    # ~18 of a cold corpus batch, paid by every fresh hourly driver.  ASCII
+    # maps identically; non-ASCII follows the JDK's Unicode tables and
+    # default locale (Spark 3's behaviour), not ICU's -- README "Case
+    # mapping without ICU".
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 # Confs that must be set before the session exists.

@@ -14,7 +14,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # data/user_exp_*.json (reference: src/batch_tlb.py:22,41-77)

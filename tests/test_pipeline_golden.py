@@ -238,3 +238,32 @@ def test_stream_stage_with_mapping_read(spark, tmp_path):
     assert rows["e1"].clientId == "clientA"
     assert rows["e8"].clientId == "clientC"
     assert all(r.clientId is not None for r in rows.values())
+
+
+def test_run_hours_stages_every_hour_under_work_dir(spark, tmp_path, monkeypatch):
+    """A backfill stages each hour's stream drain under the caller's
+    ``work_dir`` (``<stage>_<hour>``), not in a fresh temp dir per hour
+    that nothing removes."""
+    import shutil
+    import tempfile
+
+    fixture = "tests/fixtures/reference_hour"
+    data, work, out, tmp = (tmp_path / d for d in ("data", "work", "out", "tmp"))
+    for d in (data, out, tmp):
+        d.mkdir()
+    hours = ["2024111612", "2024111613"]
+    for h in hours:
+        for name in ("user_exp", "trace", "log"):
+            shutil.copy(f"{fixture}/{name}_2024111612.json", data / f"{name}_{h}.json")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+
+    pipe = load_pipeline("pipelines/observability_correlation_pipeline.yaml")
+    pipe.run_hours(
+        spark, hours, path_vars={"data_dir": str(data), "out_dir": str(out)},
+        work_dir=str(work),
+    )
+    assert sorted(p.name for p in work.iterdir()) == [f"stage_1_{h}" for h in hours]
+    assert list(tmp.iterdir()) == []
+    for h in hours:
+        with open(out / f"user_exp_processed_{h}") as f:
+            assert len(json.load(f)) == 15
