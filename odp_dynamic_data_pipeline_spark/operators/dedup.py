@@ -77,7 +77,7 @@ def hashed_shingles(df: DataFrame, id_col: str, shingle_col: str = "shingles", o
     The empty-doc filter tests the INPUT array, not ``size(out_col)``: a
     pushed-down predicate on the output column inlines the hash transform
     (and everything below it) into the scan filter, evaluating the
-    pipeline twice per row (see md5_hashed_shingles)."""
+    pipeline twice per row (see hashed_shingles_direct)."""
     return df.filter(F.size(shingle_col) > 0).select(
         F.col(id_col), F.expr(f"transform({shingle_col}, s -> xxhash64(s))").alias(out_col)
     )
@@ -148,74 +148,12 @@ def minhash_signatures(
 # 2^31 -> product < 2^62), so Spark and DuckDB compute bit-identical
 # values with no overflow divergence.  These constants are shared by the
 # batch md5 twin queries (queries/llm.py dedup_minhash_md5 and friends)
-# and the md5-mode streaming runner (streaming.stream
-# run_incremental_neardup(hasher='md5')) -- one family, one algebra.
+# and their DuckDB oracles -- one family, one algebra.
 MINHASH_P = 2_147_483_647  # 2^31 - 1, prime
 MINHASH_AB = [
     ((2_654_435_761 * (i + 1)) % MINHASH_P, (40_503 * (i + 1) * (i + 1) + 1) % MINHASH_P)
     for i in range(16)
 ]
-
-_MD5_SHINGLE_HASH = f"CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P}"
-
-
-def md5_hashed_shingles(
-    df: DataFrame, id_col: str, text_col: str = "text", *, n: int = 3, out_col: str = "hsh"
-) -> DataFrame:
-    """Distinct word-n-gram hashes in the ENGINE-PORTABLE md5 family:
-    h = int(md5(shingle)[:15 hex]) mod p.  The md5-mode analogue of
-    hashed_shingles_direct -- slower (one md5 per shingle string) but
-    replayable by any engine, which puts everything downstream of it
-    behind the DuckDB oracle gate.
-
-    Same single-projection shape as hashed_shingles_direct, for the same
-    reason (r13): a trailing ``filter(size(out_col) > 0)`` is pushed into
-    the parquet scan with the WHOLE tokenize->shingle->md5 pipeline
-    inlined as the predicate -- every row pays the pipeline twice, and
-    the pushed copy runs below the parallelizing exchange (single-task on
-    a one-file input).  Filtering on the token count instead keeps the
-    pushed predicate one cheap regex; hash-then-distinct equals
-    distinct-strings-then-hash because md5 is deterministic (collision
-    exposure identical to every other hashed-key stage here)."""
-    from odp_dynamic_data_pipeline_spark.operators.partitioning import ensure_min_parallelism
-
-    df = ensure_min_parallelism(df)
-    shingle = f"array_join(slice(__toks, i, {n}), ' ')"
-    return (
-        df.withColumn("__toks", F.expr(f"regexp_extract_all({text_col}, r'\\S+', 0)"))
-        .where(F.expr(f"size(__toks) >= {n}"))
-        .select(
-            F.col(id_col),
-            F.expr(
-                f"array_distinct(transform(sequence(1, size(__toks) - {n - 1}),"
-                f" i -> {_MD5_SHINGLE_HASH.replace('md5(s)', f'md5({shingle})')}))"
-            ).alias(out_col),
-        )
-    )
-
-
-def md5_minhash_signatures(
-    df: DataFrame, id_col: str, hashed_col: str = "hsh", num_perm: int = 16
-) -> DataFrame:
-    """Minhash signature over md5 shingle hashes with the arithmetic
-    universal-hash permutations (MINHASH_AB): one fold pass over the hash
-    array, exactly the per-permutation mins the DuckDB md5 oracle
-    computes with GROUP BY minima."""
-    if num_perm > len(MINHASH_AB):
-        raise ValueError(f"md5 minhash family has {len(MINHASH_AB)} permutations")
-    a_arr = "array(" + ",".join(str(a) for a, _ in MINHASH_AB[:num_perm]) + ")"
-    b_arr = "array(" + ",".join(str(b) for _, b in MINHASH_AB[:num_perm]) + ")"
-    fold = F.expr(
-        f"aggregate({hashed_col},"
-        f" array_repeat(CAST(9223372036854775807 AS BIGINT), {num_perm}),"
-        f" (acc, h) -> zip_with(acc, sequence(0, {num_perm - 1}),"
-        f"   (m, i) -> least(m, (element_at({a_arr}, i + 1) * h"
-        f"                       + element_at({b_arr}, i + 1)) % {MINHASH_P})))"
-    )
-    sig = df.select(F.col(id_col), fold.alias("__sig"))
-    return sig.select(
-        F.col(id_col), *[F.col("__sig").getItem(i).alias(f"mh_{i}") for i in range(num_perm)]
-    )
 
 
 def minhash_lsh_pairs(
@@ -655,8 +593,7 @@ def duplicate_spans(
 
     See also ``operators.text.occurrence_duplicate_spans``: the
     OCCURRENCE-gated variant (flags within-document repetition too) that
-    feeds the cut-all scrub, cross-corpus decontamination, and the
-    streaming ingest gate."""
+    feeds the cut-all scrub and cross-corpus decontamination."""
     L = window
     toks = (
         ensure_min_parallelism(df.select(id_col, text_col))
@@ -1827,10 +1764,9 @@ def hamming_bands(
     max_dist: int = 3,
 ) -> DataFrame:
     """Pigeonhole band index for Hamming retrieval: (id, code, bi, bv) with
-    one row per disjoint band -- the shared index builder of hamming_join
-    and the streaming run_incremental_hamming.  The mask after the
-    arithmetic shiftright keeps band values correct for negative (64-bit)
-    codes.
+    one row per disjoint band -- the index builder of hamming_join.  The
+    mask after the arithmetic shiftright keeps band values correct for
+    negative (64-bit) codes.
 
     Bands are sized ``bits = sum of widths`` with widths differing by at
     most one (the first ``bits % n_bands`` bands get the extra bit), so

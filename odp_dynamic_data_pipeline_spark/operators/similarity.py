@@ -378,7 +378,7 @@ def kmeans_quantizer(
     Returns (centroids, assignment DataFrame with 'ivf_list' column);
     ``assign=False`` skips the final assignment materialization (its
     localCheckpoint is a full extra pass) and returns (centroids, None)
-    -- the train-offline shape run_incremental_semdedup feeds on.
+    -- the train-offline shape for a caller that assigns later.
     """
     cand = quantized(df.select(F.col(id_col).alias("__id"), vec_col), vec_col).persist()
     # one seed collect serves both the centroids and the dim probe (a

@@ -1142,9 +1142,9 @@ def occurrence_duplicate_spans(
     documents (within-doc degenerate repetition invisible) and exists to
     feed the keep-one-copy scrub; this occurrence gate also catches
     self-repetition (looping boilerplate, template stutter) and feeds the
-    cut-ALL-copies scrub, the cross-corpus decontamination join, and the
-    streaming ingest gate (all three share ``token_windows`` /
-    ``merge_window_spans`` so every variant hashes identical anchors).
+    cut-ALL-copies scrub and the cross-corpus decontamination join (all
+    share ``token_windows`` / ``merge_window_spans`` so every variant
+    hashes identical anchors).
 
     Relational shape (the suffix array replaced by fixed-length anchor
     hashing): (1) explode each doc into its sliding windows -- n_tokens
@@ -1184,10 +1184,10 @@ def token_windows(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Stride-1 sliding token windows as (id_col, pos, wh): the bigint
-    anchor table shared by batch ``duplicate_spans`` and the streaming
-    ``run_incremental_spans`` -- both sides MUST hash identical window
-    text or stream/batch parity breaks.  The anchor is multi-argument
-    xxhash64 over the window's tokens (see :func:`window_hash_expr`):
+    anchor table shared by the ExactSubstr span family -- every variant
+    MUST hash identical window text or their spans disagree.  The anchor
+    is multi-argument xxhash64 over the window's tokens (see
+    :func:`window_hash_expr`):
     value-internal only -- every consumer groups/joins on it and surfaces
     spans, never the hash itself."""
     L = min_tokens
@@ -1213,10 +1213,10 @@ def merge_window_spans(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Per-doc interval merge of duplicated window positions (id_col, pos)
-    into maximal spans -- the second half of ``duplicate_spans``, shared
-    with the streaming twin.  Windows are all ``min_tokens`` long at
-    stride 1, so two survive-positions fuse iff their gap is <=
-    min_tokens (overlap or adjacency)."""
+    into maximal spans -- the second half of ``duplicate_spans`` and of
+    its variants.  Windows are all ``min_tokens`` long at stride 1, so
+    two survive-positions fuse iff their gap is <= min_tokens (overlap or
+    adjacency)."""
     L = min_tokens
     w = Window.partitionBy(id_col).orderBy("pos")
     prev = F.lag("pos").over(w)
@@ -1335,9 +1335,9 @@ def window_heavy_hitters(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Skew report for the window-hash shuffle that anchors the whole
-    ExactSubstr family (duplicate_spans / occurrence_duplicate_spans /
-    the streaming ingest gate): the ``top`` most-repeated token windows
-    with their occurrence and distinct-document counts.  A mega-viral
+    ExactSubstr family (duplicate_spans / occurrence_duplicate_spans):
+    the ``top`` most-repeated token windows with their occurrence and
+    distinct-document counts.  A mega-viral
     boilerplate window (cookie banners, license headers) is ONE hot key
     on ``wh``; this report is how an operator finds it before it finds
     them.
@@ -1676,7 +1676,7 @@ def scrub_char_exact(
 
 def _kmv_global_topk(rows: DataFrame, k: int) -> DataFrame:
     """Shard-then-fold global k-smallest for the UNGROUPED sketch paths
-    (kmv_sketch / kmv_merge with no group_cols): each input partition
+    (kmv_sketch with no group_cols): each input partition
     keeps its own k smallest ``__h`` via a per-shard window (parallel,
     spill-able -- the shard key is ``spark_partition_id()``, so no task
     ever sorts more than its own partition), then one bounded global fold
@@ -1756,30 +1756,6 @@ def kmv_sketch(
         return _kmv_global_topk(distinct, k)
     w = Window.partitionBy(*group_cols).orderBy("__h")
     topk = distinct.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
-    agg = topk.groupBy(*group_cols).agg(
-        F.sort_array(F.collect_list("__h")).alias("sketch"),
-        F.count(F.lit(1)).cast("long").alias("n_sketch"),
-        F.max("__h").alias("__hk"),
-    )
-    est = F.when(
-        F.col("n_sketch") < k, F.col("n_sketch").cast("long")
-    ).otherwise(F.expr(f"CAST(({k} - 1) AS BIGINT) * CAST(shiftleft(CAST(1 AS BIGINT), 52) AS BIGINT) div __hk"))
-    return agg.select(*group_cols, "sketch", "n_sketch", est.alias("est_distinct"))
-
-
-def kmv_merge(sketches: DataFrame, *, k: int = 64, group_cols: list[str] | None = None) -> DataFrame:
-    """Fold per-shard KMV sketches into one per group: explode, distinct,
-    keep the k smallest -- the coordinator half of :func:`kmv_sketch`
-    (identical output schema and estimate algebra)."""
-    if not (2 <= k <= 2048):
-        raise ValueError(f"k must be in [2, 2048], got {k}")
-    group_cols = group_cols or []
-    rows = sketches.select(*group_cols, F.explode("sketch").alias("__h")).distinct()
-    if not group_cols:
-        # ungrouped: shard-then-fold -- never a single-partition window
-        return _kmv_global_topk(rows, k)
-    w = Window.partitionBy(*group_cols).orderBy("__h")
-    topk = rows.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
     agg = topk.groupBy(*group_cols).agg(
         F.sort_array(F.collect_list("__h")).alias("sketch"),
         F.count(F.lit(1)).cast("long").alias("n_sketch"),

@@ -250,75 +250,6 @@ def hourly_event_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "incremental_dedup_stream",
-    r"""
-WITH corpus AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000, upper(text) FROM documents WHERE doc_id % 3 = 0
-),
-fp AS (
-  SELECT doc_id,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
-  FROM corpus
-)
-SELECT MIN(doc_id) AS doc_id, fingerprint
-FROM fp GROUP BY fingerprint
-""",
-)
-def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING corpus ingestion == batch dedup, driver-verified: the
-    corpus (documents plus an UPPERCASED echo of every third document, so
-    real normalized duplicates exist and land in the LATER batch) is
-    replayed as TWO micro-batches (doc_id split, one file per trigger,
-    oldest-first), through run_incremental_dedup's persistent fingerprint
-    store with the deterministic keep-min-doc_id policy.  The surviving
-    (doc_id, fingerprint) set must equal the batch exact-dedup oracle: min
-    doc_id per normalized-text md5 -- proving the incremental path drops
-    cross-batch duplicates and admits exactly one, earliest, survivor per
-    fingerprint."""
-    import glob
-    import os
-    import shutil
-
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_dedup
-
-    base = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    docs = base.unionAll(
-        base.where(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 1_000_000).alias("doc_id"), F.upper("text").alias("text")
-        )
-    )
-    lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    cut = (lo + hi) // 2
-    tmp = _stream_tmpdir("incdedup_stream")
-    src = f"{tmp}/in"
-    os.makedirs(src)
-    # one file per batch, mtimes forcing oldest-first = ascending doc_id
-    for i, pred in enumerate((F.col("doc_id") <= cut, F.col("doc_id") > cut)):
-        part_dir = f"{tmp}/part{i}"
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        (part_file,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/batch{i}.parquet"
-        shutil.move(part_file, dst)
-        os.utime(dst, (1_700_000_000 + i * 600, 1_700_000_000 + i * 600))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _stream_shuffle(spark):
-        run_incremental_dedup(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            checkpoint=f"{tmp}/ckpt",
-            order_col="doc_id",
-        )
-    return spark.read.parquet(f"{tmp}/out").select("doc_id", "fingerprint")
-
-
-@register(
     "incremental_agg_stream",
     """
 SELECT event_type, COUNT(*) AS n,
@@ -2880,100 +2811,6 @@ def activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "incremental_spans_stream",
-    """
-WITH toks AS (SELECT doc_id, CAST(doc_id % 2 AS BIGINT) AS bt,
-                     regexp_extract_all(text, '\\S+') AS t
-              FROM documents),
-win AS (
-  SELECT doc_id, bt, CAST(i AS BIGINT) AS pos,
-         md5(array_to_string(list_slice(t, i, i + 7), ' ')) AS wh
-  FROM (SELECT doc_id, bt, t,
-               unnest(generate_series(1, greatest(len(t) - 7, 0))) AS i
-        FROM toks)
-),
-cnt AS (SELECT wh, bt, COUNT(*) AS c FROM win GROUP BY wh, bt),
-vis AS (
-  SELECT wh, bt,
-         SUM(c) OVER (PARTITION BY wh ORDER BY bt
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ccum
-  FROM cnt
-),
-dup AS (
-  SELECT w.doc_id, w.pos
-  FROM win w JOIN vis ON vis.wh = w.wh AND vis.bt = w.bt
-  WHERE vis.ccum >= 2
-),
-g AS (
-  SELECT doc_id, pos,
-         CASE WHEN pos - COALESCE(lag(pos) OVER (PARTITION BY doc_id ORDER BY pos),
-                                  CAST(-100 AS BIGINT)) > 8
-              THEN 1 ELSE 0 END AS ng
-  FROM dup
-),
-s AS (
-  SELECT doc_id, pos,
-         SUM(ng) OVER (PARTITION BY doc_id ORDER BY pos
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS grp
-  FROM g
-)
-SELECT doc_id,
-       CAST(MIN(pos) AS BIGINT) AS span_start,
-       CAST(MAX(pos) + 7 AS BIGINT) AS span_end,
-       CAST(MAX(pos) + 7 - MIN(pos) + 1 AS BIGINT) AS span_tokens,
-       CAST(COUNT(*) AS BIGINT) AS n_windows
-FROM s GROUP BY doc_id, grp
-""",
-)
-def incremental_spans_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of exactsubstr_dup_spans with the INGEST-GATE
-    semantics (streaming.run_incremental_spans): documents arrive in two
-    deterministic micro-batches (even doc_ids, then odd), each batch's
-    docs get their maximal duplicated spans against the accreted window
-    store + the batch itself, and history is never retro-flagged.  Because
-    the gate is "window occurrences over batches <= mine", the accumulated
-    output is FULLY replayable in SQL: the oracle computes the per-batch
-    cumulative window counts (SUM(c) OVER bt) and re-derives every span --
-    a complete hash oracle for one-sided streaming semantics, the 22nd
-    streaming query and the 5th with an exact-value oracle."""
-    import glob
-    import os
-    import shutil
-
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_spans
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = _stream_tmpdir("incspans_stream")
-    src = f"{tmp}/in"
-    os.makedirs(src)
-    # one file per batch, mtimes forcing oldest-first = even docs first
-    for i, pred in enumerate((F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1)):
-        part_dir = f"{tmp}/part{i}"
-        docs.where(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        (part_file,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/batch{i}.parquet"
-        shutil.move(part_file, dst)
-        os.utime(dst, (1_700_000_000 + i * 600, 1_700_000_000 + i * 600))
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _stream_shuffle(spark):
-        run_incremental_spans(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            checkpoint=f"{tmp}/ckpt",
-            min_tokens=8,
-            min_count=2,
-        )
-    return spark.read.parquet(f"{tmp}/out").select(
-        "doc_id", "span_start", "span_end", "span_tokens", "n_windows"
-    )
-
-
-@register(
     "kmv_distinct_users",
     """
 WITH d AS (
@@ -3024,81 +2861,6 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sk.join(exact, "event_type").select(
         "event_type", "n_sketch", "est_distinct", "exact_users"
-    )
-
-
-@register(
-    "incremental_kmv_stream",
-    """
-WITH d AS (
-  SELECT DISTINCT event_type,
-         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 13))::BIGINT AS h
-  FROM events WHERE user_id IS NOT NULL
-),
-r AS (
-  SELECT event_type, h,
-         row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn
-  FROM d
-),
-topk AS (SELECT event_type, h FROM r WHERE rn <= 64),
-agg AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_sketch, MAX(h) AS hk
-  FROM topk GROUP BY event_type
-)
-SELECT event_type, n_sketch,
-       CASE WHEN n_sketch < 64 THEN n_sketch
-            ELSE CAST(63 AS BIGINT) * (CAST(1 AS BIGINT) << 52) // hk END
-         AS est_distinct
-FROM agg
-""",
-)
-def incremental_kmv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of kmv_distinct_users (streaming.run_incremental_kmv):
-    events arrive in two micro-batches, each batch's per-event-type KMV
-    sketch folds into the accreted min-hash store, and the evolving merged
-    sketch + estimate is emitted per batch.  KMV is ORDER-INDEPENDENT --
-    the k smallest hashes of a union do not care how the union arrived --
-    so the FINAL batch's emitted estimate equals the one-shot batch sketch
-    over all events, and the oracle hash-pins the estimate VALUE (the HLL
-    streaming twin can only assert a tolerance boolean).  O(k) state per
-    group instead of O(distinct users)."""
-    import glob
-    import os
-    import shutil
-
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_kmv
-
-    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id", "event_id")
-    tmp = _stream_tmpdir("inckmv_stream")
-    src = f"{tmp}/in"
-    os.makedirs(src)
-    for i, pred in enumerate((F.col("event_id") % 2 == 0, F.col("event_id") % 2 == 1)):
-        part_dir = f"{tmp}/part{i}"
-        ev.where(pred).coalesce(1).write.mode("overwrite").parquet(part_dir)
-        (part_file,) = glob.glob(f"{part_dir}/part-*.parquet")
-        dst = f"{src}/batch{i}.parquet"
-        shutil.move(part_file, dst)
-        os.utime(dst, (1_700_000_000 + i * 600, 1_700_000_000 + i * 600))
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _stream_shuffle(spark):
-        run_incremental_kmv(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            checkpoint=f"{tmp}/ckpt",
-            col="user_id",
-            k=64,
-            group_cols=["event_type"],
-        )
-    batches = sorted(
-        int(p.split("=")[1]) for p in os.listdir(f"{tmp}/out") if p.startswith("batch_id=")
-    )
-    return spark.read.parquet(f"{tmp}/out/batch_id={batches[-1]}").select(
-        "event_type", "n_sketch", "est_distinct"
     )
 
 

@@ -1149,8 +1149,7 @@ def occurrence_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting semantics.  Deliberate variant of `exact_substring_spans`
     (operators.dedup.duplicate_spans), whose >= 2 DISTINCT-docs gate
     cannot see within-doc degenerate repetition; this one also anchors
-    the streaming ingest gate (incremental_spans_stream) and the
-    decontamination join, which share its window hashes.  The DuckDB
+    the decontamination join, which shares its window hashes.  The DuckDB
     oracle replays the md5 anchors, the occurrence gate, and the per-doc
     interval merge verbatim."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")

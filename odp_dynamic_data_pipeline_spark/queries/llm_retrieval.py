@@ -1,6 +1,6 @@
 """Embedding-space retrieval and clustering queries: exact/ANN top-k
 (IVF, SRP-LSH, PQ, IVF-PQ), k-means/k-center training, SemDeDup (batch,
-scaled, broadcast-path, streaming), BM25 scoring, and Arrow embedding
+scaled, broadcast-path), BM25 scoring, and Arrow embedding
 plumbing.  Split from queries/llm.py in r13 (size only; no behavior
 change).
 """
@@ -45,7 +45,6 @@ SELECT qid, cand_id, rank, cosine FROM (
 """
 
 
-
 @register("embedding_cosine_topk", EMB_TOPK_ORACLE)
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 for the first 10 query vectors.
@@ -53,7 +52,6 @@ def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     products via zip_with/aggregate stay JVM-side."""
     emb = load_table(spark, sf_dir, "embeddings")
     return sim.cosine_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
-
 
 
 @register(
@@ -93,7 +91,6 @@ def embedding_neardup_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("id_a", "id_b", cosine.alias("cosine")).where(F.col("cosine") >= 0.18)
 
 
-
 @register(
     "label_centroids",
     """
@@ -126,7 +123,6 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         (F.sum("v").cast("double") / F.count(F.lit(1)) / F.lit(1000000.0)).alias("centroid"),
     )
-
 
 
 def _kmeans_cte(k: int | str = 8, iters: int = 3) -> str:
@@ -187,14 +183,12 @@ cents_{i} AS (
     return head + "".join(blocks)
 
 
-
 def _kmeans_oracle(k: int = 8, iters: int = 3) -> str:
     tail = f"""
 SELECT CAST(lst AS INTEGER) AS ivf_list, COUNT(*) AS n_vectors
 FROM assign_{iters} GROUP BY lst ORDER BY ivf_list
 """
     return _kmeans_cte(k, iters) + tail
-
 
 
 def _semdedup_oracle(k: int = 8, iters: int = 3, threshold: float = 0.2) -> str:
@@ -228,7 +222,6 @@ FROM assign_{iters} a LEFT JOIN dup ON dup.vec_id = a.vec_id
     return _kmeans_cte(k, iters) + tail
 
 
-
 @register("semantic_dedup_clusters", _semdedup_oracle(k=8, iters=3, threshold=0.2))
 def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (cluster-then-threshold semantic dedup,
@@ -257,7 +250,6 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 _K_SQRT_SQL = "(SELECT CAST(floor(sqrt(COUNT(*))) AS BIGINT) FROM e)"
 
 
-
 @register("semantic_dedup_scaled", _semdedup_oracle(k=_K_SQRT_SQL, iters=3, threshold=0.2))
 def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup at the SCALE-PATH cluster count k = floor(sqrt(N)) -- the
@@ -275,7 +267,6 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     k = int(math.floor(math.sqrt(emb.count())))
     return sim.semantic_dedup(emb, k=k, iters=3, threshold=0.2)
-
 
 
 @register(
@@ -300,90 +291,6 @@ def semantic_dedup_scaled_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     k = int(math.floor(math.sqrt(emb.count())))
     return sim.semantic_dedup(emb, k=k, iters=3, threshold=0.2, centroid_path="data")
-
-
-
-@register(
-    "incremental_semdedup_stream",
-    _semdedup_oracle(k=_K_SQRT_SQL, iters=1, threshold=0.2),
-)
-def incremental_semdedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING SemDeDup (streaming.stream.run_incremental_semdedup):
-    embeddings replayed as TWO id-ordered micro-batches against a FROZEN
-    coarse quantizer; per batch, cluster-blocked candidate pairs against
-    the accreted vector store + the batch itself, exact integer cosine,
-    keep-first by lowest id.  The union of emitted batches is checked
-    row-for-row against the SAME unrolled-Lloyd DuckDB oracle family as
-    semantic_dedup_scaled (k = floor(sqrt(N)), the scale-path cluster
-    count) -- stream == batch == oracle.
-
-    The frozen codebook is the SEED centroid set (first k vectors by id,
-    the ivf_topk seeding idiom; oracle assign_1 uses cents_0 = seeds):
-    Lloyd training itself is already triple-gated by the batch semdedup
-    queries, so the stream twin spends its budget gating what is NEW here
-    -- the cross-batch store protocol and election.  Deployment shape:
-    codebook trained/frozen offline, ingest only assigns against it.
-    Drops are id-ordered (low half first, file mtimes pinned
-    so the file source replays them in order) because keep-first
-    elections are id-ordered -- the runner's high-water-mark guard
-    raises on out-of-order ids rather than silently diverging."""
-    import os as _os
-    import glob as _glob
-
-    from odp_dynamic_data_pipeline_spark.queries.core import (
-        _stream_shuffle,
-        _stream_tmpdir,
-    )
-    from odp_dynamic_data_pipeline_spark.streaming.stream import (
-        run_incremental_semdedup,
-    )
-
-    import math as _math
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # scale-path cluster count (see semantic_dedup_scaled): k ~ sqrt(N)
-    # keeps within-cluster candidate pairs bounded as the corpus grows
-    k = int(_math.floor(_math.sqrt(emb.count())))
-    # broadcast-centroid assignment everywhere: at k ~ sqrt(N) the literal
-    # path folds k x dim ints into every assignment plan; the data path is
-    # the shape that survives real corpus sizes and is fold-guard gated.
-    # iters=0 = seeds only (assign_1 in the oracle assigns vs cents_0)
-    cents, _ = sim.kmeans_quantizer(
-        emb, k=k, iters=0, assign=False, centroid_path="data"
-    )
-    tmp = _stream_tmpdir("inc_semdedup_stream")
-    src = f"{tmp}/in"
-    rng = emb.agg(F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")).first()
-    mid = (int(rng["lo"]) + int(rng["hi"])) // 2
-    (
-        emb.withColumn("drop", (F.col("vec_id") > F.lit(mid)).cast("int"))
-        .coalesce(1)
-        .write.partitionBy("drop")
-        .mode("overwrite")
-        .parquet(src)
-    )
-    # the file source orders files by modification time: pin drop=0 older
-    # so the low-id half is ALWAYS the first micro-batch
-    for i, d in enumerate(("drop=0", "drop=1")):
-        for p in _glob.glob(f"{src}/{d}/*.parquet"):
-            _os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/drop=*")
-    )
-    with _stream_shuffle(spark):
-        run_incremental_semdedup(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            checkpoint=f"{tmp}/ckpt",
-            centroids=cents,
-            threshold=0.2,
-            centroid_path="data",
-        )
-    return spark.read.parquet(f"{tmp}/out").select("vec_id", "cluster_id", "is_dup")
-
 
 
 def _kcenter_oracle(k: int = 8) -> str:
@@ -422,7 +329,6 @@ def _kcenter_oracle(k: int = 8) -> str:
     return "WITH " + ",\n".join(ctes) + "\n" + tail
 
 
-
 @register("kcenter_coreset_trace", _kcenter_oracle(8))
 def kcenter_coreset_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy k-center coreset selection (operators.similarity.
@@ -438,7 +344,6 @@ def kcenter_coreset_trace(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.kcenter_coreset(emb, k=8)
 
 
-
 @register("kmeans_ivf_lists", _kmeans_oracle(k=8, iters=3))
 def kmeans_ivf_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained coarse quantizer: 3 Lloyd iterations over quantized
@@ -452,7 +357,6 @@ def kmeans_ivf_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_vectors"))
         .orderBy("ivf_list")
     )
-
 
 
 IVF_TOPK_ORACLE = """
@@ -511,7 +415,6 @@ SELECT qid, cand_id, rank, cosine FROM (
 """
 
 
-
 @register("similarity_ivf_topk", IVF_TOPK_ORACLE)
 def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-k (deterministically seeded coarse
@@ -522,7 +425,6 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-for-value, not just a rows-only check."""
     emb = load_table(spark, sf_dir, "embeddings")
     return sim.ivf_topk(emb, emb.where(F.col("vec_id") < 10), k=5, nlist=8, nprobe=2)
-
 
 
 def _lsh_topk_oracle(tables: int = 8, planes: int = 4, dim: int = 64, k: int = 5) -> str:
@@ -591,7 +493,6 @@ SELECT qid, cand_id, rank, cosine FROM (
 """
 
 
-
 @register("similarity_lsh_topk", _lsh_topk_oracle())
 def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH-bucketed approximate top-k (scale path for
@@ -601,7 +502,6 @@ def similarity_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank exactly (see _lsh_topk_oracle)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return sim.lsh_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
-
 
 
 @register(
@@ -642,7 +542,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("codes_l2"),
         F.expr("CAST(size(filter(codes, x -> abs(x) = 127)) AS BIGINT)").alias("n_sat"),
     )
-
 
 
 def _pq_topk_oracle(*, m: int = 8, k: int = 16, dsub: int = 8, shortlist: int = 64, topk: int = 5, q_max: int = 20) -> str:
@@ -716,7 +615,6 @@ SELECT qid, cand_id, rank, cosine FROM (
 """
 
 
-
 @register("similarity_pq_topk", _pq_topk_oracle())
 def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (operators.similarity.pq_topk): md5-derived
@@ -731,7 +629,6 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 20)
     return sim.pq_topk(emb, q, k=5, shortlist=64, codebooks=sim.pq_md5_codebooks())
-
 
 
 @register(
@@ -808,7 +705,6 @@ def embedding_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 @register(
     "topic_doc_assignment",
     """
@@ -876,7 +772,6 @@ def topic_doc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     return docs.join(assigned, "doc_id").select("doc_id", "lang", "topic", "d2")
-
 
 
 def _two_level_cte(k_sql: str) -> str:
@@ -952,9 +847,6 @@ def topic_assign_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.assign_two_level(q.select("vec_id", "qvec", "qnorm"), cents).select(
         "vec_id", F.col("topic").cast("int").alias("topic"), "d2"
     )
-
-
-
 
 
 def _semdedup_linear_oracle(c: int = 25, threshold: float = 0.2) -> str:
@@ -1099,7 +991,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("cand_label", F.col("cand_label").cast("long"))
 
 
-
 @register(
     "embedding_random_projection",
     r"""
@@ -1141,7 +1032,6 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             "aggregate(transform(proj, x -> x * x), CAST(0 AS BIGINT), (a, x) -> a + x)"
         ).alias("proj_l2"),
     )
-
 
 
 def _ivfpq_topk_oracle(
@@ -1264,7 +1154,6 @@ SELECT qid, cand_id, rank, cosine FROM (
 """
 
 
-
 @register("similarity_ivfpq_topk", _ivfpq_topk_oracle())
 def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composed ANN (operators.similarity.ivfpq_topk): coarse-list
@@ -1276,7 +1165,6 @@ def similarity_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-for-value."""
     emb = load_table(spark, sf_dir, "embeddings")
     return sim.ivfpq_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
-
 
 
 def _bm25_oracle(terms: list[str], k: int = 10) -> str:
@@ -1339,7 +1227,6 @@ ORDER BY score_fp DESC, doc_id LIMIT {{k}}
 """.replace("{k}", str(k))
 
 
-
 @register("bm25_retrieval", _bm25_oracle(["hash", "join", "fast", "dup"]))
 def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer BM25 lexical retrieval (operators.text.bm25_scores)
@@ -1351,7 +1238,6 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN family."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return tx.bm25_scores(docs, ["hash", "join", "fast", "dup"], k=10)
-
 
 
 def arrow_embedding_norm_batches(batches):
@@ -1402,7 +1288,6 @@ def arrow_embedding_norm_batches(batches):
             ],
             names=["vec_id", "label", "norm_sq_e12", "component_sum_e6"],
         )
-
 
 
 @register(

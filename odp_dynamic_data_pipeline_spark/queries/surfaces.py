@@ -16,11 +16,8 @@ from pyspark.sql import functions as F
 from odp_dynamic_data_pipeline_spark.operators import dedup as dd
 from odp_dynamic_data_pipeline_spark.operators import similarity as sim
 from odp_dynamic_data_pipeline_spark.queries import register
-from odp_dynamic_data_pipeline_spark.queries import xxh64_sql as _xx
 from odp_dynamic_data_pipeline_spark.queries.llm import (
     MINHASH_MD5_ORACLE,
-    _SIMHASH60_SIG_SQL,
-    _simhash60_md5,
     dedup_minhash_md5,
 )
 from odp_dynamic_data_pipeline_spark.sources.catalog import load_table, register_views
@@ -2385,222 +2382,6 @@ def observed_stream_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(cents).cast("long").alias("cents"),
         F.lit(n_written).cast("long").alias("n_written"),
     )
-
-
-_NEARDUP_MD5_STREAM_ORACLE = """
-WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents),
-sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(t, i, i + 2), ' ') AS s
-       FROM (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t) - 2, 0))) AS i
-             FROM toks)),
-hd AS (SELECT DISTINCT doc_id,
-              ('0x' || substr(md5(s), 1, 15))::BIGINT % {p} AS h
-       FROM sh),
-sig AS (
-  SELECT doc_id,
-         {mins}
-  FROM hd GROUP BY doc_id
-),
-bands AS (
-  SELECT doc_id,
-         unnest([{band_hashes}]) AS b,
-         unnest([0, 1, 2, 3]) AS bi
-  FROM sig
-),
-cand AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.bi = b.bi AND a.b = b.b AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM hd GROUP BY doc_id),
-inter AS (
-  SELECT c.id_a, c.id_b, CAST(COUNT(*) AS BIGINT) AS ni
-  FROM cand c
-  JOIN hd a ON a.doc_id = c.id_a
-  JOIN hd b ON b.doc_id = c.id_b AND b.h = a.h
-  GROUP BY c.id_a, c.id_b
-)
-SELECT id_a, id_b, jaccard_e6 FROM (
-  SELECT c.id_a, c.id_b,
-         (1000000 * COALESCE(i.ni, 0)) // (sa.sz + sb.sz - COALESCE(i.ni, 0)) AS jaccard_e6
-  FROM cand c
-  LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-  JOIN sizes sa ON sa.doc_id = c.id_a
-  JOIN sizes sb ON sb.doc_id = c.id_b
-) WHERE jaccard_e6 >= 200000
-""".format(
-    p=2_147_483_647,
-    mins=",\n         ".join(
-        f"min(CAST(({a} * h + {b}) % 2147483647 AS BIGINT)) AS m{i}"
-        for i, (a, b) in enumerate(dd.MINHASH_AB)
-    ),
-    band_hashes=", ".join(
-        "md5(concat_ws('|', " + ", ".join(f"m{i}" for i in range(b * 4, b * 4 + 4)) + "))"
-        for b in range(4)
-    ),
-)
-
-
-@register("incremental_neardup_md5_stream", _NEARDUP_MD5_STREAM_ORACLE)
-def incremental_neardup_md5_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HASH-GATED streaming near-duplicate detection (VERDICT r9 item 7):
-    run_incremental_neardup(hasher='md5') replays documents as TWO
-    chronological micro-batches through the same incremental LSH store
-    protocol as the xxhash64 production twin, but with the engine-
-    portable md5 minhash family (operators.dedup MINHASH_AB) -- so the
-    UNION of all emitted batches is checked value-for-value against the
-    DuckDB replay of the whole banding + exact-Jaccard pipeline.  Pair
-    orientation is normalized (least, greatest): a cross-batch pair is
-    emitted as (stored, new), which flips if the file source happens to
-    order the two drops differently; Jaccard is symmetric."""
-    from odp_dynamic_data_pipeline_spark.queries.core import (
-        _stream_shuffle,
-        _stream_tmpdir,
-    )
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_neardup
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = _stream_tmpdir("neardup_md5_stream")
-    src = f"{tmp}/in"
-    # deterministic even/odd split (no quantile pass): ANY split yields the
-    # same pair SET because band collisions are batch-independent, and the
-    # least/greatest normalization below makes pair orientation split-proof
-    docs.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(
-        f"{src}/drop=0"
-    )
-    docs.where(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("overwrite").parquet(
-        f"{src}/drop=1"
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/drop=*")
-    )
-    with _stream_shuffle(spark):
-        run_incremental_neardup(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            checkpoint=f"{tmp}/ckpt",
-            num_perm=16,
-            bands=4,
-            threshold_e6=200_000,
-            hasher="md5",
-        )
-    return spark.read.parquet(f"{tmp}/out").select(
-        F.least("id_a", "id_b").alias("id_a"),
-        F.greatest("id_a", "id_b").alias("id_b"),
-        "jaccard_e6",
-    )
-
-
-_NEARDUP_XX_STREAM_ORACLE = f"""
-WITH pairs AS ({_xx.minhash_xx_pairs_sql(200_000)})
-SELECT CAST(COUNT(*) AS BIGINT) AS n_stream,
-       CAST(COUNT(*) AS BIGINT) AS n_batch,
-       CAST(COUNT(*) AS BIGINT) AS n_common,
-       CAST(COUNT(*) AS BIGINT) AS n_jaccard_equal
-FROM pairs
-"""
-
-
-@register("incremental_neardup_stream", _NEARDUP_XX_STREAM_ORACLE)
-def incremental_neardup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING near-duplicate detection (streaming.stream.
-    run_incremental_neardup): MinHash+LSH as stateful ingest -- per
-    micro-batch, bucket collisions against the accreted LSH store +
-    batch-internal pairs, verified by exact Jaccard over stored shingle
-    hashes.  The one-row report compares the streaming pair set against
-    the batch minhash_lsh_pairs run on the same corpus -- n_stream,
-    n_batch, n_common, and n_jaccard_equal must all be equal.
-
-    ORACLE-GATED since r11 (previously rows-only): the DuckDB oracle
-    replays the full xxhash64 MinHash+LSH pipeline itself (generated
-    XXH64 SQL, queries/xxh64_sql.py) and emits its true pair count N
-    four times -- so the driver's hash gate now binds all four counts to
-    the INDEPENDENT ground truth, not merely to each other: stream set ==
-    batch set == DuckDB's replay, with per-pair jaccard values gated by
-    the dedup_minhash_lsh oracle.  Cross-batch store semantics
-    (new-vs-historical pairs, retry idempotence, store compaction) are
-    pinned by the crafted-batch tests in
-    tests/test_incremental_dedup.py."""
-    from odp_dynamic_data_pipeline_spark.queries.core import (
-        _replay_stream,
-        _stream_shuffle,
-        _stream_tmpdir,
-    )
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_neardup
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = _stream_tmpdir("neardup_stream")
-    stream = _replay_stream(spark, docs, tmp)
-    with _stream_shuffle(spark):
-        run_incremental_neardup(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            checkpoint=f"{tmp}/ckpt",
-            threshold_e6=200_000,
-        )
-    sp = spark.read.parquet(f"{tmp}/out").select("id_a", "id_b", "jaccard_e6")
-    bp = dd.minhash_lsh_pairs(docs, "doc_id", threshold_e6=200_000).select(
-        "id_a", "id_b", F.col("jaccard_e6").alias("jb")
-    )
-    joined = sp.join(bp, ["id_a", "id_b"], "full_outer")
-    return joined.agg(
-        F.count("jaccard_e6").cast("long").alias("n_stream"),
-        F.count("jb").cast("long").alias("n_batch"),
-        F.sum(
-            F.when(F.col("jaccard_e6").isNotNull() & F.col("jb").isNotNull(), 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_common"),
-        F.sum(F.when(F.col("jaccard_e6") == F.col("jb"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_jaccard_equal"),
-    )
-
-
-@register(
-    "incremental_hamming_stream",
-    f"""
-WITH {_SIMHASH60_SIG_SQL}
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash60, b.simhash60)) AS INTEGER) AS dist
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash60, b.simhash60)) <= 3
-""",
-)
-def incremental_hamming_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING Hamming near-dup retrieval (streaming.stream.
-    run_incremental_hamming): md5-SimHash60 fingerprints arrive as a
-    stream; per micro-batch, pigeonhole band collisions against the
-    accreted band index + the batch itself, popcount-verified, emitted
-    normalized -- the accumulated pair set EQUALS the batch hamming_join.
-    Because the md5-SimHash algebra is engine-replayable, this streaming
-    twin carries a FULL DuckDB hash oracle (the brute-force all-pairs
-    join), a stronger gate than the xxhash minhash twin's rows-only
-    check.  Cross-batch store semantics and retry idempotence are pinned
-    by crafted-batch tests (tests/test_incremental_hamming.py)."""
-    from odp_dynamic_data_pipeline_spark.queries.core import (
-        _replay_stream,
-        _stream_shuffle,
-        _stream_tmpdir,
-    )
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_hamming
-
-    sig = _simhash60_md5(load_table(spark, sf_dir, "documents"))
-    tmp = _stream_tmpdir("hamming_stream")
-    stream = _replay_stream(spark, sig, tmp)
-    with _stream_shuffle(spark):
-        run_incremental_hamming(
-            stream,
-            f"{tmp}/store",
-            f"{tmp}/out",
-            checkpoint=f"{tmp}/ckpt",
-            bits=60,
-            max_dist=3,
-        )
-    return spark.read.parquet(f"{tmp}/out").select("id_a", "id_b", "dist")
 
 
 @register(

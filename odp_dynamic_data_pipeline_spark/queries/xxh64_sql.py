@@ -1,9 +1,8 @@
 """Spark ``xxhash64`` replayed as pure DuckDB SQL expressions.
 
 Closes the last rows-only gap in the oracle registry (r10 verdict item
-3): the three xxhash64 production-path queries (``dedup_minhash_lsh``,
-``dedup_simhash``, ``incremental_neardup_stream``) previously had no
-DuckDB oracle because DuckDB ships no xxhash64 -- so this module
+3): the xxhash64 production-path queries (``dedup_minhash_lsh``,
+``dedup_simhash``) previously had no DuckDB oracle because DuckDB ships no xxhash64 -- so this module
 implements XXH64 itself, as generated SQL, from the public spec (Yann
 Collet's xxHash, the exact variant Apache Spark's
 ``catalyst.expressions.XxHash64`` evaluates: seed 42, little-endian
@@ -429,10 +428,7 @@ def minhash_xx_pairs_sql(
     (operators.dedup hashed_shingles_direct -> minhash_signatures ->
     band buckets -> candidate join -> exact-Jaccard verify), returning
     (id_a, id_b, inter, uni, jaccard_e6) -- value-identical to
-    minhash_lsh_pairs.  Shared by the dedup_minhash_lsh batch oracle and
-    the incremental_neardup_stream report oracle (the streaming pair set
-    equals the batch pair set for any batch split, so one replay serves
-    both)."""
+    minhash_lsh_pairs; the dedup_minhash_lsh oracle."""
     rows_per_band = num_perm // bands
     # the n-token chain is flattened across CTE stages (one HASH_STR per
     # stage, the previous stage's hash column as seed): nesting the three

@@ -1,37 +1,23 @@
 from odp_dynamic_data_pipeline_spark.streaming.stream import (
-    compact_incremental_store,
-    dedup_incremental,
     dedup_within_watermark,
     pair_page_views_stream,
-    make_pair_processor,
-    pair_page_views_tws,
     read_incremental_agg,
     run_available_now,
     run_incremental_agg,
-    run_incremental_dedup,
-    run_incremental_neardup,
     session_window_metrics,
     stream_enrich,
     stream_stream_join,
-    vacuum_incremental_agg,
     windowed_event_counts,
 )
 
 __all__ = [
-    "compact_incremental_store",
-    "dedup_incremental",
     "dedup_within_watermark",
     "pair_page_views_stream",
-    "make_pair_processor",
-    "pair_page_views_tws",
     "read_incremental_agg",
     "run_available_now",
     "run_incremental_agg",
-    "run_incremental_dedup",
-    "run_incremental_neardup",
     "session_window_metrics",
     "stream_enrich",
     "stream_stream_join",
-    "vacuum_incremental_agg",
     "windowed_event_counts",
 ]

@@ -91,39 +91,19 @@ def read_sidecar(spark, path: str) -> str | None:
     return "\n".join(lines)
 
 
-def write_sidecar(spark, path: str, body: str) -> None:
-    """Write a small sidecar file via tmp + overwrite-rename (same atomic
-    flip as the manifest, so a reader never sees a partial file)."""
-    jvm, conf, fs = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}.tmp")
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(body.encode()))
-    finally:
-        out.close()
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-        jvm.java.net.URI.create(path), conf
-    )
-    gw = spark.sparkContext._gateway
-    opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
-    opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-    fc.rename(tmp, dst, opts)
-
-
 def write_sidecar_exclusive(spark, path: str, body: str) -> bool:
     """Write a sidecar with CREATE-EXCLUSIVE semantics: exactly one of N
     racing writers wins.  Returns True if this writer's rename created the
     file, False if the destination already existed (someone else won; the
     caller must re-read and reconcile).
 
-    Two differences from :func:`write_sidecar` close the first-fold TOCTOU
-    race it was used for: (a) each writer stages to a UNIQUE tmp path
+    Two properties close the first-fold TOCTOU race of a plain
+    tmp + overwrite-rename: (a) each writer stages to a UNIQUE tmp path
     (uuid suffix), so racing writers can never clobber each other's
     staged bytes before the rename; (b) the rename uses
     ``Options.Rename.NONE`` (no overwrite), so HDFS/local FileContext
     raises ``FileAlreadyExistsException`` for every writer but the first
-    -- the exclusive-create step the advisor asked for."""
+    -- the exclusive-create step."""
     import uuid
 
     jvm, conf, fs = _fs(spark, path)
@@ -163,20 +143,18 @@ def ensure_store_config(spark, store_path: str, config: dict) -> dict:
     store with a different n_buckets or key set silently rehashes keys
     into different buckets, making stored rows invisible to future
     touched-bucket folds (duplicate keys on read, deleted keys
-    resurrecting, missed near-dup candidates) with no error anywhere.
-    The advisor flagged exactly this for expire_upsert_tombstones and
-    run_incremental_neardup's hasher; the guard is shared by all store
-    families.
+    resurrecting) with no error anywhere -- expire_upsert_tombstones
+    is one such caller.  The guard is shared by all store families.
 
     Returns the pinned config.  Missing CONFIG on an existing store
     (created before this guard) is adopted: the current call's values
     are written and later calls validate against them.
 
-    The sidecar is named ``_CONFIG``: several batch-keyed stores (the
-    dedup fingerprint store) are read as WHOLE parquet directories, and
-    Hadoop's path filter hides underscore-prefixed files from such scans
-    (the _SUCCESS convention) -- a bare name would break the read with a
-    cannot-read-footer error.
+    The sidecar is named ``_CONFIG``: Hadoop's path filter hides
+    underscore-prefixed files from whole-directory parquet scans (the
+    _SUCCESS convention), so a store directory stays readable as parquet
+    -- a bare name would break such a read with a cannot-read-footer
+    error.
 
     Concurrency: stores assume a SINGLE WRITER per store directory (the
     manifest flip protocol already requires this -- two concurrent folds

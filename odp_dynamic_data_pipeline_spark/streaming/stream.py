@@ -32,9 +32,9 @@ def _parallel_sink_writes(*thunks) -> None:
     (guide §2.6: actions are only sequential because the driver calls
     them sequentially).  The heavy store folds are job-latency bound
     (r13 receipts: 0.55 s warm for an empty 2-batch drain; multi-second
-    folds are 2-4 blocking submissions each), and most folds end with
-    2-3 writes to DISJOINT batch-keyed paths that share persisted
-    intermediates -- overlapping them saves one to two submissions of
+    folds are 2-4 blocking submissions each), and folds end with writes
+    to DISJOINT paths that share persisted intermediates -- overlapping
+    them saves one to two submissions of
     latency per fold locally, and at cluster scale lets one write's
     straggler tail back-fill the other's executors.
 
@@ -183,9 +183,7 @@ def dedup_within_watermark(
     """Streaming dedup with BOUNDED state: a duplicate arriving within the
     watermark of its first occurrence is dropped; state for keys older than
     the watermark is evicted.  Contrast with plain ``dropDuplicates`` on a
-    stream, whose key state grows forever.  (The cross-batch *persistent*
-    fingerprint store is run_incremental_dedup; this is the in-flight,
-    bounded-memory variant.)"""
+    stream, whose key state grows forever."""
     if isinstance(keys, str):
         keys = [keys]
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
@@ -206,8 +204,10 @@ def _walk_group_batch(
     exact_us,
 ):
     """Closed-form W2 register walk over one group's (concatenated)
-    micro-batch.  Shared by both stateful APIs (applyInPandasWithState and
-    transformWithStateInPandas) so their semantics cannot drift.
+    micro-batch, the per-group step of :func:`pair_page_views_stream`.
+    Module-level so the cross-batch semantics are drivable directly:
+    feed its returned register back in as the next batch's ``init_start``
+    (int64 min = no register), exactly as the state function does.
 
     Returns ``(out_pdf, register)`` where ``register`` is the last unmatched
     start in integer microseconds, or ``None`` when the register is consumed
@@ -367,280 +367,6 @@ def pair_page_views_stream(
     )
 
 
-def make_pair_processor(
-    *,
-    group_col: str = "clientId",
-    ts_col: str = "event_time",
-    type_col: str = "eventType",
-    start_type: str = "page_view_start",
-    end_type: str = "page_view_end",
-    state_ttl_ms: int | None = None,
-    order_cols: list[str] | None = None,
-    group_type: str = "string",
-    duration_unit: str = "seconds",
-):
-    """Build the (StatefulProcessor instance, output schema) pair used by
-    :func:`pair_page_views_tws`.  Module-level so the processor's register
-    logic is directly drivable with a stub StatefulProcessorHandle in tests
-    -- the transformWithState WORKER protocol needs protobuf, but the
-    processor itself is plain Python, so environments without protobuf can
-    still verify this exact class emits the same pairs as the
-    applyInPandasWithState twin (tests/test_streaming.py)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    exact_us = duration_unit == "us"
-    dur_field = "dur_us long" if exact_us else "page_view_duration double"
-    dur_name = dur_field.split(" ")[0]
-    out_schema = f"{group_col} {group_type}, end_ts timestamp, {dur_field}"
-    sort_cols = order_cols or [ts_col]
-
-    class _PairProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            if state_ttl_ms:
-                self._reg = handle.getValueState(
-                    "register", "last_start_us long", ttlDurationMs=state_ttl_ms
-                )
-            else:
-                self._reg = handle.getValueState("register", "last_start_us long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-            import pandas as pd
-
-            NEG = np.iinfo(np.int64).min
-            last = self._reg.get()
-            init_start = last[0] if last is not None else NEG
-            chunks = list(rows)
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-            out, register = _walk_group_batch(
-                pdf,
-                init_start,
-                sort_cols=sort_cols,
-                ts_col=ts_col,
-                type_col=type_col,
-                start_type=start_type,
-                end_type=end_type,
-                group_col=group_col,
-                key0=key[0],
-                dur_name=dur_name,
-                exact_us=exact_us,
-            )
-            if register is None:
-                self._reg.clear()
-            else:
-                self._reg.update((register,))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    return _PairProcessor(), out_schema
-
-
-def pair_page_views_tws(
-    stream: DataFrame,
-    *,
-    group_col: str = "clientId",
-    ts_col: str = "event_time",
-    type_col: str = "eventType",
-    start_type: str = "page_view_start",
-    end_type: str = "page_view_end",
-    state_ttl_ms: int | None = None,
-    order_cols: list[str] | None = None,
-    group_type: str = "string",
-    duration_unit: str = "seconds",
-) -> DataFrame:
-    """Page-view pairing on ``transformWithStateInPandas`` -- the Spark 4
-    arbitrary-state API (typed state variables + declarative TTL) that
-    succeeds applyInPandasWithState.  Same W2 register semantics as
-    :func:`pair_page_views_stream`; the state store schema differs
-    (ValueState per key instead of a tuple), which is why this is a
-    SEPARATE operator rather than a flag: checkpoints are not migratable
-    between the two APIs.
-
-    TTL here is declarative (``ttlDurationMs`` on the state variable, in
-    processing time) -- the store expires the register itself, no timer
-    bookkeeping in user code.
-
-    Runtime requirement: the transformWithState worker protocol speaks
-    protobuf (google.protobuf must be importable on driver and executors);
-    environments without it should use :func:`pair_page_views_stream`,
-    which has identical semantics on the older API (equivalence of the two
-    is asserted by tests/test_streaming.py's stub-handle harness)."""
-    processor, out_schema = make_pair_processor(
-        group_col=group_col,
-        ts_col=ts_col,
-        type_col=type_col,
-        start_type=start_type,
-        end_type=end_type,
-        state_ttl_ms=state_ttl_ms,
-        order_cols=order_cols,
-        group_type=group_type,
-        duration_unit=duration_unit,
-    )
-    return stream.groupBy(group_col).transformWithStateInPandas(
-        statefulProcessor=processor,
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
-    )
-
-
-def dedup_incremental(
-    stream: DataFrame,
-    seen_fingerprints: DataFrame,
-    *,
-    text_col: str = "text",
-    fp_col: str = "fingerprint",
-) -> DataFrame:
-    """Incremental corpus ingestion: drop stream documents whose normalized
-    fingerprint already exists in the historical store (stream-static
-    LEFT ANTI join; the static side refreshes per micro-batch), then drop
-    within-stream repeats (dropDuplicates keyed on the fingerprint, state
-    bounded by the upstream watermark if one is set).
-
-    The historical store is just a parquet/Delta table of fingerprints --
-    append each batch's survivors to close the loop."""
-    from odp_dynamic_data_pipeline_spark.operators.text import fingerprint
-
-    fp = fingerprint(stream, text_col, out_col=fp_col)
-    fresh = fp.join(
-        F.broadcast(seen_fingerprints.select(fp_col)), fp_col, "left_anti"
-    )
-    return fresh.dropDuplicates([fp_col])
-
-
-def run_incremental_dedup(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    *,
-    checkpoint: str,
-    text_col: str = "text",
-    fp_col: str = "fingerprint",
-    order_col: str | None = None,
-):
-    """The closed-loop version of dedup_incremental: per micro-batch,
-    anti-join the batch against the CURRENT fingerprint store, append the
-    survivors to ``out_path`` and their fingerprints to ``store_path``.
-
-    ``order_col`` makes the within-batch survivor DETERMINISTIC (the row
-    with the minimum value per fingerprint, e.g. the smallest doc_id)
-    instead of dropDuplicates' arbitrary pick -- required for replayable /
-    auditable corpus builds, and what makes the stream==batch oracle query
-    (queries.core incremental_dedup_stream) possible.  Same cost class:
-    one shuffle on the fingerprint either way.
-
-    The store re-read and the join happen inside foreachBatch because a
-    streaming-static join analyzes its static side once -- it would never
-    see the store grow.  Idempotency: each batch writes to a batch-keyed
-    partition directory with overwrite, so a foreachBatch retry of the same
-    batch_id replaces its own output instead of double-appending; the
-    checkpoint guarantees each source offset range maps to one batch_id.
-    A missing store is detected with an explicit filesystem probe -- any
-    other read failure (corrupt store, transient FS error) propagates and
-    fails the batch rather than silently disabling dedup.  At scale the
-    store is a compacted table keyed by fingerprint (see
-    sources.writers.compact_parquet).
-    """
-    from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.operators.text import fingerprint
-
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # pin the fingerprint source/layout (advisor r10 guard class): a
-        # resume with a different text_col produces incomparable
-        # fingerprints -- duplicates silently pass the anti-join
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
-        ensure_store_config(
-            spark, store_path,
-            {"family": "dedup", "text_col": text_col, "fp_col": fp_col,
-             "order_col": order_col},
-        )
-        fp = fingerprint(batch_df, text_col, out_col=fp_col)
-        if order_col:
-            from pyspark.sql import Window
-
-            w = Window.partitionBy(fp_col).orderBy(order_col)
-            fp = (
-                fp.withColumn("__rk", SF.row_number().over(w))
-                .where(SF.col("__rk") == 1)
-                .drop("__rk")
-            )
-        else:
-            fp = fp.dropDuplicates([fp_col])
-        fp = fp.persist()
-        # probe for DATA partitions, not bare existence: the _CONFIG
-        # sidecar creates the store directory before the first batch
-        # writes any parquet, and reading a data-less directory fails
-        # schema inference
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(store_path), conf
-        )
-        root = jvm.org.apache.hadoop.fs.Path(store_path)
-        has_data = fs.exists(root) and any(
-            s.getPath().getName().startswith("batch_id=")
-            for s in fs.listStatus(root)
-        )
-        if has_data:
-            # exclude this batch's own partition: a retry must not see the
-            # failed attempt's fingerprints and drop the whole batch.
-            # Broadcast direction matters at scale: broadcast the BATCH's
-            # fingerprints into a semi-join that prunes the store to
-            # actual hits (store scanned map-side, never shuffled or
-            # broadcast whole), then anti-join the batch against the
-            # batch-bounded hit set -- per-batch cost is batch-driven
-            # plus a sequential store scan, flat in store size
-            seen = (
-                spark.read.parquet(store_path)
-                .where(SF.col("batch_id") != SF.lit(batch_id))
-                .select(fp_col)
-            )
-            hits = seen.join(
-                SF.broadcast(fp.select(fp_col)), fp_col, "left_semi"
-            )
-            fresh = fp.join(SF.broadcast(hits), fp_col, "left_anti")
-        else:  # first batch: no store yet
-            fresh = fp
-        fresh.persist()
-        _parallel_sink_writes(
-            lambda: fresh.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: fresh.select(fp_col).write.mode("overwrite").parquet(
-                f"{store_path}/batch_id={batch_id}"
-            ),
-        )
-        fresh.unpersist()
-        fp.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
 def apply_incremental_agg_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -787,18 +513,6 @@ def run_incremental_agg(
     return q
 
 
-def _agg_manifest(spark, store_path: str) -> tuple[str, str, dict | None, dict | None]:
-    """Parse a run_incremental_agg MANIFEST: (current, parent, current
-    bucket map, parent bucket map); maps are None for legacy stores.
-    Back-compat wrapper over kvstore.ManifestStore."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    m = ManifestStore(spark, store_path).read_manifest()
-    if m is None:
-        raise ValueError(f"no incremental-agg store at {store_path}")
-    return (m.current, m.parent, m.cur_map, m.par_map)
-
-
 def read_incremental_agg(spark, store_path: str) -> DataFrame:
     """Read the current state of a run_incremental_agg store: the current
     version directory for a legacy store, or the union of per-bucket
@@ -809,18 +523,6 @@ def read_incremental_agg(spark, store_path: str) -> DataFrame:
     from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     return ManifestStore(spark, store_path).read_current()
-
-
-def vacuum_incremental_agg(spark, store_path: str) -> list[str]:
-    """Retention for the versioned aggregate store: every micro-batch fold
-    writes a new version directory and only flips the manifest, so without
-    cleanup the store grows by one full copy of the aggregate per batch.
-    Delegates to kvstore.ManifestStore.vacuum -- see its docstring for the
-    retention set and the never-strand-a-reader argument.  Returns the
-    deleted version names."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    return ManifestStore(spark, store_path).vacuum()
 
 
 def run_available_now(
@@ -849,1160 +551,6 @@ def run_available_now(
     if checkpoint:
         w = w.option("checkpointLocation", checkpoint)
     q = w.start()
-    q.awaitTermination()
-    return q
-
-
-def run_incremental_neardup(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    *,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    num_perm: int = 32,
-    bands: int = 8,
-    threshold_e6: int = 500_000,
-    hasher: str = "xx",
-):
-    """Streaming NEAR-duplicate detection: the MinHash+LSH analogue of
-    run_incremental_dedup.  Per micro-batch, each new document's hashed
-    shingles and band buckets are computed once; candidate pairs come from
-    bucket collisions against BOTH the historical store and the batch
-    itself, are verified by exact Jaccard over the stored shingle hashes,
-    and the batch's buckets + hashes are appended to the store.
-
-    ``hasher``: ``'xx'`` (default) is the xxhash64 production path;
-    ``'md5'`` switches the WHOLE family -- shingle hash, permutation
-    mins, band bucket keys -- to the engine-portable md5 algebra shared
-    with the batch md5 twins (operators.dedup MINHASH_AB), so the
-    streaming pair set can sit behind a DuckDB oracle.  Identical store
-    protocol and join shapes either way.
-
-    Store layout (both batch-keyed for idempotent retries, same discipline
-    as run_incremental_dedup):
-      {store_path}/buckets/batch_id=N  -- (id, band, bucket): the LSH index
-      {store_path}/hashes/batch_id=N   -- (id, hsh array): verification side
-    Output: {out_path}/batch_id=N      -- (id_a, id_b, jaccard_e6), where
-    id_b is always the NEW document (id_a may be historical or batch-local).
-
-    Scale shape: the per-batch cost is driven by bucket collisions, not
-    store size -- the join is an equi-join on (band, bucket) against a
-    bucket table that a real deployment compacts and bucket-partitions
-    (sources.writers.compact_parquet / write_bucketed_table); the full
-    shingle-hash table is touched only for the verified candidates."""
-    from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.operators.dedup import (
-        hashed_shingles_direct,
-        minhash_signatures,
-    )
-
-    rows_per_band = num_perm // bands
-
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-    if hasher not in ("xx", "md5"):
-        raise ValueError(f"run_incremental_neardup: hasher must be xx|md5, got {hasher!r}")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # pin the hash family + signature shape (advisor r10): resuming an
-        # 'xx' store with hasher='md5' mixes BIGINT and md5-string bucket
-        # schemas across batch directories -- cross-batch candidate joins
-        # silently miss pairs or the multi-batch read fails opaquely.  The
-        # n/num_perm/bands knobs are pinned too: a mismatch puts old and
-        # new batches in incomparable signature spaces with no error.
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
-        ensure_store_config(
-            spark, store_path,
-            {
-                "family": "neardup",
-                "hasher": hasher,
-                "n": n,
-                "num_perm": num_perm,
-                "bands": bands,
-            },
-        )
-        if hasher == "md5":
-            from odp_dynamic_data_pipeline_spark.operators.dedup import (
-                md5_hashed_shingles,
-                md5_minhash_signatures,
-            )
-
-            hashed = md5_hashed_shingles(
-                batch_df.select(id_col, text_col), id_col, text_col, n=n
-            ).persist()
-            sig = md5_minhash_signatures(hashed, id_col, num_perm=num_perm)
-            band_structs = [
-                SF.struct(
-                    SF.lit(b).alias("band"),
-                    SF.md5(
-                        SF.concat_ws(
-                            "|",
-                            *[
-                                SF.col(f"mh_{i}").cast("string")
-                                for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                            ],
-                        )
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        else:
-            hashed = hashed_shingles_direct(
-                batch_df.select(id_col, text_col), id_col, text_col, n=n
-            ).persist()
-            sig = minhash_signatures(hashed, id_col, num_perm=num_perm)
-            band_structs = [
-                SF.struct(
-                    SF.lit(b).alias("band"),
-                    SF.xxhash64(
-                        SF.lit(b),
-                        *[SF.col(f"mh_{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)],
-                    ).alias("bucket"),
-                )
-                for b in range(bands)
-            ]
-        buckets = (
-            sig.select(SF.col(id_col), SF.explode(SF.array(*band_structs)).alias("bb"))
-            .select(id_col, SF.col("bb.band").alias("band"), SF.col("bb.bucket").alias("bucket"))
-            .persist()
-        )
-        # candidates vs the historical store (excluding this batch's own
-        # partition -- a retry must not collide with its failed attempt)
-        cands = []
-        if _path_exists(spark, f"{store_path}/buckets"):
-            old_b = (
-                spark.read.parquet(f"{store_path}/buckets")
-                .where(SF.col("batch_id") != SF.lit(batch_id))
-            )
-            cands.append(
-                buckets.join(
-                    old_b.select("band", "bucket", SF.col(id_col).alias("id_a")),
-                    ["band", "bucket"],
-                )
-                .select(SF.col("id_a"), SF.col(id_col).alias("id_b"))
-            )
-        # batch-internal candidates
-        left = buckets.select("band", "bucket", SF.col(id_col).alias("id_a"))
-        right = buckets.select("band", "bucket", SF.col(id_col).alias("id_b"))
-        cands.append(
-            left.join(right, ["band", "bucket"]).where(SF.col("id_a") < SF.col("id_b"))
-            .select("id_a", "id_b")
-        )
-        cand = cands[0]
-        for c in cands[1:]:
-            cand = cand.unionByName(c)
-        cand = cand.dropDuplicates(["id_a", "id_b"]).persist()
-        # verification: old ids resolve against the store's hash table,
-        # new ids against this batch's.  The store side is pruned to the
-        # ids that actually appear in candidate pairs (collision-bounded,
-        # broadcast-safe) BEFORE the union, so the shingle-hash table is
-        # only ever scanned -- never shuffled whole -- and the join work
-        # is candidate-driven, not store-size-driven
-        if _path_exists(spark, f"{store_path}/hashes"):
-            need = cand.select(SF.col("id_a").alias(id_col)).distinct()
-            store_h = (
-                spark.read.parquet(f"{store_path}/hashes")
-                .where(SF.col("batch_id") != SF.lit(batch_id))
-                .join(SF.broadcast(need), id_col, "left_semi")
-                .select(id_col, "hsh")
-            )
-            all_hashes = store_h.unionByName(hashed.select(id_col, "hsh"))
-        else:
-            all_hashes = hashed.select(id_col, "hsh")
-        ha = all_hashes.select(SF.col(id_col).alias("id_a"), SF.col("hsh").alias("h_a"))
-        hb = hashed.select(SF.col(id_col).alias("id_b"), SF.col("hsh").alias("h_b"))
-        pairs = (
-            cand.join(ha, "id_a")
-            .join(hb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                SF.size(SF.array_intersect("h_a", "h_b")).cast("long").alias("inter"),
-                SF.size(SF.array_union("h_a", "h_b")).cast("long").alias("uni"),
-            )
-            .withColumn("jaccard_e6", SF.expr("(1000000 * inter) div uni"))
-            .where(SF.col("jaccard_e6") >= threshold_e6)
-            .select("id_a", "id_b", "jaccard_e6")
-        )
-        _parallel_sink_writes(
-            lambda: pairs.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: buckets.write.mode("overwrite").parquet(
-                f"{store_path}/buckets/batch_id={batch_id}"
-            ),
-            lambda: hashed.select(id_col, "hsh").write.mode("overwrite").parquet(
-                f"{store_path}/hashes/batch_id={batch_id}"
-            ),
-        )
-        cand.unpersist()
-        buckets.unpersist()
-        hashed.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def apply_incremental_semdedup_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    store_path: str,
-    out_path: str,
-    *,
-    centroids: list[list[int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.2,
-    centroid_path: str = "auto",
-) -> None:
-    """One micro-batch fold of :func:`run_incremental_semdedup` -- module
-    level so retry idempotency and the id-monotonicity guard are directly
-    testable without checkpoint surgery (same split as
-    apply_incremental_agg_batch)."""
-    import hashlib
-    import json as _json
-
-    from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.operators.similarity import (
-        DOT,
-        ivf_assign,
-        quantized,
-    )
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ensure_store_config
-
-    spark = batch_df.sparkSession
-    # pin the layout-determining knobs: a different centroid set, k,
-    # threshold, or hash of the centroid VALUES silently changes every
-    # later election (vectors assigned to different clusters never meet
-    # their witnesses) -- same guard class as the neardup hasher pin.
-    cent_md5 = hashlib.md5(
-        _json.dumps([[int(x) for x in c] for c in centroids]).encode()
-    ).hexdigest()
-    ensure_store_config(
-        spark,
-        store_path,
-        {
-            "family": "semdedup",
-            "k": len(centroids),
-            "threshold_e6": int(round(threshold * 1_000_000)),
-            "centroid_md5": cent_md5,
-            "id_col": id_col,
-            "vec_col": vec_col,
-        },
-    )
-
-    def _path_exists(path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-    asg = (
-        ivf_assign(
-            quantized(batch_df.select(id_col, vec_col), vec_col),
-            centroids,
-            nprobe=1,
-            centroid_path=centroid_path,
-        )
-        .select(id_col, SF.col("ivf_list").cast("int").alias("__list"), "qvec", "qnorm")
-        .persist()
-    )
-    # bounded collect license: one row -- the batch's id range (two
-    # scalars) plus its touched-cluster set (<= len(centroids) ints).
-    # One aggregation job instead of the former two (min/max first() +
-    # a separate distinct-list collect): the fold is job-latency bound,
-    # every blocking submission counts (r13).
-    rng = asg.agg(
-        SF.min(id_col).alias("lo"),
-        SF.max(id_col).alias("hi"),
-        SF.collect_set("__list").alias("touched"),
-    ).first()
-    if rng["lo"] is None:  # empty batch: nothing to elect, nothing to store
-        asg.unpersist()
-        return
-    # id-monotonicity guard: the keep-first election is exact vs the batch
-    # run only when ids never arrive below the stored high-water mark (a
-    # lower-id late arrival would need to RETRO-mark an already-emitted
-    # row).  meta is a tiny batch-keyed table (one row per batch), so the
-    # check reads a handful of rows, never the vector store.
-    meta_path = f"{store_path}/meta"
-    if _path_exists(meta_path):
-        hwm = (
-            spark.read.parquet(meta_path)
-            .where(SF.col("batch_id") != SF.lit(batch_id))
-            .agg(SF.max("max_id"))
-            .first()[0]
-        )
-        if hwm is not None and rng["lo"] <= hwm:
-            raise ValueError(
-                f"incremental semdedup at {store_path!r}: batch {batch_id}"
-                f" min id {rng['lo']} <= stored high-water mark {hwm}."
-                " Keep-first elections are id-ordered; feed id-monotone"
-                " drops (or re-run the batch dedup over the full corpus)."
-            )
-    # touched-cluster pruning: the store side is filtered to the clusters
-    # this batch actually landed in BEFORE any join -- per-batch store IO
-    # is bounded by the touched clusters' sizes, never the store size
-    # (collected above, riding the id-range aggregation).
-    touched = sorted(rng["touched"])
-    dot = SF.expr(DOT.format(a="qa", b="qb"))
-    cosine = dot.cast("double") / SF.sqrt(
-        SF.col("na").cast("double") * SF.col("nb").cast("double")
-    )
-    newer = asg.select(
-        SF.col(id_col).alias("id_b"),
-        SF.col("__list").alias("__l"),
-        SF.col("qvec").alias("qb"),
-        SF.col("qnorm").alias("nb"),
-    )
-    pairs = (
-        asg.select(
-            SF.col(id_col).alias("id_a"),
-            SF.col("__list").alias("__l"),
-            SF.col("qvec").alias("qa"),
-            SF.col("qnorm").alias("na"),
-        )
-        .join(newer, "__l")
-        .where(SF.col("id_a") < SF.col("id_b"))
-    )
-    vec_path = f"{store_path}/vectors"
-    if _path_exists(vec_path):
-        stored = (
-            spark.read.parquet(vec_path)
-            .where(SF.col("batch_id") != SF.lit(batch_id))
-            .where(SF.col("__list").isin(touched))
-            .select(
-                SF.col(id_col).alias("id_a"),
-                SF.col("__list").alias("__l"),
-                SF.col("qvec").alias("qa"),
-                SF.col("qnorm").alias("na"),
-            )
-        )
-        # the HWM guard makes every stored id lower than every batch id,
-        # but the predicate stays: correctness must not depend on it
-        pairs = pairs.unionByName(
-            stored.join(newer, "__l").where(SF.col("id_a") < SF.col("id_b"))
-        )
-    dup_ids = (
-        pairs.select("id_b", cosine.alias("__cos"))
-        .where(SF.col("__cos") >= SF.lit(threshold))
-        .select(SF.col("id_b").alias(id_col))
-        .distinct()
-        .withColumn("__dup", SF.lit(1))
-    )
-    out = (
-        asg.select(id_col, SF.col("__list").alias("cluster_id"))
-        .join(dup_ids, id_col, "left")
-        .select(
-            id_col,
-            "cluster_id",
-            SF.coalesce("__dup", SF.lit(0)).cast("int").alias("is_dup"),
-        )
-    )
-    # the store keeps ALL seen vectors, not only keepers: the election is
-    # non-chained (a duplicate still witnesses later duplicates), exactly
-    # the batch operator's semantics.  meta rides a JVM-built one-row
-    # relation: a local-list createDataFrame executes as a pickled Python
-    # RDD and costs a multi-second Python-worker round trip PER BATCH
-    # (measured ~5 s on local[32], r13).  All three sinks are independent
-    # batch-keyed overwrites sharing the persisted `asg` -- overlap them.
-    _parallel_sink_writes(
-        lambda: out.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        ),
-        lambda: asg.write.mode("overwrite").parquet(
-            f"{vec_path}/batch_id={batch_id}"
-        ),
-        lambda: spark.range(1).select(
-            SF.lit(int(rng["lo"])).alias("min_id"),
-            SF.lit(int(rng["hi"])).alias("max_id"),
-        ).coalesce(1).write.mode("overwrite").parquet(
-            f"{meta_path}/batch_id={batch_id}"
-        ),
-    )
-    asg.unpersist()
-
-
-def run_incremental_semdedup(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    *,
-    checkpoint: str,
-    centroids: list[list[int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.2,
-    centroid_path: str = "auto",
-):
-    """Streaming SemDeDup: maintain the semantic-duplicate election of
-    operators.similarity.semantic_dedup across micro-batches against a
-    PRE-TRAINED coarse quantizer (``centroids`` -- the deployment shape:
-    k-means is trained offline on a sample, ingest assigns against the
-    frozen codebook, like run_incremental_neardup freezes its hash
-    family).  Per batch: quantize + nearest-centroid assignment (map-side,
-    no shuffle; broadcast data path past LITERAL_CENTROID_MAX), candidate
-    pairs from the cluster blocking key against BOTH the historical
-    vector store (pruned to the batch's touched clusters) and the batch
-    itself, exact integer cosine against ``threshold``, keep-first by
-    lowest id.  Emits one row per batch vector (id, cluster_id, is_dup);
-    the union over batches equals the one-shot batch operator row for row
-    (driver-gated vs the same DuckDB oracle).
-
-    Store layout (batch-keyed for idempotent retries, same discipline as
-    run_incremental_neardup; compact with compact_incremental_store):
-      {store_path}/vectors/batch_id=N -- (id, __list, qvec, qnorm), ALL
-                                         seen vectors (non-chained
-                                         election needs duplicate
-                                         witnesses too)
-      {store_path}/meta/batch_id=N    -- one (min_id, max_id) row: the
-                                         id high-water mark guard
-    Output: {out_path}/batch_id=N     -- (id, cluster_id, is_dup)
-
-    Scale shape: assignment is O(k) per vector map-side (O(2*sqrt(k))
-    via assign_two_level upstream if needed); per-batch store IO is
-    bounded by touched clusters; at k ~ sqrt(N) expected cluster size is
-    sqrt(N), so cross-batch candidate pairs stay batch-driven -- never
-    all-pairs, never a full-store shuffle."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        apply_incremental_semdedup_batch(
-            batch_df,
-            batch_id,
-            store_path,
-            out_path,
-            centroids=centroids,
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            centroid_path=centroid_path,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def compact_incremental_store(spark, store_path: str) -> int:
-    """Maintenance compaction for the batch-keyed dedup stores
-    (run_incremental_dedup's fingerprint store, run_incremental_neardup's
-    buckets/hashes tables): fold every ``batch_id=N`` partition into one
-    baseline partition ``batch_id=-1`` and drop the per-batch partitions.
-    Streaming batch ids are non-negative and monotonic, so the baseline
-    never collides with a live batch, and the own-batch exclusion filter
-    (``batch_id != current``) always keeps the baseline visible.
-
-    Run it BETWEEN streaming runs (AvailableNow lifecycles), not under a
-    live writer.  Crash safety relies on consumer semantics, not
-    atomicity: every consumer tolerates duplicate rows (anti-join,
-    dropDuplicates on candidates), so a crash between the baseline write
-    and the partition deletes only costs duplicates until the next
-    compaction.  Returns the number of batch partitions folded."""
-    from pyspark.sql import functions as SF
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(store_path), conf)
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    parts = [
-        s.getPath().getName()
-        for s in fs.listStatus(root)
-        if s.isDirectory() and s.getPath().getName().startswith("batch_id=")
-    ]
-    to_fold = [p for p in parts if p != "batch_id=-1"]
-    if not to_fold:
-        return 0
-    df = spark.read.parquet(store_path).drop("batch_id")
-    # distinct: the baseline is the store's value set, not its write log
-    df.distinct().write.mode("overwrite").parquet(f"{store_path}/__baseline_tmp")
-    merged = spark.read.parquet(f"{store_path}/__baseline_tmp")
-    merged.write.mode("overwrite").parquet(f"{store_path}/batch_id=-1")
-    for p in parts:
-        if p != "batch_id=-1":
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/{p}"), True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/__baseline_tmp"), True)
-    return len(to_fold)
-
-
-def compact_incremental_count_store(
-    spark, store_path: str, key_cols: list[str], count_col: str = "cnt"
-) -> int:
-    """Compaction twin of :func:`compact_incremental_store` for COUNT
-    stores (run_incremental_spans' (wh, cnt) table): fold every
-    ``batch_id=N`` partition into one ``batch_id=-1`` baseline by SUMMING
-    ``count_col`` per ``key_cols``.  A distinct-fold would collapse equal
-    per-batch counts into one row and under-gate min_count -- count
-    stores need the additive fold, value stores need the set fold; the
-    two functions are deliberately separate so neither can be misapplied
-    silently (schema mismatch fails loudly).
-
-    Same lifecycle discipline as the set-fold twin: run BETWEEN streaming
-    runs, never under a live writer.  Crash window caveat is SHARPER here
-    than for set stores: a crash after the baseline write but before the
-    partition deletes leaves counts doubled (set-store consumers tolerate
-    duplicate rows; count sums do not), which can only over-flag new
-    arrivals until the next compaction completes -- it never un-flags.
-    Returns the number of batch partitions folded."""
-    from pyspark.sql import functions as SF
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(store_path), conf)
-    root = jvm.org.apache.hadoop.fs.Path(store_path)
-    parts = [
-        s.getPath().getName()
-        for s in fs.listStatus(root)
-        if s.isDirectory() and s.getPath().getName().startswith("batch_id=")
-    ]
-    to_fold = [p for p in parts if p != "batch_id=-1"]
-    if not to_fold:
-        return 0
-    df = spark.read.parquet(store_path).drop("batch_id")
-    folded = df.groupBy(*key_cols).agg(
-        SF.sum(count_col).cast("long").alias(count_col)
-    )
-    folded.write.mode("overwrite").parquet(f"{store_path}/__baseline_tmp")
-    merged = spark.read.parquet(f"{store_path}/__baseline_tmp")
-    merged.write.mode("overwrite").parquet(f"{store_path}/batch_id=-1")
-    for p in parts:
-        if p != "batch_id=-1":
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/{p}"), True)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/__baseline_tmp"), True)
-    return len(to_fold)
-
-
-def run_incremental_hamming(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    *,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    code_col: str = "simhash60",
-    bits: int = 60,
-    max_dist: int = 3,
-):
-    """Streaming Hamming near-dup RETRIEVAL over a stream of bit
-    fingerprints (SimHash, perceptual image hashes): the pigeonhole-banded
-    analogue of run_incremental_neardup.  Per micro-batch, each new code's
-    ``max_dist + 1`` disjoint bands are checked against BOTH the accreted
-    band index and the batch itself; collisions are verified with an exact
-    popcount and emitted normalized (id_a < id_b), so the accumulated
-    output across batches is EXACTLY the unordered pair set of the batch
-    ``hamming_join`` -- and because md5-SimHash codes are engine-
-    replayable, the streaming result carries a FULL DuckDB hash oracle
-    (unlike the xxhash minhash twin's rows-only check).
-
-    Store layout (batch-keyed for idempotent retries, the
-    run_incremental_dedup discipline): {store_path}/bands/batch_id=N holds
-    (id, code, bi, bv); a retry excludes its own failed partition, and the
-    per-batch output overwrite makes replays emit identical pairs.  Scale
-    shape: the per-batch cost is band-collision-driven, not store-size-
-    driven -- the equi-join on (bi, bv) touches only colliding buckets of
-    a store a real deployment compacts (compact_incremental_store).
-
-    Re-delivery safety: an id delivered again in a LATER batch (at-least-
-    once sources) never self-pairs (the store-side branch filters
-    id_a != id_b) and never re-emits pairs already reported -- each batch
-    anti-joins its candidate pairs against the accumulated output
-    (excluding its own partition, so a retried batch still re-emits its
-    identical rows).  The anti-join's right side is pre-pruned to prior
-    pairs that TOUCH a batch id (every candidate pair has at least one
-    batch-side endpoint), so the suppression cost is batch-driven, not
-    output-lifetime-driven.  Ids are assumed to identify a STABLE code;
-    an id re-delivered with a different code keeps its first-reported
-    pairs.
-
-    Store compatibility: the (bi, bv) values are produced by
-    ``hamming_bands``, whose band layout changed in r8 to balanced widths
-    when ``bits % (max_dist + 1) != 0``.  A band store persisted by
-    pre-r8 code will NOT match post-r8 bands (missed cross-batch pairs,
-    silently); rebuild or recompute the store after upgrading --
-    re-running the stream from its source, or regenerating
-    {store_path}/bands from the stored (id, code) columns via
-    hamming_bands, restores consistency."""
-    from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.operators.dedup import hamming_bands
-
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # pin the band layout (the docstring's pre-r8 compatibility note,
-        # made structural): bits/max_dist determine band widths, and a
-        # mismatched resume silently misses cross-batch pairs
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
-        ensure_store_config(
-            spark, store_path,
-            {"family": "hamming", "code_col": code_col, "bits": bits,
-             "max_dist": max_dist, "bands_layout": "balanced-r8"},
-        )
-        bands = hamming_bands(
-            batch_df.select(id_col, code_col),
-            id_col=id_col,
-            code_col=code_col,
-            bits=bits,
-            max_dist=max_dist,
-        ).persist()
-        new_side = bands.select(
-            "bi", "bv", SF.col(id_col).alias("id_b"), SF.col(code_col).alias("__cb")
-        )
-        cands = []
-        if _path_exists(spark, f"{store_path}/bands"):
-            old_b = (
-                spark.read.parquet(f"{store_path}/bands")
-                .where(SF.col("batch_id") != SF.lit(batch_id))
-                .select(
-                    "bi", "bv", SF.col(id_col).alias("id_a"), SF.col(code_col).alias("__ca")
-                )
-            )
-            cands.append(
-                new_side.join(old_b, ["bi", "bv"])
-                # an id re-delivered in a later batch is in BOTH sides of
-                # this join -- never pair it with itself
-                .where(SF.col("id_a") != SF.col("id_b"))
-                .select("id_a", "__ca", "id_b", "__cb")
-            )
-        batch_left = bands.select(
-            "bi", "bv", SF.col(id_col).alias("id_a"), SF.col(code_col).alias("__ca")
-        )
-        cands.append(
-            batch_left.join(new_side, ["bi", "bv"])
-            .where(SF.col("id_a") < SF.col("id_b"))
-            .select("id_a", "__ca", "id_b", "__cb")
-        )
-        cand = cands[0]
-        for c in cands[1:]:
-            cand = cand.unionByName(c)
-        pairs = (
-            cand.withColumn("dist", SF.expr("bit_count(__ca ^ __cb)"))
-            .where(SF.col("dist") <= max_dist)
-            .select(
-                SF.least("id_a", "id_b").alias("id_a"),
-                SF.greatest("id_a", "id_b").alias("id_b"),
-                SF.col("dist").cast("int").alias("dist"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-        if _path_exists(spark, out_path):
-            # re-delivered ids regenerate pairs already reported by earlier
-            # batches; suppress them so the accumulated output stays the
-            # unordered pair SET (own partition excluded -- a retried batch
-            # must still re-emit its identical rows).  Every candidate pair
-            # has >= 1 batch-side endpoint, so prior pairs touching NO
-            # batch id can never match -- semi-join-prune them first to
-            # keep the suppression cost batch-driven, not proportional to
-            # the stream's lifetime output (duplicate rows from the
-            # id_a/id_b union are harmless on an anti-join's right side)
-            batch_ids = SF.broadcast(
-                bands.select(SF.col(id_col)).distinct()
-            )
-            prior = (
-                spark.read.parquet(out_path)
-                .where(SF.col("batch_id") != SF.lit(batch_id))
-                .select("id_a", "id_b")
-            )
-            touching = prior.join(
-                batch_ids.withColumnRenamed(id_col, "id_a"), "id_a", "left_semi"
-            ).unionByName(
-                prior.join(
-                    batch_ids.withColumnRenamed(id_col, "id_b"), "id_b", "left_semi"
-                )
-            )
-            pairs = pairs.join(touching, ["id_a", "id_b"], "left_anti")
-        _parallel_sink_writes(
-            lambda: pairs.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: bands.write.mode("overwrite").parquet(
-                f"{store_path}/bands/batch_id={batch_id}"
-            ),
-        )
-        bands.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def run_incremental_spans(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    *,
-    checkpoint: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_tokens: int = 8,
-    min_count: int = 2,
-):
-    """Streaming ExactSubstr at INGEST time: per micro-batch, each arriving
-    document's stride-1 token windows (operators.text.token_windows -- the
-    SAME xxhash64 bigint anchors the batch occurrence_duplicate_spans
-    hashes, pinned in the store config as anchor=xxhash64-v1) are counted against
-    the accreted window store PLUS the batch itself, and the batch's
-    documents get their maximal duplicated spans emitted
-    (operators.text.merge_window_spans).
-
-    Semantics are deliberately ONE-SIDED -- the ingest-gate contract: a
-    new document is span-checked against everything already admitted, but
-    history is never retro-flagged when a LATER arrival creates the
-    min_count-th occurrence of one of its windows (re-scrubbing admitted
-    data is a batch maintenance job: run duplicate_spans over the store).
-    Because the gate is "count over batches <= mine", a stream fed in a
-    DETERMINISTIC batch order is exactly replayable by a batch engine --
-    the incremental_spans_stream oracle replays the two-drop split in SQL.
-
-    Store layout (the run_incremental_dedup discipline, AGGREGATED):
-    {store_path}/whc/batch_id=N holds the batch's (wh, cnt) window-hash
-    COUNTS -- never positions.  The one-sided gate makes positions from
-    history unnecessary: a window count is all the gate ever asks of
-    admitted data, so the store is distinct-wh-sized (10-100x smaller
-    than raw (id, pos, wh) rows for repetitive corpora) and compacts by
-    SUMMING counts per hash (compact_incremental_count_store -- NOT the
-    distinct-fold compact_incremental_store, which would collapse equal
-    counts and under-gate).  A retry excludes its own failed partition
-    and per-batch output overwrite makes replays idempotent.
-
-    Per-batch cost is batch-driven, provably: the store side is pruned
-    with a broadcast semi-join on the BATCH's distinct window hashes
-    BEFORE any aggregation, so the only store-proportional work is the
-    columnar scan of the wh/cnt columns (sequential IO, no shuffle); the
-    shuffle and the count fold carry colliding hashes only.  The
-    broadcast is bounded by the micro-batch's distinct windows -- size
-    triggers (maxFilesPerTrigger / maxBytesPerTrigger) bound it the same
-    way they bound the batch itself.  Re-scrubbing admitted data remains
-    a batch maintenance job over the corpus (duplicate_spans), not the
-    store.
-
-    Legacy stores: a pre-r9 {store_path}/wins raw-window store is
-    auto-migrated (counted per batch partition into whc, then deleted)
-    before the first micro-batch."""
-    from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.operators.text import (
-        merge_window_spans,
-        token_windows,
-    )
-
-    if min_tokens < 2:
-        raise ValueError(f"min_tokens must be >= 2, got {min_tokens}")
-    if min_count < 2:
-        raise ValueError(f"min_count must be >= 2, got {min_count}")
-
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-    def _migrate_legacy_wins(spark) -> None:
-        # pre-r9 layout: {store_path}/wins/batch_id=N raw (id, pos, wh)
-        # rows -- fold each batch partition into (wh, cnt) and drop it
-        if not _path_exists(spark, f"{store_path}/wins") or _path_exists(
-            spark, f"{store_path}/whc"
-        ):
-            return
-        wins = spark.read.parquet(f"{store_path}/wins")
-        (
-            wins.groupBy("batch_id", "wh")
-            .agg(SF.count(SF.lit(1)).cast("long").alias("cnt"))
-            .write.partitionBy("batch_id")
-            .mode("overwrite")
-            .parquet(f"{store_path}/whc")
-        )
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(store_path), conf
-        )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{store_path}/wins"), True)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # pin the window-hash layout: a resume with different min_tokens
-        # (or text source) puts old and new batches in incomparable
-        # window-hash spaces -- cross-batch span counts silently wrong.
-        # "anchor" pins the HASH FAMILY of the wh keys (advisor r13): the
-        # r13 md5->xxhash64 anchor change means a durable whc store written
-        # by pre-r13 code holds md5 hex strings that would join as null
-        # bigints against today's keys -- the ingest gate would silently
-        # under-count cross-batch occurrences.  With the key pinned, such a
-        # resume fails the config gate loudly instead.
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
-        ensure_store_config(
-            spark, store_path,
-            {"family": "spans", "text_col": text_col,
-             "min_tokens": min_tokens, "min_count": min_count,
-             "anchor": "xxhash64-v1"},
-        )
-        win = token_windows(
-            batch_df.select(id_col, text_col), text_col,
-            min_tokens=min_tokens, id_col=id_col,
-        ).persist()
-        batch_counts = win.groupBy("wh").agg(
-            SF.count(SF.lit(1)).cast("long").alias("cnt")
-        ).persist()
-        if _path_exists(spark, f"{store_path}/whc"):
-            # prune BEFORE counting: only store hashes that collide with
-            # this batch can affect the gate, and the batch's distinct-wh
-            # set is broadcast-bounded -- per-batch shuffle cost is
-            # collision-driven, not store-size-driven
-            store_counts = (
-                spark.read.parquet(f"{store_path}/whc")
-                .where(SF.col("batch_id") != SF.lit(batch_id))
-                .join(SF.broadcast(batch_counts.select("wh")), "wh", "left_semi")
-                .groupBy("wh")
-                .agg(SF.sum("cnt").alias("__cs"))
-            )
-            totals = batch_counts.join(store_counts, "wh", "left").select(
-                "wh",
-                (SF.col("cnt") + SF.coalesce("__cs", SF.lit(0))).alias("__c"),
-            )
-        else:
-            totals = batch_counts.select("wh", SF.col("cnt").alias("__c"))
-        dup = (
-            win.join(totals.where(SF.col("__c") >= min_count).select("wh"), "wh")
-            .select(id_col, "pos")
-        )
-        spans = merge_window_spans(dup, min_tokens=min_tokens, id_col=id_col)
-        _parallel_sink_writes(
-            lambda: spans.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: batch_counts.write.mode("overwrite").parquet(
-                f"{store_path}/whc/batch_id={batch_id}"
-            ),
-        )
-        batch_counts.unpersist()
-        win.unpersist()
-
-    _migrate_legacy_wins(stream.sparkSession)
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-def run_incremental_ivf(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    *,
-    checkpoint: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nlist: int = 8,
-    nprobe: int = 2,
-):
-    """Streaming ANN retrieval at INGEST time -- the similarity member of
-    the incremental-store suite (dedup / neardup / hamming / kmv / spans /
-    agg): per micro-batch, each arriving vector is IVF-assigned (its
-    ``nprobe`` nearest coarse lists, operators.similarity.ivf_assign's
-    exact integer distances) and exact-cosine-scored against the accreted
-    vector store restricted to those lists PLUS the batch itself; its
-    top-``k`` neighbors are emitted, and the batch's vectors join the
-    store under their single nearest list.
-
-    Semantics are ONE-SIDED and EVENT-SCOPED: an arrival's report sees
-    everything admitted up to and including its own batch, history is
-    never retro-reported when a closer neighbor arrives later, and a
-    re-delivered id gets a fresh report against the larger store (the
-    output is an arrival-time report LOG -- contrast
-    run_incremental_hamming, which maintains a deduplicated pair SET).
-    Deterministic batch order makes the accumulated log exactly
-    SQL-replayable (incremental_ivf_stream oracle: candidates gated on
-    batch <= mine, same integer quantization / tie-breaks).
-
-    Centroids are derived ONCE from the first batch (its first ``nlist``
-    vectors by id -- the ivf_topk seeding) and persisted at
-    {store_path}/centroids; every later batch loads them, so list
-    assignments stay consistent for the stream's lifetime.  Pre-seed the
-    file with trained k-means output (kmeans_quantizer) to deploy a real
-    quantizer -- the protocol only needs centroids to be FIXED, not how
-    they were produced.
-
-    Scale shape: the batch's probe rows are broadcast (batch-bounded)
-    into an equi-join on list id, so the store is scanned map-side --
-    never shuffled -- and only vectors in probed lists are scored;
-    per-batch cost is probe-driven, not store-size-driven (the
-    store_growth discipline).  Store layout is batch-keyed
-    ({store_path}/vecs/batch_id=N holding (id, ivf_list, qvec, qnorm)):
-    a retry excludes its own failed partition and per-batch output
-    overwrite makes replays idempotent; compact with
-    compact_incremental_store."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.operators.similarity import (
-        DOT,
-        ivf_assign,
-        quantized,
-    )
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not (1 <= nprobe <= nlist):
-        raise ValueError(f"need 1 <= nprobe <= nlist, got {nprobe}/{nlist}")
-
-    def _path_exists(spark, path: str) -> bool:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(path), conf)
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(path))
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # pin the index layout: the centroid table is trained by the first
-        # batch, so a mismatched nlist/vec_col on resume would assign new
-        # vectors against a differently-shaped coarse quantizer
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
-        ensure_store_config(
-            spark, store_path,
-            {"family": "ivf", "vec_col": vec_col, "nlist": nlist},
-        )
-        q = (
-            quantized(batch_df.select(id_col, vec_col), vec_col)
-            .select(id_col, "qvec", "qnorm")
-            .persist()
-        )
-        cpath = f"{store_path}/centroids"
-        if _path_exists(spark, cpath):
-            cents = [
-                r.qvec for r in spark.read.parquet(cpath).orderBy("j").collect()
-            ]
-        else:
-            cents = [
-                r.qvec
-                for r in q.orderBy(id_col).limit(nlist).select("qvec").collect()
-            ]
-            from odp_dynamic_data_pipeline_spark.functions.localrel import (
-                local_relation,
-            )
-
-            local_relation(
-                spark,
-                [(j, list(c)) for j, c in enumerate(cents)],
-                "j int, qvec array<bigint>",
-            ).write.mode("overwrite").parquet(cpath)
-        cand = ivf_assign(q, cents, nprobe=1).select(
-            SF.col(id_col).alias("cand_id"), "qvec", "qnorm", "ivf_list"
-        )
-        qry = ivf_assign(q, cents, nprobe=nprobe).select(
-            SF.col(id_col).alias("qid"),
-            SF.col("qvec").alias("q_qvec"),
-            SF.col("qnorm").alias("q_qnorm"),
-            SF.explode("ivf_list").alias("ivf_list"),
-        )
-        sides = cand
-        if _path_exists(spark, f"{store_path}/vecs"):
-            old = (
-                spark.read.parquet(f"{store_path}/vecs")
-                .where(SF.col("batch_id") != SF.lit(batch_id))
-                .select(
-                    SF.col(id_col).alias("cand_id"), "qvec", "qnorm", "ivf_list"
-                )
-            )
-            sides = sides.unionByName(old)
-        pairs = sides.join(SF.broadcast(qry), "ivf_list").where(
-            SF.col("cand_id") != SF.col("qid")
-        )
-        dot = SF.expr(DOT.format(a="q_qvec", b="qvec"))
-        cosine = dot.cast("double") / SF.sqrt(
-            SF.col("q_qnorm").cast("double") * SF.col("qnorm").cast("double")
-        )
-        scored = pairs.select(
-            "qid", "cand_id", cosine.alias("cosine")
-        ).dropDuplicates(["qid", "cand_id"])
-        w = Window.partitionBy("qid").orderBy(SF.col("cosine").desc(), "cand_id")
-        topk = (
-            scored.withColumn("rank", SF.row_number().over(w))
-            .where(SF.col("rank") <= k)
-            .select("qid", "cand_id", "rank", "cosine")
-        )
-        _parallel_sink_writes(
-            lambda: topk.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-            lambda: cand.select(
-                SF.col("cand_id").alias(id_col), "ivf_list", "qvec", "qnorm"
-            ).write.mode("overwrite").parquet(
-                f"{store_path}/vecs/batch_id={batch_id}"
-            ),
-        )
-        q.unpersist()
-
-    q_ = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q_.awaitTermination()
-    return q_
-
-
-def run_incremental_kmv(
-    stream: DataFrame,
-    store_path: str,
-    out_path: str,
-    *,
-    checkpoint: str,
-    col: str,
-    k: int = 64,
-    group_cols: list[str] | None = None,
-):
-    """Streaming distinct-count tracking via the KMV sketch
-    (operators.text.kmv_sketch): per micro-batch, sketch the batch, fold
-    it into the accreted batch-keyed min-hash store, and emit the MERGED
-    per-group sketch + estimate -- an evolving distinct-cardinality time
-    series over an unbounded stream with O(k) state per group instead of
-    O(distinct values).
-
-    KMV is ORDER-INDEPENDENT (the k smallest hashes of a union do not
-    care how the union arrived), so the final batch's emitted sketch
-    EQUALS the one-shot batch kmv_sketch over all data -- which is why
-    the streaming twin (incremental_kmv_stream) carries a full hash
-    oracle on the estimate itself, not a tolerance boolean.
-
-    Per-batch cost is FLAT in stream lifetime: each batch folds its own
-    sketch against the PREVIOUS batch's emitted sketch (k rows per group
-    -- itself the merge of everything before it, by KMV mergeability:
-    the k smallest of top-k(A) union B is the k smallest of A union B,
-    property-tested), never against the accreted store.  O(batch +
-    k * groups) work per batch regardless of how many batches came
-    before.  Idempotent under retries: batch N deterministically reads
-    the newest emission with id < N, so a replay rebuilds the identical
-    partition.
-
-    Store layout (the run_incremental_dedup discipline):
-    {store_path}/mins/batch_id=N still records the batch's per-group
-    k-smallest distinct hashes -- a rebuildable audit trail (lets an
-    operator re-derive any prefix's sketch, or recover if out_path is
-    lost) that the hot path never re-reads; growth is bounded by k rows
-    per group per batch and compacts with compact_incremental_store."""
-    from pyspark.sql import functions as SF
-
-    from odp_dynamic_data_pipeline_spark.operators.text import kmv_merge, kmv_sketch
-
-    groups = group_cols or []
-
-    def _latest_prior_out(spark, current_id: int):
-        """Newest emitted partition with batch_id < current (None if no
-        prior emission): the accreted state, k rows per group."""
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(out_path), conf
-        )
-        root = jvm.org.apache.hadoop.fs.Path(out_path)
-        if not fs.exists(root):
-            return None
-        ids = []
-        for s in fs.listStatus(root):
-            name = s.getPath().getName()
-            if s.isDirectory() and name.startswith("batch_id="):
-                try:
-                    bid = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if bid < current_id:
-                    ids.append(bid)
-        if not ids:
-            return None
-        return spark.read.parquet(f"{out_path}/batch_id={max(ids)}")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # pin the sketch shape: merging sketches built with a different k
-        # or source column yields silently wrong distinct estimates
-        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-            ensure_store_config,
-        )
-
-        ensure_store_config(
-            spark, store_path,
-            {"family": "kmv", "col": col, "k": k, "group_cols": groups},
-        )
-        batch_sk = kmv_sketch(batch_df, col, k=k, group_cols=groups).persist()
-        rows = batch_sk.select(*groups, SF.explode("sketch").alias("h"))
-        prev = _latest_prior_out(spark, batch_id)
-        if prev is not None:
-            merged = kmv_merge(
-                prev.select(*groups, "sketch").unionByName(
-                    batch_sk.select(*groups, "sketch")
-                ),
-                k=k,
-                group_cols=groups,
-            )
-        else:
-            merged = batch_sk.select(*groups, "sketch", "n_sketch", "est_distinct")
-        # audit-trail mins + merged emission share the persisted batch
-        # sketch and write to disjoint batch-keyed paths -- overlap them
-        _parallel_sink_writes(
-            lambda: rows.write.mode("overwrite").parquet(
-                f"{store_path}/mins/batch_id={batch_id}"
-            ),
-            lambda: merged.write.mode("overwrite").parquet(
-                f"{out_path}/batch_id={batch_id}"
-            ),
-        )
-        batch_sk.unpersist()
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
     q.awaitTermination()
     return q
 
@@ -2525,7 +1073,7 @@ def expire_upsert_tombstones(
     (the commit path cannot write an empty partition -- and an unmapped
     bucket reads as absent, which is exactly right).  One atomic
     manifest flip, same reader guarantees as every fold; run it BETWEEN
-    streaming lifecycles like compact_incremental_store.  Returns the
+    streaming lifecycles like compact_incremental_cc.  Returns the
     number of tombstones expired."""
     from pyspark.sql import functions as SF
 
@@ -3037,13 +1585,3 @@ def maybe_compact_incremental_cc(
     return compact_incremental_cc(spark, store_path, n_buckets=n_buckets)
 
 
-def vacuum_incremental_kv(spark, store_path: str) -> list[str]:
-    """Retention for the bucketed delta-merge stores written by
-    run_incremental_sessions / run_incremental_upsert (the 6-line
-    manifest family).  Delegates to kvstore.ManifestStore.vacuum -- see
-    its docstring for the retention set (current + parent pointers +
-    every version still owning a bucket in either map) and the
-    never-strand-a-reader argument.  Returns the deleted version names."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    return ManifestStore(spark, store_path, n_extras=2).vacuum()

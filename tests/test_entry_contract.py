@@ -30,11 +30,10 @@ def test_queries_cover_registry_exactly_once():
     o = e.oracle_sql()
     assert set(o) == set(ORACLE_SQL)
     assert set(o) <= set(q)
-    # r11: the rows-only set is EMPTY -- the last three members (the
-    # xxhash64 perf paths dedup_minhash_lsh, dedup_simhash,
-    # incremental_neardup_stream) gained full DuckDB oracles via the
-    # generated XXH64 SQL replay (queries/xxh64_sql.py).  Every
-    # registered query now carries a hash-exact oracle.
+    # the rows-only set is EMPTY: the xxhash64 perf paths
+    # (dedup_minhash_lsh, dedup_simhash) carry full DuckDB oracles via
+    # the generated XXH64 SQL replay (queries/xxh64_sql.py).  Every
+    # registered query carries a hash-exact oracle.
     assert set(q) - set(o) == set()
     # the store-maintenance gates (threshold-0 compaction; double expiry
     # + replay) and their default-cadence twins

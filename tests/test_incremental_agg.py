@@ -132,7 +132,7 @@ def test_incremental_agg_retry_never_rewrites_live_version(spark, tmp_path):
 def test_incremental_agg_vacuum(spark, tmp_path):
     """Vacuum keeps only the manifest's current version and its parent;
     everything older is deleted and the store still reads correctly."""
-    from odp_dynamic_data_pipeline_spark.streaming.stream import vacuum_incremental_agg
+    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     d = tmp_path / "vac_in"
     d.mkdir()
@@ -152,7 +152,7 @@ def test_incremental_agg_vacuum(spark, tmp_path):
     )
     versions_before = sorted(p for p in os.listdir(store) if p.startswith("v"))
     assert len(versions_before) == 3  # one per micro-batch
-    deleted = vacuum_incremental_agg(spark, store)
+    deleted = ManifestStore(spark, store).vacuum()
     assert sorted(deleted) == ["v0"]  # keep current v2 + parent v1
     got = {r["user"]: (r["n"], r["sum_amt"]) for r in read_incremental_agg(spark, store).collect()}
     assert got == {"a": (3, 3.0)}
@@ -309,7 +309,7 @@ def test_bucketed_post_flip_retry_no_double_count(spark, tmp_path):
 
 
 def test_bucketed_vacuum_keeps_mapped_versions(spark, tmp_path):
-    from odp_dynamic_data_pipeline_spark.streaming.stream import vacuum_incremental_agg
+    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
 
     d = tmp_path / "vc_in"
     d.mkdir()
@@ -325,7 +325,7 @@ def test_bucketed_vacuum_keeps_mapped_versions(spark, tmp_path):
     run_incremental_agg(
         stream, store, checkpoint=ck, key_cols=["user"], sum_col="amt", n_buckets=64
     )
-    deleted = vacuum_incremental_agg(spark, store)
+    deleted = ManifestStore(spark, store).vacuum()
     assert deleted == []  # every version still owns a mapped bucket
     got = {
         r["user"]: r["n"]

@@ -139,10 +139,10 @@ def test_empty_batch_is_noop(spark, tmp_path):
 
 
 def test_vacuum_keeps_readable_store(spark, tmp_path):
+    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
     from odp_dynamic_data_pipeline_spark.streaming.stream import (
         apply_incremental_sessions_batch,
         read_incremental_sessions,
-        vacuum_incremental_kv,
     )
 
     tmp = str(tmp_path)
@@ -154,7 +154,7 @@ def test_vacuum_keeps_readable_store(spark, tmp_path):
             group_col="user_id", ts_col="ts", gap_s=GAP_S, cap_s=CAP_S, n_buckets=8,
         )
     before = {tuple(r) for r in read_incremental_sessions(spark, store, out).collect()}
-    deleted = vacuum_incremental_kv(spark, store)
+    deleted = ManifestStore(spark, store, n_extras=2).vacuum()
     # 4 batches wrote 4 versions; current + every map-referenced version
     # must survive, the rest go
     after = {tuple(r) for r in read_incremental_sessions(spark, store, out).collect()}

@@ -1,7 +1,7 @@
-"""kmv_sketch / kmv_merge (k-minimum-values distinct sketch): merge
-algebra (shard sketches fold to the global sketch exactly), exact-below-k
-behavior, estimate accuracy, determinism; cross_duplicate_spans
-(span-level decontamination) crafted-doc semantics."""
+"""kmv_sketch (k-minimum-values distinct sketch): exact-below-k
+behavior, estimate accuracy, determinism, the two-level ungrouped path;
+kmv_overlap set algebra; cross_duplicate_spans (span-level
+decontamination) crafted-doc semantics."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators.text import (
     cross_duplicate_spans,
-    kmv_merge,
     kmv_sketch,
 )
 
@@ -35,19 +34,6 @@ def test_estimate_within_tolerance_above_k(spark):
     r = kmv_sketch(df, "v", k=64).collect()[0]
     assert r.n_sketch == 64
     assert abs(r.est_distinct - 5000) <= 1250, r.est_distinct
-
-
-def test_merge_of_shard_sketches_equals_global(spark):
-    # the mergeability contract: sketch(A union B) == merge(sketch(A),
-    # sketch(B)) EXACTLY (k smallest of the union = k smallest of the
-    # concatenated k-smallest lists), including overlapping shards
-    whole = _ids(spark, 3000)
-    s_global = kmv_sketch(whole, "v", k=32).collect()[0]
-    shard_a = kmv_sketch(_ids(spark, 2000), "v", k=32)  # ids 0..1999
-    shard_b = kmv_sketch(_ids(spark, 2000, offset=1000), "v", k=32)  # 1000..2999
-    merged = kmv_merge(shard_a.unionByName(shard_b), k=32).collect()[0]
-    assert merged.sketch == s_global.sketch
-    assert merged.est_distinct == s_global.est_distinct
 
 
 def test_grouped_sketch_and_validation(spark):
@@ -101,75 +87,6 @@ def test_cross_spans_corpus_internal_dups_ignored(spark):
 
 
 # ---------------------------------------------------------------------------
-# run_incremental_kmv (streaming twin)
-# ---------------------------------------------------------------------------
-
-
-def test_incremental_kmv_final_equals_batch(spark, tmp_path):
-    import json
-    import os
-    import time
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from odp_dynamic_data_pipeline_spark.sources.readers import read_file_stream
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_kmv
-
-    schema = StructType(
-        [StructField("g", StringType()), StructField("v", LongType())]
-    )
-    b0 = [{"g": "x", "v": i} for i in range(300)]
-    b1 = [{"g": "x", "v": i} for i in range(150, 450)] + [
-        {"g": "y", "v": i} for i in range(20)
-    ]
-    d = tmp_path / "kmv_in"
-    d.mkdir()
-    now = time.time()
-    for i, rows in enumerate([b0, b1]):
-        p = d / f"b{i}.json"
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        os.utime(p, (now - 60 + 30 * i, now - 60 + 30 * i))
-    stream = read_file_stream(
-        spark, str(d), schema, multiline=False, max_files_per_trigger=1
-    )
-    store, out = str(tmp_path / "kmv_store"), str(tmp_path / "kmv_out")
-    run_incremental_kmv(
-        stream, store, out, checkpoint=str(tmp_path / "kmv_ck"),
-        col="v", k=32, group_cols=["g"],
-    )
-    # final batch's merged sketch == one-shot batch sketch on the union
-    # (overlapping batches on purpose: order-independence must dedupe)
-    final = {
-        r.g: (r.sketch, r.n_sketch, r.est_distinct)
-        for r in spark.read.parquet(f"{out}/batch_id=1").collect()
-    }
-    union = spark.createDataFrame(
-        [(r["g"], r["v"]) for r in b0 + b1], "g string, v long"
-    )
-    want = {
-        r.g: (r.sketch, r.n_sketch, r.est_distinct)
-        for r in kmv_sketch(union, "v", k=32, group_cols=["g"]).collect()
-    }
-    assert final == want
-    assert final["y"][1] == 20 and final["y"][2] == 20  # below-k exact
-    # the evolving series: batch 0's estimate only saw batch 0
-    first = {
-        r.g: r.est_distinct
-        for r in spark.read.parquet(f"{out}/batch_id=0").collect()
-    }
-    b0_only = {
-        r.g: r.est_distinct
-        for r in kmv_sketch(
-            spark.createDataFrame([(r["g"], r["v"]) for r in b0], "g string, v long"),
-            "v", k=32, group_cols=["g"],
-        ).collect()
-    }
-    assert first == b0_only
-
-
-# ---------------------------------------------------------------------------
 # kmv_overlap (Theta-sketch set algebra)
 # ---------------------------------------------------------------------------
 
@@ -211,54 +128,6 @@ def test_overlap_validation(spark):
 
     with pytest.raises(ValueError, match="k must"):
         kmv_overlap(df, "v", "g", k=1)
-
-
-def test_incremental_kmv_store_compaction_estimate_unchanged(spark, tmp_path):
-    # folding the min-hash store into batch_id=-1 between runs must leave
-    # the merged sketch (k smallest distinct of the union) identical
-    import json as _json
-    import os as _os
-    import time as _time
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from odp_dynamic_data_pipeline_spark.sources.readers import read_file_stream
-    from odp_dynamic_data_pipeline_spark.streaming.stream import (
-        compact_incremental_store,
-        run_incremental_kmv,
-    )
-
-    schema = StructType([StructField("g", StringType()), StructField("v", LongType())])
-    d = tmp_path / "kc_in"
-    d.mkdir()
-    now = _time.time()
-
-    def _drop(name, rows, age):
-        p = d / name
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-        _os.utime(p, (now - age, now - age))
-
-    _drop("b0.json", [{"g": "x", "v": i} for i in range(200)], 60)
-    store, out, ck = (
-        str(tmp_path / "kc_store"),
-        str(tmp_path / "kc_out"),
-        str(tmp_path / "kc_ck"),
-    )
-    stream = read_file_stream(spark, str(d), schema, multiline=False)
-    run_incremental_kmv(stream, store, out, checkpoint=ck, col="v", k=32, group_cols=["g"])
-    assert compact_incremental_store(spark, f"{store}/mins") == 1
-    _drop("b1.json", [{"g": "x", "v": i} for i in range(100, 300)], 20)
-    stream2 = read_file_stream(spark, str(d), schema, multiline=False)
-    run_incremental_kmv(stream2, store, out, checkpoint=ck, col="v", k=32, group_cols=["g"])
-    batches = sorted(
-        int(p.split("=")[1]) for p in _os.listdir(out) if p.startswith("batch_id=")
-    )
-    final = spark.read.parquet(f"{out}/batch_id={batches[-1]}").collect()[0]
-    union = spark.createDataFrame([("x", i) for i in range(300)], "g string, v long")
-    want = kmv_sketch(union, "v", k=32, group_cols=["g"]).collect()[0]
-    assert final.sketch == want.sketch and final.est_distinct == want.est_distinct
 
 
 # ---------------------------------------------------------------------------
@@ -306,7 +175,5 @@ def test_k_upper_bound_validation(spark):
     df = spark.createDataFrame([("a", 1)], "g string, v long")
     with pytest.raises(ValueError, match="2048"):
         kmv_sketch(df, "v", k=4096)
-    with pytest.raises(ValueError, match="2048"):
-        kmv_merge(df.select(F.array(F.lit(1)).alias("sketch")), k=4096)
     with pytest.raises(ValueError, match="2048"):
         kmv_overlap(df, "v", "g", k=4096)

@@ -239,11 +239,11 @@ def test_expire_then_vacuum_never_strands_pre_expire_reader(spark, tmp_path):
     tombstones included) after expire + vacuum run -- expire writes a new
     version and flips, vacuum retains current + parent, and the pre-expire
     current IS the new parent."""
+    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
     from odp_dynamic_data_pipeline_spark.streaming.stream import (
         apply_incremental_upsert_batch,
         expire_upsert_tombstones,
         read_incremental_upsert,
-        vacuum_incremental_kv,
     )
 
     store = f"{tmp_path}/store"
@@ -258,7 +258,7 @@ def test_expire_then_vacuum_never_strands_pre_expire_reader(spark, tmp_path):
     assert expire_upsert_tombstones(
         spark, store, key_cols=["k"], delete_col="del", n_buckets=4
     ) == 1
-    vacuum_incremental_kv(spark, store)
+    ManifestStore(spark, store, n_extras=2).vacuum()
     got = {r["k"] for r in reader.collect()}
     assert got == {1, 2, 3}  # the old raw view, tombstone included
     assert {r["k"] for r in read_incremental_upsert(spark, store).collect()} == {2, 3}

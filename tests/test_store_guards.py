@@ -1,11 +1,11 @@
 """Guards added per the r10 advisor findings + r10 verdict item 5:
 
 1. CONFIG sidecar pinning (ensure_store_config / validate_store_config):
-   layout-determining knobs (key_cols, n_buckets, hasher family, gap/cap)
+   layout-determining knobs (key_cols, n_buckets, gap/cap)
    are caller parameters on every fold, but the layout they determine is
    fixed at store creation -- a mismatch silently rehashes keys into
    different buckets (rows invisible to touched-bucket folds, deleted
-   keys resurrecting, missed near-dup candidates).  The guard fails LOUD.
+   keys resurrecting).  The guard fails LOUD.
 2. Maintenance version namespace (v{B}m{k}): a maintenance flip that
    reused the batch/retry namespace (v{B}_r{k}) would make a later replay
    of batch B match base_for_batch's retry rule and rebuild from the
@@ -357,133 +357,3 @@ def test_cc_compaction_namespace_and_config_guard(spark, tmp_path):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1)}
 
 
-def _one_file_stream(spark, df, path):
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    return spark.readStream.schema(df.schema).parquet(path)
-
-
-def test_batch_keyed_store_families_pin_layout_knobs(spark, tmp_path):
-    """The five batch-keyed stores (dedup fingerprints, hamming bands,
-    span window-hashes, IVF vectors+centroids, KMV sketches) pin their
-    layout knobs like the manifest families: a resume with a different
-    hash/band/sketch shape must refuse loudly instead of silently mixing
-    incomparable batch directories."""
-    from odp_dynamic_data_pipeline_spark.streaming.stream import (
-        run_incremental_dedup,
-        run_incremental_hamming,
-        run_incremental_ivf,
-        run_incremental_kmv,
-        run_incremental_spans,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h i j", "alt text one"),
-         (2, "a b c d e f g h i j", "alt text two")],
-        "doc_id long, text string, text2 string",
-    )
-    codes = spark.createDataFrame([(1, 7), (2, 11)], "doc_id long, simhash60 long")
-    vecs = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
-    )
-    evs = spark.createDataFrame([("u1",), ("u2",)], "v string")
-
-    cases = [
-        ("dedup", run_incremental_dedup, docs,
-         {"text_col": "text"}, {"text_col": "text2"}),
-        ("hamming", run_incremental_hamming, codes,
-         {"bits": 60, "max_dist": 3}, {"bits": 60, "max_dist": 2}),
-        ("spans", run_incremental_spans, docs.drop("text2"),
-         {"min_tokens": 8}, {"min_tokens": 4}),
-        ("ivf", run_incremental_ivf, vecs,
-         {"nlist": 2}, {"nlist": 3}),
-        ("kmv", run_incremental_kmv, evs,
-         {"col": "v", "k": 8}, {"col": "v", "k": 4}),
-    ]
-    for name, runner, df, ok_kw, bad_kw in cases:
-        base = tmp_path / name
-        src = str(base / "in")
-        runner(
-            _one_file_stream(spark, df, src), str(base / "store"), str(base / "out"),
-            checkpoint=str(base / "ck1"), **ok_kw,
-        )
-        cfg = read_store_config(spark, str(base / "store"))
-        assert cfg and cfg["family"] == name, (name, cfg)
-        with pytest.raises(Exception, match="different layout"):
-            runner(
-                _one_file_stream(spark, df, src), str(base / "store"),
-                str(base / "out"), checkpoint=str(base / "ck2"), **bad_kw,
-            )
-
-
-def test_neardup_hasher_family_pinned(spark, tmp_path):
-    from odp_dynamic_data_pipeline_spark.streaming.stream import (
-        run_incremental_neardup,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "the quick brown fox jumps over the lazy cat")],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "in")
-    docs.write.parquet(src)
-    store, out = str(tmp_path / "store"), str(tmp_path / "out")
-
-    def _stream():
-        return spark.readStream.schema(docs.schema).parquet(src)
-
-    run_incremental_neardup(
-        _stream(), store, out, checkpoint=str(tmp_path / "ck1"), hasher="xx"
-    )
-    assert read_store_config(spark, store)["hasher"] == "xx"
-    # resuming the SAME store with the md5 family must refuse loudly
-    # (BIGINT vs md5-string bucket schemas would silently miss pairs).
-    # The ValueError is raised inside foreachBatch, so awaitTermination
-    # surfaces it wrapped in a StreamingQueryException -- match the text.
-    with pytest.raises(Exception, match="different layout"):
-        run_incremental_neardup(
-            _stream(), store, out, checkpoint=str(tmp_path / "ck2"), hasher="md5"
-        )
-
-
-def test_spans_store_pins_anchor_hash_family(spark, tmp_path):
-    """r13 moved span window anchors md5(string) -> xxhash64(bigint); a
-    durable whc store written by pre-r13 code would pass the old config
-    gate and then join md5 hex keys as null bigints, silently
-    under-counting cross-batch occurrences (advisor r13).  The config now
-    pins anchor=xxhash64-v1, so (a) new stores record it, (b) a legacy
-    sidecar WITHOUT the key refuses a resume loudly."""
-    import json
-
-    from odp_dynamic_data_pipeline_spark.streaming.stream import (
-        run_incremental_spans,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j")],
-        "doc_id long, text string",
-    )
-    base = tmp_path / "spans_anchor"
-    src = str(base / "in")
-    docs.coalesce(1).write.mode("overwrite").parquet(src)
-
-    def _stream():
-        return spark.readStream.schema(docs.schema).parquet(src)
-
-    store, out = str(base / "store"), str(base / "out")
-    run_incremental_spans(_stream(), store, out, checkpoint=str(base / "ck1"))
-    cfg = read_store_config(spark, store)
-    assert cfg["anchor"] == "xxhash64-v1", cfg
-    # simulate the legacy md5-era sidecar: same knobs, no anchor key
-    # (drop the Hadoop local-FS checksum sidecar too -- rewriting the
-    # file out-of-band would otherwise read back as a ChecksumException)
-    import os
-
-    legacy = {k: v for k, v in cfg.items() if k != "anchor"}
-    with open(f"{store}/_CONFIG", "w") as f:
-        f.write(json.dumps(legacy, sort_keys=True))
-    crc = f"{store}/._CONFIG.crc"
-    if os.path.exists(crc):
-        os.remove(crc)
-    with pytest.raises(Exception, match="different layout"):
-        run_incremental_spans(_stream(), store, out, checkpoint=str(base / "ck2"))

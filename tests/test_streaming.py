@@ -82,72 +82,41 @@ def test_stream_static_enrich(spark, stream_dir, tmp_path):
     assert rows == {"e1": "sess-1", "e2": None, "e3": "sess-3", "e4": None}
 
 
-def test_stateful_pairing_tws(spark, stream_dir, tmp_path):
-    """Same W2 register semantics on the Spark 4 transformWithStateInPandas
-    API: the ValueState register must survive micro-batch boundaries.
-
-    Skipped where protobuf is unavailable: the transformWithState worker
-    protocol needs google.protobuf (this container ships a broken stub);
-    the applyInPandasWithState twin covers the semantics everywhere."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithStateInPandas worker protocol requires protobuf",
-    )
-    from odp_dynamic_data_pipeline_spark.streaming import pair_page_views_tws
-
-    stream = with_event_time(read_file_stream(spark, stream_dir, USER_EXP_SCHEMA, multiline=False))
-    paired = pair_page_views_tws(stream)
-    run_available_now(paired, query_name="paired_tws", checkpoint=str(tmp_path / "ck_tws"))
-    rows = spark.sql("select * from paired_tws").collect()
-    got = {r["clientId"]: r["page_view_duration"] for r in rows}
-    assert got["cA"] == 120.0
-    assert got["cB"] == 4800.0
-
-
 # ---------------------------------------------------------------------------
-# tws processor equivalence without the protobuf worker protocol
+# the register walk across micro-batches, driven without a state store
 # ---------------------------------------------------------------------------
 
-class _StubValueState:
-    """Minimal stand-in for pyspark's ValueState proxy (get/update/clear)."""
 
-    def __init__(self):
-        self.v = None
-
-    def get(self):
-        return self.v
-
-    def update(self, t):
-        self.v = tuple(t)
-
-    def clear(self):
-        self.v = None
-
-
-class _StubHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _StubValueState())
-
-
-def _drive_tws_processor(chunks_per_batch, key, **kw):
-    """Feed micro-batches (list of pandas chunk-lists) through the exact
-    _PairProcessor class pair_page_views_tws ships to the cluster, using a
-    stub handle in place of the protobuf-spoken state store."""
+def _drive_walk(chunks_per_batch, key):
+    """Feed micro-batches (list of pandas chunk-lists) through
+    ``_walk_group_batch`` the way pair_page_views_stream's state function
+    does: concat a batch's chunks, start from the carried register (int64
+    min when none), carry the returned register into the next batch.
+    Durations come out as exact integer microseconds (``dur_us``)."""
+    import numpy as np
     import pandas as pd
 
-    from odp_dynamic_data_pipeline_spark.streaming import make_pair_processor
+    from odp_dynamic_data_pipeline_spark.streaming.stream import _walk_group_batch
 
-    processor, _schema = make_pair_processor(**kw)
-    processor.init(_StubHandle())
+    register = None
     outs = []
     for chunks in chunks_per_batch:
-        outs.extend(processor.handleInputRows((key,), iter(chunks), None))
-    processor.close()
-    out = pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
-    return out
+        pdf = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+        out, register = _walk_group_batch(
+            pdf,
+            np.iinfo(np.int64).min if register is None else register,
+            sort_cols=["event_time"],
+            ts_col="event_time",
+            type_col="eventType",
+            start_type="page_view_start",
+            end_type="page_view_end",
+            group_col="clientId",
+            key0=key,
+            dur_name="dur_us",
+            exact_us=True,
+        )
+        outs.append(out)
+    return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
 
 
 def _ref_register_walk(events):
@@ -182,14 +151,10 @@ def _ref_register_walk_batched(batches):
     return out
 
 
-def test_tws_processor_matches_sequential_oracle():
-    """The vectorized tws register walk == a row-at-a-time reference walk,
+def test_walk_matches_sequential_oracle():
+    """The vectorized register walk == a row-at-a-time reference walk,
     across many random in-contract (event-time ordered across batches)
-    micro-batch splits, including chunked delivery within one batch.
-
-    This is the no-protobuf verification of pair_page_views_tws's logic:
-    the class under test is byte-for-byte the one transformWithStateInPandas
-    would ship; only the state-store transport is stubbed."""
+    micro-batch splits, including chunked delivery within one batch."""
     import random
 
     import numpy as np
@@ -228,7 +193,7 @@ def test_tws_processor_matches_sequential_oracle():
                 batches.append([pdf.iloc[:mid], pdf.iloc[mid:]])
             else:
                 batches.append([pdf])
-        got = _drive_tws_processor(batches, "c1", duration_unit="us")
+        got = _drive_walk(batches, "c1")
         got_pairs = (
             sorted(
                 zip(
@@ -267,7 +232,7 @@ def _batches_to_pdfs(batches_events, rng):
     return batches
 
 
-def test_tws_processor_late_end_after_carried_start():
+def test_walk_late_end_after_carried_start():
     """OUT-of-contract cross-batch disorder: batch 2 carries events OLDER
     than the register carried from batch 1.  The sequential register walk
     consumes the register on the FIRST late end (one pair, negative
@@ -294,9 +259,7 @@ def test_tws_processor_late_end_after_carried_start():
     ]
     for i, batches_events in enumerate(cases):
         expected = _ref_register_walk_batched(batches_events)
-        got = _drive_tws_processor(
-            _batches_to_pdfs(batches_events, rng), "c1", duration_unit="us"
-        )
+        got = _drive_walk(_batches_to_pdfs(batches_events, rng), "c1")
         got_pairs = (
             sorted(
                 zip(
@@ -310,7 +273,7 @@ def test_tws_processor_late_end_after_carried_start():
         assert got_pairs == sorted(expected), f"case {i} diverged"
 
 
-def test_tws_processor_random_cross_batch_disorder():
+def test_walk_random_cross_batch_disorder():
     """Randomized batched-oracle equivalence where batches are NOT
     event-time ordered relative to each other (each batch drawn from an
     overlapping time range) — the general disorder the out-of-contract
@@ -329,12 +292,8 @@ def test_tws_processor_random_cross_batch_disorder():
                 [(t * 1_000_000, rng.choice(types)) for t in sorted(ts)]
             )
         expected = _ref_register_walk_batched(batches_events)
-        got = _drive_tws_processor(
-            _batches_to_pdfs(
-                [b for b in batches_events if b], rng
-            ),
-            "c1",
-            duration_unit="us",
+        got = _drive_walk(
+            _batches_to_pdfs([b for b in batches_events if b], rng), "c1"
         )
         got_pairs = (
             sorted(
@@ -347,41 +306,3 @@ def test_tws_processor_random_cross_batch_disorder():
             else []
         )
         assert got_pairs == sorted(expected), f"trial {trial} diverged"
-
-
-def test_tws_processor_matches_streaming_twin(spark, stream_dir, tmp_path):
-    """Stub-driven tws processor output == the applyInPandasWithState twin's
-    REAL streaming output on the same two-file fixture (register surviving a
-    micro-batch boundary for cB)."""
-    import pandas as pd
-
-    stream = with_event_time(read_file_stream(spark, stream_dir, USER_EXP_SCHEMA, multiline=False))
-    paired = pair_page_views_stream(stream)
-    run_available_now(paired, query_name="paired_eq", checkpoint=str(tmp_path / "ck_eq"))
-    twin = {
-        r["clientId"]: r["page_view_duration"]
-        for r in spark.sql("select * from paired_eq").collect()
-    }
-
-    got = {}
-    for client in ("cA", "cB"):
-        batches = []
-        for lo, hi in ((0, 2), (2, 4)):
-            rows = [e for e in EVENTS[lo:hi] if e["clientId"] == client]
-            if not rows:
-                continue
-            batches.append(
-                [
-                    pd.DataFrame(
-                        {
-                            "clientId": client,
-                            "event_time": pd.to_datetime([r["timestamp"] for r in rows]),
-                            "eventType": [r["eventType"] for r in rows],
-                        }
-                    )
-                ]
-            )
-        out = _drive_tws_processor(batches, client)
-        for _, r in out.iterrows():
-            got[r["clientId"]] = r["page_view_duration"]
-    assert got == twin == {"cA": 120.0, "cB": 4800.0}

@@ -1,0 +1,72 @@
+"""Every top-level definition in ``streaming/`` is reached from non-test code.
+
+A stdlib-``ast`` scan in the style of ``test_unused_imports.py``: each
+top-level ``def`` or ``class`` in ``odp_dynamic_data_pipeline_spark/streaming/``
+must be referenced -- as a name, an attribute or an imported name -- from
+non-test code: the package (without ``streaming/__init__.py``, whose
+re-exports alone do not make a definition reachable), ``perfbench/``,
+``tools/`` and ``__spark_entry__.py``.  A definition's references to
+itself (recursion) do not count.  Code that only tests call does not
+belong in the streaming surface."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+STREAMING = ROOT / "odp_dynamic_data_pipeline_spark" / "streaming"
+
+
+def non_test_sources() -> list[pathlib.Path]:
+    files = sorted(STREAMING.parent.rglob("*.py"))
+    files = [p for p in files if p != STREAMING / "__init__.py"]
+    files += sorted((ROOT / "perfbench").rglob("*.py")) + sorted((ROOT / "tools").rglob("*.py"))
+    files.append(ROOT / "__spark_entry__.py")
+    return [p for p in files if not p.name.startswith("test_")]
+
+
+def _references(path: pathlib.Path) -> list[tuple[str, int]]:
+    out = []
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Name):
+            out.append((node.id, node.lineno))
+        elif isinstance(node, ast.Attribute):
+            out.append((node.attr, node.lineno))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            out.extend((a.name.split(".")[-1], node.lineno) for a in node.names)
+    return out
+
+
+def unreached(defining: list[pathlib.Path], sources: list[pathlib.Path]) -> list[str]:
+    refs = {p: _references(p) for p in sources}
+    out = []
+    for path in defining:
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            span = range(node.lineno, node.end_lineno + 1)
+            if not any(
+                name == node.name and not (p == path and line in span)
+                for p, rs in refs.items()
+                for name, line in rs
+            ):
+                out.append(f"{path.name}:{node.lineno} {node.name}")
+    return out
+
+
+def test_scan_flags_an_unreached_definition(tmp_path):
+    mod = tmp_path / "m.py"
+    mod.write_text(
+        "def used():\n    pass\n\n"
+        "def recursive(n):\n    return recursive(n - 1) if n else 0\n\n"
+        "class Unused:\n    pass\n"
+    )
+    caller = tmp_path / "caller.py"
+    caller.write_text("from m import used\n")
+    assert unreached([mod], [mod, caller]) == ["m.py:4 recursive", "m.py:7 Unused"]
+
+
+def test_streaming_definitions_are_reached_from_non_test_code():
+    defining = sorted(p for p in STREAMING.glob("*.py") if p.name != "__init__.py")
+    assert unreached(defining, non_test_sources()) == []

@@ -324,74 +324,6 @@ def test_python_stream_sink_survives_crash_between_sink_and_checkpoint_commit(tm
     assert verdict["tmp_left"] == 0 and verdict["n_batches"] >= 2, verdict
 
 
-def test_incremental_dedup_store_survives_checkpoint_commit_loss(spark, tmp_path):
-    """Crash-window replay for the BATCH-KEYED STORES: run the real
-    run_incremental_dedup to completion, then delete the checkpoint's
-    LAST commit marker -- byte-for-byte the on-disk state after a driver
-    crash between the foreachBatch sink writes and the checkpoint
-    commit.  The restarted query must replay that batch into the same
-    batch_id partitions (overwrite, not append): survivors, store
-    fingerprints, and totals all stay exactly-once."""
-    import glob
-    import os
-
-    from odp_dynamic_data_pipeline_spark.streaming.stream import run_incremental_dedup
-
-    base = tmp_path
-    src, store, out, ckpt = (str(base / d) for d in ("in", "store", "out", "ckpt"))
-    # duplicated texts across files so dedup work spans batches
-    docs = spark.range(0, 400).selectExpr(
-        "id AS doc_id", "concat('t', CAST(id % 100 AS STRING)) AS text"
-    )
-    docs.repartition(4).write.parquet(src)
-
-    def _run():
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        run_incremental_dedup(
-            stream, store, out, checkpoint=ckpt, text_col="text", order_col="doc_id"
-        )
-
-    _run()
-    commits = sorted(glob.glob(f"{ckpt}/commits/[0-9]*"))
-    assert len(commits) >= 3, commits
-    os.remove(commits[-1])  # the crash window: sink written, commit lost
-    # the local checksum FS shadows every log file with .N.crc; leaving it
-    # behind makes the replayed commit's atomic rename collide
-    d, n = os.path.split(commits[-1])
-    crc = os.path.join(d, f".{n}.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-
-    _run()  # restart: the engine replays the uncommitted batch
-
-    survivors = spark.read.parquet(out)
-    assert survivors.count() == 100  # one survivor per distinct text
-    assert survivors.select("fingerprint").distinct().count() == 100
-    store_fps = spark.read.parquet(store)
-    assert store_fps.select("fingerprint").distinct().count() == 100
-
-    # control: the identical pipeline with NO crash surgery must elect the
-    # IDENTICAL survivors -- proving the replay changed nothing (survivor
-    # identity depends on batch arrival order, so the control, not a
-    # global min, is the correct reference)
-    store2, out2, ckpt2 = (str(base / d) for d in ("store2", "out2", "ckpt2"))
-    stream2 = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    run_incremental_dedup(
-        stream2, store2, out2, checkpoint=ckpt2, text_col="text", order_col="doc_id"
-    )
-    control = {r["doc_id"] for r in spark.read.parquet(out2).collect()}
-    crashed = {r["doc_id"] for r in survivors.collect()}
-    assert crashed == control
-
-
 TORN_WRITE_CHILD = r"""
 import glob, json, os, sys
 sys.path.insert(0, {repo!r})

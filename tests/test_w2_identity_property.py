@@ -41,7 +41,9 @@ def tape_rows(tape, ids):
 
 def register_walk(rows):
     """The reference's register walk over (ts, event_id) order:
-    [(user_id, end_us, dur_us)] of every consumed (view, purchase) pair."""
+    [(user_id, end_us, dur_us)] of every consumed (view, purchase) pair,
+    sorted like the oracle's rows (two pairs can end in the same
+    microsecond, and the walk emits them in walk order)."""
     out = []
     by_uid = {}
     for uid, eid, typ, ts in rows:
@@ -54,7 +56,7 @@ def register_walk(rows):
             elif typ == "purchase" and last is not None:
                 out.append((uid, (ts - UNIX) // US, (ts - last) // US))
                 last = None
-    return out
+    return sorted(out)
 
 
 def tlb_metrics(rows):
@@ -107,9 +109,14 @@ def tapes(draw):
     return tape_rows(tape, ids)
 
 
+# two pairs of one user that end in the same second
+ENDS_TIED = tape_rows([(2, "view", 0), (2, "purchase", 1), (2, "view", 0), (2, "purchase", 0)], [0, 1, 2, 3])
+
+
 @settings(max_examples=200, deadline=None)
 @given(tapes())
 @example(TIED)
+@example(ENDS_TIED)
 def test_window_identity_equals_register_walk(rows):
     assert oracle(ORACLE_SQL["sessionize_exact_pandas"], rows) == register_walk(rows)
     assert oracle(TLB_ORACLE, rows) == tlb_metrics(rows)

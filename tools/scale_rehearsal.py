@@ -44,7 +44,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 # the most expensive registered queries that read ONLY documents /
 # embeddings (r6 bench ranking) -- the dedup graph family, LSH, IVF-PQ,
-# semantic dedup, exact-Jaccard join, and the streaming near-dup twin
+# semantic dedup and the exact-Jaccard join
 DEFAULT_QUERIES = [
     # semantic dedup: ONLY the scale path (k ~ sqrt(N), exponent 0.67) is
     # in the default set as of r11 -- the fixed-k=8 teaching variant
@@ -66,7 +66,6 @@ DEFAULT_QUERIES = [
     "jaccard_prefix_join",
     "link_prediction_scores",
     "dedup_minhash_lsh",
-    "incremental_neardup_stream",
     # r10: the heavy character-exact span family (14-join plans; the
     # "spans-bounded, no corpus-scale shuffle" claim carries a measurement)
     "char_exact_spans",

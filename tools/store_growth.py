@@ -1,6 +1,6 @@
-"""Store-growth rehearsal for the incremental streaming runners
-(VERDICT r8 item 4): measure per-batch wall clock at FIXED batch size
-while the accreted store grows 1x -> 30x.
+"""Store-growth rehearsal for the manifest-store folds: measure
+per-batch wall clock at FIXED batch size while the store grows
+1x -> 30x.
 
 The batch-scale rehearsal (tools/scale_rehearsal.py) grows the DATA and
 measures the whole run; this harness isolates the other axis the
@@ -8,29 +8,23 @@ measures the whole run; this harness isolates the other axis the
 long-lived stream whose store has accreted months of history must not
 pay more per arriving batch than a young one.  Protocol per family:
 
-  1. run the runner once over a small HISTORY drop (real colliding
-     rows), then rename its store/out partitions to the batch_id=-1
-     baseline (the compacted-store shape; a fresh-checkpoint timed run
-     issues batch_id=0 and must not exclude history as its own ghost);
-  2. add synthetic non-colliding FILLER feature rows at batch_id=-2,
+  1. write the store in the fold's own layout (state rows + manifest),
      scaled by m (the store-growth axis);
-  3. stream ONE fixed-size batch (AvailableNow, fresh checkpoint) and
-     time the runner end-to-end.
+  2. stream ONE fixed-size batch (AvailableNow, fresh checkpoint) and
+     time the fold end-to-end.
 
 Fixed per-batch machinery (micro-batch planning, checkpoint writes,
 parquet commit) is ~1-2 s on this container and flattens exponents
 toward 0, so the artifact records the raw per-scale times AND the
 t(max)/t(1) ratio alongside the LSQ exponent -- read the ratio, not
 just the slope.  A truly store-driven cost shows up as ratio >> 1 (the
-pre-r9 spans runner re-aggregated the whole window store every batch).
+legacy flat agg layout rewrites the whole store every batch).
 
 Usage: python tools/store_growth.py [out_json] [family ...]
-  families: dedup neardup hamming kmv spans agg_bucketed agg_legacy sessions
-            postings topk upsert
+  families: agg_bucketed agg_legacy sessions postings topk upsert
   env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALES (default "1,3,10,30")
 Merges rows keyed store_growth_<family> into SCALE_REHEARSAL.json.
 """
-
 from __future__ import annotations
 
 import json
@@ -53,30 +47,15 @@ from pyspark.sql.types import (  # noqa: E402
     TimestampType,
 )
 
-DOC_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("text", StringType())]
-)
-CODE_SCHEMA = StructType(
-    [StructField("doc_id", LongType()), StructField("simhash60", LongType())]
-)
 KV_SCHEMA = StructType(
     [StructField("g", StringType()), StructField("v", LongType())]
 )
 
 # filler rows at m=1 (the store-growth unit)
 BASE = {
-    "dedup": 200_000,
-    "neardup": 200_000,  # bucket rows; hash-table docs are BASE // 8
-    "hamming": 200_000,
-    "kmv": 50_000,
-    "spans": 200_000,
     "agg": 100_000,  # aggregate-store keys
     "sessions": 100_000,  # open-session users
 }
-
-
-def _text(tag: str, doc: int, n: int = 20) -> str:
-    return " ".join(f"{tag}{doc}x{i}" for i in range(n))
 
 
 def _write_stream_file(rows, path: str, spark, schema) -> None:
@@ -89,24 +68,6 @@ def _write_stream_file(rows, path: str, spark, schema) -> None:
     shutil.rmtree(tmp)
 
 
-def _rebase_partitions(root: str) -> None:
-    """batch_id=N -> batch_id=-1 (merge multiple N by moving files)."""
-    if not os.path.isdir(root):
-        return
-    base = f"{root}/batch_id=-1"
-    os.makedirs(base, exist_ok=True)
-    for name in sorted(os.listdir(root)):
-        if name.startswith("batch_id=") and name != "batch_id=-1":
-            src = f"{root}/{name}"
-            for i, f_ in enumerate(os.listdir(src)):
-                # skip checksum/commit metadata -- renaming a hidden
-                # .crc makes it visible and Spark trips on its footer
-                if f_.startswith((".", "_")):
-                    continue
-                shutil.move(f"{src}/{f_}", f"{base}/{name[9:]}_{i}_{f_}")
-            shutil.rmtree(src)
-
-
 def _read_stream(spark, src: str, schema):
     return (
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 10).parquet(src)
@@ -114,13 +75,10 @@ def _read_stream(spark, src: str, schema):
 
 
 class Family:
-    """One incremental runner: history setup, filler writer, timed run."""
+    """One store fold: filler writer, timed run, check."""
 
     name: str
-    schema = DOC_SCHEMA
-
-    def history_rows(self):  # small, colliding with part of the batch
-        raise NotImplementedError
+    schema: StructType
 
     def batch_rows(self):  # fixed across scales
         raise NotImplementedError
@@ -132,31 +90,16 @@ class Family:
         raise NotImplementedError
 
     def prepare_template(self, spark, root: str) -> str:
-        """History run -> rebased store/out template dir."""
+        """Empty store/out template dir; write_filler fills the store."""
         tdir = f"{root}/{self.name}/template"
-        src = f"{tdir}/in/h.parquet"
-        _write_stream_file(self.history_rows(), src, spark, self.schema)
-        self.run(
-            spark,
-            _read_stream(spark, f"{tdir}/in", self.schema),
-            f"{tdir}/store",
-            f"{tdir}/out",
-            f"{tdir}/ck",
-        )
-        shutil.rmtree(f"{tdir}/ck")
-        shutil.rmtree(f"{tdir}/in")
-        for sub in self.store_tables():
-            _rebase_partitions(f"{tdir}/store/{sub}" if sub else f"{tdir}/store")
-        _rebase_partitions(f"{tdir}/out")
+        os.makedirs(f"{tdir}/store", exist_ok=True)
+        os.makedirs(f"{tdir}/out", exist_ok=True)
         return tdir
 
-    def store_tables(self) -> list[str]:
-        return [""]
-
     def check(self, spark, rdir: str) -> None:
-        """Assert the batch actually hit history (flat-but-empty is not
-        a receipt); run once on the warm pass.  Receives the run dir
-        (store/ and out/ inside)."""
+        """Assert the batch actually folded into the grown store
+        (flat-but-empty is not a receipt); run once on the warm pass.
+        Receives the run dir (store/ and out/ inside)."""
         raise NotImplementedError
 
     def timed_run(
@@ -178,191 +121,6 @@ class Family:
         return dt
 
 
-class Dedup(Family):
-    name = "dedup"
-
-    def check(self, spark, rdir):
-        n = spark.read.parquet(f"{rdir}/out/batch_id=0").count()
-        assert n == 450, f"dedup: expected 450 survivors, got {n}"
-
-    def history_rows(self):
-        return [(i, _text("h", i)) for i in range(50)]
-
-    def batch_rows(self):
-        # 50 exact re-carries of history (dropped), 450 fresh
-        return [(1000 + i, _text("h", i)) for i in range(50)] + [
-            (2000 + i, _text("b", i)) for i in range(450)
-        ]
-
-    def run(self, spark, stream, store, out, ck):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            run_incremental_dedup,
-        )
-
-        run_incremental_dedup(stream, store, out, checkpoint=ck, order_col="doc_id")
-
-    def write_filler(self, spark, store, m):
-        spark.range(BASE["dedup"] * m).select(
-            F.md5(F.concat(F.lit("filler"), F.col("id").cast("string"))).alias(
-                "fingerprint"
-            )
-        ).write.mode("overwrite").parquet(f"{store}/batch_id=-2")
-
-
-class Neardup(Family):
-    name = "neardup"
-
-    def check(self, spark, rdir):
-        n = spark.read.parquet(f"{rdir}/out/batch_id=0").count()
-        assert n >= 30, f"neardup: expected >=30 pairs vs history, got {n}"
-
-    def history_rows(self):
-        return [(i, _text("h", i)) for i in range(30)]
-
-    def batch_rows(self):
-        # 30 near-twins of history (one token appended), 270 fresh
-        return [(1000 + i, _text("h", i) + " t0") for i in range(30)] + [
-            (2000 + i, _text("b", i)) for i in range(270)
-        ]
-
-    def run(self, spark, stream, store, out, ck):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            run_incremental_neardup,
-        )
-
-        run_incremental_neardup(stream, store, out, checkpoint=ck)
-
-    def store_tables(self):
-        return ["buckets", "hashes"]
-
-    def write_filler(self, spark, store, m):
-        n = BASE["neardup"] * m
-        spark.range(n).select(
-            (-F.col("id") - 10).alias("doc_id"),
-            F.pmod(F.col("id"), F.lit(8)).cast("int").alias("band"),
-            F.xxhash64(F.col("id"), F.lit("bkt")).alias("bucket"),
-        ).write.mode("overwrite").parquet(f"{store}/buckets/batch_id=-2")
-        spark.range(n // 8).select(
-            (-F.col("id") - 10).alias("doc_id"),
-            F.expr(
-                "transform(sequence(0, 39), j -> xxhash64(id, j))"
-            ).alias("hsh"),
-        ).write.mode("overwrite").parquet(f"{store}/hashes/batch_id=-2")
-
-
-class Hamming(Family):
-    name = "hamming"
-    schema = CODE_SCHEMA
-
-    @staticmethod
-    def _code(i: int) -> int:
-        # deterministic 60-bit codes, python-side (tiny row counts)
-        x = (i * 0x9E3779B97F4A7C15 + 0x632BE59BD9B4E019) & ((1 << 60) - 1)
-        return x
-
-    def check(self, spark, rdir):
-        n = spark.read.parquet(f"{rdir}/out/batch_id=0").count()
-        assert n >= 30, f"hamming: expected >=30 dist-0 pairs, got {n}"
-
-    def history_rows(self):
-        return [(i, self._code(i)) for i in range(30)]
-
-    def batch_rows(self):
-        # 30 exact code re-carries (dist 0 pairs), 270 fresh codes
-        return [(1000 + i, self._code(i)) for i in range(30)] + [
-            (2000 + i, self._code(10_000 + i)) for i in range(270)
-        ]
-
-    def run(self, spark, stream, store, out, ck):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            run_incremental_hamming,
-        )
-
-        run_incremental_hamming(stream, store, out, checkpoint=ck)
-
-    def store_tables(self):
-        return ["bands"]
-
-    def write_filler(self, spark, store, m):
-        spark.range(BASE["hamming"] * m).select(
-            (-F.col("id") - 10).alias("doc_id"),
-            F.pmod(F.xxhash64("id", F.lit("c")), F.lit(1 << 60)).alias("simhash60"),
-            F.pmod(F.col("id"), F.lit(4)).cast("int").alias("bi"),
-            F.pmod(F.xxhash64("id", F.lit("bv")), F.lit(1 << 15)).alias("bv"),
-        ).write.mode("overwrite").parquet(f"{store}/bands/batch_id=-2")
-
-
-class Kmv(Family):
-    name = "kmv"
-    schema = KV_SCHEMA
-
-    def check(self, spark, rdir):
-        rows = spark.read.parquet(f"{rdir}/out/batch_id=0").collect()
-        assert {r.g for r in rows} == {"x", "y"} and all(
-            r.est_distinct > 0 for r in rows
-        ), f"kmv: bad emission {rows}"
-
-    def history_rows(self):
-        return [("x", i) for i in range(500)] + [("y", i) for i in range(100)]
-
-    def batch_rows(self):
-        return [("x", i) for i in range(250, 1250)] + [("y", i) for i in range(200)]
-
-    def run(self, spark, stream, store, out, ck):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            run_incremental_kmv,
-        )
-
-        run_incremental_kmv(
-            stream, store, out, checkpoint=ck, col="v", k=64, group_cols=["g"]
-        )
-
-    def store_tables(self):
-        return ["mins"]
-
-    def write_filler(self, spark, store, m):
-        # an uncompacted audit trail: many per-batch min partitions' worth
-        # of rows (the hot path must never re-read these)
-        spark.range(BASE["kmv"] * m).select(
-            F.lit("x").alias("g"),
-            F.pmod(F.xxhash64("id", F.lit("h")), F.lit(1 << 52)).alias("h"),
-        ).write.mode("overwrite").parquet(f"{store}/mins/batch_id=-2")
-
-
-class Spans(Family):
-    name = "spans"
-
-    def check(self, spark, rdir):
-        df = spark.read.parquet(f"{rdir}/out/batch_id=0")
-        n = df.select("doc_id").distinct().count()
-        assert n == 50, f"spans: expected 50 flagged docs, got {n}"
-
-    def history_rows(self):
-        return [(i, _text("h", i)) for i in range(50)]
-
-    def batch_rows(self):
-        # 50 full re-carries of history passages (flagged spans), 450 fresh
-        return [(1000 + i, _text("h", i)) for i in range(50)] + [
-            (2000 + i, _text("b", i)) for i in range(450)
-        ]
-
-    def run(self, spark, stream, store, out, ck):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            run_incremental_spans,
-        )
-
-        run_incremental_spans(stream, store, out, checkpoint=ck, min_tokens=8)
-
-    def store_tables(self):
-        return ["whc"]
-
-    def write_filler(self, spark, store, m):
-        spark.range(BASE["spans"] * m).select(
-            F.md5(F.concat(F.lit("fwh"), F.col("id").cast("string"))).alias("wh"),
-            F.lit(1).cast("long").alias("cnt"),
-        ).write.mode("overwrite").parquet(f"{store}/whc/batch_id=-2")
-
-
 class AggBucketed(Family):
     """run_incremental_agg with the r9 bucketed delta-merge: the store is
     a manifest-versioned per-key aggregate over m*100k keys; the fixed
@@ -374,11 +132,6 @@ class AggBucketed(Family):
     name = "agg_bucketed"
     schema = KV_SCHEMA
     NB: int | None = 1024
-
-    def prepare_template(self, spark, root: str) -> str:
-        tdir = f"{root}/{self.name}/template"
-        os.makedirs(f"{tdir}/store", exist_ok=True)
-        return tdir
 
     def write_filler(self, spark, store, m):
         from odp_dynamic_data_pipeline_spark.streaming.stream import (
@@ -494,11 +247,6 @@ class Topk(Family):
     schema = TOPK_SCHEMA
     NB = 1024
 
-    def prepare_template(self, spark, root: str) -> str:
-        tdir = f"{root}/{self.name}/template"
-        os.makedirs(f"{tdir}/store", exist_ok=True)
-        return tdir
-
     def write_filler(self, spark, store, m):
         from odp_dynamic_data_pipeline_spark.streaming.stream import (
             apply_incremental_agg_batch,
@@ -559,11 +307,6 @@ class Upsert(Family):
     name = "upsert"
     schema = CDC_SCHEMA
     NB = 1024
-
-    def prepare_template(self, spark, root: str) -> str:
-        tdir = f"{root}/{self.name}/template"
-        os.makedirs(f"{tdir}/store", exist_ok=True)
-        return tdir
 
     def write_filler(self, spark, store, m):
         from odp_dynamic_data_pipeline_spark.streaming.stream import (
@@ -631,12 +374,6 @@ class Sessions(Family):
     schema = SESS_SCHEMA
     NB = 1024
 
-    def prepare_template(self, spark, root: str) -> str:
-        tdir = f"{root}/{self.name}/template"
-        os.makedirs(f"{tdir}/store", exist_ok=True)
-        os.makedirs(f"{tdir}/out", exist_ok=True)
-        return tdir
-
     def write_filler(self, spark, store, m):
         from odp_dynamic_data_pipeline_spark.streaming.stream import (
             _sessions_write_manifest,
@@ -700,8 +437,7 @@ class Sessions(Family):
 FAMILIES = {
     f.name: f
     for f in [
-        Dedup(), Neardup(), Hamming(), Kmv(), Spans(), AggBucketed(), AggLegacy(),
-        Sessions(), Postings(), Topk(), Upsert(),
+        AggBucketed(), AggLegacy(), Sessions(), Postings(), Topk(), Upsert(),
     ]
 }
 
@@ -742,8 +478,8 @@ def main() -> None:
             doc = {"queries": {}}
     results = doc.setdefault("queries", {})
     doc["store_growth_protocol"] = (
-        "fixed batch (500 docs / 300 codes / 1200 kv rows), store grown by m"
-        " via batch_id=-2 filler over a real history baseline at batch_id=-1;"
+        "fixed batch (50-60 rows), store grown by m via filler written in"
+        " the fold's own manifest layout;"
         " one AvailableNow micro-batch timed end-to-end per scale, fresh"
         " checkpoint each; untimed warm run at m=1 first.  Fixed micro-batch"
         " machinery ~1-2 s flattens exponents; read ratio_maxscale too."
@@ -756,7 +492,7 @@ def main() -> None:
             if fam is None:
                 print(f"{name}: unknown family", file=sys.stderr)
                 continue
-            print(f"[{name}] history template...", file=sys.stderr)
+            print(f"[{name}] template...", file=sys.stderr)
             tdir = fam.prepare_template(spark, root)
             fam.timed_run(spark, root, tdir, scales[0], "warm", verify=True)  # untimed
             ts: dict[int, float] = {}
