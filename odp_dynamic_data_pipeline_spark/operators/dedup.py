@@ -69,20 +69,6 @@ def shingles(df: DataFrame, text_col: str = "text", n: int = 3, out_col: str = "
     )
 
 
-def hashed_shingles(df: DataFrame, id_col: str, shingle_col: str = "shingles", out_col: str = "hsh") -> DataFrame:
-    """Hash each shingle string to a bigint ONCE; every later stage (minhash
-    permutations, intersect/union verification) works on the bigint array --
-    string hashing is the dominant cost and must not repeat per permutation.
-
-    The empty-doc filter tests the INPUT array, not ``size(out_col)``: a
-    pushed-down predicate on the output column inlines the hash transform
-    (and everything below it) into the scan filter, evaluating the
-    pipeline twice per row (see hashed_shingles_direct)."""
-    return df.filter(F.size(shingle_col) > 0).select(
-        F.col(id_col), F.expr(f"transform({shingle_col}, s -> xxhash64(s))").alias(out_col)
-    )
-
-
 def hashed_shingles_direct(
     df: DataFrame, id_col: str, text_col: str = "text", *, n: int = 3, out_col: str = "hsh"
 ) -> DataFrame:

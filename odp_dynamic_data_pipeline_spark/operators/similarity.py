@@ -121,10 +121,6 @@ def hard_negatives(
     )
 
 
-def _const_vec(ints) -> F.Column:
-    return F.array(*[F.lit(int(x)) for x in ints])
-
-
 def _dot_const(vec_col: str, ints) -> F.Column:
     """<vec_col, constant vector> as exact bigint arithmetic."""
     arr = ",".join(str(int(x)) for x in ints)

@@ -4,7 +4,8 @@ TLB metrics job.
 
 Usage:
     python -m odp_dynamic_data_pipeline_spark.plans PIPELINE.yaml \
-        --hour 2024111612 --var data_dir=/data --var out_dir=/out [--tlb]
+        --hour 2024111612 --var data_dir=/data --var out_dir=/out \
+        [--work-dir /work] [--tlb]
 """
 
 from __future__ import annotations
@@ -24,8 +25,8 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     ap.add_argument(
         "--work-dir", default=None,
-        help="staging + checkpoint root for streaming stages; a stable path"
-        " makes hourly re-runs incremental",
+        help="staging + checkpoint root for streaming stages, required when"
+        " a stage streams; a stable path makes hourly re-runs incremental",
     )
     args = ap.parse_args()
 

@@ -69,7 +69,9 @@ joins and expression transforms are applied to the STREAMING DataFrame
 (stream-static joins against mapping tables), an AvailableNow run drains
 everything currently available into a checkpointed parquet staging table
 (``{work_dir}/{stage}_{hour}``), and downstream batch stages plus mapping
-extraction read the staged table.  The checkpoint makes hourly re-runs
+extraction read the staged table.  A streaming stage therefore needs a
+``work_dir``: ``compile`` refuses one without it, before that stage
+drains or writes anything.  The checkpoint makes hourly re-runs
 INCREMENTAL: re-compiling the same (work_dir, hour) after new files land
 in the source directory processes only the new files and appends them to
 the staging table -- the bronze-ingest pattern, replacing the reference's
@@ -282,22 +284,18 @@ class Pipeline:
 
     def _run_stream_stage(
         self, spark: SparkSession, st: Stage, df: DataFrame, hour: str | None,
-        work_dir: str | None,
+        work_dir: str,
     ) -> DataFrame:
         """Drain a streaming stage's currently-available input into its
-        checkpointed parquet staging table and return the staged table as
-        a BATCH DataFrame (the bronze-ingest handoff: downstream stages
-        and mapping extraction are batch over the staged table).
-
-        A stable ``work_dir`` makes re-runs incremental (the file-source
-        checkpoint skips already-ingested files); without one a throwaway
-        directory is used and the run degrades to a one-shot drain."""
-        import tempfile
-
+        checkpointed parquet staging table under ``work_dir`` and return
+        the staged table as a BATCH DataFrame (the bronze-ingest handoff:
+        downstream stages and mapping extraction are batch over the staged
+        table).  The lazy outputs read that table, so it lives as long as
+        the caller keeps ``work_dir``; a stable one makes re-runs
+        incremental (the file-source checkpoint skips already-ingested
+        files)."""
         from odp_dynamic_data_pipeline_spark.streaming.stream import run_available_now
 
-        if work_dir is None:
-            work_dir = tempfile.mkdtemp(prefix=f"{self.name}_stream_")
         base = f"{work_dir}/{st.name}" + (f"_{hour}" if hour is not None else "")
         run_available_now(
             df,
@@ -329,8 +327,9 @@ class Pipeline:
         table that any engine can read; in-process (None) keeps the whole
         pipeline one fused lazy plan.
 
-        ``work_dir``: staging + checkpoint root for streaming stages; pass
-        a stable path to make hourly re-runs incremental."""
+        ``work_dir``: staging + checkpoint root for streaming stages,
+        required when a stage streams; pass a stable path to make hourly
+        re-runs incremental."""
         if not mappings_dir:
             produced = {w["name"] for st in self.stages.values() for w in st.writes}
             for st in self.stages.values():
@@ -353,13 +352,7 @@ class Pipeline:
             streaming plan.  Materialize once to parquet and read back
             (exactly what mappings_dir does for cross-job handoff)."""
             if mname not in materialized:
-                import tempfile
-
-                base = (
-                    mappings_dir
-                    or (f"{work_dir}/mappings" if work_dir else None)
-                    or tempfile.mkdtemp(prefix="pipe_maps_")
-                )
+                base = mappings_dir or f"{work_dir}/mappings"
                 dest = f"{base}/{mname}"
                 m.write.mode("overwrite").parquet(dest)
                 materialized[mname] = spark.read.parquet(dest)
@@ -368,6 +361,11 @@ class Pipeline:
         for name in self.order:
             st = self.stages[name]
             df = self._read_input(spark, st, hour, path_vars)
+            if df.isStreaming and work_dir is None:
+                raise ValueError(
+                    f"stage {st.name}: a streaming stage needs work_dir (the root"
+                    " of its staging table and checkpoint)"
+                )
             for r in st.reads:
                 m = mappings.get(r["name"])
                 if m is None and mappings_dir:

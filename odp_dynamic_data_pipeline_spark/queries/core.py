@@ -260,9 +260,11 @@ FROM events GROUP BY event_type
 def incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL materialized aggregate == batch aggregate, driver-
     verified: events replayed as multiple micro-batches folded into
-    run_incremental_agg's versioned store (manifest-flip exactly-once), the
-    final store version checked against the one-shot batch GROUP BY oracle.
-    Sums travel in exact integer cents, so equality is bitwise."""
+    run_incremental_agg's versioned bucketed store (manifest-flip
+    exactly-once), the final store read checked against the one-shot
+    batch GROUP BY oracle.  The key is event_type (5 values), so 8
+    buckets suffice.  Sums travel in exact integer cents, so equality is
+    bitwise."""
 
     from odp_dynamic_data_pipeline_spark.streaming.stream import (
         read_incremental_agg,
@@ -289,6 +291,7 @@ def incremental_agg_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=f"{tmp}/ckpt",
             key_cols=["event_type"],
             sum_col="cents",
+            n_buckets=8,
         )
     return read_incremental_agg(spark, f"{tmp}/store").select(
         "event_type", "n", F.col("sum_cents").cast("long").alias("sum_cents")
@@ -305,15 +308,15 @@ FROM events WHERE user_id IS NOT NULL GROUP BY user_id
 )
 def incremental_agg_bucketed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BUCKETED delta-merge materialized aggregate == batch aggregate,
-    driver-verified: per-USER totals (a large keyspace, the case the
-    legacy whole-rewrite store is wrong for) folded across micro-batches
-    with run_incremental_agg(n_buckets=64) -- each batch reads and
-    rewrites ONLY the key-hash buckets it touches, and the manifest's
-    bucket->version map assembles the final store across version
-    directories.  The final read is checked against the one-shot batch
-    GROUP BY oracle; integer cents make equality bitwise.  Together with
-    incremental_agg_stream (legacy path, same fold algebra) this pins
-    both store protocols against the same semantics."""
+    driver-verified: per-USER totals (a large keyspace, where a
+    whole-store rewrite per batch would be store-size-bound) folded
+    across micro-batches with run_incremental_agg(n_buckets=64) -- each
+    batch reads and rewrites ONLY the key-hash buckets it touches, and
+    the manifest's bucket->version map assembles the final store across
+    version directories.  The final read is checked against the one-shot
+    batch GROUP BY oracle; integer cents make equality bitwise.
+    incremental_agg_stream runs the same protocol over a 5-key
+    keyspace."""
 
     from odp_dynamic_data_pipeline_spark.streaming.stream import (
         read_incremental_agg,
@@ -3462,10 +3465,9 @@ def incremental_postings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(src)
     )
     with _stream_shuffle(spark):
-        # bucketed store: a real vocabulary is a LARGE keyspace (millions
-        # of terms at corpus scale), exactly the case the legacy whole-
-        # rewrite store is wrong for -- per-batch IO must be the buckets
-        # the batch's terms hash into, not the whole index
+        # a real vocabulary is a LARGE keyspace (millions of terms at
+        # corpus scale): per-batch IO must be the buckets the batch's
+        # terms hash into, not the whole index
         run_incremental_agg(
             stream,
             f"{tmp}/store",

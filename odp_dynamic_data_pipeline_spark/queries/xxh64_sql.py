@@ -376,15 +376,6 @@ def S2U(e: str) -> str:
     )
 
 
-def xxhash64_str_chain(str_exprs: list[str], seed: int = 42) -> str:
-    """``xxhash64(s1, s2, ...)`` over string SQL exprs -> signed BIGINT
-    SQL, each argument's hash seeding the next (Spark chaining)."""
-    h = f"{seed}::HUGEINT"
-    for s in str_exprs:
-        h = HASH_STR(s, h)
-    return U2S(h)
-
-
 def K1(x_signed: str) -> str:
     """``rotl31(x*P2)*P1`` -- HASH_LONG's seed-INDEPENDENT first mix,
     exposed so a fan-out of remixes of one value over many seeds (the 32

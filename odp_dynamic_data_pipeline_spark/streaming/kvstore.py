@@ -6,35 +6,35 @@ parquet (the poor-man's table format: what Delta/Iceberg do with
 file-level manifests, expressed as versioned directories plus one swap
 file):
 
-- ``run_incremental_agg`` (flat + bucketed; serves the postings / top-k
-  maintained views),
+- ``run_incremental_agg`` (serves the postings / top-k maintained
+  views),
 - ``run_incremental_sessions`` (open-session state + event-time
   high-water mark),
 - ``run_incremental_upsert`` (CDC last-wins table).
 
 The families differ ONLY in their merge function (refold counts / walk
 sessions / max-by-seq) and in what extra metadata the manifest carries;
-everything below -- manifest parse, atomic flip, fresh-version election,
-retry base resolution, bucket-path resolution, vacuum retention -- is
-identical, and lives here exactly once so a new store family inherits
-the receipts (tests/test_kvstore_matrix.py) instead of re-earning them.
-
-On-disk format (unchanged from the pre-unification implementations, so
-every existing store and oracle replays bit-identically):
+everything below -- bucket function, manifest parse, atomic flip,
+fresh-version election, retry base resolution, bucket-path resolution,
+vacuum retention -- is identical, and lives here exactly once so a new
+store family inherits the receipts (tests/test_kvstore_matrix.py)
+instead of re-earning them.  No other module reads or writes the
+on-disk format:
 
 ``{store}/MANIFEST`` -- newline-separated:
   line 1: current version directory name (``v{batch}`` or ``v{batch}_r{k}``)
   line 2: parent version directory name (``-`` if none)
-  line 3: current bucket map JSON   -- only for bucketed stores
-  line 4: parent bucket map JSON (may be ``null`` = legacy parent)
+  line 3: current bucket map JSON
+  line 4: parent bucket map JSON (``null`` if no parent)
   line 5+: extra JSON values (e.g. sessions' current/parent event-time
            high-water marks; upsert writes ``null``/``null``)
 
-``{store}/v{B}[/bucket={K}]`` -- immutable version directories.  A
+``{store}/v{B}/bucket={K}`` -- immutable version directories.  A
 version directory is written exactly once, fully, BEFORE the manifest
-flips to it; bucketed versions contain only the buckets their batch
-touched, and the manifest's bucket map (not the directory listing) is
-the source of truth for which version owns each bucket.
+flips to it; it contains only the buckets its batch touched
+(``bucket_col`` of the key), and the manifest's bucket map (not the
+directory listing) is the source of truth for which version owns each
+bucket.
 
 Crash/retry protocol (the part every family must get right, hence
 shared): a version directory is keyed by batch_id; a retry AFTER a
@@ -58,9 +58,20 @@ from __future__ import annotations
 
 import json
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+
+def bucket_col(cols: list[str], n_buckets: int) -> Column:
+    """The store bucket of a key: ``pmod(xxhash64(*cols), n_buckets)`` as
+    int.  Every bucketed store lays its rows out by this function, so a
+    change to it (or to the column order) orphans every existing store;
+    tests/test_kvstore_matrix.py pins its values."""
+    if not isinstance(n_buckets, int) or n_buckets < 1:
+        raise ValueError(f"n_buckets must be a positive int, got {n_buckets!r}")
+    return F.pmod(F.xxhash64(*cols), F.lit(n_buckets)).cast("int")
 
 
 def _fs(spark, path: str):
@@ -227,9 +238,9 @@ class Manifest:
 
     current: str
     parent: str
-    cur_map: dict | None = None
-    par_map: dict | None = None
-    extras: list = field(default_factory=list)
+    cur_map: dict
+    par_map: dict | None
+    extras: list
 
 
 @dataclass
@@ -267,11 +278,13 @@ class ManifestStore:
             extras = [reader.readLine() for _ in range(self.n_extras)]
         finally:
             stream_.close()
+        if l3 is None:
+            raise ValueError(f"{self.path}/MANIFEST carries no bucket map")
         return Manifest(
             cur,
             par,
-            json.loads(l3) if l3 else None,
-            json.loads(l4) if l4 else None,
+            json.loads(l3),
+            json.loads(l4),
             [json.loads(e) if e else None for e in extras],
         )
 
@@ -279,8 +292,8 @@ class ManifestStore:
         self,
         version: str,
         parent: str,
-        cur_map: dict | None = None,
-        par_map: dict | None = None,
+        cur_map: dict,
+        par_map: dict | None,
         extras: list | None = None,
     ) -> None:
         """Write-to-tmp then rename WITH OVERWRITE (FileContext supports
@@ -288,17 +301,11 @@ class ManifestStore:
         delete-then-rename flip would leave a window with no MANIFEST in
         which readers raise; overwrite-rename is atomic on posix and
         HDFS, so a reader always sees either the old or the new manifest
-        -- and for bucketed stores the bucket map rides the SAME file, so
-        the bucket->version mapping is exactly as atomic as the version
-        pointer.  ``par_map=None`` under a non-None ``cur_map``
-        serializes as JSON null: "the parent was a legacy whole-version
-        store", so a retry of the upgrade batch re-runs the full legacy
-        fold instead of reading an empty bucket map and dropping
-        history."""
+        -- and the bucket map rides the SAME file, so the bucket->version
+        mapping is exactly as atomic as the version pointer.
+        ``par_map=None`` (JSON ``null``) means the store has no parent."""
         jvm, conf, fs = _fs(self.spark, self.path)
-        body = f"{version}\n{parent}"
-        if cur_map is not None or extras is not None:
-            body += f"\n{json.dumps(cur_map)}\n{json.dumps(par_map)}"
+        body = f"{version}\n{parent}\n{json.dumps(cur_map)}\n{json.dumps(par_map)}"
         for e in extras or []:
             body += f"\n{json.dumps(e)}"
         tmp = jvm.org.apache.hadoop.fs.Path(f"{self.path}/MANIFEST.tmp")
@@ -407,13 +414,11 @@ class ManifestStore:
         return self.spark.read.parquet(*paths)
 
     def read_current(self) -> DataFrame:
-        """Current state: the current version directory for a legacy flat
-        store, or one multi-path read of the buckets the manifest maps."""
+        """Current state: one multi-path read of the buckets the manifest
+        maps."""
         m = self.read_manifest()
         if m is None:
             raise ValueError(f"no store at {self.path}")
-        if m.cur_map is None:
-            return self.spark.read.parquet(f"{self.path}/{m.current}")
         paths = self.bucket_paths(m.cur_map)
         if not paths:
             # a non-None but EMPTY bucket map is a legitimate state:
@@ -458,8 +463,6 @@ class ManifestStore:
         touched bucket is the natural write parallelism of a delta-merge;
         a skewed bucket is fixed by raising n_buckets (finer buckets),
         not by sharding the write."""
-        from pyspark.sql import functions as F
-
         target = self.fresh_version(batch_id)
         (
             merged.repartition(max(1, len(touched)), F.col("bucket"))
@@ -470,14 +473,6 @@ class ManifestStore:
         for k in touched:
             new_map[str(k)] = target
         self.write_manifest(target, base.parent_pointer, new_map, base.bucket_map, extras)
-        return target
-
-    def commit_flat(self, batch_id: int, merged: DataFrame, base: BatchBase) -> str:
-        """Legacy whole-version commit: write the full state as a fresh
-        version directory and flip the two-line manifest."""
-        target = self.fresh_version(batch_id)
-        merged.write.parquet(f"{self.path}/{target}")
-        self.write_manifest(target, base.parent_pointer)
         return target
 
     # -- retention --------------------------------------------------------

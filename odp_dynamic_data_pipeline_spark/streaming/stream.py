@@ -375,7 +375,7 @@ def apply_incremental_agg_batch(
     key_cols: list[str],
     count_col: str = "n",
     sum_col: str | None = None,
-    n_buckets: int | None = None,
+    n_buckets: int = 64,
 ) -> None:
     """One micro-batch fold of :func:`run_incremental_agg` -- exposed at
     module level so retry idempotency (same batch_id applied twice) is
@@ -383,7 +383,11 @@ def apply_incremental_agg_batch(
     caller can fold a backfill batch with the identical protocol."""
     from pyspark.sql import functions as SF
 
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
+    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
+        ManifestStore,
+        bucket_col,
+        ensure_store_config,
+    )
 
     spark = batch_df.sparkSession
     store = ManifestStore(spark, store_path)
@@ -395,59 +399,30 @@ def apply_incremental_agg_batch(
         *([SF.sum(f"sum_{sum_col}").alias(f"sum_{sum_col}")] if sum_col else []),
     ]
 
+    bexpr = bucket_col(key_cols, n_buckets)
     part = batch_df.groupBy(*key_cols).agg(*aggs)
     base = store.base_for_batch(batch_id)
-    if n_buckets is None:
-        if base.version is not None:
-            if base.bucket_map is not None:
-                raise ValueError(
-                    "store at %r is bucketed (manifest carries a bucket"
-                    " map); pass the same n_buckets to keep folding it"
-                    % store_path
-                )
-            prev = spark.read.parquet(f"{store_path}/{base.version}")
-            part = prev.unionByName(part).groupBy(*key_cols).agg(*refold)
-        store.commit_flat(batch_id, part, base)
-        return
-    # bucketed delta-merge: fold ONLY the buckets this batch touches
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ensure_store_config
-
-    # pin the layout knobs at first bucketed fold; a later fold with a
-    # different n_buckets/key set would silently rehash keys into other
-    # buckets (rows invisible to touched-bucket folds) -- fail loudly
+    # pin the layout knobs at first fold; a later fold with a different
+    # n_buckets/key set would silently rehash keys into other buckets
+    # (rows invisible to touched-bucket folds) -- fail loudly
     ensure_store_config(
         spark, store_path,
         {"family": "agg", "key_cols": list(key_cols), "n_buckets": n_buckets},
     )
-    bexpr = SF.pmod(SF.xxhash64(*key_cols), SF.lit(n_buckets)).cast("int")
+    # delta-merge: fold ONLY the buckets this batch touches
     part = part.withColumn("bucket", bexpr).persist()
-    if base.version is not None and base.bucket_map is None:
-        # legacy whole-version store: upgrade in place -- fold the full
-        # current version once, every bucket comes out mapped
-        prev = spark.read.parquet(f"{store_path}/{base.version}")
+    touched = [r.bucket for r in part.select("bucket").distinct().collect()]
+    prev = store.read_buckets(base.bucket_map, touched)
+    if prev is not None:
         merged = (
             prev.unionByName(part.drop("bucket"))
             .groupBy(*key_cols)
             .agg(*refold)
             .withColumn("bucket", bexpr)
-            .persist()
         )
-        touched = [r.bucket for r in merged.select("bucket").distinct().collect()]
     else:
-        touched = [r.bucket for r in part.select("bucket").distinct().collect()]
-        prev = store.read_buckets(base.bucket_map, touched)
-        if prev is not None:
-            merged = (
-                prev.unionByName(part.drop("bucket"))
-                .groupBy(*key_cols)
-                .agg(*refold)
-                .withColumn("bucket", bexpr)
-            )
-        else:
-            merged = part
+        merged = part
     store.commit_buckets(batch_id, merged, touched, base)
-    if merged is not part:
-        merged.unpersist()
     part.unpersist()
 
 
@@ -459,7 +434,7 @@ def run_incremental_agg(
     key_cols: list[str],
     count_col: str = "n",
     sum_col: str | None = None,
-    n_buckets: int | None = None,
+    n_buckets: int = 64,
 ):
     """Incremental materialized aggregate: maintain per-key (count, sum)
     totals in a parquet store, folding in each micro-batch's partial
@@ -467,30 +442,22 @@ def run_incremental_agg(
     pattern behind every "running metrics" table the reference recomputes
     from scratch hourly (src/batch_tlb.py:64-77 re-reads the whole hour).
 
-    Merge protocol: per batch, aggregate the batch (tiny), read the current
-    store, union + re-aggregate, write to a NEW versioned directory, then
-    flip a one-line manifest (same swap discipline as compact_parquet).
-    Idempotent under foreachBatch retries: the version directory is keyed
-    by batch_id, and re-running a batch rebuilds the same next version from
-    the same previous version -- the store never double-counts because the
-    manifest only ever advances to a fully written version.
-
-    ``n_buckets=None`` (legacy) rewrites the WHOLE aggregate each batch --
-    per-batch cost scales with store size; right for dashboard-sized
-    tables.  ``n_buckets=B`` switches to the BUCKETED DELTA-MERGE: keys
-    hash into B buckets, a version directory contains only the buckets
-    the batch TOUCHED (written ``bucket=K`` partitions), and the manifest
-    carries a bucket->version map (still one atomic file flip, so readers
-    always see a consistent store).  Per-batch read+write cost is then
-    proportional to the buckets the batch touches -- batch-driven for
-    large keyspaces (receipt: store_growth rehearsal row
-    ``store_growth_agg``) -- and a retry after a successful flip rebuilds
-    from the recorded PARENT map exactly as the legacy path rebuilds from
-    the parent version.  A legacy store upgrades in place: the first
-    bucketed batch folds the whole current version once and writes a
-    fully bucket-mapped store.  The poor-man's table format: what
-    Delta/Iceberg do with file-level manifests, expressed in plain
-    parquet + one swap file."""
+    Merge protocol (the BUCKETED DELTA-MERGE of kvstore.ManifestStore):
+    keys hash into ``n_buckets`` buckets; per batch, aggregate the batch
+    (tiny), read only the store buckets it TOUCHES, union + re-aggregate,
+    write them to a NEW version directory (``bucket=K`` partitions), then
+    flip the manifest, whose bucket->version map names the version that
+    owns each bucket (one atomic file flip, so readers always see a
+    consistent store).  Per-batch read+write cost is proportional to the
+    buckets the batch touches, not to the store (receipt: store_growth
+    rehearsal row ``store_growth_agg_bucketed``).  Idempotent under
+    foreachBatch retries: the version directory is keyed by batch_id, and
+    a retry after a successful flip rebuilds from the recorded PARENT map
+    -- the store never double-counts because the manifest only ever
+    advances to a fully written version.  Size ``n_buckets`` to the
+    keyspace; it is pinned in the store's ``_CONFIG`` at the first fold.
+    The poor-man's table format: what Delta/Iceberg do with file-level
+    manifests, expressed in plain parquet + one swap file."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         apply_incremental_agg_batch(
@@ -514,9 +481,8 @@ def run_incremental_agg(
 
 
 def read_incremental_agg(spark, store_path: str) -> DataFrame:
-    """Read the current state of a run_incremental_agg store: the current
-    version directory for a legacy store, or the union of per-bucket
-    paths named by the manifest's bucket map for a bucketed store (one
+    """Read the current state of a run_incremental_agg store: the union
+    of per-bucket paths named by the manifest's bucket map (one
     multi-path read -- a version directory may also hold STALE buckets
     superseded by later versions, so the map, not the directory, is the
     source of truth)."""
@@ -553,33 +519,6 @@ def run_available_now(
     q = w.start()
     q.awaitTermination()
     return q
-
-
-def _sessions_manifest(spark, store_path: str):
-    """Parse a run_incremental_sessions / run_incremental_upsert MANIFEST:
-    (current, parent, current bucket map, parent bucket map, current
-    max_ts_us, parent max_ts_us).  Returns None when the store has no
-    manifest yet.  Back-compat wrapper over kvstore.ManifestStore."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    m = ManifestStore(spark, store_path, n_extras=2).read_manifest()
-    if m is None:
-        return None
-    return (m.current, m.parent, m.cur_map, m.par_map, m.extras[0], m.extras[1])
-
-
-def _sessions_write_manifest(
-    spark, store_path: str, version: str, parent: str,
-    cur_map: dict, par_map, cur_max, par_max,
-) -> None:
-    """Atomic overwrite-rename manifest flip (kvstore.ManifestStore
-    discipline), with two extra JSON lines carrying the store's event-time
-    high-water mark (current / parent) for the chronology guard."""
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
-
-    ManifestStore(spark, store_path, n_extras=2).write_manifest(
-        version, parent, cur_map, par_map, [cur_max, par_max]
-    )
 
 
 def apply_incremental_sessions_batch(
@@ -632,9 +571,15 @@ def apply_incremental_sessions_batch(
     spark = batch_df.sparkSession
     gap_us, cap_us = gap_s * 1_000_000, cap_s * 1_000_000
 
+    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
+        ManifestStore,
+        bucket_col,
+        ensure_store_config,
+    )
+
     b = batch_df.select(group_col, ts_col)
-    bexpr0 = SF.pmod(SF.xxhash64(group_col), SF.lit(n_buckets)).cast("int")
-    part = b.withColumn("bucket", bexpr0).persist()
+    bexpr = bucket_col([group_col], n_buckets)
+    part = b.withColumn("bucket", bexpr).persist()
     # one aggregation job carries the event-time range AND the touched
     # buckets (bounded: <= n_buckets ints) -- the fold is job-latency
     # bound, and the former separate distinct-collect was a whole extra
@@ -648,11 +593,6 @@ def apply_incremental_sessions_batch(
         part.unpersist()
         return  # empty batch: state and output unchanged
     batch_min, batch_max = int(lim["mn"]), int(lim["mx"])
-
-    from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
-        ManifestStore,
-        ensure_store_config,
-    )
 
     store = ManifestStore(spark, store_path, n_extras=2)
     # pin layout + semantics knobs: an n_buckets/group_col mismatch
@@ -681,7 +621,6 @@ def apply_incremental_sessions_batch(
             " chronological drops"
         )
 
-    bexpr = bexpr0
     touched = sorted(lim["touched"])
     bucket_state = store.read_buckets(base_map, touched)
     if bucket_state is not None:
@@ -884,19 +823,13 @@ def read_incremental_sessions(spark, store_path: str, out_path: str) -> DataFram
     exactly the rows sessionize_capped produces over the same events."""
     from pyspark.sql import functions as SF
 
-    m = _sessions_manifest(spark, store_path)
-    if m is None:
-        raise ValueError(f"no session store at {store_path}")
-    paths = [f"{store_path}/{v}/bucket={k}" for k, v in sorted(m[2].items())]
-    open_s = spark.read.parquet(*paths).select(
-        "*",
-    )
+    from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore, _fs
+
+    open_s = ManifestStore(spark, store_path, n_extras=2).read_current()
     open_s = open_s.select(
         open_s.columns[0], "session_n", "n_events", "start_us", SF.col("last_us").alias("end_us")
     )
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI.create(out_path), conf)
+    jvm, _, fs = _fs(spark, out_path)
     if fs.exists(jvm.org.apache.hadoop.fs.Path(out_path)):
         closed = spark.read.parquet(f"{out_path}/batch=*")
         return closed.unionByName(open_s)
@@ -955,10 +888,11 @@ def apply_incremental_upsert_batch(
 
     from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
         ManifestStore,
+        bucket_col,
         ensure_store_config,
     )
 
-    bexpr = SF.pmod(SF.xxhash64(*key_cols), SF.lit(n_buckets)).cast("int")
+    bexpr = bucket_col(key_cols, n_buckets)
     part = latest.withColumn("bucket", bexpr).persist()
     # the touched-bucket collect doubles as the emptiness probe: one job
     # instead of the former separate isEmpty() take (r13).  Like the old
@@ -1079,6 +1013,7 @@ def expire_upsert_tombstones(
 
     from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
         ManifestStore,
+        bucket_col,
         validate_store_config,
     )
 
@@ -1095,7 +1030,7 @@ def expire_upsert_tombstones(
         spark, store_path,
         {"key_cols": list(key_cols), "n_buckets": n_buckets, "delete_col": delete_col},
     )
-    bexpr = SF.pmod(SF.xxhash64(*key_cols), SF.lit(n_buckets)).cast("int")
+    bexpr = bucket_col(key_cols, n_buckets)
     state = store.read_current().withColumn("bucket", bexpr)
     is_del = SF.coalesce(SF.col(delete_col), SF.lit(False))
     tomb = state.where(is_del).persist()
@@ -1122,7 +1057,7 @@ def expire_upsert_tombstones(
         .parquet(f"{store_path}/{target}")
     )
     keep.unpersist()
-    new_map = dict(m.cur_map or {})
+    new_map = dict(m.cur_map)
     for k in tomb_buckets:
         if k in survivor_buckets:
             new_map[str(k)] = target
@@ -1196,6 +1131,7 @@ def apply_incremental_cc_batch(
     from odp_dynamic_data_pipeline_spark.operators.dedup import connected_components
     from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
         ManifestStore,
+        bucket_col,
         ensure_store_config,
     )
 
@@ -1207,7 +1143,7 @@ def apply_incremental_cc_batch(
         .distinct()
         .persist()
     )
-    bexpr = SF.pmod(SF.xxhash64("node"), SF.lit(n_buckets)).cast("int")
+    bexpr = bucket_col(["node"], n_buckets)
     nb = nodes.withColumn("bucket", bexpr)
     # the touched-bucket collect doubles as the emptiness probe (an empty
     # batch yields no buckets): one job instead of the former separate
@@ -1507,6 +1443,7 @@ def compact_incremental_cc(spark, store_path: str, *, n_buckets: int = 64) -> in
 
     from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
         ManifestStore,
+        bucket_col,
         validate_store_config,
     )
 
@@ -1530,7 +1467,7 @@ def compact_incremental_cc(spark, store_path: str, *, n_buckets: int = 64) -> in
         [(k, v) for k, v in chain.items()],
         StructType([StructField("old_comp", ctype), StructField("new_comp", ctype)]),
     )
-    bexpr = SF.pmod(SF.xxhash64("node"), SF.lit(n_buckets)).cast("int")
+    bexpr = bucket_col(["node"], n_buckets)
     resolved = (
         state.join(SF.broadcast(cmap), state["comp"] == cmap["old_comp"], "left")
         .select("node", SF.coalesce("new_comp", "comp").alias("comp"))

@@ -46,6 +46,7 @@ def test_incremental_agg_folds_batches(spark, tmp_path):
         checkpoint=str(tmp_path / "agg_ck"),
         key_cols=["user"],
         sum_col="amt",
+        n_buckets=8,
     )
     got = {
         r["user"]: (r["n"], r["sum_amt"])
@@ -81,7 +82,9 @@ def test_incremental_agg_resume_from_checkpoint(spark, tmp_path):
         stream = read_file_stream(
             spark, str(d), SCHEMA, multiline=False, max_files_per_trigger=1
         )
-        run_incremental_agg(stream, store, checkpoint=ck, key_cols=["user"], sum_col="amt")
+        run_incremental_agg(
+            stream, store, checkpoint=ck, key_cols=["user"], sum_col="amt", n_buckets=8
+        )
 
     _run()  # first process lifetime: only b1
     got1 = {r["user"]: (r["n"], r["sum_amt"]) for r in read_incremental_agg(spark, store).collect()}
@@ -118,7 +121,7 @@ def test_incremental_agg_retry_never_rewrites_live_version(spark, tmp_path):
     )
     run_incremental_agg(
         stream, str(store), checkpoint=str(tmp_path / "retry_ck"),
-        key_cols=["user"], sum_col="amt",
+        key_cols=["user"], sum_col="amt", n_buckets=8,
     )
     got = {r["user"]: (r["n"], r["sum_amt"]) for r in read_incremental_agg(spark, str(store)).collect()}
     assert got == {"a": (1, 2.0)}
@@ -148,7 +151,8 @@ def test_incremental_agg_vacuum(spark, tmp_path):
         spark, str(d), SCHEMA, multiline=False, max_files_per_trigger=1
     )
     run_incremental_agg(
-        stream, store, checkpoint=str(tmp_path / "vac_ck"), key_cols=["user"], sum_col="amt"
+        stream, store, checkpoint=str(tmp_path / "vac_ck"), key_cols=["user"], sum_col="amt",
+        n_buckets=8,
     )
     versions_before = sorted(p for p in os.listdir(store) if p.startswith("v"))
     assert len(versions_before) == 3  # one per micro-batch
@@ -215,49 +219,23 @@ def test_bucketed_fold_and_delta_merge(spark, tmp_path):
     assert set(cur_map.values()) == set(vs)  # map mixes both versions
 
 
-def test_bucketed_legacy_store_upgrades_in_place(spark, tmp_path):
+def test_n_buckets_must_be_a_positive_int(spark, tmp_path):
+    """The store has one layout, bucketed: ``n_buckets=None`` is refused
+    before anything is written."""
     import pytest
 
-    d = tmp_path / "up_in"
-    d.mkdir()
-    now = time.time()
-    _drop(d, "b1.json", [{"user": "a", "amt": 1.0, "seq": 1},
-                         {"user": "b", "amt": 2.0, "seq": 2}], now - 90)
-    store, ck = str(tmp_path / "up_store"), str(tmp_path / "up_ck")
+    from odp_dynamic_data_pipeline_spark.streaming.stream import (
+        apply_incremental_agg_batch,
+    )
 
-    def _run(**kw):
-        stream = read_file_stream(
-            spark, str(d), SCHEMA, multiline=False, max_files_per_trigger=1
-        )
-        run_incremental_agg(
-            stream, store, checkpoint=ck, key_cols=["user"], sum_col="amt", **kw
-        )
-
-    _run()  # legacy whole-version store
-    assert len(open(os.path.join(store, "MANIFEST")).read().splitlines()) == 2
-    _drop(d, "b2.json", [{"user": "a", "amt": 5.0, "seq": 3}], now - 50)
-    _run(n_buckets=8)  # upgrade fold: every key comes out bucket-mapped
-    got = {
-        r["user"]: (r["n"], r["sum_amt"])
-        for r in read_incremental_agg(spark, store).select("user", "n", "sum_amt").collect()
-    }
-    assert got == {"a": (2, 6.0), "b": (1, 2.0)}
-    manifest = open(os.path.join(store, "MANIFEST")).read().splitlines()
-    assert len(manifest) == 4 and json.loads(manifest[3]) is None  # legacy parent
-    # next bucketed batch delta-merges (new version holds one bucket)
-    _drop(d, "b3.json", [{"user": "b", "amt": 1.0, "seq": 4}], now - 10)
-    _run(n_buckets=8)
-    got = {
-        r["user"]: (r["n"], r["sum_amt"])
-        for r in read_incremental_agg(spark, store).select("user", "n", "sum_amt").collect()
-    }
-    assert got == {"a": (2, 6.0), "b": (2, 3.0)}
-    vs = _versions(store)
-    assert len(_bucket_dirs(store, vs[-1])) == 1
-    # a legacy (n_buckets=None) fold against a bucketed store fails loudly
-    _drop(d, "b4.json", [{"user": "c", "amt": 1.0, "seq": 5}], now - 5)
-    with pytest.raises(Exception, match="bucketed"):
-        _run()
+    store = tmp_path / "nb_store"
+    df = spark.createDataFrame([("a", 1.0, 1)], "user string, amt double, seq long")
+    for bad in (None, 0):
+        with pytest.raises(ValueError, match="n_buckets"):
+            apply_incremental_agg_batch(
+                df, 0, str(store), key_cols=["user"], sum_col="amt", n_buckets=bad
+            )
+    assert not store.exists()
 
 
 def test_bucketed_post_flip_retry_no_double_count(spark, tmp_path):

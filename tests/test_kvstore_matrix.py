@@ -4,7 +4,6 @@ receipts instead of re-earning them per-module.
 
 Families under the matrix (each adapter owns only its merge semantics,
 exactly mirroring the production split):
-- agg-flat      (run_incremental_agg, n_buckets=None)
 - agg-bucketed  (run_incremental_agg, n_buckets=8 -- the postings/top-k
                  maintained-view store)
 - upsert        (run_incremental_upsert -- CDC last-wins)
@@ -22,6 +21,9 @@ Scenarios:
   directories; vacuum retained everything its manifest referenced), and
   a fresh reader sees the NEW view
 - late-batch guard (sessions only): non-chronological fold raises
+
+plus the store format itself: the manifest round trip and the bucket
+function's values for fixed keys.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ import datetime as dt
 
 import pytest
 
-from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore
+from odp_dynamic_data_pipeline_spark.streaming.kvstore import ManifestStore, bucket_col
 from odp_dynamic_data_pipeline_spark.streaming.stream import (
     apply_incremental_agg_batch,
     apply_incremental_sessions_batch,
@@ -47,8 +49,8 @@ def _ts(h):
     return T0 + dt.timedelta(hours=h)
 
 
-class AggFlat:
-    name = "agg-flat"
+class AggBucketed:
+    name = "agg-bucketed"
     n_extras = 0
     chronological = False
 
@@ -61,7 +63,9 @@ class AggFlat:
 
     def fold(self, spark, store, out, batch_id, rows):
         df = spark.createDataFrame(rows, "k string, x long")
-        apply_incremental_agg_batch(df, batch_id, store, key_cols=["k"], sum_col="x")
+        apply_incremental_agg_batch(
+            df, batch_id, store, key_cols=["k"], sum_col="x", n_buckets=8
+        )
 
     def read_df(self, spark, store, out):
         return read_incremental_agg(spark, store).select("k", "n", "sum_x")
@@ -78,16 +82,6 @@ class AggFlat:
                 n[k] += 1
                 s[k] += x
         return {(k, n[k], s[k]) for k in n}
-
-
-class AggBucketed(AggFlat):
-    name = "agg-bucketed"
-
-    def fold(self, spark, store, out, batch_id, rows):
-        df = spark.createDataFrame(rows, "k string, x long")
-        apply_incremental_agg_batch(
-            df, batch_id, store, key_cols=["k"], sum_col="x", n_buckets=8
-        )
 
 
 class Upsert:
@@ -175,7 +169,7 @@ class Sessions:
         return out
 
 
-FAMILIES = [AggFlat(), AggBucketed(), Upsert(), Sessions()]
+FAMILIES = [AggBucketed(), Upsert(), Sessions()]
 IDS = [f.name for f in FAMILIES]
 
 
@@ -270,24 +264,19 @@ def test_sessions_late_batch_guard(spark, tmp_path):
 
 
 def test_manifest_roundtrip_all_layouts(spark, tmp_path):
-    """write_manifest/read_manifest reproduce all three on-disk layouts
-    byte-compatibly: 2-line flat, 4-line bucketed, 6-line with extras."""
-    # flat (agg legacy): 2 lines
-    s0 = ManifestStore(spark, f"{tmp_path}/flat")
+    """write_manifest/read_manifest reproduce the on-disk manifest
+    byte-compatibly: 4 lines, plus one line per JSON extra."""
     import os
 
-    os.makedirs(f"{tmp_path}/flat")
-    s0.write_manifest("v3", "v2")
-    assert open(f"{tmp_path}/flat/MANIFEST").read() == "v3\nv2"
-    m = s0.read_manifest()
-    assert (m.current, m.parent, m.cur_map, m.par_map, m.extras) == ("v3", "v2", None, None, [])
-    # bucketed (agg): 4 lines, par_map null means legacy parent
+    # agg: 4 lines, par_map null means no parent
     s1 = ManifestStore(spark, f"{tmp_path}/bkt")
     os.makedirs(f"{tmp_path}/bkt")
-    s1.write_manifest("v1", "v0", {"0": "v1"}, None)
-    assert open(f"{tmp_path}/bkt/MANIFEST").read() == 'v1\nv0\n{"0": "v1"}\nnull'
+    s1.write_manifest("v0", "-", {"0": "v0"}, None)
+    assert open(f"{tmp_path}/bkt/MANIFEST").read() == 'v0\n-\n{"0": "v0"}\nnull'
     m = s1.read_manifest()
-    assert m.cur_map == {"0": "v1"} and m.par_map is None
+    assert (m.current, m.parent, m.cur_map, m.par_map, m.extras) == (
+        "v0", "-", {"0": "v0"}, None, []
+    )
     # 6-line (sessions/upsert): two JSON extras
     s2 = ManifestStore(spark, f"{tmp_path}/ext", n_extras=2)
     os.makedirs(f"{tmp_path}/ext")
@@ -295,6 +284,12 @@ def test_manifest_roundtrip_all_layouts(spark, tmp_path):
     m = s2.read_manifest()
     assert m.extras == [123, None]
     assert open(f"{tmp_path}/ext/MANIFEST").read().count("\n") == 5
+    # a manifest without a bucket map is refused, not read as an empty store
+    os.makedirs(f"{tmp_path}/flat")
+    with open(f"{tmp_path}/flat/MANIFEST", "w") as fh:
+        fh.write("v3\nv2")
+    with pytest.raises(ValueError, match="no bucket map"):
+        ManifestStore(spark, f"{tmp_path}/flat").read_manifest()
 
 
 def test_base_for_batch_retry_rule(spark, tmp_path):
@@ -324,3 +319,23 @@ def test_base_for_batch_retry_rule(spark, tmp_path):
     b = s.base_for_batch(0)
     assert (b.version, b.bucket_map, b.parent_pointer) == (None, None, "-")
     assert b.extras[0] is None
+
+
+@pytest.mark.parametrize(
+    "cols, row, want",
+    [
+        (["s"], ("user_42", 0, "", 0), {32: 3, 1024: 995}),
+        (["l"], ("", 9_007_199_254_740_993, "", 0), {32: 4, 1024: 260}),
+        (["et", "u"], ("", 0, "buy", 7), {32: 9, 1024: 809}),
+    ],
+    ids=["string", "long", "two-column"],
+)
+def test_bucket_col_values_are_pinned(spark, cols, row, want):
+    """Every existing store lays its rows out by bucket_col, so its
+    values for fixed keys must never drift (a drift orphans every stored
+    row).  The literals were computed with the inline
+    ``pmod(xxhash64(*cols), n).cast("int")`` the folds used before
+    bucket_col existed; swapping the two-column order gives 16 / 496."""
+    df = spark.createDataFrame([row], "s string, l long, et string, u long")
+    got = df.select(*[bucket_col(cols, n).alias(str(n)) for n in want]).first()
+    assert {n: got[str(n)] for n in want} == want

@@ -91,7 +91,8 @@ def pipeline_outputs(spark, data_dir, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("out"))
     pipe = load_pipeline("pipelines/observability_correlation_pipeline.yaml")
     outputs, mappings = pipe.compile(
-        spark, hour=HOUR, path_vars={"data_dir": data_dir, "out_dir": out_dir}
+        spark, hour=HOUR, path_vars={"data_dir": data_dir, "out_dir": out_dir},
+        work_dir=str(tmp_path_factory.mktemp("work")),
     )
     return outputs, mappings
 
@@ -149,10 +150,30 @@ def test_tlb_metrics_golden(spark, data_dir):
 def test_pipeline_run_writes_outputs(spark, data_dir, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("sinks"))
     pipe = load_pipeline("pipelines/observability_correlation_pipeline.yaml")
-    pipe.run(spark, hour=HOUR, path_vars={"data_dir": data_dir, "out_dir": out_dir})
+    pipe.run(
+        spark, hour=HOUR, path_vars={"data_dir": data_dir, "out_dir": out_dir},
+        work_dir=str(tmp_path_factory.mktemp("sinks_work")),
+    )
     with open(f"{out_dir}/user_exp_processed_{HOUR}") as f:
         rows = json.load(f)
     assert len(rows) == len(USER_EXP)
+
+
+def test_stream_stage_requires_work_dir(spark, data_dir, tmp_path, monkeypatch):
+    """A streaming stage stages its drain under work_dir; without one,
+    compile refuses before it drains or writes anything, rather than
+    staging into a temp dir that nothing removes."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    pipe = load_pipeline("pipelines/observability_correlation_pipeline.yaml")
+    with pytest.raises(ValueError, match="stage stage_1: .*work_dir"):
+        pipe.compile(
+            spark, hour=HOUR, path_vars={"data_dir": data_dir, "out_dir": str(tmp_path / "out")}
+        )
+    assert list(tmp.iterdir()) == []
 
 
 def test_stream_stage_incremental_rerun(spark, tmp_path):

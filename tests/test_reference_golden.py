@@ -46,7 +46,10 @@ def _multiset(rows: list[dict]) -> list[str]:
 def replay_out(spark, tmp_path_factory):
     out_dir = str(tmp_path_factory.mktemp("replay_out"))
     pipe = load_pipeline("pipelines/observability_correlation_pipeline.yaml")
-    pipe.run(spark, hour=HOUR, path_vars={"data_dir": FIXTURES, "out_dir": out_dir})
+    pipe.run(
+        spark, hour=HOUR, path_vars={"data_dir": FIXTURES, "out_dir": out_dir},
+        work_dir=str(tmp_path_factory.mktemp("replay_work")),
+    )
     return out_dir
 
 

@@ -1,13 +1,15 @@
-"""Every top-level definition in ``streaming/`` is reached from non-test code.
+"""Every definition in ``streaming/`` is reached from non-test code.
 
 A stdlib-``ast`` scan in the style of ``test_unused_imports.py``: each
-top-level ``def`` or ``class`` in ``odp_dynamic_data_pipeline_spark/streaming/``
-must be referenced -- as a name, an attribute or an imported name -- from
-non-test code: the package (without ``streaming/__init__.py``, whose
-re-exports alone do not make a definition reachable), ``perfbench/``,
-``tools/`` and ``__spark_entry__.py``.  A definition's references to
-itself (recursion) do not count.  Code that only tests call does not
-belong in the streaming surface."""
+top-level ``def`` or ``class`` in ``odp_dynamic_data_pipeline_spark/streaming/``,
+and each non-dunder method of a top-level class, must be referenced -- as
+a name, an attribute or an imported name -- from non-test code: the
+package (without ``streaming/__init__.py``, whose re-exports alone do not
+make a definition reachable), ``perfbench/``, ``tools/`` and
+``__spark_entry__.py``.  A definition's references to itself (recursion)
+do not count.  Methods are matched by name, so a method counts as reached
+when any non-test code names that attribute.  Code that only tests call
+does not belong in the streaming surface."""
 
 from __future__ import annotations
 
@@ -38,20 +40,33 @@ def _references(path: pathlib.Path) -> list[tuple[str, int]]:
     return out
 
 
+FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _definitions(tree: ast.Module):
+    """(qualified name, node) of each top-level def and class, and of each
+    non-dunder method of a top-level class."""
+    for node in tree.body:
+        if isinstance(node, (*FUNCS, ast.ClassDef)):
+            yield node.name, node
+        if isinstance(node, ast.ClassDef):
+            for m in node.body:
+                if isinstance(m, FUNCS) and not (m.name.startswith("__") and m.name.endswith("__")):
+                    yield f"{node.name}.{m.name}", m
+
+
 def unreached(defining: list[pathlib.Path], sources: list[pathlib.Path]) -> list[str]:
     refs = {p: _references(p) for p in sources}
     out = []
     for path in defining:
-        for node in ast.parse(path.read_text()).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
+        for qualname, node in _definitions(ast.parse(path.read_text())):
             span = range(node.lineno, node.end_lineno + 1)
             if not any(
                 name == node.name and not (p == path and line in span)
                 for p, rs in refs.items()
                 for name, line in rs
             ):
-                out.append(f"{path.name}:{node.lineno} {node.name}")
+                out.append(f"{path.name}:{node.lineno} {qualname}")
     return out
 
 
@@ -60,11 +75,19 @@ def test_scan_flags_an_unreached_definition(tmp_path):
     mod.write_text(
         "def used():\n    pass\n\n"
         "def recursive(n):\n    return recursive(n - 1) if n else 0\n\n"
-        "class Unused:\n    pass\n"
+        "class Unused:\n    pass\n\n"
+        "class Store:\n"
+        "    def __init__(self):\n        pass\n\n"
+        "    def read(self):\n        return self.read()\n\n"
+        "    def write(self):\n        pass\n"
     )
     caller = tmp_path / "caller.py"
-    caller.write_text("from m import used\n")
-    assert unreached([mod], [mod, caller]) == ["m.py:4 recursive", "m.py:7 Unused"]
+    caller.write_text("from m import used, Store\nStore().write()\n")
+    assert unreached([mod], [mod, caller]) == [
+        "m.py:4 recursive",
+        "m.py:7 Unused",
+        "m.py:14 Store.read",
+    ]
 
 
 def test_streaming_definitions_are_reached_from_non_test_code():

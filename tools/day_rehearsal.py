@@ -276,7 +276,10 @@ def run_day(spark, data_dir: str, root: str, hours: list[str]) -> dict:
     walls, compactions = [], []
     for hidx, hour in enumerate(hours):
         t0 = time.time()
-        pipe.run(spark, hour=hour, path_vars={"data_dir": data_dir, "out_dir": out_dir})
+        pipe.run(
+            spark, hour=hour, path_vars={"data_dir": data_dir, "out_dir": out_dir},
+            work_dir=f"{root}/work",
+        )
         ue = spark.read.option("multiLine", True).json(f"{data_dir}/user_exp_{hour}.json")
         tr = spark.read.option("multiLine", True).json(f"{data_dir}/trace_{hour}.json")
         lg = spark.read.option("multiLine", True).json(f"{data_dir}/log_{hour}.json")

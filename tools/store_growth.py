@@ -17,11 +17,10 @@ Fixed per-batch machinery (micro-batch planning, checkpoint writes,
 parquet commit) is ~1-2 s on this container and flattens exponents
 toward 0, so the artifact records the raw per-scale times AND the
 t(max)/t(1) ratio alongside the LSQ exponent -- read the ratio, not
-just the slope.  A truly store-driven cost shows up as ratio >> 1 (the
-legacy flat agg layout rewrites the whole store every batch).
+just the slope.  A truly store-driven cost shows up as ratio >> 1.
 
 Usage: python tools/store_growth.py [out_json] [family ...]
-  families: agg_bucketed agg_legacy sessions postings topk upsert
+  families: agg_bucketed sessions postings topk upsert
   env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALES (default "1,3,10,30")
 Merges rows keyed store_growth_<family> into SCALE_REHEARSAL.json.
 """
@@ -126,12 +125,11 @@ class AggBucketed(Family):
     a manifest-versioned per-key aggregate over m*100k keys; the fixed
     batch touches 50 keys (~49 of 1024 buckets), so per-batch IO is
     touched_buckets * bucket_size = ~5%% of the store -- the B knob
-    shrinks the constant; the LEGACY twin below rewrites the whole store
-    every batch for contrast."""
+    shrinks the constant."""
 
     name = "agg_bucketed"
     schema = KV_SCHEMA
-    NB: int | None = 1024
+    NB = 1024
 
     def write_filler(self, spark, store, m):
         from odp_dynamic_data_pipeline_spark.streaming.stream import (
@@ -171,11 +169,6 @@ class AggBucketed(Family):
             .collect()
         }
         assert all(v == (2, 3) for v in rows.values()) and len(rows) == 50, rows
-
-
-class AggLegacy(AggBucketed):
-    name = "agg_legacy"
-    NB = None
 
 
 class Postings(AggBucketed):
@@ -309,21 +302,19 @@ class Upsert(Family):
     NB = 1024
 
     def write_filler(self, spark, store, m):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            _sessions_write_manifest,
+        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
+            ManifestStore,
+            bucket_col,
         )
 
         state = spark.range(BASE["agg"] * m).select(
             F.concat(F.lit("k"), F.col("id").cast("string")).alias("k"),
             F.lit(1).cast("long").alias("seq"),
             F.lit("h").alias("val"),
-        ).withColumn(
-            "bucket", F.pmod(F.xxhash64("k"), F.lit(self.NB)).cast("int")
-        )
+        ).withColumn("bucket", bucket_col(["k"], self.NB))
         state.write.partitionBy("bucket").mode("overwrite").parquet(f"{store}/v-1")
-        _sessions_write_manifest(
-            spark, store, "v-1", "-",
-            {str(i): "v-1" for i in range(self.NB)}, None, None, None,
+        ManifestStore(spark, store, n_extras=2).write_manifest(
+            "v-1", "-", {str(i): "v-1" for i in range(self.NB)}, None, [None, None]
         )
 
     def batch_rows(self):
@@ -375,8 +366,9 @@ class Sessions(Family):
     NB = 1024
 
     def write_filler(self, spark, store, m):
-        from odp_dynamic_data_pipeline_spark.streaming.stream import (
-            _sessions_write_manifest,
+        from odp_dynamic_data_pipeline_spark.streaming.kvstore import (
+            ManifestStore,
+            bucket_col,
         )
 
         state = spark.range(BASE["sessions"] * m).select(
@@ -385,13 +377,12 @@ class Sessions(Family):
             F.lit(3).cast("long").alias("n_events"),
             F.lit(SESS_T0).cast("long").alias("start_us"),
             F.lit(SESS_T0 + 3_600_000_000).cast("long").alias("last_us"),
-            F.pmod(F.xxhash64("id"), F.lit(self.NB)).cast("int").alias("bucket"),
+            bucket_col(["id"], self.NB).alias("bucket"),
         )
         state.write.partitionBy("bucket").mode("overwrite").parquet(f"{store}/v-1")
-        _sessions_write_manifest(
-            spark, store, "v-1", "-",
-            {str(k): "v-1" for k in range(self.NB)}, None,
-            SESS_T0 + 3_600_000_000, None,
+        ManifestStore(spark, store, n_extras=2).write_manifest(
+            "v-1", "-", {str(k): "v-1" for k in range(self.NB)}, None,
+            [SESS_T0 + 3_600_000_000, None],
         )
 
     def batch_rows(self):
@@ -437,7 +428,7 @@ class Sessions(Family):
 FAMILIES = {
     f.name: f
     for f in [
-        AggBucketed(), AggLegacy(), Sessions(), Postings(), Topk(), Upsert(),
+        AggBucketed(), Sessions(), Postings(), Topk(), Upsert(),
     ]
 }
 
