@@ -82,8 +82,6 @@ def hashed_shingles_direct(
     consumer only needs hashes (minhash signatures, intersect/union
     verification, equality joins); :func:`shingles` remains for consumers
     that surface the shingle text."""
-    from odp_dynamic_data_pipeline_spark.operators.partitioning import ensure_min_parallelism
-
     df = ensure_min_parallelism(df)
     args = ", ".join(f"element_at(__toks, i + {j})" for j in range(n))
     # The empty-doc filter tests the TOKEN count, never size(out_col):
@@ -105,26 +103,32 @@ def hashed_shingles_direct(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, hashed_col: str = "hsh", num_perm: int = 32
+def minhash_band_buckets(
+    hashed: DataFrame, id_col: str, *, num_perm: int = 32, bands: int = 8
 ) -> DataFrame:
-    """One min-hash per permutation: min over a cheap bigint re-mix of the
-    pre-hashed shingles (xxhash64(seed_i, h)).
+    """LSH band buckets ``(id, band, bucket)`` of a hashed-shingle table
+    ``(id, hsh)`` as :func:`hashed_shingles_direct` returns it.  With
+    r = num_perm // bands, permutation i is the min over the shingle
+    hashes h of the cheap bigint re-mix xxhash64(i, h), and band b's
+    bucket is xxhash64(b, mh_{b*r}, .., mh_{b*r+r-1}).
 
-    All permutations are folded in ONE pass over the shingle array (array
-    state in ``aggregate``) rather than ``num_perm`` separate ``transform``
-    scans -- one expression instead of 32 keeps the generated code small
-    (cold-plan compile time is a measurable cost) and reads each shingle
-    hash once."""
-    fold = F.expr(
-        f"aggregate({hashed_col},"
-        f" array_repeat(CAST(9223372036854775807 AS BIGINT), {num_perm}),"
-        f" (acc, h) -> zip_with(acc, sequence(0, {num_perm - 1}),"
-        f"                      (m, i) -> least(m, xxhash64(i, h))))"
-    )
-    sig = df.select(F.col(id_col), fold.alias("__sig"))
-    return sig.select(
-        F.col(id_col), *[F.col("__sig").getItem(i).alias(f"mh_{i}") for i in range(num_perm)]
+    Signatures and buckets come out of ONE code-generated aggregate, with
+    no interpreted per-shingle lambda: every shingle hash is exploded once
+    per band and grouped by (id, band), so the aggregate holds the band's
+    r minima and emits its bucket directly.  Grouping by id alone needs
+    all num_perm minima in one aggregate, and the operator's plan then
+    generates 2.5x the source (567 vs 225 KB at 32/8), which every fresh
+    Spark driver compiles.  The seeds are INT expressions of the int band:
+    xxhash64 of an int differs from xxhash64 of a long.  A document with
+    an empty hash array has no row here (explode drops it);
+    hashed_shingles_direct never produces one."""
+    r = num_perm // bands
+    mins = ", ".join(f"min(xxhash64(band * {r} + {j}, __h))" for j in range(r))
+    return (
+        hashed.selectExpr(id_col, "hsh", f"explode(sequence(0, {bands - 1})) AS band")
+        .selectExpr(id_col, "band", "explode(hsh) AS __h")
+        .groupBy(id_col, "band")
+        .agg(F.expr(f"xxhash64(band, {mins}) AS bucket"))
     )
 
 
@@ -151,7 +155,6 @@ def minhash_lsh_pairs(
     num_perm: int = 32,
     bands: int = 8,
     threshold_e6: int = 500_000,
-    eager: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash+LSH with exact-Jaccard verification.
@@ -168,78 +171,54 @@ def minhash_lsh_pairs(
     handled by the exact fingerprint pass first).  Standard practice for
     LSH at corpus scale; None keeps every bucket.
 
-    With ``eager=True`` (default) the small verified-pairs result is
-    materialized via localCheckpoint and the shared hashed-shingle cache is
-    unpersisted before returning, so repeated invocations in one session do
-    not accumulate cached blocks.  ``eager=False`` returns the fully lazy
-    plan and leaves the persist lifecycle to the caller (the hashed table
-    stays cached until ``spark.catalog.clearCache()``).
+    The result is one lazy plan and nothing is cached: the hashed-shingle
+    table is computed once per evaluation of the plan, into the exchange
+    that partitions it by id, and every consumer reads that exchange
+    (below).  Evaluating the result twice computes it twice.
     """
-    rows_per_band = num_perm // bands
-    # The hashed-shingle table feeds three consumers (signatures + both
-    # sides of the verification join); without materialization each one
-    # re-runs tokenize+shingle+hash over the raw text.  At cluster scale
-    # this table is what you'd write to parquet once per corpus -- here
-    # persist() gives the same single-computation guarantee (~8 B per
-    # shingle vs the full text).  Direct n-gram hashing skips shingle
-    # string materialization entirely (nothing downstream needs the text).
-    hashed = hashed_shingles_direct(df.select(id_col, text_col), id_col, text_col, n=n).persist()
-    sig = minhash_signatures(hashed, id_col, num_perm=num_perm)
-
-    band_cols = []
-    for b in range(bands):
-        cols = [F.col(f"mh_{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        band_cols.append(F.xxhash64(F.lit(b), *cols).alias(f"band_{b}"))
-    banded = sig.select(F.col(id_col), *band_cols)
-
-    # explode carries ONLY (id, band, bucket) -- never the shingle arrays
-    buckets = banded.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), F.col(f"band_{b}").alias("bucket"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
+    # Direct n-gram hashing skips shingle string materialization entirely
+    # (nothing downstream needs the text).  The hashed-shingle table feeds
+    # three consumers: the band buckets and both sides of the verification
+    # join.  Partitioned by id, all of them read ONE exchange
+    # (ReusedExchange in the executed plan), so tokenize+shingle+hash runs
+    # once per document without a cache, and the bucket aggregate, grouped
+    # by (id, band), needs no shuffle of its own.  The exchange carries
+    # ~8 B per distinct shingle: the table a cluster-scale run would write
+    # once.
+    hashed = hashed_shingles_direct(
+        df.select(id_col, text_col), id_col, text_col, n=n
+    ).repartition(id_col)
+    buckets = minhash_band_buckets(hashed, id_col, num_perm=num_perm, bands=bands)
     if max_bucket_size is not None:
-        from pyspark.sql import Window as _W
-
-        sizes = F.count(F.lit(1)).over(_W.partitionBy("band", "bucket"))
-        buckets = buckets.withColumn("__bsz", sizes).where(
-            F.col("__bsz") <= max_bucket_size
-        ).drop("__bsz")
-    left = buckets.select("band", "bucket", F.col(id_col).alias("id_a"))
-    right = buckets.select("band", "bucket", F.col(id_col).alias("id_b"))
+        buckets = (
+            buckets.selectExpr("*", "count(1) OVER (PARTITION BY band, bucket) AS __bsz")
+            .where(f"__bsz <= {int(max_bucket_size)}")
+            .drop("__bsz")
+        )
+    left = buckets.selectExpr("band", "bucket", f"{id_col} AS id_a")
+    right = buckets.selectExpr("band", "bucket", f"{id_col} AS id_b")
     cand = (
         left.join(right, ["band", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
+        .where("id_a < id_b")
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     # verification joins the candidates back to the hashed-shingle table;
     # intersect/union over bigint arrays (xxhash64 collisions: ~2^-64/pair)
-    ha = hashed.select(F.col(id_col).alias("id_a"), F.col("hsh").alias("h_a"))
-    hb = hashed.select(F.col(id_col).alias("id_b"), F.col("hsh").alias("h_b"))
-    verified = (
+    ha = hashed.selectExpr(f"{id_col} AS id_a", "hsh AS h_a")
+    hb = hashed.selectExpr(f"{id_col} AS id_b", "hsh AS h_b")
+    return (
         cand.join(ha, "id_a")
         .join(hb, "id_b")
-        .select(
+        .selectExpr(
             "id_a",
             "id_b",
-            F.size(F.array_intersect("h_a", "h_b")).cast("long").alias("inter"),
-            F.size(F.array_union("h_a", "h_b")).cast("long").alias("uni"),
+            "CAST(size(array_intersect(h_a, h_b)) AS BIGINT) AS inter",
+            "CAST(size(array_union(h_a, h_b)) AS BIGINT) AS uni",
         )
-        .withColumn("jaccard_e6", F.expr("(1000000 * inter) div uni"))
+        .selectExpr("*", "(1000000 * inter) div uni AS jaccard_e6")
+        .where(f"jaccard_e6 >= {int(threshold_e6)}")
     )
-    result = verified.where(F.col("jaccard_e6") >= threshold_e6)
-    if eager:
-        result = result.localCheckpoint(eager=True)
-        hashed.unpersist()
-    return result
 
 
 def simhash(
@@ -1653,7 +1632,9 @@ def hamming_join(
         raise ValueError(f"need 0 < max_dist < bits, got {max_dist}/{bits}")
     # both join sides read the (id, code) table; persist so an expensive
     # upstream fingerprint computation (SimHash folds, image hashes) runs
-    # once, not once per side (the minhash_lsh_pairs lifecycle pattern).
+    # once, not once per side: the two sides of the band self-join are
+    # separate subtrees of the plan (a broadcast join builds one and
+    # streams the other), so without the cache each computes the codes.
     # eager=False returns the lazy plan with NO cache taken (the codes
     # table recomputes per side) so plan inspection never leaks a cache.
     codes = df.select(F.col(id_col).alias("__id"), F.col(code_col).alias("__c"))

@@ -575,8 +575,9 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         probes.join(counters, ["d", "bucket"])
         .groupBy(F.col("t").alias("token"), "exact_n")
         .agg(F.min("c").alias("cms_estimate"))
-        # 20-row result: materialize eagerly so the shared vocab cache can
-        # be released before returning (same lifecycle as minhash_lsh_pairs)
+        # 20-row result: materialize eagerly so the vocab cache, shared by
+        # the sketch and the exact probes, can be released before
+        # returning instead of staying pinned for the session
         .localCheckpoint(eager=True)
     )
     tok_counts.unpersist()

@@ -416,8 +416,8 @@ def minhash_xx_pairs_sql(
     threshold_e6: int, *, n: int = 3, num_perm: int = 32, bands: int = 8
 ) -> str:
     """DuckDB replay of the ENTIRE xxhash64 MinHash+LSH pipeline
-    (operators.dedup hashed_shingles_direct -> minhash_signatures ->
-    band buckets -> candidate join -> exact-Jaccard verify), returning
+    (operators.dedup hashed_shingles_direct -> minhash_band_buckets ->
+    candidate join -> exact-Jaccard verify), returning
     (id_a, id_b, inter, uni, jaccard_e6) -- value-identical to
     minhash_lsh_pairs; the dedup_minhash_lsh oracle."""
     rows_per_band = num_perm // bands

@@ -4,6 +4,8 @@ P1 nested dot-path."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators.aggregate import (
@@ -137,6 +139,51 @@ def test_minhash_lsh_bucket_cap(spark):
     assert n_unc >= 30 * 29 / 2  # the boilerplate clique fully pairs
     assert all(a >= 100 for a, b in pairs_capped), pairs_capped  # clique suppressed
     assert (100, 101) in pairs_capped  # real near-dup survives via its bands
+
+
+def test_minhash_band_buckets_match_the_fold_formula(spark):
+    """The code-generated band buckets equal, value for value, the
+    array-fold formula they replaced, kept here as the oracle: a drift in
+    the signatures can change the candidates and still verify to the same
+    pairs on small data, so the (id, band, bucket) rows are pinned
+    themselves.  Runs on the sf0.001 documents plus one document of
+    exactly n tokens (8 buckets) and one of fewer than n (none)."""
+    from odp_dynamic_data_pipeline_spark.operators.dedup import (
+        hashed_shingles_direct,
+        minhash_band_buckets,
+    )
+    from odp_dynamic_data_pipeline_spark.sources.catalog import load_table
+    from tests.conftest import SF_SMOKE
+
+    n, num_perm, bands = 3, 32, 8
+    r = num_perm // bands
+    exact_n, short = 10**12, 10**12 + 1
+    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    edge = spark.createDataFrame(
+        [(exact_n, "exactly three tokens"), (short, "two tokens")], "doc_id long, text string"
+    )
+    hashed = hashed_shingles_direct(docs.unionByName(edge), "doc_id", n=n)
+    got = sorted(
+        map(tuple, minhash_band_buckets(hashed, "doc_id", num_perm=num_perm, bands=bands).collect())
+    )
+
+    fold = F.expr(
+        f"aggregate(hsh, array_repeat(CAST(9223372036854775807 AS BIGINT), {num_perm}),"
+        f" (acc, h) -> zip_with(acc, sequence(0, {num_perm - 1}),"
+        f" (m, i) -> least(m, xxhash64(i, h))))"
+    )
+    sig = hashed.select("doc_id", fold.alias("sig"))
+    band_cols = [
+        F.xxhash64(F.lit(b), *[F.col("sig").getItem(i) for i in range(b * r, (b + 1) * r)])
+        for b in range(bands)
+    ]
+    want = sorted(
+        map(tuple, sig.select("doc_id", F.posexplode(F.array(*band_cols))).collect())
+    )
+    assert got == want
+    per_doc = Counter(d for d, _, _ in got)
+    assert per_doc[exact_n] == bands and short not in per_doc
+    assert len(per_doc) > 20 and set(per_doc.values()) == {bands}
 
 
 def test_audio_segments_overlap(spark):

@@ -279,3 +279,20 @@ def test_hamming_join_lazy_shape(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "bit_count" in plan
 
+
+def test_minhash_lsh_one_lazy_plan(spark):
+    """MinHash-LSH is one lazy plan: the signatures and band buckets come
+    from a code-generated aggregate (no interpreted zip_with/aggregate
+    fold), nothing is cached or checkpointed, candidates come from an
+    equi-join, and the verification side reads a reused exchange."""
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    df = SPARK_QUERIES["dedup_minhash_lsh"](spark, SF)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    assert not after - before, "minhash_lsh_pairs left a persisted RDD"
+    for node in ("InMemoryTableScan", "ExistingRDD", "CartesianProduct", "BroadcastNestedLoopJoin"):
+        assert node not in plan, node
+    assert "zip_with" not in plan and not re.search(r"\baggregate\(", plan)
+    assert re.search(r"\*\(\d+\) HashAggregate\(keys=\[doc_id#\d+L, band#\d+\], functions=\[min\(xxhash64\(", plan)
+    assert re.search(r"ReusedExchange \[[^\]]*\b(hsh|h_b)#", plan)
