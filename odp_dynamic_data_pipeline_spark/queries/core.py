@@ -2799,9 +2799,9 @@ FROM events GROUP BY dow, hod
 )
 def activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week x hour-of-day activity heatmap (the capacity-planning /
-    seasonality primitive).  Spark's dayofweek is 1=Sunday vs DuckDB's
-    0=Sunday -- normalized here exactly as date_functions_zoo pins it;
-    hour() truncation of the nanos timestamp matches on both engines.
+    seasonality primitive).  Spark's dayofweek is 1=Sunday, DuckDB's is
+    0=Sunday; subtract 1 on the Spark side.  hour() truncation of the
+    nanos timestamp matches on both engines.
     168-cell aggregate, map-side combined."""
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(

@@ -3314,7 +3314,7 @@ def markov_attribution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs 8 exact e9 fixed-point absorption steps for the base chain and
     one removal scenario per channel.  This closes the attribution
     family: last-touch/time-window (cogroup_attribution_windows) credits
-    the nearest touch, funnel_conversion_rate counts stage survival --
+    the nearest touch, a conversion funnel counts stage survival --
     removal effect answers "how much conversion DISAPPEARS without this
     channel", the counterfactual none of the others measure.
 

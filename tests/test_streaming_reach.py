@@ -1,15 +1,21 @@
-"""Every definition in ``streaming/`` is reached from non-test code.
+"""Every definition in ``streaming/`` and ``queries/relational2.py`` is
+reached from non-test code.
 
 A stdlib-``ast`` scan in the style of ``test_unused_imports.py``: each
-top-level ``def`` or ``class`` in ``odp_dynamic_data_pipeline_spark/streaming/``,
-and each non-dunder method of a top-level class, must be referenced -- as
+top-level ``def``, ``class`` or single-name assignment in
+``odp_dynamic_data_pipeline_spark/streaming/`` and
+``odp_dynamic_data_pipeline_spark/queries/relational2.py``, and each
+non-dunder method of a top-level class, must be referenced -- as
 a name, an attribute or an imported name -- from non-test code: the
 package (without ``streaming/__init__.py``, whose re-exports alone do not
 make a definition reachable), ``perfbench/``, ``tools/`` and
 ``__spark_entry__.py``.  A definition's references to itself (recursion)
 do not count.  Methods are matched by name, so a method counts as reached
-when any non-test code names that attribute.  Code that only tests call
-does not belong in the streaming surface."""
+when any non-test code names that attribute.  A ``@register``-decorated
+query counts as reached: the registry calls it by name lookup, so only
+the helpers and constants it uses must be found by the scan.  Code that
+only tests call does not belong in the streaming surface, and a query
+module keeps no helper that its queries stopped using."""
 
 from __future__ import annotations
 
@@ -18,6 +24,7 @@ import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 STREAMING = ROOT / "odp_dynamic_data_pipeline_spark" / "streaming"
+RELATIONAL2 = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "relational2.py"
 
 
 def non_test_sources() -> list[pathlib.Path]:
@@ -43,16 +50,33 @@ def _references(path: pathlib.Path) -> list[tuple[str, int]]:
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
+def _is_dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
 def _definitions(tree: ast.Module):
-    """(qualified name, node) of each top-level def and class, and of each
-    non-dunder method of a top-level class."""
+    """(qualified name, node) of each top-level def, class and non-dunder
+    single-name assignment, and of each non-dunder method of a top-level
+    class."""
     for node in tree.body:
         if isinstance(node, (*FUNCS, ast.ClassDef)):
             yield node.name, node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                if isinstance(t, ast.Name) and not _is_dunder(t.id):
+                    yield t.id, node
         if isinstance(node, ast.ClassDef):
             for m in node.body:
-                if isinstance(m, FUNCS) and not (m.name.startswith("__") and m.name.endswith("__")):
+                if isinstance(m, FUNCS) and not _is_dunder(m.name):
                     yield f"{node.name}.{m.name}", m
+
+
+def _registered(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "register"
+        for d in getattr(node, "decorator_list", ())
+    )
 
 
 def unreached(defining: list[pathlib.Path], sources: list[pathlib.Path]) -> list[str]:
@@ -60,9 +84,12 @@ def unreached(defining: list[pathlib.Path], sources: list[pathlib.Path]) -> list
     out = []
     for path in defining:
         for qualname, node in _definitions(ast.parse(path.read_text())):
+            if _registered(node):
+                continue
+            own = qualname.rsplit(".", 1)[-1]
             span = range(node.lineno, node.end_lineno + 1)
             if not any(
-                name == node.name and not (p == path and line in span)
+                name == own and not (p == path and line in span)
                 for p, rs in refs.items()
                 for name, line in rs
             ):
@@ -88,6 +115,24 @@ def test_scan_flags_an_unreached_definition(tmp_path):
         "m.py:7 Unused",
         "m.py:14 Store.read",
     ]
+
+
+def test_scan_counts_a_registered_query_as_reached(tmp_path):
+    mod = tmp_path / "m.py"
+    mod.write_text(
+        "from registry import register\n\n"
+        "_SQL = 'SELECT 1'\n\n"
+        "_ORPHAN_SQL = 'SELECT 2'\n\n"
+        "def _helper():\n    return 1\n\n"
+        "def _orphan():\n    return 2\n\n"
+        "@register('q', _SQL)\n"
+        "def q():\n    return _helper()\n"
+    )
+    assert unreached([mod], [mod]) == ["m.py:5 _ORPHAN_SQL", "m.py:10 _orphan"]
+
+
+def test_relational2_definitions_are_reached_from_non_test_code():
+    assert unreached([RELATIONAL2], non_test_sources()) == []
 
 
 def test_streaming_definitions_are_reached_from_non_test_code():

@@ -62,12 +62,8 @@ BROADCAST_NLJ_BY_DESIGN = {
     "token_drift_by_source",       # single-row grand-total broadcast
     "token_budget_allocation",     # single-row weight-total + leftover broadcasts
     "quality_signal_correlation",  # corpus-constant token total broadcast (surprisal leg)
-    "q11_value_concentration",     # scalar subquery threshold
-    "q14_promo_share", "q17_small_quantity_revenue", "q8_market_share",
-    "q20_dominant_suppliers", "q22_dormant_customers", "q6_forecast_revenue",
+    "q14_promo_share", "q17_small_quantity_revenue", "q6_forecast_revenue",
     "chi2_independence_lang_source",  # lang-marginal x source-marginal lattice (L*S rows), both broadcast aggs
-    "frequent_pair_mining",        # single-row basket-universe total broadcast (lift denominator)
-    "benford_price_digits",        # single-row digit-total broadcast over a 9-row agg
     "degree_powerlaw_fit",         # single-row log-log moment broadcast over the degree histogram
     "ks_test_value_drift",         # single-row totals + single-row max-D broadcasts over the support
     "cusum_changepoints",          # single-row (total, n_hours) broadcast over the hourly rollup
@@ -98,7 +94,6 @@ GLOBAL_WINDOW_BOUNDED = {
     "zipf_head_coverage",      # cumulative share over top-k tokens
     "dataset_card_report",     # ordered rows of a fixed-size report
     "categorical_index_langs", # frequency rank over the distinct-lang vocab (bounded)
-    "rolling_correlation_series",  # RANGE frames over the daily rollup (bounded by calendar, not data)
     "topk_sketch_tokens",      # rank over the VOCAB table (corpus already reduced), limit 20
     "cusum_changepoints",      # prefix/min/max frames over the calendar-hour rollup (bounded by horizon, not data)
     "pareto_frontier_parts",   # running min over the distinct-size rollup (bounded by the size domain, not data)
