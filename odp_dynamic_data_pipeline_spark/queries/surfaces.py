@@ -1,8 +1,13 @@
-"""Round-6 API-surface queries: the Spark-4 frontend/extension surfaces a
-reference user would reach for that were not yet first-class in the
-registry -- cogrouped applyInPandas (two-sided grouped pandas), SQL pipe
-syntax (``|>``), DataFrame.transpose, and k-core decomposition completing
-the dedup-graph family (CC, PageRank, triangles, now coreness).
+"""Operator-backed queries over the dedup graph, entity resolution, the
+streaming runner and the Python data sources.
+
+Each query drives package code: the dedup-graph operators (k-core, label
+propagation, link prediction, cluster-aware splits), SNM blocking and
+survivorship, the edit-distance join, ``streaming.stream`` replays and
+state introspection, the Python stream source and sink, the bucketed
+writer, the CSV quarantine path, the KS / Mann-Whitney / exact-quantile
+statistics on ``partitioning.global_prefix_sum``, Markov removal-effect
+attribution, and fixed-point temperature sampling.
 
 Every query is oracle-gated; determinism follows the registry policy
 (integer cents/micros, epoch integers across the boundary).
@@ -79,471 +84,6 @@ def dedup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.kcore_peel(edges, k=2, rounds=5)
 
 
-WINDOW_US = 3_600_000_000  # trailing attribution window: 1 hour in micros
-
-
-def align_attribution_windows(pdf_p, pdf_v):
-    """Cogroup kernel for ``cogroup_attribution_windows``: a BUCKET of
-    users' purchases (event_id, user_id, ts_us) aligned against the same
-    bucket's views (user_id, v_us, cents).
-
-    Multi-user and fully vectorized: both sides sort by (user, ts), then
-    every binary search runs on a COMPOSITE int64 key
-    ``user_id * span + (ts - base)`` whose per-user ranges are disjoint, so
-    one np.searchsorted answers all users at once and per-user prefix-sum
-    differences never cross a user boundary (window starts clamp to the
-    user's own range start).  This is the high-cardinality grouped-pandas
-    mitigation: keying the cogroup by ``user_id`` directly costs ~4 ms of
-    Arrow/pandas machinery PER GROUP (measured: 1,500 users -> 6.2 s at
-    sf0.1 regardless of shuffle partitions); bucketing divides that
-    overhead by users-per-bucket while the kernel stays O((P+V) log V).
-
-    Falls back to a per-user pandas groupby loop if the composite key
-    cannot fit in int64 (gigantic user ids x time span) -- correctness
-    never depends on the fast path.  Module-level so unit tests can feed
-    crafted frames (empty sides, tied timestamps, cross-user isolation) --
-    tests/test_cogroup.py."""
-    import numpy as np
-    import pandas as pd
-
-    if len(pdf_p) == 0:
-        return pd.DataFrame(
-            {
-                "event_id": pd.Series([], dtype="int64"),
-                "user_id": pd.Series([], dtype="int64"),
-                "ts_us": pd.Series([], dtype="int64"),
-                "n_views_1h": pd.Series([], dtype="int64"),
-                "sum_view_cents_1h": pd.Series([], dtype="int64"),
-                "last_view_gap_us": pd.Series([], dtype="Int64"),
-            }
-        )
-    pdf_p = pdf_p.sort_values(["user_id", "ts_us"], kind="mergesort")
-    pdf_v = pdf_v.sort_values(["user_id", "v_us"], kind="mergesort")
-    p_uid = pdf_p["user_id"].to_numpy(dtype="int64")
-    p_us = pdf_p["ts_us"].to_numpy(dtype="int64")
-    v_uid = pdf_v["user_id"].to_numpy(dtype="int64")
-    v_us = pdf_v["v_us"].to_numpy(dtype="int64")
-
-    all_ts_min = min(p_us.min(), v_us.min() if len(v_us) else p_us.min())
-    all_ts_max = max(p_us.max(), v_us.max() if len(v_us) else p_us.max())
-    base = all_ts_min
-    span = int(all_ts_max - base) + 2
-    max_uid = int(max(p_uid.max(), v_uid.max() if len(v_uid) else 0))
-    if (max_uid + 1) * span >= 2**62:  # pragma: no cover - int64 headroom gone
-        out = [
-            align_attribution_windows(gp, pdf_v[pdf_v["user_id"] == uid])
-            for uid, gp in pdf_p.groupby("user_id", sort=False)
-        ]
-        return pd.concat(out, ignore_index=True)
-
-    k_v = v_uid * span + (v_us - base)  # sorted, per-user ranges disjoint
-    k_p = p_uid * span + (p_us - base)
-    csum = np.concatenate(([0], np.cumsum(pdf_v["cents"].to_numpy(dtype="int64"))))
-    hi = np.searchsorted(k_v, k_p, side="left")  # same user, strictly before
-    # window start: clamp the delta at 0 so the key never escapes into the
-    # PREVIOUS user's range when ts - 1h precedes the batch base
-    k_lo = p_uid * span + np.maximum(p_us - WINDOW_US - base, 0)
-    lo = np.searchsorted(k_v, k_lo, side="left")
-    # the last prior view must belong to the SAME user: mask where hi is at
-    # or before the user's own range start
-    user_start = np.searchsorted(k_v, p_uid * span, side="left")
-    if len(k_v):
-        gap = pd.array(p_us - v_us[np.maximum(hi - 1, 0)], dtype="Int64")
-    else:
-        gap = pd.array([0] * len(p_us), dtype="Int64")
-    gap[hi <= user_start] = pd.NA
-    return pd.DataFrame(
-        {
-            "event_id": pdf_p["event_id"].to_numpy(dtype="int64"),
-            "user_id": p_uid,
-            "ts_us": p_us,
-            "n_views_1h": (hi - lo).astype("int64"),
-            "sum_view_cents_1h": csum[hi] - csum[lo],
-            "last_view_gap_us": gap,
-        }
-    )
-
-
-@register(
-    "cogroup_attribution_windows",
-    """
-WITH p AS (
-  SELECT event_id, user_id, epoch_us(ts) AS ts_us
-  FROM events WHERE event_type = 'purchase'
-),
-v AS (
-  SELECT user_id, epoch_us(ts) AS v_us,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'view'
-)
-SELECT p.event_id, p.user_id, p.ts_us,
-       CAST(COALESCE(w.n, 0) AS BIGINT) AS n_views_1h,
-       CAST(COALESCE(w.s, 0) AS BIGINT) AS sum_view_cents_1h,
-       lg.gap AS last_view_gap_us
-FROM p
-LEFT JOIN LATERAL (
-  SELECT COUNT(*) AS n, SUM(cents) AS s
-  FROM v WHERE v.user_id = p.user_id
-    AND v.v_us >= p.ts_us - 3600000000 AND v.v_us < p.ts_us
-) w ON TRUE
-LEFT JOIN LATERAL (
-  SELECT p.ts_us - MAX(v_us) AS gap
-  FROM v WHERE v.user_id = p.user_id AND v.v_us < p.ts_us
-) lg ON TRUE
-""",
-)
-def cogroup_attribution_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Purchase attribution via ``groupBy().cogroup().applyInPandas`` --
-    the two-sided grouped-pandas surface (SURVEY.md section 2.8 family):
-    per user, every purchase is aligned against the SORTED view stream
-    with vectorized binary search (np.searchsorted) + prefix sums, giving
-    trailing-1h view count/value and the gap to the last prior view.
-
-    This is the operator shape for custom per-key stream alignment that
-    SQL joins express only as O(purchases x views) lateral rescans: the
-    pandas kernel is O((P + V) log V) per bucket.  The cogroup keys on
-    ``pmod(user_id, 64)`` BUCKETS, not raw user ids: grouped-pandas
-    machinery costs ~4 ms per group (measured -- 1,500 user-keyed groups
-    took 6.2 s at sf0.1 independent of shuffle partitions; 64 buckets cut
-    it to ~2 s), and the composite-key kernel handles any number of users
-    per batch.  At 100 TB the bucket count scales with the cluster, each
-    bucket stays executor-memory-bounded (users x their events / 64k
-    buckets), and both sides co-shuffle exactly once.  Oracle replays the
-    semantics with correlated lateral aggregates at test scale.
-
-    The two sides are loaded as SEPARATE relations on purpose: a
-    self-cogroup over ONE shared scan hits a Catalyst
-    dedup/column-pruning interplay where any downstream plan that
-    narrows the output (count(), an aggregate) silently drops the RIGHT
-    side's pass-through ``user_id`` from the pandas input frame
-    (KeyError in the kernel; collect() was unaffected, which is why the
-    oracle gate alone never caught it).  A second load_table gives the
-    right side fresh exprIds and the pruning stays sound —
-    tests/test_cogroup.py pins count()/aggregate over this query."""
-    ev = load_table(spark, sf_dir, "events")
-    ev_v = load_table(spark, sf_dir, "events")
-    purchases = ev.where(F.col("event_type") == "purchase").select(
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        F.expr("pmod(user_id, 64)").alias("bucket"),
-    )
-    views = ev_v.where(F.col("event_type") == "view").select(
-        "user_id",
-        F.unix_micros("ts").alias("v_us"),
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-        F.expr("pmod(user_id, 64)").alias("bucket"),
-    )
-    return (
-        purchases.groupBy("bucket")
-        .cogroup(views.groupBy("bucket"))
-        .applyInPandas(
-            align_attribution_windows,
-            "event_id bigint, user_id bigint, ts_us bigint, n_views_1h bigint, "
-            "sum_view_cents_1h bigint, last_view_gap_us bigint",
-        )
-    )
-
-
-@register(
-    "sql_frontend_pipe",
-    """
-SELECT l_returnflag, l_linestatus,
-       CAST(COUNT(*) AS BIGINT) AS n_items,
-       CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT)
-         AS sum_price_cents,
-       CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS BIGINT)
-         AS sum_qty_e2
-FROM lineitem
-WHERE l_shipdate <= DATE '1997-12-31'
-GROUP BY l_returnflag, l_linestatus
-HAVING COUNT(*) > 0
-""",
-)
-def sql_frontend_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL pipe syntax (``|>``, Spark 4): the linear FROM -> WHERE ->
-    EXTEND -> AGGREGATE -> WHERE composition users write instead of nested
-    subqueries -- proving the frontend parses, plans, and optimizes pipe
-    stages identically to the ANSI oracle (Catalyst lowers both to the
-    same aggregate; predicate pushdown and partial aggregation still
-    apply).  Exact cents arithmetic per registry policy."""
-    register_views(spark, sf_dir, ["lineitem"])
-    return spark.sql(
-        """
-        FROM lineitem
-        |> WHERE l_shipdate <= DATE '1997-12-31'
-        |> EXTEND CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS price_cents,
-                  CAST(ROUND(l_quantity * 100, 0) AS BIGINT) AS qty_e2
-        |> AGGREGATE COUNT(*) AS n_items,
-                     SUM(price_cents) AS sum_price_cents,
-                     SUM(qty_e2) AS sum_qty_e2
-           GROUP BY l_returnflag, l_linestatus
-        |> WHERE n_items > 0
-        |> SELECT l_returnflag, l_linestatus, n_items, sum_price_cents, sum_qty_e2
-        """
-    )
-
-
-_LANGS = ["de", "en", "es", "fr", "zh"]  # testdata generator's fixed lang set
-
-
-@register(
-    "transpose_lang_stats",
-    "SELECT 'n_docs' AS key, "
-    + ", ".join(f"CAST(COUNT(*) FILTER (WHERE lang = '{lg}') AS BIGINT) AS {lg}" for lg in _LANGS)
-    + " FROM documents UNION ALL SELECT 'sum_chars', "
-    + ", ".join(f"CAST(SUM(n_chars) FILTER (WHERE lang = '{lg}') AS BIGINT)" for lg in _LANGS)
-    + " FROM documents UNION ALL SELECT 'n_sources', "
-    + ", ".join(
-        f"CAST(COUNT(DISTINCT source) FILTER (WHERE lang = '{lg}') AS BIGINT)" for lg in _LANGS
-    )
-    + " FROM documents",
-)
-def transpose_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``DataFrame.transpose`` (Spark 4): a per-language stats table pivoted
-    so languages become columns and metrics become rows -- the
-    report-orientation flip analysts otherwise hand-roll with unpivot +
-    pivot.  transpose() collects the INDEX COLUMN VALUES to the driver to
-    name the output columns: bounded by distinct languages (the same
-    bounded-collect contract as the codebook/centroid constants), never by
-    data volume.  The upstream aggregate is one map-side-combined groupBy."""
-    docs = load_table(spark, sf_dir, "documents")
-    stats = (
-        docs.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.countDistinct("source").cast("long").alias("n_sources"),
-        )
-        .orderBy("lang")
-    )
-    return stats.transpose()
-
-
-@register(
-    "theta_sketch_set_ops",
-    """
-WITH p AS (
-  SELECT user_id, date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS day
-  FROM events WHERE event_type = 'purchase'
-),
-a AS (SELECT DISTINCT user_id FROM p WHERE day < 15),
-b AS (SELECT DISTINCT user_id FROM p WHERE day >= 15)
-SELECT
-  CAST((SELECT COUNT(*) FROM a) AS BIGINT) AS exact_a,
-  CAST((SELECT COUNT(*) FROM b) AS BIGINT) AS exact_b,
-  CAST((SELECT COUNT(*) FROM (SELECT user_id FROM a UNION SELECT user_id FROM b)) AS BIGINT)
-    AS exact_union,
-  CAST((SELECT COUNT(*) FROM (SELECT user_id FROM a INTERSECT SELECT user_id FROM b)) AS BIGINT)
-    AS exact_inter,
-  CAST((SELECT COUNT(*) FROM (SELECT user_id FROM a EXCEPT SELECT user_id FROM b)) AS BIGINT)
-    AS exact_diff,
-  TRUE AS union_ok, TRUE AS inter_ok, TRUE AS diff_ok
-""",
-)
-def theta_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta sketches (Apache DataSketches, Spark 4 built-ins) doing set
-    ALGEBRA on audiences -- union/intersection/difference cardinality of
-    early-month vs late-month purchasers from two pre-aggregated sketches,
-    the shape that replaces COUNT(DISTINCT) re-scans when marketing asks
-    for arbitrary audience overlaps at 100 TB (sketches are tiny, merge
-    associatively, and the raw data is read ONCE).
-
-    Oracle contract (same pattern as approx_distinct_stats): the exact
-    set-op cardinalities are computed by both engines and hash-compared;
-    the *_ok booleans assert THIS engine's sketch estimates land within 5%
-    of its own exact values (theta at lgK=12 is exact below 4096 entries,
-    so at test scale the estimates are equal; the bound keeps the query
-    honest at any scale).  DuckDB has no theta sketches, so its booleans
-    are literal TRUE -- the Spark side is the one under test."""
-    ev = load_table(spark, sf_dir, "events")
-    p = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day")
-    )
-    sk = p.agg(
-        F.expr("theta_sketch_agg(CASE WHEN day < 15 THEN user_id END)").alias("sk_a"),
-        F.expr("theta_sketch_agg(CASE WHEN day >= 15 THEN user_id END)").alias("sk_b"),
-        F.countDistinct(F.expr("CASE WHEN day < 15 THEN user_id END")).alias("exact_a"),
-        F.countDistinct(F.expr("CASE WHEN day >= 15 THEN user_id END")).alias("exact_b"),
-        F.countDistinct("user_id").alias("exact_union"),
-    )
-    est = sk.select(
-        "exact_a",
-        "exact_b",
-        "exact_union",
-        F.expr("CAST(theta_sketch_estimate(theta_union(sk_a, sk_b)) AS BIGINT)").alias("est_u"),
-        F.expr(
-            "CAST(theta_sketch_estimate(theta_intersection(sk_a, sk_b)) AS BIGINT)"
-        ).alias("est_i"),
-        F.expr(
-            "CAST(theta_sketch_estimate(theta_difference(sk_a, sk_b)) AS BIGINT)"
-        ).alias("est_d"),
-    )
-    return est.select(
-        F.col("exact_a").cast("long").alias("exact_a"),
-        F.col("exact_b").cast("long").alias("exact_b"),
-        F.col("exact_union").cast("long").alias("exact_union"),
-        (F.col("exact_a") + F.col("exact_b") - F.col("exact_union"))
-        .cast("long")
-        .alias("exact_inter"),
-        (F.col("exact_union") - F.col("exact_b")).cast("long").alias("exact_diff"),
-        (F.expr("abs(est_u - exact_union) * 100 <= 5 * exact_union")).alias("union_ok"),
-        (
-            F.expr("abs(est_i - (exact_a + exact_b - exact_union)) * 100"
-                   " <= greatest(5 * (exact_a + exact_b - exact_union), 100)")
-        ).alias("inter_ok"),
-        (
-            F.expr("abs(est_d - (exact_union - exact_b)) * 100"
-                   " <= greatest(5 * (exact_union - exact_b), 100)")
-        ).alias("diff_ok"),
-    )
-
-
-@register(
-    "hll_sketch_partitioned_union",
-    """
-SELECT event_type,
-       CAST(COUNT(DISTINCT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))) AS BIGINT)
-         AS n_days,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-       TRUE AS hll_ok
-FROM events GROUP BY event_type
-""",
-)
-def hll_sketch_partitioned_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The stored-sketch-column production shape: per (event_type, day)
-    HLL partials (what an incremental pipeline materializes nightly), then
-    `hll_union_agg` merges partials per event_type WITHOUT touching raw
-    events again -- distinct-users-over-any-horizon from day-sized sketch
-    rows.  Raw data is read once; every further rollup is sketch-sized.
-
-    Oracle contract: n_days and the exact distinct are hash-compared
-    across engines; hll_ok asserts the merged estimate lands within 5% of
-    exact (HLL lgK=12 has sigma ~1.6%, so 5% is a 3-sigma bound -- data,
-    not a skipped check).  DuckDB's boolean is literal TRUE."""
-    ev = load_table(spark, sf_dir, "events")
-    day = F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day")
-    partials = ev.select("event_type", day, "user_id").groupBy("event_type", "day").agg(
-        F.expr("hll_sketch_agg(user_id)").alias("sk"),
-        F.countDistinct("user_id").alias("day_users"),
-    )
-    merged = partials.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.expr("CAST(hll_sketch_estimate(hll_union_agg(sk)) AS BIGINT)").alias("est_users"),
-    )
-    exact = ev.groupBy("event_type").agg(F.countDistinct("user_id").alias("exact_users"))
-    return merged.join(exact, "event_type").select(
-        "event_type",
-        "n_days",
-        F.col("exact_users").cast("long").alias("exact_users"),
-        F.expr("abs(est_users - exact_users) * 100 <= 5 * exact_users").alias("hll_ok"),
-    )
-
-
-def arrow_lang_stats(table):
-    """applyInArrow kernel: one language's documents as a pyarrow.Table ->
-    a single stats row, computed entirely with pyarrow.compute (no pandas
-    boxing).  Module-level for direct unit tests (tests/test_udfs.py)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n_chars = table.column("n_chars")
-    return pa.table(
-        {
-            "lang": table.column("lang").slice(0, 1),
-            "n_docs": pa.array([table.num_rows], pa.int64()),
-            "sum_chars": pa.array([pc.sum(n_chars).as_py() or 0], pa.int64()),
-            "max_chars": pa.array([pc.max(n_chars).as_py() or 0], pa.int64()),
-            "n_sources": pa.array(
-                [pc.count_distinct(table.column("source")).as_py()], pa.int64()
-            ),
-        }
-    )
-
-
-@register(
-    "applyinarrow_lang_stats",
-    """
-SELECT lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       CAST(MAX(n_chars) AS BIGINT) AS max_chars,
-       CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources
-FROM documents GROUP BY lang
-""",
-)
-def applyinarrow_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``groupBy().applyInArrow`` -- the grouped ARROW surface completing
-    the Python-extension matrix (mapInPandas / mapInArrow / applyInPandas /
-    cogroup-applyInPandas / applyInArrow): per-language corpus stats
-    computed with pyarrow.compute kernels directly on the group's Arrow
-    table, no pandas materialization.
-
-    The aggregate itself is SQL-expressible (that's what makes it
-    oracle-gateable) -- the query exists to prove the API path: group
-    shuffle -> Arrow table per key -> pc.* kernels -> Arrow back.  Real
-    users reach applyInArrow when the per-group logic needs Arrow-native
-    libraries (tokenizers, zero-copy numpy views) at bounded-cardinality
-    keys; high-cardinality keys take the bucketed shape (PLANS.md
-    cogroup adjudication)."""
-    docs = load_table(spark, sf_dir, "documents").select("lang", "source", "n_chars")
-    return docs.groupBy("lang").applyInArrow(
-        arrow_lang_stats,
-        "lang string, n_docs bigint, sum_chars bigint, max_chars bigint, n_sources bigint",
-    )
-
-
-@register(
-    "xml_roundtrip_stats",
-    """
-SELECT o_orderpriority,
-       CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents,
-       CAST(SUM(o_orderkey * o_custkey) AS BIGINT) AS key_checksum
-FROM orders WHERE o_orderkey % 10 = 0
-GROUP BY o_orderpriority
-""",
-)
-def xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XML round-trip through Spark 4's NATIVE xml source (rowTag
-    records): an orders slice written as XML, re-read with a DECLARED
-    schema (inference would re-derive types from text), then aggregated --
-    the oracle computes the same aggregate from the original parquet, so
-    hash parity proves the conversion is lossless.  Monetary values cross
-    the text format as pre-computed integer cents, never as decimal text
-    (same exactness policy as the registry).  XML is the interchange
-    format the enterprise-feed edge still speaks; at 100 TB it is an edge
-    codec only -- data lands in parquet immediately (the same role the
-    reference gives pretty-printed JSON, src/data_processor.py:36-40)."""
-    from odp_dynamic_data_pipeline_spark.queries.core import _stream_tmpdir
-
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.expr("o_orderkey % 10 = 0"))
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderpriority",
-            F.expr("CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)").alias("cents"),
-        )
-    )
-    tmp = _stream_tmpdir("xml_roundtrip")
-    orders.write.mode("overwrite").format("xml").option("rootTag", "orders").option(
-        "rowTag", "order"
-    ).save(f"{tmp}/orders_xml")
-    back = (
-        spark.read.schema("o_orderkey bigint, o_custkey bigint, o_orderpriority string, cents bigint")
-        .format("xml")
-        .option("rowTag", "order")
-        .load(f"{tmp}/orders_xml")
-    )
-    return back.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum("cents").alias("sum_cents"),
-        F.sum(F.col("o_orderkey") * F.col("o_custkey")).alias("key_checksum"),
-    )
-
-
 @register(
     "hll_users_stream",
     """
@@ -593,199 +133,6 @@ def hll_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("exact_users").cast("long").alias("exact_users"),
         F.expr("abs(est_users - exact_users) * 100 <= 5 * exact_users").alias("hll_ok"),
     )
-
-
-@register(
-    "topk_sketch_tokens",
-    r"""
-WITH tok AS (SELECT unnest(regexp_extract_all(text, '\S+')) AS token FROM documents),
-tf AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS n FROM tok GROUP BY token),
-rk AS (SELECT token, n,
-              CAST(ROW_NUMBER() OVER (ORDER BY n DESC, token) AS BIGINT) AS rank
-       FROM tf)
-SELECT rank, token, n, TRUE AS topk_ok
-FROM rk WHERE rank <= 20
-""",
-)
-def topk_sketch_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitters via Spark 4's approx_top_k SKETCH family -- the
-    accumulate / combine / estimate decomposition that makes frequent-item
-    tracking a stored, mergeable column exactly like the HLL partials:
-    per-language partial sketches (what a sharded ingest materializes),
-    one `approx_top_k_combine` merge, one estimate -- raw tokens are
-    scanned once, every re-ranking downstream is sketch-sized.
-
-    Oracle contract: the exact top-20 (count desc, token tie-break) is
-    hash-compared across engines; topk_ok asserts the SKETCH estimate for
-    each of those tokens equals its exact count -- strictly true whenever
-    the vocabulary fits maxItemsTracked=1024 (Apache DataSketches
-    frequent-items is exact below capacity), and a real error detector
-    beyond it.  DuckDB has no frequent-items sketch, so its boolean is
-    literal TRUE; the Spark side is under test."""
-    docs = load_table(spark, sf_dir, "documents").select("lang", "text")
-    tok = docs.select("lang", F.explode(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).alias("token"))
-    partials = tok.groupBy("lang").agg(F.expr("approx_top_k_accumulate(token, 1024)").alias("sk"))
-    est = (
-        partials.agg(F.expr("approx_top_k_estimate(approx_top_k_combine(sk), 100)").alias("est"))
-        .select(F.explode("est").alias("e"))
-        .select(F.col("e.item").alias("token"), F.col("e.count").cast("long").alias("est_n"))
-    )
-    from pyspark.sql import Window
-
-    tf = tok.groupBy("token").agg(F.count(F.lit(1)).alias("n"))
-    rk = tf.select(
-        F.row_number().over(Window.orderBy(F.desc("n"), F.asc("token"))).cast("long").alias("rank"),
-        "token",
-        "n",
-    ).where(F.col("rank") <= 20)
-    return rk.join(est, "token", "left").select(
-        "rank",
-        "token",
-        F.col("n").cast("long").alias("n"),
-        F.expr("est_n <=> n").alias("topk_ok"),
-    )
-
-
-@register(
-    "aes_column_encryption",
-    """
-SELECT c_mktsegment,
-       CAST(COUNT(*) AS BIGINT) AS n_customers,
-       CAST(SUM(CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS sum_bal_cents,
-       TRUE AS roundtrip_ok, TRUE AS gcm_distinct_ok
-FROM customer GROUP BY c_mktsegment
-""",
-)
-def aes_column_encryption(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column-level encryption for PII-bearing fields (`aes_encrypt` /
-    `aes_decrypt`, JVM-side): customer names encrypted, the pipeline
-    aggregates on the NON-sensitive columns, and the sensitive column is
-    proven recoverable -- the data-governance shape where a 100 TB lake
-    stores ciphertext and only key-holding jobs can re-identify.
-
-    Two asserted-as-data properties: (1) decrypt(encrypt(name)) == name
-    for every row under AES-GCM (roundtrip_ok aggregates a per-row
-    equality with bool_and); (2) the same plaintext under two DIFFERENT
-    explicit IVs yields distinct ciphertexts (gcm_distinct_ok) -- the
-    property that makes ciphertext columns unusable as join/group keys
-    (deterministic ECB exists for that trade-off, with its leakage).
-    Explicit IVs because two syntactically identical random-IV
-    aes_encrypt calls get common-subexpression-eliminated by Catalyst
-    into ONE ciphertext (measured: the random-IV form returned identical
-    bytes) -- and explicit IVs also keep the query deterministic per the
-    registry policy.  The oracle replays the aggregate and carries
-    literal TRUE: the crypto claims are Spark-side checks that flip the
-    hash on failure.  Key handling: a literal here; production injects
-    via conf."""
-    cust = load_table(spark, sf_dir, "customer")
-    key = "0123456789abcdef"  # 128-bit demo key; prod: spark.conf / KMS
-    iv1, iv2 = "000000000000000000000001", "000000000000000000000002"
-    enc = cust.select(
-        "c_mktsegment",
-        F.expr("CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)").alias("bal_cents"),
-        F.expr(f"aes_encrypt(c_name, '{key}', 'GCM', 'DEFAULT', unhex('{iv1}'))").alias("ct1"),
-        F.expr(f"aes_encrypt(c_name, '{key}', 'GCM', 'DEFAULT', unhex('{iv2}'))").alias("ct2"),
-        F.col("c_name"),
-    )
-    checked = enc.select(
-        "c_mktsegment",
-        "bal_cents",
-        (
-            F.expr(f"CAST(aes_decrypt(ct1, '{key}', 'GCM') AS STRING)") == F.col("c_name")
-        ).alias("rt"),
-        (F.col("ct1") != F.col("ct2")).alias("iv_distinct"),
-    )
-    return checked.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum("bal_cents").alias("sum_bal_cents"),
-        F.bool_and("rt").alias("roundtrip_ok"),
-        F.bool_and("iv_distinct").alias("gcm_distinct_ok"),
-    )
-
-
-@register(
-    "listagg_segment_rollcall",
-    """
-WITH top3 AS (
-  SELECT c_mktsegment, c_name,
-         ROW_NUMBER() OVER (PARTITION BY c_mktsegment ORDER BY c_custkey) AS rn
-  FROM customer
-)
-SELECT c_mktsegment,
-       string_agg(c_name, ',' ORDER BY c_name) AS first_names,
-       CAST(COUNT(*) AS BIGINT) AS n_listed
-FROM top3 WHERE rn <= 3
-GROUP BY c_mktsegment
-""",
-)
-def listagg_segment_rollcall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``LISTAGG ... WITHIN GROUP (ORDER BY ...)`` (SQL:2016 ordered string
-    aggregation, new in Spark 4): the 3 lowest-custkey customer names per
-    market segment concatenated in deterministic name order -- the report
-    surface analysts otherwise emulate with collect_list + array_sort +
-    array_join.  DuckDB replays it as string_agg(... ORDER BY).  The
-    aggregation input is pre-limited to 3 rows per segment (window + rn
-    filter), so the concatenated string is bounded -- the required shape
-    at scale, where an unbounded LISTAGG over a group is an OOM, not a
-    report."""
-    register_views(spark, sf_dir, ["customer"])
-    return spark.sql(
-        """
-        WITH top3 AS (
-          SELECT c_mktsegment, c_name,
-                 ROW_NUMBER() OVER (PARTITION BY c_mktsegment ORDER BY c_custkey) AS rn
-          FROM customer
-        )
-        SELECT c_mktsegment,
-               listagg(c_name, ',') WITHIN GROUP (ORDER BY c_name) AS first_names,
-               CAST(COUNT(*) AS BIGINT) AS n_listed
-        FROM top3 WHERE rn <= 3
-        GROUP BY c_mktsegment
-        """
-    )
-
-
-@register(
-    "bitmap_distinct_rollup",
-    """
-SELECT event_type,
-       CAST(COUNT(DISTINCT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))) AS BIGINT)
-         AS n_days,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
-FROM events GROUP BY event_type
-""",
-)
-def bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT mergeable distinct via Spark's positional-bitmap aggregate
-    family (`bitmap_bucket_number` / `bitmap_bit_position` /
-    `bitmap_construct_agg` / `bitmap_or_agg` / `bitmap_count`): per
-    (event_type, day, bucket) partial bitmaps over user ids -- the stored
-    partial a nightly job materializes -- OR-merged per event type, then
-    popcounted.  The exact twin of the HLL rollup
-    (hll_sketch_partitioned_union): same scan-once / merge-forever shape,
-    but the answer is EXACT, so Spark's bitmap-path user counts
-    hash-compare directly against DuckDB's COUNT(DISTINCT) -- no
-    bound-as-data needed.  Cost model: bitmaps are 4 KB per 32k-id bucket
-    per group -- exactness is affordable while ids stay dense/bounded;
-    HLL takes over when the id space is sparse or unbounded."""
-    ev = load_table(spark, sf_dir, "events")
-    d = ev.select(
-        "event_type",
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01")).alias("day"),
-        F.expr("bitmap_bucket_number(user_id)").alias("bkt"),
-        F.expr("bitmap_bit_position(user_id)").alias("pos"),
-    )
-    partials = d.groupBy("event_type", "day", "bkt").agg(
-        F.expr("bitmap_construct_agg(pos)").alias("bm")
-    )
-    merged = partials.groupBy("event_type", "bkt").agg(F.expr("bitmap_or_agg(bm)").alias("bm"))
-    users = merged.groupBy("event_type").agg(
-        F.sum(F.expr("bitmap_count(bm)")).cast("long").alias("n_users")
-    )
-    # n_days from the partial table directly (NOT max-over-buckets, which
-    # undercounts once the id space spans buckets unevenly across days)
-    days = partials.groupBy("event_type").agg(F.countDistinct("day").cast("long").alias("n_days"))
-    return days.join(users, "event_type").select("event_type", "n_days", "n_users")
 
 
 @register(
@@ -901,116 +248,6 @@ def attribution_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts_us",
         F.coalesce("n_views_1h", F.lit(0)).cast("long").alias("n_views_1h"),
         F.coalesce("sum_view_cents_1h", F.lit(0)).cast("long").alias("sum_view_cents_1h"),
-    )
-
-
-@register(
-    "sql_udf_library",
-    """
-SELECT l_returnflag,
-       CASE WHEN CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100, 0) AS BIGINT) < 100000 THEN 'small'
-            WHEN CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100, 0) AS BIGINT) < 4000000 THEN 'mid'
-            ELSE 'large' END AS price_band,
-       CAST(COUNT(*) AS BIGINT) AS n_items,
-       CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100, 0) AS BIGINT)) AS BIGINT) AS sum_net_cents
-FROM lineitem
-GROUP BY l_returnflag, price_band
-""",
-)
-def sql_udf_library(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declarative SQL UDFs (``CREATE FUNCTION ... RETURN expr``, Spark 4
-    / SQL:2016 PSM-lite): the reference exposes its scalar helpers as a
-    Python function library (src/utils.py); the Spark-native equivalent
-    for SQL-frontend users is a CREATE FUNCTION library -- named, typed,
-    composable (``price_band(net_cents(...))``) -- that Catalyst INLINES
-    into the calling plan, so the functions cost nothing at runtime:
-    the aggregate below compiles to the same whole-stage-codegen plan as
-    the hand-inlined oracle (no UDF call boundary, unlike Python UDFs).
-    Exact cents arithmetic per registry policy."""
-    register_views(spark, sf_dir, ["lineitem"])
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION net_cents(price DOUBLE, disc DOUBLE, tax DOUBLE) "
-        "RETURNS BIGINT RETURN CAST(ROUND(price * (1 - disc) * (1 + tax) * 100, 0) AS BIGINT)"
-    )
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION price_band(cents BIGINT) RETURNS STRING "
-        "RETURN CASE WHEN cents < 100000 THEN 'small' "
-        "WHEN cents < 4000000 THEN 'mid' ELSE 'large' END"
-    )
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               price_band(net_cents(l_extendedprice, l_discount, l_tax)) AS price_band,
-               CAST(COUNT(*) AS BIGINT) AS n_items,
-               SUM(net_cents(l_extendedprice, l_discount, l_tax)) AS sum_net_cents
-        FROM lineitem
-        GROUP BY l_returnflag, price_band(net_cents(l_extendedprice, l_discount, l_tax))
-        """
-    )
-
-
-@register(
-    "sql_udtf_month_spine",
-    """
-WITH bounds AS (
-  SELECT date_trunc('month', MIN(o_orderdate)) AS mn,
-         date_trunc('month', MAX(o_orderdate)) AS mx
-  FROM orders
-),
-spine AS (
-  SELECT CAST(UNNEST(generate_series(mn, mx, INTERVAL 1 MONTH)) AS DATE) AS month_start
-  FROM bounds
-),
-m AS (
-  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month_start,
-         COUNT(*) AS n_orders,
-         SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS revenue_cents
-  FROM orders GROUP BY 1
-)
-SELECT s.month_start,
-       CAST(COALESCE(m.n_orders, 0) AS BIGINT) AS n_orders,
-       CAST(COALESCE(m.revenue_cents, 0) AS BIGINT) AS revenue_cents
-FROM spine s LEFT JOIN m USING (month_start)
-""",
-)
-def sql_udtf_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL TABLE function (``CREATE FUNCTION ... RETURNS TABLE``, Spark 4)
-    as the calendar-spine generator for gap-free monthly reporting: the
-    spine comes from a named, reusable ``month_spine(start, n)`` UDTF
-    invoked via correlated LATERAL against the aggregated date bounds --
-    the declarative replacement for driver-side date loops.  The spine is
-    O(months) rows from a single-row lateral (never a scan), the monthly
-    rollup is one shuffle, and the zero-fill is a broadcast-size left
-    join: the gap-filling shape that survives any fact-table scale."""
-    register_views(spark, sf_dir, ["orders"])
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION month_spine(start DATE, n INT) "
-        "RETURNS TABLE (month_start DATE) "
-        "RETURN SELECT explode(transform(sequence(0, n - 1), "
-        "i -> add_months(date_trunc('MONTH', start), i))) AS month_start"
-    )
-    return spark.sql(
-        """
-        WITH bounds AS (
-          SELECT CAST(date_trunc('MONTH', MIN(o_orderdate)) AS DATE) AS mn,
-                 CAST((YEAR(MAX(o_orderdate)) - YEAR(MIN(o_orderdate))) * 12
-                      + MONTH(MAX(o_orderdate)) - MONTH(MIN(o_orderdate)) + 1 AS INT) AS n_months
-          FROM orders
-        ),
-        spine AS (
-          SELECT s.month_start FROM bounds, LATERAL month_spine(bounds.mn, bounds.n_months) s
-        ),
-        m AS (
-          SELECT CAST(date_trunc('MONTH', o_orderdate) AS DATE) AS month_start,
-                 CAST(COUNT(*) AS BIGINT) AS n_orders,
-                 SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS revenue_cents
-          FROM orders GROUP BY 1
-        )
-        SELECT spine.month_start,
-               CAST(COALESCE(m.n_orders, 0) AS BIGINT) AS n_orders,
-               CAST(COALESCE(m.revenue_cents, 0) AS BIGINT) AS revenue_cents
-        FROM spine LEFT JOIN m USING (month_start)
-        """
     )
 
 
@@ -1310,176 +547,6 @@ def pyds_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "geo_cell_neighbor_join",
-    """
-WITH pts AS (
-  SELECT c_custkey AS id,
-         ('0x' || substr(md5('lat|' || c_custkey), 1, 15))::BIGINT % 180000000 AS lat,
-         ('0x' || substr(md5('lon|' || c_custkey), 1, 15))::BIGINT % 360000000 AS lon
-  FROM customer
-),
-cells AS (
-  SELECT id, lat, lon, lat // 1000000 AS cx, lon // 1000000 AS cy FROM pts
-)
-SELECT a.id AS id_a, b.id AS id_b,
-       CAST((a.lat - b.lat) * (a.lat - b.lat)
-          + (a.lon - b.lon) * (a.lon - b.lon) AS BIGINT) AS dist2,
-       CAST(a.cx = b.cx AND a.cy = b.cy AS BOOLEAN) AS same_cell
-FROM cells a
-JOIN cells b
-  ON b.cx BETWEEN a.cx - 1 AND a.cx + 1
- AND b.cy BETWEEN a.cy - 1 AND a.cy + 1
- AND a.id < b.id
-WHERE (a.lat - b.lat) * (a.lat - b.lat) + (a.lon - b.lon) * (a.lon - b.lon)
-      <= 1000000000000
-""",
-)
-def geo_cell_neighbor_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spatial radius self-join by GRID-CELL BLOCKING: bucket points into
-    cells the size of the search radius, probe each point against its
-    3x3 cell neighborhood via an EQUI-join on the cell key, then apply
-    the exact distance filter -- the standard O(n * density) shape that
-    replaces the quadratic distance cross-join (and the range join every
-    naive SQL spatial query plans into, which Spark executes as
-    broadcast-nested-loop).  Each unordered pair is found exactly once:
-    the probe side explodes 9 candidate cells, the build side stays on
-    its home cell, and id_a < id_b keeps one orientation.
-
-    Coordinates are md5-derived integer microdegrees on [0, 180e6) x
-    [0, 360e6) (non-negative, so DIV == floor-div on both engines;
-    planar integer distance, no trig -- engine-exact).  A production
-    geo join adds the cos(lat) lon scaling and antimeridian wrap to the
-    SAME plan shape; blocking and cost are unchanged."""
-    pts = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("id"),
-        F.expr(
-            "CAST(conv(substr(md5(concat('lat|', c_custkey)), 1, 15), 16, 10) AS BIGINT)"
-            " % 180000000"
-        ).alias("lat"),
-        F.expr(
-            "CAST(conv(substr(md5(concat('lon|', c_custkey)), 1, 15), 16, 10) AS BIGINT)"
-            " % 360000000"
-        ).alias("lon"),
-    )
-    cells = pts.select(
-        "id", "lat", "lon",
-        F.expr("lat DIV 1000000").alias("cx"),
-        F.expr("lon DIV 1000000").alias("cy"),
-    )
-    probes = cells.select(
-        F.col("id").alias("id_a"),
-        F.col("lat").alias("lat_a"),
-        F.col("lon").alias("lon_a"),
-        F.explode(
-            F.expr(
-                "flatten(transform(sequence(-1, 1), dx ->"
-                " transform(sequence(-1, 1), dy -> struct(cx + dx AS cx, cy + dy AS cy))))"
-            )
-        ).alias("c"),
-    ).select("id_a", "lat_a", "lon_a", "c.cx", "c.cy")
-    home = cells.select(
-        F.col("id").alias("id_b"),
-        F.col("lat").alias("lat_b"),
-        F.col("lon").alias("lon_b"),
-        "cx",
-        "cy",
-    )
-    d2 = (F.col("lat_a") - F.col("lat_b")) * (F.col("lat_a") - F.col("lat_b")) + (
-        F.col("lon_a") - F.col("lon_b")
-    ) * (F.col("lon_a") - F.col("lon_b"))
-    return (
-        probes.join(home, ["cx", "cy"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(d2 <= F.lit(1_000_000_000_000))
-        .select(
-            "id_a",
-            "id_b",
-            d2.cast("long").alias("dist2"),
-            (
-                (F.expr("lat_a DIV 1000000") == F.col("cx"))
-                & (F.expr("lon_a DIV 1000000") == F.col("cy"))
-            ).alias("same_cell"),
-        )
-    )
-
-
-@register(
-    "sequential_pattern_support",
-    """
-WITH occ AS (
-  SELECT user_id, event_type,
-         MIN(ts) AS first_ts, MAX(ts) AS last_ts, COUNT(*) AS n
-  FROM events GROUP BY user_id, event_type
-),
-seq AS (
-  SELECT a.event_type AS ante, b.event_type AS cons, COUNT(*) AS n_users_seq
-  FROM occ a JOIN occ b ON a.user_id = b.user_id
-  WHERE (a.event_type <> b.event_type AND a.first_ts < b.last_ts)
-     OR (a.event_type = b.event_type AND a.n >= 2)
-  GROUP BY a.event_type, b.event_type
-),
-sup AS (SELECT event_type, COUNT(*) AS n_users FROM occ GROUP BY event_type)
-SELECT s.ante, s.cons, CAST(s.n_users_seq AS BIGINT) AS n_users_seq,
-       CAST(sa.n_users AS BIGINT) AS n_users_ante,
-       CAST(sb.n_users AS BIGINT) AS n_users_cons,
-       CAST((1000000 * s.n_users_seq) // sa.n_users AS BIGINT) AS confidence_e6
-FROM seq s JOIN sup sa ON sa.event_type = s.ante
-           JOIN sup sb ON sb.event_type = s.cons
-WHERE s.n_users_seq >= 2
-""",
-)
-def sequential_pattern_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-2 sequential pattern mining (the GSP/PrefixSpan support
-    core): for event types (a, b), in how many user timelines does an
-    ``a`` PRECEDE a ``b`` -- gaps allowed, unlike the contiguous-bigram
-    transition matrix.  The existence test collapses to order statistics:
-    "some a before some b" iff first(a) < last(b) (for a = b: the type
-    occurs twice), so each user contributes ONE (user, type) row with
-    min/max timestamps and the pattern join is T^2-bounded per user
-    (T = 5 types here; never the raw event quadratic).  One shuffle to
-    (user, type), then joins on user_id between tiny per-user sets --
-    the shape that holds when a user has a million events.  Confidence
-    in exact integer ppm against the antecedent's user support."""
-    ev = load_table(spark, sf_dir, "events")
-    occ = ev.groupBy("user_id", "event_type").agg(
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    a = occ.select(
-        "user_id", F.col("event_type").alias("ante"),
-        F.col("first_ts").alias("a_first"), F.col("n").alias("a_n"),
-    )
-    b = occ.select(
-        "user_id", F.col("event_type").alias("cons"),
-        F.col("last_ts").alias("b_last"),
-    )
-    seq = (
-        a.join(b, "user_id")
-        .where(
-            ((F.col("ante") != F.col("cons")) & (F.col("a_first") < F.col("b_last")))
-            | ((F.col("ante") == F.col("cons")) & (F.col("a_n") >= 2))
-        )
-        .groupBy("ante", "cons")
-        .agg(F.count(F.lit(1)).alias("n_users_seq"))
-        .where(F.col("n_users_seq") >= 2)
-    )
-    sup = occ.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_users"))
-    return (
-        seq.join(sup.select(F.col("event_type").alias("ante"), F.col("n_users").alias("n_users_ante")), "ante")
-        .join(sup.select(F.col("event_type").alias("cons"), F.col("n_users").alias("n_users_cons")), "cons")
-        .select(
-            "ante",
-            "cons",
-            F.col("n_users_seq").cast("long").alias("n_users_seq"),
-            F.col("n_users_ante").cast("long").alias("n_users_ante"),
-            F.col("n_users_cons").cast("long").alias("n_users_cons"),
-            F.expr("(1000000 * n_users_seq) div n_users_ante").cast("long").alias("confidence_e6"),
-        )
-    )
-
-
-@register(
     "csv_quarantine_roundtrip",
     """
 WITH src AS (
@@ -1658,69 +725,6 @@ def ks_test_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "cusum_changepoints",
-    """
-WITH h AS (
-  SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-         CAST(COUNT(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1
-),
-t AS (SELECT CAST(SUM(n_events) AS BIGINT) AS total, CAST(COUNT(*) AS BIGINT) AS n_hours FROM h),
-p AS (
-  SELECT hour_epoch, n_events,
-         n_events * t.n_hours - t.total AS dev,
-         SUM(n_events * t.n_hours - t.total) OVER (ORDER BY hour_epoch) AS p_cum
-  FROM h, t
-)
-SELECT hour_epoch, n_events, CAST(dev AS BIGINT) AS dev,
-       CAST(p_cum AS BIGINT) AS p_cum,
-       CAST(p_cum - MIN(p_cum) OVER (ORDER BY hour_epoch) AS BIGINT) AS cusum_pos,
-       CAST(MAX(p_cum) OVER (ORDER BY hour_epoch) - p_cum AS BIGINT) AS cusum_neg
-FROM p
-""",
-)
-def cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSUM changepoint statistics over the hourly event-rate series:
-    the classic page-test recursions S+_t = max(0, S+_{t-1} + dev_t) /
-    S-_t collapse to WINDOW algebra -- S+_t = P_t - min_{i<=t} P_i and
-    S-_t = max_{i<=t} P_i - P_t, where P is the prefix sum of deviations
-    -- so the sequential definition becomes a declarative plan with no
-    recursion.  Deviations are exact integers: scaling by n_hours
-    (dev = n*H - T) avoids the fractional mean entirely, so both engines
-    agree bit-for-bit.
-
-    Scale shape: the windows are GLOBAL but run over the PRE-AGGREGATED
-    calendar-hour series (720 rows/month; bounded by the time horizon,
-    never the event count) -- the raw scan collapses to hourly counts in
-    one shuffle first.  This is the audit's bounded-global-window class,
-    whitelisted with that rationale."""
-    ev = load_table(spark, sf_dir, "events")
-    h = ev.groupBy(
-        F.unix_timestamp(F.date_trunc("hour", F.col("ts"))).alias("hour_epoch")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-    t = h.agg(
-        F.sum("n_events").cast("long").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("n_hours"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy("hour_epoch").rowsBetween(Window.unboundedPreceding, 0)
-    p = (
-        h.crossJoin(F.broadcast(t))
-        .withColumn("dev", F.col("n_events") * F.col("n_hours") - F.col("total"))
-        .withColumn("p_cum", F.sum("dev").over(w))
-    )
-    return p.select(
-        "hour_epoch",
-        "n_events",
-        F.col("dev").cast("long").alias("dev"),
-        F.col("p_cum").cast("long").alias("p_cum"),
-        (F.col("p_cum") - F.min("p_cum").over(w)).cast("long").alias("cusum_pos"),
-        (F.max("p_cum").over(w) - F.col("p_cum")).cast("long").alias("cusum_neg"),
-    )
-
-
-@register(
     "bucketed_join_revenue",
     """
 SELECT o.o_orderpriority,
@@ -1742,6 +746,7 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan-shape test pin the no-exchange property.  The merge hint forces
     SMJ over a broadcast so the bucket path is what executes even at
     test scale (at real scale neither side broadcasts anyway)."""
+    from odp_dynamic_data_pipeline_spark.queries.core import _stream_tmpdir
     from odp_dynamic_data_pipeline_spark.sources.writers import write_bucketed_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -1749,8 +754,9 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)").alias("price_cents"),
     )
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    write_bucketed_table(li, "odp_li_bkt", "l_orderkey", num_buckets=8)
-    write_bucketed_table(o, "odp_ord_bkt", "o_orderkey", num_buckets=8)
+    tmp = _stream_tmpdir("bucketed_join")
+    write_bucketed_table(li, f"{tmp}/li", "odp_li_bkt", "l_orderkey", num_buckets=8)
+    write_bucketed_table(o, f"{tmp}/ord", "odp_ord_bkt", "o_orderkey", num_buckets=8)
     lb = spark.table("odp_li_bkt").hint("merge")
     ob = spark.table("odp_ord_bkt")
     return (
@@ -1760,58 +766,6 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_items"),
             F.sum("price_cents").cast("long").alias("revenue_cents"),
         )
-    )
-
-
-@register(
-    "dynamic_partition_overwrite",
-    """
-WITH final AS (
-  SELECT event_type, event_id, CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-  FROM events
-  WHERE event_type <> 'click'
-  UNION ALL
-  SELECT event_type, event_id, CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-  FROM events
-  WHERE event_type = 'click' AND event_id % 2 = 0
-)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(cents) AS BIGINT) AS sum_cents
-FROM final GROUP BY event_type
-""",
-)
-def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DYNAMIC partition overwrite (partitionOverwriteMode=dynamic as a
-    per-WRITE option, not a session conf): the second write replaces ONLY
-    the partitions it touches ('click', rewritten with even event_ids)
-    and must leave every other partition's files from the first write
-    intact -- the idempotent-backfill primitive of every partitioned
-    lake: re-running one hour/source/type never clobbers its neighbors.
-    STATIC overwrite (the default) would have dropped the other four
-    partitions here; the oracle fails if it does.  Partition count stays
-    bounded (one directory per event_type), and the readback proves the
-    final state against a pure-SQL model of \"full load, then replace one
-    partition\"."""
-    from odp_dynamic_data_pipeline_spark.queries.core import _stream_tmpdir
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
-    tmp = _stream_tmpdir("dyn_overwrite")
-    path = f"{tmp}/by_type"
-    ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    ev.where((F.col("event_type") == "click") & (F.col("event_id") % 2 == 0)).write.mode(
-        "overwrite"
-    ).option("partitionOverwriteMode", "dynamic").partitionBy("event_type").parquet(path)
-    back = spark.read.schema("event_id bigint, cents bigint, event_type string").parquet(
-        path
-    )
-    return back.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("cents").cast("long").alias("sum_cents"),
     )
 
 
@@ -1896,114 +850,6 @@ def matryoshka_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n", F.lit(0)).cast("long").alias("n_overlap"),
             F.lit(5).cast("long").alias("k"),
         )
-    )
-
-
-@register(
-    "observed_quality_metrics",
-    """
-SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CASE WHEN LENGTH(text) >= 100 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_kept,
-       CAST(SUM(LENGTH(text)) AS BIGINT) AS sum_len,
-       CAST(MIN(doc_id) AS BIGINT) AS min_doc,
-       CAST(MAX(doc_id) AS BIGINT) AS max_doc,
-       CAST(SUM(CASE WHEN LENGTH(text) >= 100 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_written
-FROM documents
-""",
-)
-def observed_quality_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass pipeline instrumentation via the Observation API
-    (``df.observe`` -> CollectMetrics): corpus-level quality metrics --
-    input rows, quality-gate pass count, total characters, id range --
-    are accumulated per-partition DURING the filtered parquet write and
-    merged on the driver, so the 100 TB scan is paid ONCE for both the
-    data product and its audit row.  The naive alternative (separate
-    count/sum jobs before the write) re-reads the corpus per metric.
-    The returned row also includes ``n_written`` counted from a READBACK
-    of the written files: the oracle equates it with the observed
-    ``n_kept``, so the metrics provably describe the same pass that
-    produced the output (a drift would hash-mismatch).  Mirrors the
-    reference's per-run record-count logging (src/data_processor.py
-    processed-entry accounting) as one declarative plan."""
-    from pyspark.sql import Observation
-
-    from odp_dynamic_data_pipeline_spark.queries.core import _stream_tmpdir
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    obs = Observation("corpus_quality")
-    observed = docs.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.length("text") >= 100, 1).otherwise(0)).alias("n_kept"),
-        F.sum(F.length("text")).alias("sum_len"),
-        F.min("doc_id").alias("min_doc"),
-        F.max("doc_id").alias("max_doc"),
-    )
-    tmp = _stream_tmpdir("observed_write")
-    out = f"{tmp}/kept"
-    observed.where(F.length("text") >= 100).write.mode("overwrite").parquet(out)
-    m = obs.get
-    n_written = spark.read.parquet(out).count()
-    return spark.range(1).select(
-        F.lit(m["n_rows"]).cast("long").alias("n_rows"),
-        F.lit(m["n_kept"]).cast("long").alias("n_kept"),
-        F.lit(m["sum_len"]).cast("long").alias("sum_len"),
-        F.lit(m["min_doc"]).cast("long").alias("min_doc"),
-        F.lit(m["max_doc"]).cast("long").alias("max_doc"),
-        F.lit(n_written).cast("long").alias("n_written"),
-    )
-
-
-@register(
-    "schema_evolution_read",
-    """
-WITH v1 AS (
-  SELECT event_type, CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-         CAST(NULL AS BIGINT) AS user_id
-  FROM events WHERE event_id % 2 = 0
-),
-v2 AS (
-  SELECT event_type, CAST(ROUND(value * 100, 0) AS BIGINT) AS cents, user_id
-  FROM events WHERE event_id % 2 = 1
-),
-u AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(cents) AS BIGINT) AS sum_cents,
-       CAST(COUNT(user_id) AS BIGINT) AS n_with_user
-FROM u GROUP BY event_type
-""",
-)
-def schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Additive schema evolution on a parquet lake: an old writer's files
-    (event_type, cents) and a new writer's files (+ user_id) land in the
-    SAME directory, and a ``mergeSchema=true`` read unions the footers --
-    old rows surface NULL for the added column, so COUNT(user_id) counts
-    exactly the post-migration rows.  This is the only sane contract at
-    100 TB: columns are ADDED, never retyped, and readers never require a
-    rewrite of petabytes of history.  The footgun this query pins:
-    WITHOUT mergeSchema, Spark infers the schema from an arbitrary
-    subset of footers, so user_id may silently vanish from the scan
-    depending on file listing order -- the oracle (a pure-SQL model of
-    "old rows carry NULL") fails in that mode whenever inference lands
-    on an old footer."""
-    from odp_dynamic_data_pipeline_spark.queries.core import _stream_tmpdir
-
-    ev = load_table(spark, sf_dir, "events")
-    cents = F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents")
-    v1 = ev.where(F.col("event_id") % 2 == 0).select("event_type", cents)
-    v2 = ev.where(F.col("event_id") % 2 == 1).select("event_type", cents, "user_id")
-    tmp = _stream_tmpdir("schema_evo")
-    out = f"{tmp}/evo"
-    v1.write.mode("overwrite").parquet(out)
-    v2.write.mode("append").parquet(out)
-    merged = spark.read.option("mergeSchema", "true").parquet(out)
-    return merged.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-        F.count("user_id").cast("long").alias("n_with_user"),
     )
 
 
@@ -2161,107 +1007,6 @@ def cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "collated_source_rollup",
-    """
-WITH mixed AS (
-  SELECT CASE WHEN doc_id % 3 = 0 THEN upper(source)
-              WHEN doc_id % 3 = 1
-              THEN upper(substr(source, 1, 1)) || lower(substr(source, 2))
-              ELSE source END AS src_mixed,
-         n_chars
-  FROM documents
-),
-agg AS (
-  SELECT lower(src_mixed) AS source_lc,
-         CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-  FROM mixed GROUP BY lower(src_mixed)
-),
-dim AS (SELECT DISTINCT upper(source) AS name, CAST(length(source) AS BIGINT) AS code
-        FROM documents)
-SELECT a.source_lc, a.n_docs, a.sum_chars, d.code
-FROM agg a JOIN dim d ON lower(d.name) = a.source_lc
-""",
-)
-def collated_source_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 COLLATIONS as first-class comparison semantics: a
-    mixed-case source column (upper/initcap/raw variants derived per
-    doc_id) is grouped AND dim-joined under ``COLLATE UTF8_LCASE`` --
-    no ``lower()`` rewrites anywhere in the Spark plan.  The point at
-    scale: collation travels with the TYPE, so every downstream
-    group/join/sort honors it without per-expression normalization
-    (and without materializing a derived key column); one declaration
-    replaces N scattered lower() wrappers that each risk being
-    forgotten.  Group representatives under a collation are
-    engine-specific, so the output key is normalized via lower() only
-    at the boundary; the DuckDB oracle models the same semantics with
-    explicit lower() -- the two plans agree exactly BECAUSE UTF8_LCASE
-    equality == lower()-equality on this ASCII corpus."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    mixed = docs.select(
-        F.expr(
-            "CASE WHEN doc_id % 3 = 0 THEN upper(source)"
-            " WHEN doc_id % 3 = 1 THEN initcap(source)"
-            " ELSE source END COLLATE UTF8_LCASE"
-        ).alias("k"),
-        "n_chars",
-    )
-    agg = mixed.groupBy("k").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
-    dim = (
-        docs.select(
-            F.expr("upper(source) COLLATE UTF8_LCASE").alias("name"),
-            F.length("source").cast("long").alias("code"),
-        )
-        .distinct()
-    )
-    return (
-        agg.join(dim, agg["k"] == dim["name"])
-        .select(
-            F.lower(F.col("k").cast("string")).alias("source_lc"),
-            "n_docs",
-            "sum_chars",
-            "code",
-        )
-    )
-
-
-@register(
-    "sql_frontend_identifier",
-    """
-SELECT event_type,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
-FROM events
-GROUP BY event_type
-""",
-)
-def sql_frontend_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Injection-safe dynamic identifiers (Spark 4 ``IDENTIFIER(:p)``):
-    the table AND the grouping column arrive as named parameters, the
-    statement template never changes -- the SQL-frontend twin of the
-    reference's config-driven templating (bucket yaml source/key
-    templates, src/data_processor.py config plumbing), where pipeline
-    configs choose tables/columns at run time.  String-splicing
-    identifiers into SQL is the injection/typo path; IDENTIFIER keeps
-    the plan cacheable and the name a VALUE, validated by the parser.
-    The oracle is the equivalent static statement."""
-    register_views(spark, sf_dir, ["events"])
-    return spark.sql(
-        """
-        SELECT IDENTIFIER(:gcol) AS event_type,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(CAST(ROUND(IDENTIFIER(:vcol) * 100, 0) AS BIGINT)) AS BIGINT) AS cents
-        FROM IDENTIFIER(:tbl)
-        GROUP BY IDENTIFIER(:gcol)
-        """,
-        args={"tbl": "events", "gcol": "event_type", "vcol": "value"},
-    )
-
-
-@register(
     "pyds_stream_sink_roundtrip",
     """
 WITH ids AS (SELECT UNNEST(generate_series(0, 199)) AS doc_id),
@@ -2385,56 +1130,6 @@ def observed_stream_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "sql_frontend_pivot",
-    """
-SELECT user_id % 10 AS cohort,
-       CAST(SUM(CASE WHEN event_type = 'click' THEN CAST(ROUND(value * 100, 0) AS BIGINT) END) AS BIGINT) AS click_cents,
-       CAST(COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS click_n,
-       CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(ROUND(value * 100, 0) AS BIGINT) END) AS BIGINT) AS purchase_cents,
-       CAST(COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS purchase_n,
-       CAST(SUM(CASE WHEN event_type = 'view' THEN CAST(ROUND(value * 100, 0) AS BIGINT) END) AS BIGINT) AS view_cents,
-       CAST(COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS BIGINT) AS view_n
-FROM events
-GROUP BY user_id % 10
-""",
-)
-def sql_frontend_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL PIVOT clause (the relational spreadsheet flip as declarative
-    syntax, completing the SQL-frontend family alongside pipe / GROUP BY
-    ALL / parameterized / IDENTIFIER): multi-aggregate pivot
-    (SUM + COUNT per pivoted value) with an EXPLICIT value list -- the
-    only shape that scales, because implicit value discovery costs an
-    extra distinct pass over the corpus and an unbounded output schema;
-    a 100 TB pivot always enumerates its columns.  Spark compiles this
-    to the same single-pass conditional aggregation as the DataFrame
-    ``pivot()`` (pivot_event_counts); the oracle is the portable
-    CASE-aggregation spelling, and the outer SELECT pins the
-    deterministic column names AND coalesces the counts: PIVOT's
-    COUNT(*) yields NULL (not 0) for a group missing a pivoted
-    value, while COUNT(CASE ...) yields 0 -- without the COALESCE
-    the two spellings diverge on any dataset where some cohort
-    lacks one of the enumerated types (the sums agree either way:
-    both spell an empty SUM as NULL)."""
-    register_views(spark, sf_dir, ["events"])
-    return spark.sql(
-        """
-        SELECT cohort,
-               click_s AS click_cents,
-               COALESCE(click_n, 0) AS click_n,
-               purchase_s AS purchase_cents,
-               COALESCE(purchase_n, 0) AS purchase_n,
-               view_s AS view_cents,
-               COALESCE(view_n, 0) AS view_n
-        FROM (SELECT user_id % 10 AS cohort, event_type,
-                     CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-              FROM events)
-        PIVOT (SUM(cents) AS s, COUNT(*) AS n
-               FOR event_type IN ('click', 'purchase', 'view'))
-        """
-    )
-
-
-@register(
     "mannwhitney_value_shift",
     """
 WITH vals AS (
@@ -2549,317 +1244,6 @@ def mannwhitney_value_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST((1000000 * abs(u2a - CAST(na AS DECIMAL(38,0)) * nb))"
             " div (CAST(na AS DECIMAL(38,0)) * nb) AS BIGINT)"
         ).alias("abs_rb_e6"),
-    )
-
-
-@register(
-    "pareto_frontier_parts",
-    """
-WITH p AS (
-  SELECT p_partkey, CAST(p_size AS BIGINT) AS p_size,
-         CAST(ROUND(p_retailprice * 100, 0) AS BIGINT) AS price_cents
-  FROM part
-),
-best AS (SELECT p_size, MIN(price_cents) AS best_cents FROM p GROUP BY p_size),
-f AS (
-  SELECT p_size, best_cents,
-         MIN(best_cents) OVER (ORDER BY p_size DESC
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS runmin
-  FROM best
-)
-SELECT p.p_partkey, p.p_size, p.price_cents
-FROM p JOIN f ON p.p_size = f.p_size AND p.price_cents = f.best_cents
-WHERE f.runmin IS NULL OR f.runmin > f.best_cents
-""",
-)
-def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pareto frontier (2-D SKYLINE) of the part catalog: every part not
-    dominated in (maximize p_size, minimize price) -- dominated meaning
-    some other part has size >= AND price <= with at least one strict.
-    The classic multi-objective shortlist operator (Borzsony et al.,
-    ICDE 2001 'The Skyline Operator').
-
-    Scale shape: skyline is DISTRIBUTIVE over any partitioning, and with
-    one discrete objective it collapses further -- a min(price) rollup
-    per size (one shuffle, map-side combine) reduces the candidate set
-    to <= |size domain| rows, the frontier test is a running min over
-    that bounded rollup sorted by size descending (a point survives iff
-    every strictly-larger size costs strictly more), and frontier
-    membership broadcast-joins back to the scan so ALL parts achieving a
-    frontier point are returned (ties included).  No O(n^2) dominance
-    join anywhere; the only window runs over the size-domain rollup,
-    never the data."""
-    from pyspark.sql import Window
-
-    p = load_table(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.col("p_size").cast("long").alias("p_size"),
-        F.expr("CAST(ROUND(p_retailprice * 100, 0) AS BIGINT)").alias("price_cents"),
-    )
-    best = p.groupBy("p_size").agg(F.min("price_cents").alias("best_cents"))
-    w = (
-        Window.orderBy(F.col("p_size").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    frontier = (
-        best.withColumn("runmin", F.min("best_cents").over(w))
-        .where(F.col("runmin").isNull() | (F.col("runmin") > F.col("best_cents")))
-        .select(
-            F.col("p_size").alias("f_size"), F.col("best_cents").alias("f_cents")
-        )
-    )
-    return p.join(
-        F.broadcast(frontier),
-        (p["p_size"] == F.col("f_size")) & (p["price_cents"] == F.col("f_cents")),
-    ).select("p_partkey", "p_size", "price_cents")
-
-
-@register(
-    "ewma_user_values",
-    """
-WITH e AS (
-  SELECT user_id, event_id, ts,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS cents
-  FROM events
-),
-f AS (
-  SELECT user_id, event_id, cents,
-         list(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN 15 PRECEDING AND CURRENT ROW) AS frame,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn,
-         COUNT(*) OVER (PARTITION BY user_id) AS n_events
-  FROM e
-),
-g AS (
-  SELECT user_id, n_events, event_id AS last_event_id, cents AS last_cents,
-         len(frame) AS flen,
-         list_sum(list_transform(range(len(frame)),
-                                 i -> frame[i + 1] * (CAST(1 AS BIGINT) << i))) AS num
-  FROM f WHERE rn = 1
-)
-SELECT CAST(user_id AS BIGINT) AS user_id,
-       CAST(n_events AS BIGINT) AS n_events,
-       CAST(last_event_id AS BIGINT) AS last_event_id,
-       CAST(last_cents AS BIGINT) AS last_cents,
-       CAST(flen AS BIGINT) AS frame_len,
-       CAST((1000 * num) // ((CAST(1 AS BIGINT) << flen) - 1) AS BIGINT)
-         AS ewma_millicents
-FROM g
-""",
-)
-def ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exponential-decay smoothing with EXACT integer arithmetic: each
-    user's event values smoothed by a binary-decay trailing window (the
-    newest of the last 16 events weighs 2^15, each older event half
-    that), reported at the user's final event -- the monitoring-style
-    "current smoothed level" per entity.  A true infinite-horizon EWMA
-    recursion needs unbounded-precision weights; truncating the horizon
-    at 16 halvings (the oldest in-frame event contributes < 0.002%)
-    keeps every weight an exact power of two, so numerator and
-    denominator (2^len - 1) are exact BIGINTs and both engines agree
-    bit-for-bit with zero floating point.
-
-    Scale shape: one per-user ROWS window (collect_list over a 16-row
-    frame -- bounded state per row), the weighted fold is a JVM-side
-    ``transform``+``aggregate`` over that 16-element array (no Python,
-    no shuffle beyond the user partitioning), and the final-row pick is
-    a per-user row_number.  Output is one row per user, never per
-    event.  Division is spelled floor-style via pmod so it matches
-    DuckDB ``//`` for any sign, though cents are nonnegative here."""
-    from pyspark.sql import Window
-
-    e = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-    )
-    wf = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-15, Window.currentRow)
-    )
-    wu = Window.partitionBy("user_id")
-    wlast = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    f = e.select(
-        "user_id",
-        "event_id",
-        "cents",
-        F.collect_list("cents").over(wf).alias("frame"),
-        F.row_number().over(wlast).alias("rn"),
-        F.count(F.lit(1)).over(wu).alias("n_events"),
-    ).where(F.col("rn") == 1)
-    g = f.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("event_id").cast("long").alias("last_event_id"),
-        F.col("cents").cast("long").alias("last_cents"),
-        F.size("frame").cast("long").alias("frame_len"),
-        F.expr(
-            "1000 * aggregate(transform(frame, (x, i) ->"
-            " x * shiftleft(CAST(1 AS BIGINT), i)), CAST(0 AS BIGINT),"
-            " (acc, v) -> acc + v)"
-        ).alias("num_milli"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), size(frame)) - 1").alias("den"),
-    )
-    return g.select(
-        "user_id",
-        "n_events",
-        "last_event_id",
-        "last_cents",
-        "frame_len",
-        F.expr("CAST((num_milli - pmod(num_milli, den)) div den AS BIGINT)").alias(
-            "ewma_millicents"
-        ),
-    )
-
-
-@register(
-    "randomization_test_means",
-    """
-WITH vals AS (
-  SELECT event_id, CAST(ROUND(value * 100, 0) AS BIGINT) AS cents,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_a
-  FROM events WHERE event_type IN ('purchase', 'view')
-),
-obs AS (
-  SELECT SUM(is_a) AS na, SUM(1 - is_a) AS nb,
-         SUM(CASE WHEN is_a = 1 THEN cents ELSE 0 END) AS sa,
-         SUM(CASE WHEN is_a = 0 THEN cents ELSE 0 END) AS sb
-  FROM vals
-),
-rel AS (
-  SELECT p.perm,
-         CASE WHEN ('0x' || substr(md5(p.perm || '|' || v.event_id), 1, 15))::BIGINT
-                   % (o.na + o.nb) < o.na
-              THEN 1 ELSE 0 END AS ra,
-         v.cents
-  FROM vals v
-  CROSS JOIN (SELECT UNNEST(generate_series(0, 31)) AS perm) p
-  CROSS JOIN obs o
-),
-pstat AS (
-  SELECT perm,
-         SUM(ra) AS pna, SUM(1 - ra) AS pnb,
-         SUM(CASE WHEN ra = 1 THEN cents ELSE 0 END) AS psa,
-         SUM(CASE WHEN ra = 0 THEN cents ELSE 0 END) AS psb
-  FROM rel GROUP BY perm
-),
-cmp AS (
-  SELECT p.perm,
-         CASE
-           WHEN p.pna = 0 OR p.pnb = 0 THEN 1
-           WHEN abs(CAST(p.psa AS HUGEINT) * p.pnb - CAST(p.psb AS HUGEINT) * p.pna)
-                  * (CAST(o.na AS HUGEINT) * o.nb)
-                >= abs(CAST(o.sa AS HUGEINT) * o.nb - CAST(o.sb AS HUGEINT) * o.na)
-                  * (CAST(p.pna AS HUGEINT) * p.pnb)
-           THEN 1 ELSE 0
-         END AS ge
-  FROM pstat p CROSS JOIN obs o
-)
-SELECT CAST(o.na AS BIGINT) AS n_a, CAST(o.nb AS BIGINT) AS n_b,
-       CAST(abs(CAST(o.sa AS HUGEINT) * o.nb - CAST(o.sb AS HUGEINT) * o.na) AS BIGINT)
-         AS t0_num_abs,
-       CAST(CAST(o.na AS HUGEINT) * o.nb AS BIGINT) AS t0_den,
-       CAST(32 AS BIGINT) AS n_perms,
-       CAST((SELECT SUM(ge) FROM cmp) AS BIGINT) AS n_ge,
-       CAST((1000000 * ((SELECT SUM(ge) FROM cmp) + 1)) // 33 AS BIGINT) AS p_e6
-FROM obs o
-""",
-)
-def randomization_test_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Monte-Carlo randomization test for a difference in group means
-    (purchase vs view values), the distribution-free significance test
-    that needs NO variance model: 32 deterministic relabelings of the
-    pooled sample, each drawn by an md5 hash of (perm, event_id) with
-    Bernoulli(n_a/n) label odds, rebuild the null distribution of
-    |mean_a - mean_b|; the p-value is the add-one-smoothed fraction of
-    relabelings at least as extreme as the observed labeling.  NOTE:
-    because each event's label is i.i.d. Bernoulli, a relabeling does
-    NOT preserve the observed group sizes -- this is a bootstrap-style
-    relabeling null (an unconditional approximation), not an exact
-    permutation test conditioned on (n_a, n_b); degenerate empty-group
-    draws are counted extreme, the conservative convention.  Mean
-    differences are never divided out: |S_a*n_b - S_b*n_a| / (n_a*n_b)
-    comparisons cross-multiply as exact DECIMAL(38,0)/HUGEINT rationals,
-    so both engines count the identical extreme set.  A degenerate
-    relabeling (one side empty, undefined statistic) counts as extreme --
-    the conservative convention.
-
-    Scale shape: the 32 relabelings ride one ``explode(sequence(...))``
-    over the pooled scan (x32 row inflation, the operator's honest
-    cost), a single groupBy(perm) with map-side partial aggregation
-    collapses them to 32 rows, and the observed totals ride a broadcast
-    single-row cross join -- no per-permutation pass over the data, no
-    driver loop.  Hash-derived labels mean a resumed or re-run job draws
-    the SAME null distribution (auditable p-values, unlike rand())."""
-    vals = (
-        load_table(spark, sf_dir, "events")
-        .where(F.col("event_type").isin("purchase", "view"))
-        .select(
-            "event_id",
-            F.expr("CAST(ROUND(value * 100, 0) AS BIGINT)").alias("cents"),
-            F.expr(
-                "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END"
-            ).alias("is_a"),
-        )
-    )
-    obs = vals.agg(
-        F.sum("is_a").cast("long").alias("na"),
-        F.expr("CAST(sum(1 - is_a) AS BIGINT)").alias("nb"),
-        F.expr("CAST(sum(CASE WHEN is_a = 1 THEN cents ELSE 0 END) AS BIGINT)").alias("sa"),
-        F.expr("CAST(sum(CASE WHEN is_a = 0 THEN cents ELSE 0 END) AS BIGINT)").alias("sb"),
-    )
-    rel = (
-        vals.select(
-            "event_id",
-            "cents",
-            F.explode(F.sequence(F.lit(0), F.lit(31))).alias("perm"),
-        )
-        .crossJoin(F.broadcast(obs))
-        .select(
-            "perm",
-            "cents",
-            F.expr(
-                "CASE WHEN CAST(conv(substr(md5(concat(CAST(perm AS STRING), '|',"
-                " CAST(event_id AS STRING))), 1, 15), 16, 10) AS BIGINT)"
-                " % (na + nb) < na THEN 1 ELSE 0 END"
-            ).alias("ra"),
-        )
-    )
-    pstat = rel.groupBy("perm").agg(
-        F.sum("ra").cast("long").alias("pna"),
-        F.expr("CAST(sum(1 - ra) AS BIGINT)").alias("pnb"),
-        F.expr("CAST(sum(CASE WHEN ra = 1 THEN cents ELSE 0 END) AS BIGINT)").alias("psa"),
-        F.expr("CAST(sum(CASE WHEN ra = 0 THEN cents ELSE 0 END) AS BIGINT)").alias("psb"),
-    )
-    cmp = pstat.crossJoin(F.broadcast(obs)).select(
-        F.expr(
-            "CASE WHEN pna = 0 OR pnb = 0 THEN 1"
-            " WHEN abs(CAST(psa AS DECIMAL(38,0)) * pnb - CAST(psb AS DECIMAL(38,0)) * pna)"
-            "      * (CAST(na AS DECIMAL(38,0)) * nb)"
-            "   >= abs(CAST(sa AS DECIMAL(38,0)) * nb - CAST(sb AS DECIMAL(38,0)) * na)"
-            "      * (CAST(pna AS DECIMAL(38,0)) * pnb)"
-            " THEN 1 ELSE 0 END"
-        ).alias("ge")
-    )
-    nge = cmp.agg(F.sum("ge").cast("long").alias("n_ge"))
-    return (
-        obs.crossJoin(F.broadcast(nge))
-        .select(
-            F.col("na").alias("n_a"),
-            F.col("nb").alias("n_b"),
-            F.expr(
-                "CAST(abs(CAST(sa AS DECIMAL(38,0)) * nb - CAST(sb AS DECIMAL(38,0)) * na)"
-                " AS BIGINT)"
-            ).alias("t0_num_abs"),
-            F.expr("CAST(CAST(na AS DECIMAL(38,0)) * nb AS BIGINT)").alias("t0_den"),
-            F.lit(32).cast("long").alias("n_perms"),
-            F.col("n_ge"),
-            F.expr("CAST((1000000 * (n_ge + 1)) div 33 AS BIGINT)").alias("p_e6"),
-        )
     )
 
 
@@ -3127,96 +1511,6 @@ def linkpred_topk_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.adamic_adar_topk(edges, k=20, sample_per_node=8)
 
 
-@register(
-    "file_provenance_report",
-    """
-SELECT 'documents.parquet' AS file_name,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(MIN(doc_id) AS BIGINT) AS min_doc_id,
-       CAST(MAX(doc_id) AS BIGINT) AS max_doc_id,
-       CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-       CAST(COUNT(*) AS BIGINT) AS n_row_idx,
-       CAST(0 AS BIGINT) AS min_row_idx,
-       CAST(COUNT(*) - 1 AS BIGINT) AS max_row_idx
-FROM documents
-""",
-)
-def file_provenance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-level provenance via the hidden ``_metadata`` struct (Spark's
-    file-source metadata columns): per physical file, row counts, id
-    ranges, and the row_index invariants (count-distinct == rows, min 0,
-    max n-1 -- within one file, Spark's _metadata.row_index is the dense
-    0-based physical position).  At 100 TB this is the "which file did
-    the bad rows come from" debugging query -- provenance rides the SAME
-    scan as the aggregate, no join against any manifest.
-
-    The _metadata struct only exists on the scan relation, so the query
-    reads the parquet directly (documents has no timestamp column, so no
-    nanos normalization is needed).  Oracle note: the testdata fixture is
-    one physical file per table at every scale, so the DuckDB replay pins
-    file_name to the literal basename; a multi-file layout would return
-    one row per file here and fail the gate loudly rather than silently
-    -- the single-file invariant is asserted, not assumed."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return (
-        df.select(
-            F.col("_metadata.file_name").alias("file_name"),
-            F.col("_metadata.row_index").alias("row_idx"),
-            "doc_id",
-            "n_chars",
-        )
-        .groupBy("file_name")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.min("doc_id").cast("long").alias("min_doc_id"),
-            F.max("doc_id").cast("long").alias("max_doc_id"),
-            F.sum("n_chars").cast("long").alias("sum_chars"),
-            F.countDistinct("row_idx").cast("long").alias("n_row_idx"),
-            F.min("row_idx").cast("long").alias("min_row_idx"),
-            F.max("row_idx").cast("long").alias("max_row_idx"),
-        )
-    )
-
-
-@register(
-    "sql_execute_immediate_report",
-    """
-WITH t AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM events),
-g AS (
-  SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
-  FROM events WHERE user_id % 7 = 0 GROUP BY event_type
-)
-SELECT g.event_type, g.n, g.sum_cents,
-       CAST((1000000 * g.n) // t.total AS BIGINT) AS share_e6
-FROM g CROSS JOIN t
-""",
-)
-def sql_execute_immediate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL session variables + EXECUTE IMMEDIATE (Spark 4): the statement
-    TEXT lives in a session variable, a scalar prequery lands in another
-    via INTO, and the report runs with a USING-bound parameter -- the
-    engine-native form of the reference's config-driven query templating
-    (and the injection-safe one: parameters bind as values, never splice
-    as strings; IDENTIFIER(:p) in sql_frontend_identifier covers the
-    name-position case).  DECLARE OR REPLACE keeps re-invocation
-    idempotent in a long-lived session."""
-    register_views(spark, sf_dir, ["events"])
-    spark.sql("DECLARE OR REPLACE VARIABLE total BIGINT")
-    spark.sql("EXECUTE IMMEDIATE 'SELECT COUNT(*) FROM events' INTO total")
-    spark.sql("DECLARE OR REPLACE VARIABLE rpt STRING")
-    spark.sql(
-        """
-        SET VAR rpt =
-          'SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-                  CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents,
-                  CAST((1000000 * COUNT(*)) div total AS BIGINT) AS share_e6
-           FROM events WHERE user_id % ? = 0 GROUP BY event_type'
-        """
-    )
-    return spark.sql("EXECUTE IMMEDIATE rpt USING 7")
-
-
 def _markov_oracle(iters: int = 8) -> str:
     """Unrolled k-step absorption replay: journeys -> transition counts ->
     (scenario x state) fixed-point iterations in e9 integer arithmetic,
@@ -3474,108 +1768,4 @@ def temperature_mixture_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "abs((1000000 * w_fp20) div w_tot - (1000000 * n_docs) div n_tot)"
         ).alias("drift_e6"),
-    )
-
-
-@register(
-    "fim_transform_manifest",
-    """
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\\S+') AS tk
-  FROM documents WHERE doc_id % 4 = 0
-),
-c AS (
-  SELECT doc_id, tk, len(tk) AS n,
-         ('0x' || substr(md5('fim1|' || doc_id), 1, 15))::BIGINT % (len(tk) + 1) AS h1,
-         ('0x' || substr(md5('fim2|' || doc_id), 1, 15))::BIGINT % (len(tk) + 1) AS h2
-  FROM t
-),
-cut AS (
-  SELECT doc_id, tk, n, LEAST(h1, h2) AS lo, GREATEST(h1, h2) AS hi FROM c
-),
-parts AS (
-  SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-         CAST(lo AS BIGINT) AS cut_lo, CAST(hi AS BIGINT) AS cut_hi,
-         COALESCE(array_to_string(tk[1 : lo], ' '), '') AS pre,
-         COALESCE(array_to_string(tk[lo + 1 : hi], ' '), '') AS mid,
-         -- DuckDB: array_to_string of an out-of-range empty slice (hi = n)
-         -- yields NULL, not '' -- Spark's array_join yields ''
-         COALESCE(array_to_string(tk[hi + 1 : n], ' '), '') AS suf
-  FROM cut
-)
-SELECT doc_id, n_tokens, cut_lo, cut_hi,
-       CAST(len(regexp_extract_all(pre, '\\S+'))
-            + len(regexp_extract_all(mid, '\\S+'))
-            + len(regexp_extract_all(suf, '\\S+')) AS BIGINT) AS n_reassembled,
-       md5('<PRE>' || pre || '<SUF>' || suf || '<MID>' || mid) AS psm_md5
-FROM parts
-""",
-)
-def fim_transform_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fill-in-the-middle (FIM) training transform (Bavarian et al. 2022):
-    each selected document is split at two md5-derived token cuts into
-    (prefix, middle, suffix) and re-serialized in PSM order with sentinel
-    markers -- the manifest a span-infilling pretraining run consumes.
-    Hash-derived cuts make the transform REPLAYABLE (a resumed or
-    re-sharded job cuts every document identically -- rand() would not),
-    and the DuckDB oracle rebuilds the exact PSM string per document, so
-    the md5 column hash-verifies the whole reassembly cross-engine.  The
-    n_reassembled column carries the losslessness invariant in-row
-    (token count preserved across the three spans).
-
-    All JVM expressions: regexp token split, slice/array_join, md5 -- a
-    map-only plan with no shuffle and no Python; at 100 TB this runs at
-    scan speed, which is the point of doing FIM in the engine instead of
-    the training loader."""
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 4 == 0)
-        .select("doc_id", F.expr("regexp_extract_all(text, r'\\S+', 0)").alias("tk"))
-    )
-    c = docs.select(
-        "doc_id",
-        "tk",
-        F.expr("size(tk)").alias("n"),
-        F.expr(
-            "CAST(conv(substr(md5(concat('fim1|', CAST(doc_id AS STRING))), 1, 15),"
-            " 16, 10) AS BIGINT) % (size(tk) + 1)"
-        ).alias("h1"),
-        F.expr(
-            "CAST(conv(substr(md5(concat('fim2|', CAST(doc_id AS STRING))), 1, 15),"
-            " 16, 10) AS BIGINT) % (size(tk) + 1)"
-        ).alias("h2"),
-    )
-    cut = c.select(
-        "doc_id",
-        "tk",
-        "n",
-        F.least("h1", "h2").alias("lo"),
-        F.greatest("h1", "h2").alias("hi"),
-    )
-    parts = cut.select(
-        "doc_id",
-        F.col("n").cast("long").alias("n_tokens"),
-        F.col("lo").cast("long").alias("cut_lo"),
-        F.col("hi").cast("long").alias("cut_hi"),
-        F.expr("array_join(slice(tk, 1, CAST(lo AS INT)), ' ')").alias("pre"),
-        F.expr(
-            "array_join(slice(tk, CAST(lo + 1 AS INT), CAST(hi - lo AS INT)), ' ')"
-        ).alias("mid"),
-        F.expr(
-            "array_join(slice(tk, CAST(hi + 1 AS INT), CAST(n - hi AS INT)), ' ')"
-        ).alias("suf"),
-    )
-    return parts.select(
-        "doc_id",
-        "n_tokens",
-        "cut_lo",
-        "cut_hi",
-        F.expr(
-            "CAST(size(regexp_extract_all(pre, r'\\S+', 0))"
-            " + size(regexp_extract_all(mid, r'\\S+', 0))"
-            " + size(regexp_extract_all(suf, r'\\S+', 0)) AS BIGINT)"
-        ).alias("n_reassembled"),
-        F.expr(
-            "md5(concat('<PRE>', pre, '<SUF>', suf, '<MID>', mid))"
-        ).alias("psm_md5"),
     )

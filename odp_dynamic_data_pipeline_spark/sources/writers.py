@@ -22,50 +22,26 @@ def write_parquet(df: DataFrame, path: str, *, partition_by: list[str] | None = 
 
 def write_bucketed_table(
     df: DataFrame,
+    path: str,
     table: str,
     bucket_cols: list[str] | str,
     *,
     num_buckets: int = 32,
-    sort_cols: list[str] | str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Bucketed (hash-clustered) parquet table registered in the session
-    catalog.  Two tables bucketed on the same key with the same bucket count
-    join WITHOUT a shuffle -- the 100 TB answer for fact-to-fact joins that
-    recur on the same key (broadcast only covers dimension-sized sides)."""
+    """Bucketed (hash-clustered) parquet data at ``path``, registered in the
+    session catalog as the external table ``table`` (overwritten).  Two
+    tables bucketed on the same key with the same bucket count join WITHOUT
+    a shuffle -- the 100 TB answer for fact-to-fact joins that recur on the
+    same key (broadcast only covers dimension-sized sides)."""
     if isinstance(bucket_cols, str):
         bucket_cols = [bucket_cols]
-    spark = df.sparkSession
-    if mode == "overwrite" and not spark.catalog.tableExists(table):
-        # An orphaned warehouse directory (crashed run: location written but
-        # catalog entry never committed) makes saveAsTable throw
-        # LOCATION_ALREADY_EXISTS and DROP TABLE can't clear it; remove it.
-        import shutil
-        import warnings
-        from urllib.parse import urlparse
-
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-        root = wh.path or wh.netloc
-        # db-qualified tables live under <warehouse>/<db>.db/<table>;
-        # unqualified ones resolve against the session's CURRENT database
-        parts = table.lower().split(".")
-        db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase().lower()
-        sub = [] if db == "default" else [f"{db}.db"]
-        loc = os.path.join(root, *sub, parts[-1])
-        if os.path.isdir(loc):
-            warnings.warn(
-                f"write_bucketed_table: removing orphaned location {loc} "
-                f"(directory exists but {table} is not in the catalog)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            shutil.rmtree(loc, ignore_errors=True)
-    w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        if isinstance(sort_cols, str):
-            sort_cols = [sort_cols]
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
+    (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .option("path", path)
+        .bucketBy(num_buckets, *bucket_cols)
+        .saveAsTable(table)
+    )
 
 
 def write_orc(df: DataFrame, path: str, *, partition_by: list[str] | None = None, mode: str = "overwrite") -> None:

@@ -14,8 +14,8 @@ SF = "/root/testdata/sf0.001"
 def test_bucketed_join_no_shuffle(spark, tmp_path):
     li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_extendedprice")
     o = load_table(spark, SF, "orders").select("o_orderkey", "o_orderstatus")
-    write_bucketed_table(li, "li_b", "l_orderkey", num_buckets=4)
-    write_bucketed_table(o, "o_b", "o_orderkey", num_buckets=4)
+    write_bucketed_table(li, str(tmp_path / "li_b"), "li_b", "l_orderkey", num_buckets=4)
+    write_bucketed_table(o, str(tmp_path / "o_b"), "o_b", "o_orderkey", num_buckets=4)
     try:
         # AQE can hide bucket scans behind adaptive plans; read final plan
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -33,28 +33,36 @@ def test_bucketed_join_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS o_b")
 
 
-def test_bucketed_orphan_cleanup_db_qualified(spark):
-    """A crashed run's orphaned location under <warehouse>/<db>.db/<table>
-    must be detected for DB-QUALIFIED names too (the pre-r5 path resolver
-    only looked at <warehouse>/<table>, so saveAsTable kept throwing
-    LOCATION_ALREADY_EXISTS), and the deletion must be announced."""
-    import os
-    import warnings
-    from urllib.parse import urlparse
-
+def test_bucketed_orphan_cleanup_db_qualified(spark, tmp_path):
+    """A crashed run leaves its data directory behind with no catalog
+    entry; the next DB-QUALIFIED overwrite onto that directory must still
+    succeed and hold only the new rows (the table is external, so its
+    location is the caller's path, never a warehouse path to clean up)."""
     li = load_table(spark, SF, "lineitem").select("l_orderkey").limit(10)
     spark.sql("CREATE DATABASE IF NOT EXISTS odp_tdb")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
-    loc = os.path.join(wh.path or wh.netloc, "odp_tdb.db", "orph_b")
-    os.makedirs(loc, exist_ok=True)
-    with open(os.path.join(loc, "junk"), "w") as f:
-        f.write("x")
+    loc = tmp_path / "orph_b"
+    loc.mkdir()
+    (loc / "junk").write_text("x")
     try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            write_bucketed_table(li, "odp_tdb.orph_b", "l_orderkey", num_buckets=2)
-        assert any("orphaned location" in str(w.message) for w in caught)
+        write_bucketed_table(li, str(loc), "odp_tdb.orph_b", "l_orderkey", num_buckets=2)
         assert spark.table("odp_tdb.orph_b").count() == 10
     finally:
         spark.sql("DROP TABLE IF EXISTS odp_tdb.orph_b")
         spark.sql("DROP DATABASE IF EXISTS odp_tdb")
+
+
+def test_bucketed_join_revenue_writes_nothing_to_warehouse(spark):
+    """The bucketed-join query writes its tables under a scratch directory,
+    so running it leaves no table directory under the session warehouse."""
+    import os
+    from urllib.parse import urlparse
+
+    from odp_dynamic_data_pipeline_spark.queries import SPARK_QUERIES
+
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
+    root = wh.path or wh.netloc
+    before = set(os.listdir(root))
+    assert SPARK_QUERIES["bucketed_join_revenue"](spark, SF).count() == 5
+    after = set(os.listdir(root))
+    assert not {"odp_li_bkt", "odp_ord_bkt"} & after
+    assert after <= before

@@ -203,19 +203,10 @@ def test_coverage_inventory_complete():
     assert not unknown, f"COVERAGE.md cites unregistered queries as *oracle*: {unknown}"
 
 
-def test_cogroup_attribution_keys_on_buckets(spark):
-    """The r6 bucketing win must stay in the plan: the cogroup's Python
-    stage groups on the 64-way bucket column, NOT raw user_id (per-group
-    Arrow machinery scales with group count -- PLANS.md adjudication)."""
-    plan = plan_of(spark, "cogroup_attribution_windows")
-    m = re.search(r"FlatMapCoGroupsInPandas \[([a-zA-Z_0-9#L]+)\], \[([a-zA-Z_0-9#L]+)\]", plan)
-    assert m, plan[:800]
-    assert m.group(1).startswith("bucket") and m.group(2).startswith("bucket"), m.groups()
-
-
 def test_sessionize_exact_pandas_keys_on_buckets(spark):
-    """Same guard for the bucketed register walk: FlatMapGroupsInPandas
-    must key on the synthetic __pv_bucket, not the raw user key."""
+    """The bucketed register walk's FlatMapGroupsInPandas must key on the
+    synthetic __pv_bucket, not the raw user key (per-group Arrow machinery
+    scales with group count)."""
     plan = plan_of(spark, "sessionize_exact_pandas")
     m = re.search(r"FlatMapGroupsInPandas \[([a-zA-Z_0-9#L]+)\]", plan)
     assert m, plan[:800]

@@ -1,21 +1,26 @@
-"""Every definition in ``streaming/`` and ``queries/relational2.py`` is
-reached from non-test code.
+"""Every definition in ``streaming/``, ``queries/relational2.py`` and
+``queries/surfaces.py`` is reached from non-test code.
 
 A stdlib-``ast`` scan in the style of ``test_unused_imports.py``: each
 top-level ``def``, ``class`` or single-name assignment in
-``odp_dynamic_data_pipeline_spark/streaming/`` and
-``odp_dynamic_data_pipeline_spark/queries/relational2.py``, and each
-non-dunder method of a top-level class, must be referenced -- as
-a name, an attribute or an imported name -- from non-test code: the
-package (without ``streaming/__init__.py``, whose re-exports alone do not
-make a definition reachable), ``perfbench/``, ``tools/`` and
-``__spark_entry__.py``.  A definition's references to itself (recursion)
-do not count.  Methods are matched by name, so a method counts as reached
-when any non-test code names that attribute.  A ``@register``-decorated
-query counts as reached: the registry calls it by name lookup, so only
-the helpers and constants it uses must be found by the scan.  Code that
-only tests call does not belong in the streaming surface, and a query
-module keeps no helper that its queries stopped using."""
+``odp_dynamic_data_pipeline_spark/streaming/``,
+``odp_dynamic_data_pipeline_spark/queries/relational2.py`` and
+``odp_dynamic_data_pipeline_spark/queries/surfaces.py``, and each non-dunder
+method of a top-level class, must be referenced from non-test code: the
+package, ``perfbench/``, ``tools/`` and ``__spark_entry__.py``.
+
+Top-level names resolve by module.  A name defined in module ``M`` counts
+as reached only if ``M`` itself names it outside the definition's own span
+(so recursion does not count), another file imports it with ``from M
+import name`` (directly or through a package ``__init__`` that re-exports
+it), or another file names ``X.name`` with ``X`` an alias of module ``M``.
+A package ``__init__``'s own re-exports do not count as uses.  Methods are
+matched by name, so a method counts as reached when any non-test code
+names that attribute.  A ``@register``-decorated query counts as reached:
+the registry calls it by name lookup, so only the helpers and constants
+it uses must be found by the scan.  Code that only tests call does not
+belong in the streaming surface, and a query module keeps no helper that
+its queries stopped using."""
 
 from __future__ import annotations
 
@@ -25,14 +30,103 @@ import pathlib
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 STREAMING = ROOT / "odp_dynamic_data_pipeline_spark" / "streaming"
 RELATIONAL2 = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "relational2.py"
+SURFACES = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "surfaces.py"
 
 
 def non_test_sources() -> list[pathlib.Path]:
     files = sorted(STREAMING.parent.rglob("*.py"))
-    files = [p for p in files if p != STREAMING / "__init__.py"]
     files += sorted((ROOT / "perfbench").rglob("*.py")) + sorted((ROOT / "tools").rglob("*.py"))
     files.append(ROOT / "__spark_entry__.py")
     return [p for p in files if not p.name.startswith("test_")]
+
+
+def _root(path: pathlib.Path) -> pathlib.Path:
+    """Import root of a file: the first ancestor directory that is not a
+    package."""
+    d = path.parent
+    while (d / "__init__.py").is_file():
+        d = d.parent
+    return d
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = list(path.relative_to(_root(path)).with_suffix("").parts)
+    if parts[-1] == "__init__" and len(parts) > 1:
+        parts.pop()
+    return ".".join(parts)
+
+
+def _find(module: str, path: pathlib.Path) -> pathlib.Path | None:
+    """File of ``module`` as imported from ``path``: looked up under the
+    importing file's root, then the repo root (scripts put it on sys.path)."""
+    for root in (_root(path), ROOT):
+        base = root.joinpath(*module.split("."))
+        for f in (base.with_suffix(".py"), base / "__init__.py"):
+            if f.is_file():
+                return f
+    return None
+
+
+def _import_base(node: ast.ImportFrom, path: pathlib.Path) -> str:
+    """Absolute module of ``from <base> import ...``, relative levels resolved
+    against the importing file's package."""
+    if not node.level:
+        return node.module or ""
+    pkg = _module_name(path).split(".")
+    if path.name != "__init__.py":
+        pkg = pkg[:-1]
+    pkg = pkg[: len(pkg) - (node.level - 1)]
+    return ".".join(pkg + ([node.module] if node.module else []))
+
+
+def _resolve(module: str, name: str, path: pathlib.Path) -> tuple[str, str]:
+    """Follow package ``__init__`` re-exports (``from .m import name``) to
+    the module that defines ``name``."""
+    init = _find(module, path)
+    if init is not None and init.name == "__init__.py":
+        for node in ast.parse(init.read_text()).body:
+            if isinstance(node, ast.ImportFrom):
+                for a in node.names:
+                    if (a.asname or a.name) == name:
+                        base = _import_base(node, init)
+                        if _find(f"{base}.{a.name}", init) is None:
+                            return _resolve(base, a.name, init)
+    return module, name
+
+
+def _dotted(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        head = _dotted(node.value)
+        return f"{head}.{node.attr}" if head else None
+    return None
+
+
+def _module_refs(path: pathlib.Path) -> set[tuple[str, str]]:
+    """(module, name) pairs ``path`` reaches: each ``from M import name``
+    and each ``X.name`` with ``X`` an alias of module ``M``, re-exports
+    followed.  A package ``__init__``'s own top-level ``from M import name``
+    is a re-export, not a use."""
+    tree = ast.parse(path.read_text())
+    reexports = set(tree.body) if path.name == "__init__.py" else set()
+    aliases: dict[str, str] = {}
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                aliases[a.asname or a.name] = a.name
+        elif isinstance(node, ast.ImportFrom):
+            base = _import_base(node, path)
+            for a in node.names:
+                if _find(f"{base}.{a.name}", path) is not None:
+                    aliases[a.asname or a.name] = f"{base}.{a.name}"
+                elif node not in reexports:
+                    out.add(_resolve(base, a.name, path))
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and (module := aliases.get(_dotted(node.value))):
+            out.add(_resolve(module, node.attr, path))
+    return out
 
 
 def _references(path: pathlib.Path) -> list[tuple[str, int]]:
@@ -81,18 +175,30 @@ def _registered(node: ast.AST) -> bool:
 
 def unreached(defining: list[pathlib.Path], sources: list[pathlib.Path]) -> list[str]:
     refs = {p: _references(p) for p in sources}
+    module_refs = {p: _module_refs(p) for p in sources}
     out = []
     for path in defining:
-        for qualname, node in _definitions(ast.parse(path.read_text())):
+        tree = ast.parse(path.read_text())
+        module = _module_name(path)
+        own_names = [(n.id, n.lineno) for n in ast.walk(tree) if isinstance(n, ast.Name)]
+        for qualname, node in _definitions(tree):
             if _registered(node):
                 continue
-            own = qualname.rsplit(".", 1)[-1]
             span = range(node.lineno, node.end_lineno + 1)
-            if not any(
-                name == own and not (p == path and line in span)
-                for p, rs in refs.items()
-                for name, line in rs
-            ):
+            if "." in qualname:  # a method: matched by attribute name anywhere
+                own = qualname.rsplit(".", 1)[-1]
+                reached = any(
+                    name == own and not (p == path and line in span)
+                    for p, rs in refs.items()
+                    for name, line in rs
+                )
+            else:
+                reached = any(
+                    name == qualname and line not in span for name, line in own_names
+                ) or any(
+                    (module, qualname) in mr for p, mr in module_refs.items() if p != path
+                )
+            if not reached:
                 out.append(f"{path.name}:{node.lineno} {qualname}")
     return out
 
@@ -131,8 +237,38 @@ def test_scan_counts_a_registered_query_as_reached(tmp_path):
     assert unreached([mod], [mod]) == ["m.py:5 _ORPHAN_SQL", "m.py:10 _orphan"]
 
 
+def test_scan_resolves_names_by_module(tmp_path):
+    """Both modules define ``_h``; only ``a``'s is used.  ``b._h`` is
+    flagged although a same-named ``_h`` is called elsewhere."""
+    a = tmp_path / "a.py"
+    a.write_text("def _h():\n    return 1\n\ndef f():\n    return _h()\n")
+    b = tmp_path / "b.py"
+    b.write_text("def _h():\n    return 2\n\ndef g():\n    return 3\n")
+    caller = tmp_path / "caller.py"
+    caller.write_text("import a as mod_a\nfrom b import g\nmod_a.f()\ng()\n")
+    assert unreached([a, b], [a, b, caller]) == ["b.py:1 _h"]
+
+
+def test_scan_follows_package_reexports(tmp_path):
+    """``from pkg import run`` reaches ``pkg/impl.py::run`` through the
+    package's re-export; the re-export alone reaches nothing."""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    init = pkg / "__init__.py"
+    init.write_text("from .impl import run, stop\n")
+    impl = pkg / "impl.py"
+    impl.write_text("def run():\n    pass\n\ndef stop():\n    pass\n")
+    caller = tmp_path / "caller.py"
+    caller.write_text("from pkg import run\nrun()\n")
+    assert unreached([impl], [init, impl, caller]) == ["impl.py:4 stop"]
+
+
 def test_relational2_definitions_are_reached_from_non_test_code():
     assert unreached([RELATIONAL2], non_test_sources()) == []
+
+
+def test_surfaces_definitions_are_reached_from_non_test_code():
+    assert unreached([SURFACES], non_test_sources()) == []
 
 
 def test_streaming_definitions_are_reached_from_non_test_code():

@@ -1,5 +1,5 @@
-"""Direct tests of the Arrow batch kernels that the registry's
-mapInArrow / applyInArrow queries run on the Python workers."""
+"""Direct tests of the Arrow batch kernel that the registry's mapInArrow
+query runs on the Python workers."""
 
 from __future__ import annotations
 
@@ -46,21 +46,3 @@ def test_arrow_norm_kernel_empty_and_sliced_lists():
     # sliced ListArray: offsets index the PARENT values buffer
     sliced = batch.slice(2, 2)
     assert run(sliced) == exp[2:]
-
-
-def test_applyinarrow_kernel_direct():
-    import pyarrow as pa
-
-    from odp_dynamic_data_pipeline_spark.queries.surfaces import arrow_lang_stats
-
-    t = pa.table(
-        {
-            "lang": pa.array(["en", "en", "en"]),
-            "source": pa.array(["web", "web", "books"]),
-            "n_chars": pa.array([10, 20, 5], pa.int64()),
-        }
-    )
-    out = arrow_lang_stats(t)
-    assert out.to_pylist() == [
-        {"lang": "en", "n_docs": 3, "sum_chars": 35, "max_chars": 20, "n_sources": 2}
-    ]

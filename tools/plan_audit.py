@@ -66,9 +66,7 @@ BROADCAST_NLJ_BY_DESIGN = {
     "chi2_independence_lang_source",  # lang-marginal x source-marginal lattice (L*S rows), both broadcast aggs
     "degree_powerlaw_fit",         # single-row log-log moment broadcast over the degree histogram
     "ks_test_value_drift",         # single-row totals + single-row max-D broadcasts over the support
-    "cusum_changepoints",          # single-row (total, n_hours) broadcast over the hourly rollup
     "cluster_aware_split",         # two single-row report halves (split sizes x leak counts) crossed
-    "randomization_test_means",    # single-row observed-totals + single-row extreme-count broadcasts
     "exact_quantiles_events",      # single-row grand-total broadcast over the distinct-value rollup
 }
 # queries where a GLOBAL (unpartitioned) window is safe: its input is
@@ -94,9 +92,6 @@ GLOBAL_WINDOW_BOUNDED = {
     "zipf_head_coverage",      # cumulative share over top-k tokens
     "dataset_card_report",     # ordered rows of a fixed-size report
     "categorical_index_langs", # frequency rank over the distinct-lang vocab (bounded)
-    "topk_sketch_tokens",      # rank over the VOCAB table (corpus already reduced), limit 20
-    "cusum_changepoints",      # prefix/min/max frames over the calendar-hour rollup (bounded by horizon, not data)
-    "pareto_frontier_parts",   # running min over the distinct-size rollup (bounded by the size domain, not data)
 }
 
 
