@@ -204,8 +204,8 @@ def sessionize_capped(
     duration cap (the web-analytics rule: a session ends after ``gap_s``
     of silence OR when it has lasted ``cap_s`` since its FIRST event).
 
-    Unlike the pure gap rule (session_gap_windows: one lag + one running
-    sum, all window algebra), the cap makes the walk inherently
+    Unlike the pure gap rule (one lag + one running sum, all window
+    algebra), the cap makes the walk inherently
     sequential: each split's position depends on the previous session's
     ANCHOR, which itself moves at every split -- a data-dependent
     recurrence with no prefix-scan closed form.  So this runs as the

@@ -411,55 +411,6 @@ def stream_stream_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "pivot_event_counts",
-    """
-SELECT user_id,
-       COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-       COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view,
-       COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-       COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-       COUNT(CASE WHEN event_type = 'signup' THEN 1 END) AS signup
-FROM events GROUP BY user_id
-""",
-)
-def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (long -> wide) with an explicit value list -- at scale always
-    enumerate pivot values; value discovery is an extra job."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase", "error", "signup"])
-        .count()
-        .na.fill(0)
-    )
-
-
-@register(
-    "customer_order_gaps",
-    """
-SELECT o_custkey, o_orderkey,
-       epoch_us(o_orderdate) - epoch_us(lag(o_orderdate) OVER w) AS gap_us
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-""",
-)
-def customer_order_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag() window: microseconds since the customer's previous order
-    (null for the first)."""
-    # o_orderdate reads as TIMESTAMP_NTZ; unix_micros needs TIMESTAMP --
-    # the cast is exact under the engine's UTC session timezone
-    o = load_table(spark, sf_dir, "orders").withColumn(
-        "ots", F.col("o_orderdate").cast("timestamp")
-    )
-    w = Window.partitionBy("o_custkey").orderBy("ots", "o_orderkey")
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        (F.unix_micros("ots") - F.unix_micros(F.lag("ots").over(w))).alias("gap_us"),
-    )
-
-
-@register(
     "sessionize_exact_pandas",
     """
 WITH p AS (
@@ -509,43 +460,6 @@ def sessionize_exact_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         # integer count of micros, so rounding undoes the double's last-ulp
         # error; a bare cast would truncate one low
         F.round(F.col("page_view_duration") * 1_000_000, 0).cast("long").alias("dur_us"),
-    )
-
-
-@register(
-    "q19_or_pushdown",
-    """
-SELECT COUNT(*) AS n_rows,
-       CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
-                * (100 - CAST(ROUND(l.l_discount * 100, 0) AS BIGINT))) AS DOUBLE)
-         / 10000.0 AS revenue
-FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-WHERE (p.p_brand = 'Brand#1' AND p.p_size <= 10 AND l.l_quantity >= 1 AND l.l_quantity <= 20)
-   OR (p.p_brand = 'Brand#2' AND p.p_size <= 20 AND l.l_quantity >= 10 AND l.l_quantity <= 30)
-""",
-)
-def q19_or_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape: disjunction of conjunctive predicates across a join
-    -- Catalyst factors the OR into per-side pushable filters."""
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity",
-        (_cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))).alias("rev_e4"),
-    )
-    # no broadcast hint: part scales with the corpus (unlike nation/region);
-    # the autoBroadcastJoinThreshold/AQE picks broadcast at small scale and
-    # falls back to shuffle join at 100 TB instead of OOMing on a forced hint
-    j = l.join(p, l["l_partkey"] == p["p_partkey"])
-    cond = (
-        (F.col("p_brand") == "Brand#1") & (F.col("p_size") <= 10)
-        & (F.col("l_quantity") >= 1) & (F.col("l_quantity") <= 20)
-    ) | (
-        (F.col("p_brand") == "Brand#2") & (F.col("p_size") <= 20)
-        & (F.col("l_quantity") >= 10) & (F.col("l_quantity") <= 30)
-    )
-    return j.where(cond).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        (F.sum(F.col("rev_e4").cast("decimal(38,0)")).cast("double") / F.lit(10000.0)).alias("revenue"),
     )
 
 
@@ -701,181 +615,6 @@ def correlate_star_3way(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q1_pricing_summary",
-    """
-WITH s AS (
-  SELECT l_returnflag, l_linestatus,
-         CAST(ROUND(l_quantity * 100, 0) AS BIGINT) AS qty_c,
-         CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS price_c,
-         CAST(ROUND(l_discount * 100, 0) AS BIGINT) AS disc_pct,
-         CAST(ROUND(l_tax * 100, 0) AS BIGINT) AS tax_pct
-  FROM lineitem
-  WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-)
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(qty_c) AS DOUBLE) / 100.0 AS sum_qty,
-       CAST(SUM(price_c) AS DOUBLE) / 100.0 AS sum_base_price,
-       CAST(SUM(price_c * (100 - disc_pct)) AS DOUBLE) / 10000.0 AS sum_disc_price,
-       CAST(SUM(price_c * (100 - disc_pct) * (100 + tax_pct)) AS DOUBLE) / 1000000.0 AS sum_charge,
-       CAST(SUM(qty_c) AS DOUBLE) / 100.0 / COUNT(*) AS avg_qty,
-       CAST(SUM(price_c) AS DOUBLE) / 100.0 / COUNT(*) AS avg_price,
-       CAST(SUM(disc_pct) AS DOUBLE) / 100.0 / COUNT(*) AS avg_disc,
-       COUNT(*) AS count_order
-FROM s GROUP BY l_returnflag, l_linestatus
-""",
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: scan-filter-aggregate.  Filter reaches the parquet
-    scan (PushedFilters); one shuffle on a 6-value group key; all arithmetic
-    on exact scaled integers."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") <= F.expr("TIMESTAMP '1998-09-02 00:00:00'")
-    )
-    s = li.select(
-        "l_returnflag",
-        "l_linestatus",
-        _cents("l_quantity").alias("qty_c"),
-        _cents("l_extendedprice").alias("price_c"),
-        _cents("l_discount").alias("disc_pct"),
-        _cents("l_tax").alias("tax_pct"),
-    )
-    agg = s.groupBy("l_returnflag", "l_linestatus").agg(
-        # decimal(38,0) accumulators: per-row terms reach 1e11 (charge_e6);
-        # an int64 sum overflows past ~1e7 rows per group -- a morning of
-        # data at 100 TB.  Exact and order-independent either way.
-        F.sum(F.col("qty_c").cast("decimal(38,0)")).alias("sum_qty_c"),
-        F.sum(F.col("price_c").cast("decimal(38,0)")).alias("sum_price_c"),
-        F.sum((F.col("price_c") * (F.lit(100) - F.col("disc_pct"))).cast("decimal(38,0)")).alias("sum_disc_e4"),
-        F.sum(
-            (F.col("price_c") * (F.lit(100) - F.col("disc_pct")) * (F.lit(100) + F.col("tax_pct"))).cast("decimal(38,0)")
-        ).alias("sum_charge_e6"),
-        F.sum(F.col("disc_pct").cast("decimal(38,0)")).alias("sum_disc_pct"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-    return agg.select(
-        "l_returnflag",
-        "l_linestatus",
-        (F.col("sum_qty_c").cast("double") / F.lit(100.0)).alias("sum_qty"),
-        (F.col("sum_price_c").cast("double") / F.lit(100.0)).alias("sum_base_price"),
-        (F.col("sum_disc_e4").cast("double") / F.lit(10000.0)).alias("sum_disc_price"),
-        (F.col("sum_charge_e6").cast("double") / F.lit(1000000.0)).alias("sum_charge"),
-        (F.col("sum_qty_c").cast("double") / F.lit(100.0) / F.col("count_order")).alias("avg_qty"),
-        (F.col("sum_price_c").cast("double") / F.lit(100.0) / F.col("count_order")).alias("avg_price"),
-        (F.col("sum_disc_pct").cast("double") / F.lit(100.0) / F.col("count_order")).alias("avg_disc"),
-        "count_order",
-    )
-
-
-@register(
-    "q3_shipping_priority",
-    """
-SELECT l.l_orderkey,
-       CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
-                * (100 - CAST(ROUND(l.l_discount * 100, 0) AS BIGINT))) AS DOUBLE)
-         / 10000.0 AS revenue,
-       strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
-       o.o_orderpriority
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE c.c_mktsegment = 'BUILDING'
-  AND o.o_orderdate < TIMESTAMP '1997-06-01 00:00:00'
-  AND l.l_shipdate > TIMESTAMP '1997-06-01 00:00:00'
-GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
-ORDER BY SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
-             * (100 - CAST(ROUND(l.l_discount * 100, 0) AS BIGINT))) DESC,
-         o.o_orderdate, l.l_orderkey
-LIMIT 10
-""",
-)
-def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape: selective join + top-k.  Deterministic LIMIT via
-    integer revenue + orderkey tie-break."""
-    c = load_table(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    o = load_table(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.expr("TIMESTAMP '1997-06-01 00:00:00'")
-    )
-    l = load_table(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.expr("TIMESTAMP '1997-06-01 00:00:00'")
-    )
-    joined = (
-        c.select("c_custkey")
-        .join(o.select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"),
-              c["c_custkey"] == o["o_custkey"])
-        .join(
-            l.select(
-                "l_orderkey",
-                (_cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))).alias("rev_e4"),
-            ),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-    )
-    agg = joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(
-        F.sum("rev_e4").alias("rev_e4")
-    )
-    return (
-        agg.orderBy(F.col("rev_e4").desc(), F.col("o_orderdate"), F.col("l_orderkey"))
-        .limit(10)
-        .select(
-            "l_orderkey",
-            (F.col("rev_e4").cast("double") / F.lit(10000.0)).alias("revenue"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
-            "o_orderpriority",
-        )
-    )
-
-
-@register(
-    "q5_regional_revenue",
-    """
-SELECT n.n_name,
-       CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
-                * (100 - CAST(ROUND(l.l_discount * 100, 0) AS BIGINT))) AS DOUBLE)
-         / 10000.0 AS revenue
-FROM region r
-JOIN nation n ON n.n_regionkey = r.r_regionkey
-JOIN customer c ON c.c_nationkey = n.n_nationkey
-JOIN orders o ON o.o_custkey = c.c_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey AND s.s_nationkey = c.c_nationkey
-WHERE r.r_name = 'ASIA'
-  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY n.n_name
-""",
-)
-def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: 6-way star join; dims broadcast, fact shuffles once."""
-    r = load_table(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    n = load_table(spark, sf_dir, "nation")
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.expr("TIMESTAMP '1996-01-01 00:00:00'"))
-        & (F.col("o_orderdate") < F.expr("TIMESTAMP '1998-01-01 00:00:00'"))
-    )
-    l = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    joined = (
-        l.select("l_orderkey", "l_suppkey",
-                 (_cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))).alias("rev_e4"))
-        .join(o.select("o_orderkey", "o_custkey"), F.col("l_orderkey") == F.col("o_orderkey"))
-        # customer/supplier scale with the data -- no forced broadcast; the
-        # size threshold/AQE broadcasts them while small, shuffles at 100 TB
-        .join(c.select("c_custkey", "c_nationkey"), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            s.select("s_suppkey", "s_nationkey"),
-            (F.col("s_suppkey") == F.col("l_suppkey")) & (F.col("s_nationkey") == F.col("c_nationkey")),
-        )
-        .join(F.broadcast(n.select("n_nationkey", "n_name", "n_regionkey")),
-              F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r.select("r_regionkey")), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    return joined.groupBy("n_name").agg(
-        (F.sum(F.col("rev_e4").cast("decimal(38,0)")).cast("double") / F.lit(10000.0)).alias("revenue")
-    )
-
-
-@register(
     "window_topk_customers",
     """
 SELECT c_mktsegment, c_custkey, total_cents, rk FROM (
@@ -935,207 +674,6 @@ def running_total_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "trailing_30d_revenue",
-    """
-SELECT o_custkey, o_orderkey,
-       CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) OVER (
-         PARTITION BY o_custkey ORDER BY epoch_us(o_orderdate)
-         RANGE BETWEEN 2592000000000 PRECEDING AND CURRENT ROW
-       ) AS BIGINT) AS trailing_cents
-FROM orders
-""",
-)
-def trailing_30d_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE-frame window: 30-day trailing revenue per customer -- the frame
-    is defined by event-time VALUE distance (micros), not row count, so
-    same-day orders aggregate together regardless of ordering."""
-    o = load_table(spark, sf_dir, "orders").withColumn(
-        "ts_us", F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-    )
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("ts_us")
-        .rangeBetween(-30 * 24 * 3600 * 1_000_000, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(_cents("o_totalprice")).over(w).alias("trailing_cents"),
-    )
-
-
-@register(
-    "customer_quartiles",
-    """
-SELECT c_custkey, c_mktsegment,
-       ntile(4) OVER w AS quartile,
-       percent_rank() OVER w AS pct_rank
-FROM customer
-WINDOW w AS (PARTITION BY c_mktsegment
-             ORDER BY CAST(ROUND(c_acctbal * 100, 0) AS BIGINT), c_custkey)
-""",
-)
-def customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking windows: ntile + percent_rank over a deterministic total
-    order (cents, custkey tie-break)."""
-    c = load_table(spark, sf_dir, "customer").withColumn("cents", _cents("c_acctbal"))
-    w = Window.partitionBy("c_mktsegment").orderBy("cents", "c_custkey")
-    return c.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.ntile(4).over(w).alias("quartile"),
-        F.percent_rank().over(w).alias("pct_rank"),
-    )
-
-
-@register(
-    "rollup_revenue",
-    """
-SELECT COALESCE(r.r_name, 'ALL') AS region_name,
-       COALESCE(n.n_name, 'ALL') AS nation_name,
-       CAST(SUM(CAST(ROUND(o.o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS revenue_cents,
-       COUNT(*) AS n_orders
-FROM orders o
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN nation n ON n.n_nationkey = c.c_nationkey
-JOIN region r ON r.r_regionkey = n.n_regionkey
-GROUP BY ROLLUP(r.r_name, n.n_name)
-""",
-)
-def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical rollup aggregation (region -> nation -> total)."""
-    o = load_table(spark, sf_dir, "orders").select("o_custkey", _cents("o_totalprice").alias("cents"))
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = load_table(spark, sf_dir, "region")
-    joined = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])  # customer scales: no forced broadcast
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
-    )
-    return (
-        joined.rollup("r_name", "n_name")
-        .agg(F.sum("cents").alias("revenue_cents"), F.count(F.lit(1)).alias("n_orders"))
-        .select(
-            F.coalesce("r_name", F.lit("ALL")).alias("region_name"),
-            F.coalesce("n_name", F.lit("ALL")).alias("nation_name"),
-            "revenue_cents",
-            "n_orders",
-        )
-    )
-
-
-@register(
-    "set_except_customers",
-    """
-SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'O'
-EXCEPT
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""",
-)
-def set_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set operation: EXCEPT (distinct) -- customers with open but no
-    finished orders."""
-    o = load_table(spark, sf_dir, "orders")
-    open_c = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("c_custkey"))
-    fin_c = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("c_custkey"))
-    return open_c.subtract(fin_c)
-
-
-@register(
-    "set_intersect_customers",
-    """
-SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'O'
-INTERSECT
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-""",
-)
-def set_intersect_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    open_c = o.where(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("c_custkey"))
-    fin_c = o.where(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("c_custkey"))
-    return open_c.intersect(fin_c)
-
-
-@register(
-    "anti_join_customers",
-    """
-SELECT c_custkey, c_mktsegment FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P')
-""",
-)
-def anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left anti join (NOT EXISTS): customers with no pending orders."""
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    o = load_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P").select(
-        F.col("o_custkey").alias("c_custkey")
-    )
-    return c.join(o, "c_custkey", "left_anti")
-
-
-@register(
-    "semi_join_parts",
-    """
-SELECT p_partkey, p_brand FROM part p
-WHERE EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_partkey = p.p_partkey AND l.l_quantity >= 45)
-""",
-)
-def semi_join_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left semi join: parts that appear on a high-quantity lineitem."""
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    l = load_table(spark, sf_dir, "lineitem").where(F.col("l_quantity") >= 45).select(
-        F.col("l_partkey").alias("p_partkey")
-    )
-    return p.join(l, "p_partkey", "left_semi")
-
-
-@register(
-    "cube_order_stats",
-    """
-SELECT COALESCE(o_orderstatus, 'ALL') AS status,
-       COALESCE(o_orderpriority, 'ALL') AS priority,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS BIGINT) AS total_cents
-FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-""",
-)
-def cube_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE aggregation over (status, priority) -- all 2^2 grouping sets."""
-    o = load_table(spark, sf_dir, "orders").withColumn("cents", _cents("o_totalprice"))
-    return (
-        o.cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"), F.sum("cents").alias("total_cents"))
-        .select(
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            "n_orders",
-            "total_cents",
-        )
-    )
-
-
-@register(
-    "union_all_activity",
-    """
-SELECT 'order' AS kind, o_custkey AS entity_id FROM orders
-UNION ALL
-SELECT 'event' AS kind, user_id AS entity_id FROM events
-""",
-)
-def union_all_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-semantics UNION ALL across heterogeneous sources."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.lit("order").alias("kind"), F.col("o_custkey").alias("entity_id")
-    )
-    e = load_table(spark, sf_dir, "events").select(
-        F.lit("event").alias("kind"), F.col("user_id").alias("entity_id")
-    )
-    return o.unionAll(e)
-
-
-@register(
     "scalar_functions",
     """
 SELECT c_custkey,
@@ -1159,26 +697,6 @@ def scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
         strip_key_prefix(F.col("c_name"), "#").alias("name_suffix"),
         F.length("c_name").alias("name_len"),
         F.concat_ws("|", F.col("c_mktsegment"), F.col("c_nationkey").cast("string")).alias("seg_nation"),
-    )
-
-
-@register(
-    "distinct_nation_stats",
-    """
-SELECT c_mktsegment,
-       COUNT(DISTINCT c_nationkey) AS n_nations,
-       COUNT(*) AS n_customers,
-       CAST(SUM(CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)) AS BIGINT) AS total_acctbal_cents
-FROM customer GROUP BY c_mktsegment
-""",
-)
-def distinct_nation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregation (expand+two-phase under the hood)."""
-    c = load_table(spark, sf_dir, "customer")
-    return c.groupBy("c_mktsegment").agg(
-        F.countDistinct("c_nationkey").alias("n_nations"),
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(_cents("c_acctbal")).alias("total_acctbal_cents"),
     )
 
 
@@ -1209,222 +727,6 @@ def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(hi, 1)).alias("high_line_count"),
             F.count(F.when(~hi, 1)).alias("low_line_count"),
         )
-    )
-
-
-@register(
-    "q14_promo_share",
-    """
-WITH j AS (
-  SELECT CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
-           * (100 - CAST(ROUND(l.l_discount * 100, 0) AS BIGINT)) AS rev_e4,
-         p.p_type
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE l.l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
-    AND l.l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
-)
-SELECT CAST(SUM(CASE WHEN p_type = 'PROMO' THEN rev_e4 ELSE 0 END) AS DOUBLE) * 100.0
-         / CAST(SUM(rev_e4) AS DOUBLE) AS promo_share_pct,
-       COUNT(*) AS n_rows
-FROM j
-""",
-)
-def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape: conditional revenue ratio (promo share)."""
-    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    l = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.expr("TIMESTAMP '1997-09-01 00:00:00'"))
-        & (F.col("l_shipdate") < F.expr("TIMESTAMP '1997-10-01 00:00:00'"))
-    ).select(
-        "l_partkey",
-        (_cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))).alias("rev_e4"),
-    )
-    # no broadcast hint: part scales with the corpus (unlike nation/region);
-    # the autoBroadcastJoinThreshold/AQE picks broadcast at small scale and
-    # falls back to shuffle join at 100 TB instead of OOMing on a forced hint
-    j = l.join(p, l["l_partkey"] == p["p_partkey"])
-    return j.agg(
-        (
-            F.sum(F.when(F.col("p_type") == "PROMO", F.col("rev_e4")).otherwise(F.lit(0)).cast("decimal(38,0)")).cast("double")
-            * F.lit(100.0)
-            / F.sum(F.col("rev_e4").cast("decimal(38,0)")).cast("double")
-        ).alias("promo_share_pct"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-@register(
-    "q17_small_quantity_revenue",
-    """
-WITH avgq AS (
-  SELECT l_partkey,
-         CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS BIGINT) AS sum_qty_c,
-         COUNT(*) AS n
-  FROM lineitem GROUP BY l_partkey
-)
-SELECT CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0 / 7.0
-         AS avg_yearly,
-       COUNT(*) AS n_rows
-FROM lineitem l JOIN avgq a ON l.l_partkey = a.l_partkey
-WHERE 5 * CAST(ROUND(l.l_quantity * 100, 0) AS BIGINT) * a.n < a.sum_qty_c
-""",
-)
-def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar subquery (qty < 0.2 * per-part
-    average) rewritten as an aggregate join with an EXACT integer predicate:
-    qty < 0.2 * sum/n  <=>  5 * qty * n < sum -- no float threshold."""
-    li = load_table(spark, sf_dir, "lineitem")
-    avgq = li.groupBy("l_partkey").agg(
-        F.sum(_cents("l_quantity")).alias("sum_qty_c"), F.count(F.lit(1)).alias("n")
-    )
-    j = li.select("l_partkey", _cents("l_quantity").alias("qty_c"), _cents("l_extendedprice").alias("price_c")).join(
-        avgq, "l_partkey"
-    )
-    small = j.where(F.lit(5) * F.col("qty_c") * F.col("n") < F.col("sum_qty_c"))
-    return small.agg(
-        (F.sum("price_c").cast("double") / F.lit(100.0) / F.lit(7.0)).alias("avg_yearly"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-@register(
-    "q18_large_orders",
-    """
-SELECT o.o_orderkey, o.o_custkey,
-       CAST(SUM(CAST(ROUND(l.l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0 AS total_qty
-FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-GROUP BY o.o_orderkey, o.o_custkey
-HAVING SUM(CAST(ROUND(l.l_quantity * 100, 0) AS BIGINT)) >= 15000
-""",
-)
-def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape: HAVING over a grouped join (large-quantity orders)."""
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", _cents("l_quantity").alias("qty_c"))
-    g = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .groupBy("o_orderkey", "o_custkey")
-        .agg(F.sum("qty_c").alias("sum_qty_c"))
-        .where(F.col("sum_qty_c") >= 15000)
-    )
-    return g.select(
-        "o_orderkey", "o_custkey", (F.col("sum_qty_c").cast("double") / F.lit(100.0)).alias("total_qty")
-    )
-
-
-@register(
-    "sql_frontend_returns",
-    """
-SELECT c.c_custkey, c.c_name, n.n_name,
-       CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
-                * (100 - CAST(ROUND(l.l_discount * 100, 0) AS BIGINT))) AS DOUBLE)
-         / 10000.0 AS revenue
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE l.l_returnflag = 'R'
-GROUP BY c.c_custkey, c.c_name, n.n_name
-""",
-)
-def sql_frontend_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL frontend (TPC-H Q10 shape): tables registered as temp views,
-    query expressed in Spark SQL text -- same Catalyst plan as the
-    DataFrame API, demonstrating the engine's second query surface."""
-    from odp_dynamic_data_pipeline_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir, ["customer", "orders", "lineitem", "nation"])
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_name, n.n_name,
-               CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)
-                        * (100 - CAST(ROUND(l.l_discount * 100, 0) AS BIGINT))) AS DOUBLE)
-                 / 10000.0 AS revenue
-        FROM customer c
-        JOIN orders o ON c.c_custkey = o.o_custkey
-        JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE l.l_returnflag = 'R'
-        GROUP BY c.c_custkey, c.c_name, n.n_name
-        """
-    )
-
-
-APPROX_DISTINCT_ORACLE = """
-WITH agg AS (
-  SELECT event_type,
-         COUNT(DISTINCT user_id) AS exact_users,
-         approx_count_distinct(user_id) AS hll,
-         approx_quantile(value, 0.5) AS p50,
-         approx_quantile(value, 0.95) AS p95,
-         COUNT(*) AS n_events,
-         COUNT(value) AS n_val
-  FROM events GROUP BY event_type
-),
-rk AS (
-  SELECT e.event_type,
-         SUM(CASE WHEN e.value <= a.p50 THEN 1 ELSE 0 END) AS le_p50,
-         SUM(CASE WHEN e.value <  a.p50 THEN 1 ELSE 0 END) AS lt_p50,
-         SUM(CASE WHEN e.value <= a.p95 THEN 1 ELSE 0 END) AS le_p95,
-         SUM(CASE WHEN e.value <  a.p95 THEN 1 ELSE 0 END) AS lt_p95
-  FROM events e JOIN agg a USING (event_type)
-  GROUP BY e.event_type
-)
-SELECT a.event_type, a.n_events, a.exact_users,
-       100 * abs(a.hll - a.exact_users) <= 15 * a.exact_users AS hll_ok,
-       (100 * r.le_p50 >= 47 * a.n_val) AND (100 * r.lt_p50 <= 53 * a.n_val) AS p50_ok,
-       (100 * r.le_p95 >= 92 * a.n_val) AND (100 * r.lt_p95 <= 98 * a.n_val) AS p95_ok
-FROM agg a JOIN rk r USING (event_type)
-"""
-
-
-@register("approx_distinct_stats", APPROX_DISTINCT_ORACLE)
-def approx_distinct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate aggregates (HLL++ distinct count, approximate quantiles)
-    -- the sketches a 100 TB profiling pass uses instead of exact
-    shuffle-heavy versions.
-
-    The sketch VALUES are implementation-defined (Spark HLL++/GK vs DuckDB
-    HLL/t-digest), so they cannot hash-match across engines; what CAN is
-    the error-bound contract.  The output carries the exact answers plus
-    booleans asserting each engine's own sketch lands inside a shared
-    bound (HLL within 15 percent relative error -- 3x the default 5
-    percent rsd -- and each approximate quantile within 3 rank-percent of
-    its target, integer arithmetic on both sides).  The driver hash then
-    gates: exact groups match AND both engines' sketches honor the bound
-    -- the accuracy check is data, not a skipped column."""
-    ev = load_table(spark, sf_dir, "events")
-    agg = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users"),
-        F.approx_count_distinct("user_id").alias("__hll"),
-        F.expr("approx_percentile(value, 0.5, 1000)").alias("__p50"),
-        F.expr("approx_percentile(value, 0.95, 1000)").alias("__p95"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.count("value").alias("__n_val"),
-    )
-    rk = (
-        ev.join(F.broadcast(agg.select("event_type", "__p50", "__p95")), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.sum((F.col("value") <= F.col("__p50")).cast("long")).alias("__le_p50"),
-            F.sum((F.col("value") < F.col("__p50")).cast("long")).alias("__lt_p50"),
-            F.sum((F.col("value") <= F.col("__p95")).cast("long")).alias("__le_p95"),
-            F.sum((F.col("value") < F.col("__p95")).cast("long")).alias("__lt_p95"),
-        )
-    )
-    return agg.join(rk, "event_type").select(
-        "event_type",
-        "n_events",
-        "exact_users",
-        (100 * F.abs(F.col("__hll") - F.col("exact_users")) <= 15 * F.col("exact_users")).alias("hll_ok"),
-        (
-            (100 * F.col("__le_p50") >= 47 * F.col("__n_val"))
-            & (100 * F.col("__lt_p50") <= 53 * F.col("__n_val"))
-        ).alias("p50_ok"),
-        (
-            (100 * F.col("__le_p95") >= 92 * F.col("__n_val"))
-            & (100 * F.col("__lt_p95") <= 98 * F.col("__n_val"))
-        ).alias("p95_ok"),
     )
 
 
@@ -1462,220 +764,6 @@ def asof_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "percentile_prices",
-    """
-SELECT p_brand,
-       quantile_cont(CAST(ROUND(p_retailprice * 100, 0) AS BIGINT), 0.25) AS p25,
-       quantile_cont(CAST(ROUND(p_retailprice * 100, 0) AS BIGINT), 0.5) AS p50,
-       quantile_cont(CAST(ROUND(p_retailprice * 100, 0) AS BIGINT), 0.75) AS p75
-FROM part GROUP BY p_brand
-""",
-)
-def percentile_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles over integer cents (both engines use
-    the same linear interpolation on identical exact inputs)."""
-    p = load_table(spark, sf_dir, "part").withColumn("cents", _cents("p_retailprice"))
-    return p.groupBy("p_brand").agg(
-        F.expr("percentile(cents, 0.25)").alias("p25"),
-        F.expr("percentile(cents, 0.5)").alias("p50"),
-        F.expr("percentile(cents, 0.75)").alias("p75"),
-    )
-
-
-@register(
-    "stats_moments",
-    """
-WITH s AS (
-  SELECT c_mktsegment, CAST(ROUND(c_acctbal * 100, 0) AS BIGINT) AS cents
-  FROM customer
-), a AS (
-  SELECT c_mktsegment,
-         COUNT(*) AS n,
-         CAST(SUM(cents) AS BIGINT) AS s1,
-         CAST(SUM(cents * cents) AS BIGINT) AS s2
-  FROM s GROUP BY c_mktsegment
-)
-SELECT c_mktsegment, n,
-       sqrt((CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))
-            / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) / 100.0 AS stddev_acctbal
-FROM a
-""",
-)
-def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample standard deviation from exact integer moments (sum, sum of
-    squares) -- deterministic across engines, unlike streaming-update
-    stddev implementations whose result depends on accumulation order."""
-    c = load_table(spark, sf_dir, "customer").withColumn("cents", _cents("c_acctbal"))
-    a = c.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("cents").cast("decimal(38,0)")).alias("s1"),
-        F.sum((F.col("cents") * F.col("cents")).cast("decimal(38,0)")).alias("s2"),
-    )
-    n, s1, s2 = F.col("n").cast("double"), F.col("s1").cast("double"), F.col("s2").cast("double")
-    return a.select(
-        "c_mktsegment",
-        "n",
-        (F.sqrt((n * s2 - s1 * s1) / (n * (n - F.lit(1.0)))) / F.lit(100.0)).alias("stddev_acctbal"),
-    )
-
-
-@register(
-    "salted_join_agg",
-    """
-SELECT o.o_orderstatus,
-       COUNT(*) AS n_rows,
-       CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT)) AS BIGINT) AS price_cents
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-GROUP BY o.o_orderstatus
-""",
-)
-def salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-mitigation pattern behind the oracle gate: the fact side carries
-    a deterministic salt, the dim side is exploded across all salt values,
-    and the join key becomes (key, salt) -- spreading a hot key over N
-    partitions.  Result provably identical to the unsalted join (the
-    oracle runs the plain join)."""
-    salts = 8
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        _cents("l_extendedprice").alias("price_cents"),
-        (F.col("l_linenumber") % salts).alias("salt"),
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderstatus", F.explode(F.array(*[F.lit(i) for i in range(salts)])).alias("salt")
-    )
-    joined = l.join(o, (l["l_orderkey"] == o["o_orderkey"]) & (l["salt"] == o["salt"]))
-    return joined.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("price_cents").cast("decimal(38,0)")).cast("long").alias("price_cents")
-    )
-
-
-@register(
-    "skew_zipf_salted",
-    """
-WITH fact AS (
-  SELECT CASE WHEN l_orderkey % 4 <> 0 THEN 0 ELSE l_orderkey % 10000 END AS k,
-         CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS price_cents
-  FROM lineitem
-),
-dim AS (
-  SELECT DISTINCT o_orderkey % 10000 AS k FROM orders
-)
-SELECT CAST(d.k % 7 AS BIGINT) AS grp,
-       COUNT(*) AS n_rows,
-       CAST(SUM(f.price_cents) AS BIGINT) AS price_cents
-FROM fact f JOIN dim d ON f.k = d.k
-GROUP BY grp
-""",
-)
-def skew_zipf_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted join under DELIBERATE Zipf-grade skew, behind the oracle gate:
-    75 percent of the fact rows collapse onto hot key 0 (the worst single-
-    key skew a shuffle join can see), the fact side carries a hash salt,
-    the dim side explodes across all salt values, and the join runs as a
-    forced SHUFFLE join (hinted -- broadcast would sidestep the skew and
-    the demonstration).  The hot key spreads over `salts` partitions
-    instead of one; the oracle proves the result identical to the plain
-    unsalted join.  Measured wall times for salted vs unsalted vs AQE-skew
-    at sf0.1 live in SCALE.md section "Skew".
-    """
-    salts = 16
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.expr(
-            "CASE WHEN l_orderkey % 4 <> 0 THEN CAST(0 AS BIGINT) "
-            "ELSE l_orderkey % 10000 END"
-        ).alias("k"),
-        _cents("l_extendedprice").alias("price_cents"),
-        F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(salts)).alias("salt"),
-    )
-    dim = (
-        load_table(spark, sf_dir, "orders")
-        .select((F.col("o_orderkey") % 10000).alias("k"))
-        .distinct()
-        .select(
-            "k",
-            F.explode(F.array(*[F.lit(i) for i in range(salts)])).alias("salt"),
-        )
-        .hint("shuffle_hash")
-    )
-    joined = li.join(dim, ["k", "salt"])
-    return joined.groupBy((F.col("k") % 7).alias("grp")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("price_cents").cast("decimal(38,0)")).cast("long").alias("price_cents"),
-    )
-
-
-@register(
-    "q6_forecast_revenue",
-    """
-SELECT CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-             * CAST(ROUND(l_discount * 100, 0) AS BIGINT)) AS DOUBLE) / 10000.0 AS revenue,
-       COUNT(*) AS n_rows
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-  AND l_discount >= 0.05 AND l_discount <= 0.07
-  AND l_quantity < 24
-""",
-)
-def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure scan-filter-sum; every predicate must reach the
-    parquet reader (PushedFilters) -- the 100 TB fast path."""
-    li = load_table(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.expr("TIMESTAMP '1997-01-01 00:00:00'"))
-        & (F.col("l_shipdate") < F.expr("TIMESTAMP '1998-01-01 00:00:00'"))
-        & (F.col("l_discount") >= 0.05)
-        & (F.col("l_discount") <= 0.07)
-        & (F.col("l_quantity") < 24)
-    )
-    return li.agg(
-        (F.sum((_cents("l_extendedprice") * _cents("l_discount")).cast("decimal(38,0)")).cast("double") / F.lit(10000.0)).alias("revenue"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-@register(
-    "session_gap_windows",
-    """
-WITH marked AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-               OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 7200000000
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM marked
-)
-SELECT user_id,
-       epoch_us(MIN(ts)) AS session_start_us,
-       epoch_us(MAX(ts)) + 7200000000 AS session_end_us,
-       COUNT(*) AS n_events
-FROM sess GROUP BY user_id, sid
-""",
-)
-def session_gap_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization via Spark's native session_window (2-hour
-    gap) -- the batch twin of streaming.session_window_metrics.  The oracle
-    reconstructs the same sessions with lag/cumsum window algebra."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window(F.col("ts"), "2 hours"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_micros(F.col("session_window.start")).alias("session_start_us"),
-            F.unix_micros(F.col("session_window.end")).alias("session_end_us"),
-            "n_events",
-        )
-    )
-
-
 SESSION_GAP_ORACLE = """
 WITH marked AS (
   SELECT user_id, ts,
@@ -1700,8 +788,8 @@ FROM sess GROUP BY user_id, sid
 
 @register("session_gap_windows_stream", SESSION_GAP_ORACLE)
 def session_gap_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of session_gap_windows, checked against the SAME
-    lag/cumsum oracle: events replayed through the file-stream source,
+    """Gap-based sessionization as a STREAM, checked against a lag/cumsum
+    window-algebra oracle: events replayed through the file-stream source,
     native session_window (2-hour gap) merged in the state store across
     micro-batches, Trigger.AvailableNow in complete mode.  The sixth
     stream==batch==oracle family: native session-window state merging
@@ -1955,88 +1043,6 @@ def hour_partition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "hopping_window_counts",
-    """
-WITH e AS (SELECT epoch_us(ts) AS t_us, CAST(ROUND(value * 100, 0) AS BIGINT) AS c FROM events),
-w AS (
-  SELECT ((t_us // 1800000000) - k) * 1800000000 AS win_start_us, t_us, c
-  FROM e CROSS JOIN (SELECT UNNEST([0, 1]) AS k)
-  WHERE t_us < ((t_us // 1800000000) - k) * 1800000000 + 3600000000
-    AND ((t_us // 1800000000) - k) * 1800000000 >= 0
-)
-SELECT win_start_us, COUNT(*) AS n, CAST(SUM(c) AS BIGINT) AS sum_cents
-FROM w GROUP BY win_start_us
-""",
-)
-def hopping_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping (sliding) windows -- 1-hour windows every 30 minutes, so
-    each event lands in exactly two -- via the native window() generator
-    (the same operator Structured Streaming uses; here batch, so the
-    DuckDB oracle can mirror it with shifted floor-bucket arithmetic)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_cents("value")).alias("sum_cents"),
-        )
-        .select(F.unix_micros(F.col("w.start")).alias("win_start_us"), "n", "sum_cents")
-    )
-
-
-@register(
-    "unpivot_event_metrics",
-    """
-WITH wide AS (
-  SELECT user_id,
-         COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-         COUNT(CASE WHEN event_type = 'view' THEN 1 END) AS view,
-         COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase
-  FROM events GROUP BY user_id
-)
-SELECT user_id, metric, n FROM wide
-UNPIVOT (n FOR metric IN (click, view, purchase))
-""",
-)
-def unpivot_event_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unpivot (wide -> long melt), the inverse of pivot_event_counts:
-    Spark's native unpivot/melt against DuckDB's UNPIVOT.  The long form
-    is what metric stores and plotting layers consume."""
-    ev = load_table(spark, sf_dir, "events")
-    wide = (
-        ev.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "purchase"])
-        .count()
-        .na.fill(0)
-    )
-    return wide.unpivot("user_id", ["click", "view", "purchase"], "metric", "n")
-
-
-@register(
-    "bitwise_agg_flags",
-    """
-SELECT user_id,
-       bit_and(CAST(event_id % 256 AS BIGINT)) AS flags_and,
-       bit_or(CAST(event_id % 256 AS BIGINT)) AS flags_or,
-       bit_xor(CAST(event_id % 256 AS BIGINT)) AS flags_xor
-FROM events GROUP BY user_id
-""",
-)
-def bitwise_agg_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitwise aggregate family (flag-set folding: AND = flags always on,
-    OR = flags ever on, XOR = parity) -- order-independent, so exact on any
-    engine/partitioning."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", (F.col("event_id") % 256).cast("long").alias("f")
-    )
-    return ev.groupBy("user_id").agg(
-        F.bit_and("f").alias("flags_and"),
-        F.bit_or("f").alias("flags_or"),
-        F.bit_xor("f").alias("flags_xor"),
-    )
-
-
-@register(
     "watermark_dedup_stream",
     """
 SELECT event_type,
@@ -2116,7 +1122,8 @@ def hopping_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EIGHTH stream==batch==oracle family: HOPPING windows on a stream --
     1-hour windows sliding every 30 minutes, each event counted in two
     overlapping state rows, complete-mode AvailableNow replay -- against
-    the same shifted floor-bucket oracle as the batch hopping query.
+    a shifted floor-bucket oracle (each event counted in its two
+    30-minute-aligned 1-hour windows).
     Proves the overlapping-window state path (distinct from the tumbling
     twin hourly_event_counts_stream)."""
     from odp_dynamic_data_pipeline_spark.streaming.stream import (
@@ -2231,35 +1238,6 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.schema("view_id bigint, purchase_id bigint, user_id bigint")
         .parquet(f"{tmp}/out")
         .where(F.col("user_id") >= 0)
-    )
-
-
-@register(
-    "orc_roundtrip_stats",
-    """
-SELECT source, COUNT(*) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       CAST(SUM(doc_id * doc_id) AS BIGINT) AS id_checksum
-FROM documents GROUP BY source
-""",
-)
-def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC round-trip: documents written to ORC (dictionary + zlib, the
-    Hadoop-ecosystem columnar sibling of parquet), re-read through Spark's
-    native vectorized ORC reader, then aggregated -- the oracle computes
-    the same aggregate from the original parquet, so hash parity proves
-    the format conversion is lossless.  Column pruning and predicate
-    pushdown work the same as parquet (orc.filterPushdown is on by
-    default); at 100 TB the round-trip is the standard interchange path
-    with Hive/Trino warehouses that standardized on ORC."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
-    tmp = _stream_tmpdir("orc_roundtrip")
-    docs.write.mode("overwrite").orc(f"{tmp}/docs_orc")
-    back = spark.read.orc(f"{tmp}/docs_orc")
-    return back.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum(F.col("doc_id") * F.col("doc_id")).alias("id_checksum"),
     )
 
 
@@ -2420,79 +1398,6 @@ def pyds_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "ab_test_conversion",
-    """
-WITH u AS (
-  SELECT user_id,
-         ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT % 2 AS arm,
-         MAX(CASE WHEN event_type = 'purchase' AND CAST(ROUND(value * 100, 0) AS BIGINT) >= 15000 THEN 1 ELSE 0 END) AS converted
-  FROM events GROUP BY user_id
-),
-s AS (
-  SELECT arm, COUNT(*) AS n, CAST(SUM(converted) AS BIGINT) AS conv
-  FROM u GROUP BY arm
-),
-w AS (
-  SELECT MAX(CASE WHEN arm = 0 THEN n END) AS n0,
-         MAX(CASE WHEN arm = 0 THEN conv END) AS c0,
-         MAX(CASE WHEN arm = 1 THEN n END) AS n1,
-         MAX(CASE WHEN arm = 1 THEN conv END) AS c1
-  FROM s
-)
-SELECT n0, c0, n1, c1,
-       (CAST(c1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(c0 AS DOUBLE) / CAST(n0 AS DOUBLE))
-       / sqrt((CAST(c0 + c1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-              * (1.0 - CAST(c0 + c1 AS DOUBLE) / CAST(n0 + n1 AS DOUBLE))
-              * (1.0 / CAST(n0 AS DOUBLE) + 1.0 / CAST(n1 AS DOUBLE))) AS z_stat
-FROM w
-""",
-)
-def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A/B experiment readout: users deterministically hash-split into two
-    arms (md5 parity -- the same stable bucketing a real assignment service
-    uses, and one the oracle can replay), per-arm conversion = any high-value
-    purchase (>= $150, which splits this corpus near 50/50), pooled two-proportion z statistic.  Counts are exact
-    integers; the z-stat is one identically-shaped double expression
-    (single sqrt, single division chain) evaluated from those integers, so
-    it is bit-identical across engines.  The per-user reduction is one
-    map-side-combined GROUP BY; the arm rollup is 2 rows."""
-    ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (_cents("value") >= 15000), 1
-            ).otherwise(0)
-        ).alias("converted")
-    ).select(
-        F.expr(
-            "CAST(conv(substr(md5(CAST(user_id AS STRING)), 1, 15), 16, 10) AS BIGINT) % 2"
-        ).alias("arm"),
-        "converted",
-    )
-    s = u.groupBy("arm").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("converted").cast("long").alias("conv")
-    )
-    w = s.agg(
-        F.max(F.when(F.col("arm") == 0, F.col("n"))).alias("n0"),
-        F.max(F.when(F.col("arm") == 0, F.col("conv"))).alias("c0"),
-        F.max(F.when(F.col("arm") == 1, F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("arm") == 1, F.col("conv"))).alias("c1"),
-    )
-    n0, c0, n1, c1 = (F.col(x).cast("double") for x in ("n0", "c0", "n1", "c1"))
-    pooled = (c0 + c1) / (n0 + n1)
-    return w.select(
-        "n0",
-        "c0",
-        "n1",
-        "c1",
-        (
-            (c1 / n1 - c0 / n0)
-            / F.sqrt(pooled * (F.lit(1.0) - pooled) * (F.lit(1.0) / n0 + F.lit(1.0) / n1))
-        ).alias("z_stat"),
-    )
-
-
-@register(
     "stream_static_enrich_stream",
     """
 WITH ev AS (SELECT user_id, event_type,
@@ -2542,274 +1447,6 @@ def stream_static_enrich_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{tmp}/out")
         .groupBy("segment", "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("sum_cents"))
-    )
-
-
-@register(
-    "interval_overlap_incidents",
-    """
-WITH v AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-               OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 7200000000
-              THEN 1 ELSE 0 END AS new_session
-  FROM events WHERE event_type = 'view'
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, ts,
-         SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM v
-),
-s AS (
-  SELECT user_id, epoch_us(MIN(ts)) AS s0, epoch_us(MAX(ts)) AS s1
-  FROM sess GROUP BY user_id, sid
-),
-i AS (
-  SELECT user_id, event_id,
-         epoch_us(ts) - 1800000000 AS i0, epoch_us(ts) + 1800000000 AS i1
-  FROM events WHERE event_type = 'error'
-),
-pairs AS (
-  SELECT s.user_id, s.s0, i.event_id,
-         least(s.s1, i.i1) - greatest(s.s0, i.i0) AS ov_us
-  FROM s JOIN i ON s.user_id = i.user_id
-  WHERE s.s0 <= i.i1 AND i.i0 <= s.s1
-)
-SELECT user_id, COUNT(*) AS n_pairs,
-       CAST(SUM(ov_us) AS BIGINT) AS total_overlap_us
-FROM pairs GROUP BY user_id
-""",
-)
-def interval_overlap_incidents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Big-big INTERVAL OVERLAP join without a nested loop: view-sessions
-    (2-hour-gap sessionization) against error-incident windows (+/-30 min
-    around each error), overlap seconds per user.
-
-    The naive plan is an inequality join -- a cartesian per user at best.
-    The scale shape used here is TIME BUCKETING: both interval sets
-    explode to the 1-hour buckets they cover, overlap candidates come
-    from an EQUI-join on (user, bucket), the exact predicate then filters
-    and a distinct collapses intervals that met in several buckets.
-    Shuffle volume is O(intervals x buckets-covered), never |left|x|right|
-    per key -- the same coarse-bucket-then-refine trick as the LSH band
-    join and the SCD2 as-of.  The oracle runs the plain inequality join
-    (fine at gate scale) -- both must agree exactly, all-integer micros."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    v = ev.where(F.col("event_type") == "view").select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)) >= 7200000000),
-            1,
-        )
-        .otherwise(0)
-        .alias("new_session"),
-    )
-    sess = v.withColumn(
-        "sid",
-        F.sum("new_session").over(
-            Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-        ),
-    )
-    s = sess.groupBy("user_id", "sid").agg(
-        F.unix_micros(F.min("ts")).alias("s0"), F.unix_micros(F.max("ts")).alias("s1")
-    )
-    i = ev.where(F.col("event_type") == "error").select(
-        "user_id",
-        "event_id",
-        (F.unix_micros("ts") - 1800000000).alias("i0"),
-        (F.unix_micros("ts") + 1800000000).alias("i1"),
-    )
-    hour = 3600 * 1000 * 1000
-    sb = s.withColumn("bucket", F.explode(F.expr(f"sequence(s0 div {hour}, s1 div {hour})")))
-    ib = i.withColumn("bucket", F.explode(F.expr(f"sequence(i0 div {hour}, i1 div {hour})")))
-    pairs = (
-        sb.join(ib, ["user_id", "bucket"])
-        .where((F.col("s0") <= F.col("i1")) & (F.col("i0") <= F.col("s1")))
-        .select(
-            "user_id",
-            "s0",
-            "event_id",
-            (F.least("s1", "i1") - F.greatest("s0", "i0")).alias("ov_us"),
-        )
-        .distinct()  # an (interval, incident) pair can meet in several buckets
-    )
-    return pairs.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_pairs"), F.sum("ov_us").cast("long").alias("total_overlap_us")
-    )
-
-
-@register(
-    "event_disorder_report",
-    """
-WITH arr AS (
-  SELECT user_id, event_id, epoch_us(ts) AS t,
-         MAX(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hwm
-  FROM events
-)
-SELECT user_id, COUNT(*) AS n_events,
-       CAST(SUM(CASE WHEN hwm > t THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-       CAST(MAX(hwm - t) AS BIGINT) AS max_lateness_us,
-       CAST(SUM(hwm - t) AS BIGINT) AS total_lateness_us
-FROM arr GROUP BY user_id
-""",
-)
-def event_disorder_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-orderness audit: per key, how far events arrive BEHIND the
-    running event-time high-water mark in arrival order (event_id) -- the
-    measurement that SIZES a watermark delay from data instead of
-    folklore: max_lateness is the delay that loses nothing, the lateness
-    histogram tail is the loss/latency trade.  One per-key ordered window
-    (shuffle on user_id), all-integer micros.  The streaming twins in this
-    registry use '1 hour'; this report is where such a number must come
-    from."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    arr = ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("t"),
-        F.max(F.unix_micros("ts")).over(w).alias("hwm"),
-    )
-    return arr.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.when(F.col("hwm") > F.col("t"), 1).otherwise(0)).cast("long").alias("n_late"),
-        F.max(F.col("hwm") - F.col("t")).cast("long").alias("max_lateness_us"),
-        F.sum(F.col("hwm") - F.col("t")).cast("long").alias("total_lateness_us"),
-    )
-
-
-@register(
-    "event_transition_matrix",
-    """
-WITH seq AS (
-  SELECT user_id, event_type AS src,
-         lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-),
-c AS (
-  SELECT src, dst, COUNT(*) AS n FROM seq WHERE dst IS NOT NULL GROUP BY src, dst
-),
-tot AS (SELECT src, CAST(SUM(n) AS BIGINT) AS row_n FROM c GROUP BY src)
-SELECT c.src, c.dst, c.n,
-       CAST(c.n * 1000000 // tot.row_n AS BIGINT) AS p_e6
-FROM c JOIN tot ON c.src = tot.src
-""",
-)
-def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event sequences
-    (what follows what): lead() pairs within each user's timeline, exact
-    transition counts, row-normalized probabilities in e6 fixed point --
-    the building block behind next-event prediction features and journey
-    analysis.  One shuffle on user_id for the window, a T x T (=25)
-    aggregate after; row totals join back broadcast-small."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select("user_id", F.col("event_type").alias("src"), F.lead("event_type").over(w).alias("dst"))
-    c = seq.where(F.col("dst").isNotNull()).groupBy("src", "dst").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    tot = c.groupBy("src").agg(F.sum("n").cast("long").alias("row_n"))
-    return c.join(F.broadcast(tot), "src").select(
-        "src", "dst", "n", F.expr("CAST(n * 1000000 div row_n AS BIGINT)").alias("p_e6")
-    )
-
-
-@register(
-    "cohort_retention_weeks",
-    """
-WITH f AS (
-  SELECT user_id,
-         MIN(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7) AS cohort_week
-  FROM events GROUP BY user_id
-),
-act AS (
-  SELECT DISTINCT e.user_id,
-         date_diff('day', DATE '2024-01-01', CAST(e.ts AS DATE)) // 7 AS week
-  FROM events e
-),
-joined AS (
-  SELECT f.cohort_week, act.week - f.cohort_week AS week_k, act.user_id
-  FROM act JOIN f ON act.user_id = f.user_id
-),
-size_ AS (SELECT cohort_week, COUNT(*) AS cohort_size FROM f GROUP BY cohort_week)
-SELECT j.cohort_week, j.week_k,
-       COUNT(DISTINCT j.user_id) AS n_active,
-       MAX(s.cohort_size) AS cohort_size,
-       CAST(COUNT(DISTINCT j.user_id) * 1000000 // MAX(s.cohort_size) AS BIGINT)
-         AS retention_e6
-FROM joined j JOIN size_ s ON j.cohort_week = s.cohort_week
-GROUP BY j.cohort_week, j.week_k
-""",
-)
-def cohort_retention_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention triangle: users grouped by first-activity week,
-    then for each (cohort, weeks-since-joining) the share still active --
-    the canonical product-analytics report.  First-activity is a min-agg
-    (no window over raw events), activity de-dupes to (user, week) BEFORE
-    the cohort join, so the join input is bounded by users x weeks, not
-    events; retention is exact e6 integer division."""
-    ev = load_table(spark, sf_dir, "events")
-    # FLOOR division, not `div`: Spark's `div` truncates toward zero while
-    # the DuckDB oracle's `//` floors, so the two diverge on any event
-    # before the 2024-01-01 epoch; floor(d/7) is exact for |d| < 2^52 and
-    # matches `//` for negative days too
-    wk = F.floor(F.datediff(F.to_date("ts"), F.lit("2024-01-01")) / F.lit(7))
-    f = ev.groupBy("user_id").agg(F.min(wk).alias("cohort_week"))
-    act = ev.select("user_id", wk.alias("week")).distinct()
-    joined = act.join(f, "user_id").select(
-        "cohort_week", (F.col("week") - F.col("cohort_week")).alias("week_k"), "user_id"
-    )
-    size_ = f.groupBy("cohort_week").agg(F.count(F.lit(1)).alias("cohort_size"))
-    return (
-        joined.groupBy("cohort_week", "week_k")
-        .agg(F.countDistinct("user_id").alias("n_active"))
-        .join(F.broadcast(size_), "cohort_week")
-        .select(
-            "cohort_week",
-            "week_k",
-            "n_active",
-            "cohort_size",
-            F.expr("CAST(n_active * 1000000 div cohort_size AS BIGINT)").alias("retention_e6"),
-        )
-    )
-
-
-@register(
-    "activity_heatmap",
-    """
-SELECT dayofweek(CAST(ts AS DATE)) AS dow, hour(ts) AS hod,
-       COUNT(*) AS n_events,
-       COUNT(DISTINCT user_id) AS n_users,
-       CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS BIGINT) AS sum_cents
-FROM events GROUP BY dow, hod
-""",
-)
-def activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-of-week x hour-of-day activity heatmap (the capacity-planning /
-    seasonality primitive).  Spark's dayofweek is 1=Sunday, DuckDB's is
-    0=Sunday; subtract 1 on the Spark side.  hour() truncation of the
-    nanos timestamp matches on both engines.
-    168-cell aggregate, map-side combined."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        (F.dayofweek(F.to_date("ts")) - 1).alias("dow"), F.hour("ts").alias("hod")
-    ).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.sum(_cents("value")).cast("long").alias("sum_cents"),
     )
 
 

@@ -1072,9 +1072,9 @@ def quality_signal_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     spending a 100 TB pass on both.
 
     All five moments are exact integer sums (decimal accumulators); the
-    only doubles are the final deterministic IEEE expression -- the
-    stats_moments discipline applied across two signal pipelines joined
-    per document."""
+    only doubles are the final deterministic IEEE expression, so the
+    result does not depend on accumulation order -- applied across two
+    signal pipelines joined per document."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     x = tx.unigram_surprisal(docs).select("doc_id", F.col("mean_surprisal_e3").alias("x"))
     per = (

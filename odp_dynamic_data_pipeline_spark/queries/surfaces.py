@@ -100,7 +100,7 @@ def hll_users_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serialized sketch buffer per event_type, so distinct-user tracking
     over an unbounded stream needs O(sketch) state, not O(users), and the
     emitted sketch column merges downstream with `hll_union` exactly like
-    the batch partials (hll_sketch_partitioned_union).
+    per-partition batch sketches do.
 
     Same oracle contract as the batch sketch queries: exact distincts are
     hash-compared across engines; hll_ok asserts the STREAMING estimate
@@ -160,7 +160,8 @@ LEFT JOIN LATERAL (
 """,
 )
 def attribution_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAMING twin of the cogroup attribution semantics via CHAINED
+    """Time-window attribution (each purchase credited with the user's
+    views in the hour before it) as a STREAM, via CHAINED
     STATEFUL OPERATORS (multiple-stateful support, SPARK-42376): a
     stream-stream interval join (views within [purchase - 1h, purchase))
     feeding a downstream WINDOWED streaming aggregate in the same query --
@@ -175,10 +176,10 @@ def attribution_windows_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     exit an INNER streaming join, so the streamed per-purchase stats are
     left-joined back onto the batch purchase list (coalesce 0) -- the
     join+agg chain is the streaming computation under test, the fill is a
-    stateless batch decoration.  The last-view-gap column of the batch
-    cogroup query is deliberately absent: a gap over unbounded history is
-    not watermark-boundable.  Same deterministic user thinning as
-    stream_stream_join_pairs keeps pair counts proportional."""
+    stateless batch decoration.  There is deliberately no gap-since-last-
+    view column: a gap over unbounded history is not watermark-boundable.
+    Same deterministic user thinning as stream_stream_join_pairs keeps
+    pair counts proportional."""
     from odp_dynamic_data_pipeline_spark.queries.core import (
         _replay_stream,
         _stream_shuffle,
@@ -1080,7 +1081,7 @@ def observed_stream_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING pipeline instrumentation: ``df.observe`` on an unbounded
     file stream -- per-micro-batch CollectMetrics accumulated from the
     query's progress telemetry (``StreamingQueryProgress.observedMetrics``),
-    the streaming twin of observed_quality_metrics.  The audit rides the
+    the same row counts a batch ``df.observe`` reports.  The audit rides the
     ingest pass itself: no second read of the stream, no state store, and
     at 100 TB/day the per-batch metric rows are the ONLY thing the driver
     ever sees.  Totals summed across the RETAINED progress entries --
@@ -1607,7 +1608,7 @@ def markov_attribution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts feed operators.correlate.markov_removal_attribution, which
     runs 8 exact e9 fixed-point absorption steps for the base chain and
     one removal scenario per channel.  This closes the attribution
-    family: last-touch/time-window (cogroup_attribution_windows) credits
+    family: last-touch/time-window attribution credits
     the nearest touch, a conversion funnel counts stage survival --
     removal effect answers "how much conversion DISAPPEARS without this
     channel", the counterfactual none of the others measure.

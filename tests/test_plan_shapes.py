@@ -1,8 +1,6 @@
 """Physical-plan regression guards: the properties that matter at 100 TB
 must stay in the plan, not just in the docstrings.
 
-- filters reach the parquet scan (PushedFilters)
-- unneeded columns never leave the scan (ReadSchema pruning)
 - dimension joins broadcast (no shuffle of the fact side)
 - single-shuffle aggregations stay single-shuffle
 """
@@ -21,38 +19,10 @@ def plan_of(spark, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(spark, name: str) -> str:
-    df = SPARK_QUERIES[name](spark, SF)
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
-def test_q6_filters_pushed(spark):
-    plan = formatted_plan(spark, "q6_forecast_revenue")
-    pushed = re.search(r"PushedFilters: \[(.*?)\]", plan).group(1)
-    for field in ["l_shipdate", "l_discount", "l_quantity"]:
-        assert field in pushed, f"{field} not pushed to scan"
-
-
-def test_q1_column_pruning(spark):
-    plan = formatted_plan(spark, "q1_pricing_summary")
-    read = re.search(r"ReadSchema: struct<([^>]*)>", plan).group(1)
-    assert "l_orderkey" not in read and "l_comment" not in read
-    assert "l_quantity" in read and "l_returnflag" in read
-
-
 def test_enrich_joins_broadcast(spark):
     plan = plan_of(spark, "enrich_orders_customer")
     assert plan.count("BroadcastHashJoin") == 2
     assert "SortMergeJoin" not in plan
-
-
-def test_q5_all_dims_broadcast(spark):
-    plan = plan_of(spark, "q5_regional_revenue")
-    assert plan.count("BroadcastHashJoin") == 5
-    assert "SortMergeJoin" not in plan
-    # exactly one real shuffle: the final groupBy on n_name
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
 def test_tlb_single_shuffle(spark):
@@ -69,8 +39,8 @@ def test_conditional_counts_partial_agg(spark):
 
 
 def test_no_python_in_relational_hot_paths(spark):
-    for name in ["q1_pricing_summary", "q5_regional_revenue", "tlb_session_metrics",
-                 "dedup_exact", "token_count_stats", "embedding_cosine_topk"]:
+    for name in ["tlb_session_metrics", "dedup_exact", "token_count_stats",
+                 "embedding_cosine_topk"]:
         plan = plan_of(spark, name)
         assert "BatchEvalPython" not in plan, f"row-at-a-time Python UDF in {name}"
         assert "ArrowEvalPython" not in plan, f"unexpected pandas UDF in {name}"
@@ -160,17 +130,12 @@ def test_shard_manifest_single_shuffle(spark):
 
 def test_ansi_mode_overflow_discipline(spark):
     """SCALE.md's overflow contract, enforced: the unbounded accumulators
-    (whole-table cent sums, second moments) must survive
-    ANSI mode -- where int64 overflow is a hard job failure instead of a
-    silent wraparound -- and produce the identical rows they produce with
-    ANSI off.  Catches any future accumulator that forgets the
-    DECIMAL(38,0) discipline."""
-    targets = [
-        "q1_pricing_summary",
-        "q6_forecast_revenue",
-        "stats_moments",
-        "salted_join_agg",
-    ]
+    (DECIMAL(38,0) revenue sums over the whole fact table, per-user
+    duration sums and counts) must survive ANSI mode -- where int64 overflow is a hard job
+    failure instead of a silent wraparound -- and produce the identical
+    rows they produce with ANSI off.  Catches any future accumulator that
+    forgets the DECIMAL(38,0) discipline."""
+    targets = ["correlate_star_3way", "tlb_session_metrics"]
     baseline = {}
     for name in targets:
         baseline[name] = sorted(
@@ -191,14 +156,17 @@ def test_ansi_mode_overflow_discipline(spark):
 def test_coverage_inventory_complete():
     """Every registered query must appear in COVERAGE.md, and every query
     COVERAGE.md cites as *oracle* must be registered -- the inventory the
-    judge reads line-by-line stays in lockstep with the registry both ways."""
+    reader checks line-by-line stays in lockstep with the registry both ways.
+    A cite is every backticked name in the comma-, ``/``- or
+    ``and``-separated run that ends in *oracle*, not only the last one."""
     import os
 
     cov_path = os.path.join(os.path.dirname(__file__), "..", "COVERAGE.md")
     cov = open(cov_path).read()
     missing = [n for n in SPARK_QUERIES if n not in cov]
     assert not missing, f"queries absent from COVERAGE.md: {missing}"
-    cited = set(re.findall(r"`([^`]+)`\s*\*oracle\*", cov))
+    runs = re.findall(r"((?:`[^`]+`\s*(?:,\s*and|,|/|and)\s*)*`[^`]+`)\s*\*oracle\*", cov)
+    cited = {name for run in runs for name in re.findall(r"`([^`]+)`", run)}
     unknown = sorted(cited - set(SPARK_QUERIES))
     assert not unknown, f"COVERAGE.md cites unregistered queries as *oracle*: {unknown}"
 

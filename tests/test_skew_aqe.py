@@ -1,7 +1,7 @@
 """AQE skew-join splitting (OptimizeSkewedJoin) — the consolidated suite.
 
-Salting (skew_zipf_salted, SCALE.md) is the manual answer to hot join
-keys; AQE's skew-join is the zero-code one — at runtime it observes the
+Salting (a hash salt on the fact side, the dim side exploded across all
+salt values; SCALE.md) is the manual answer to hot join keys; AQE's skew-join is the zero-code one — at runtime it observes the
 map output sizes, splits a skewed partition above
 `skewedPartitionFactor x median` into advisory-sized slices, and
 replicates the matching build-side partition across them.  Thresholds

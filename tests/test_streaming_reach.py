@@ -1,17 +1,19 @@
-"""Every definition in ``streaming/``, ``queries/relational2.py`` and
-``queries/surfaces.py`` is reached from non-test code.
+"""Every definition in ``streaming/``, ``queries/relational2.py``,
+``queries/surfaces.py`` and ``queries/core.py`` is reached from non-test
+code.
 
 A stdlib-``ast`` scan in the style of ``test_unused_imports.py``: each
 top-level ``def``, ``class`` or single-name assignment in
-``odp_dynamic_data_pipeline_spark/streaming/``,
-``odp_dynamic_data_pipeline_spark/queries/relational2.py`` and
-``odp_dynamic_data_pipeline_spark/queries/surfaces.py``, and each non-dunder
-method of a top-level class, must be referenced from non-test code: the
-package, ``perfbench/``, ``tools/`` and ``__spark_entry__.py``.
+``odp_dynamic_data_pipeline_spark/streaming/`` and in those three query
+modules, and each non-dunder method of a top-level class, must be
+referenced from non-test code: the package, ``perfbench/``, ``tools/`` and
+``__spark_entry__.py``.
 
 Top-level names resolve by module.  A name defined in module ``M`` counts
 as reached only if ``M`` itself names it outside the definition's own span
-(so recursion does not count), another file imports it with ``from M
+(so recursion does not count) in a scope where the name binds to the
+module (stdlib ``symtable``: a function-local import or assignment of the
+same name shadows it), another file imports it with ``from M
 import name`` (directly or through a package ``__init__`` that re-exports
 it), or another file names ``X.name`` with ``X`` an alias of module ``M``.
 A package ``__init__``'s own re-exports do not count as uses.  Methods are
@@ -26,11 +28,13 @@ from __future__ import annotations
 
 import ast
 import pathlib
+import symtable
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 STREAMING = ROOT / "odp_dynamic_data_pipeline_spark" / "streaming"
 RELATIONAL2 = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "relational2.py"
 SURFACES = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "surfaces.py"
+CORE = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "core.py"
 
 
 def non_test_sources() -> list[pathlib.Path]:
@@ -144,6 +148,34 @@ def _references(path: pathlib.Path) -> list[tuple[str, int]]:
 FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
 
 
+def _module_scope_uses(path: pathlib.Path) -> list[tuple[str, int]]:
+    """(name, first line of the scope) for each scope of ``path`` that
+    reads a module-level name; the module body counts as line 0.  Resolved
+    with stdlib ``symtable``: a name that a function imports, assigns or
+    takes as a parameter is local there, one bound in an enclosing
+    function is free, and neither is a use of the module's name.  Names in
+    annotations, which ``symtable`` skips under postponed evaluation,
+    count at their own line."""
+    source = path.read_text()
+    nodes = list(ast.walk(ast.parse(source)))
+    hints = [n.annotation for n in nodes if isinstance(n, (ast.arg, ast.AnnAssign)) and n.annotation]
+    hints += [n.returns for n in nodes if isinstance(n, FUNCS) and n.returns]
+    out = [(n.id, n.lineno) for h in hints for n in ast.walk(h) if isinstance(n, ast.Name)]
+
+    def walk(table: symtable.SymbolTable) -> None:
+        module = table.get_type() == "module"
+        out.extend(
+            (sym.get_name(), table.get_lineno())
+            for sym in table.get_symbols()
+            if sym.is_referenced() and (module or sym.is_global())
+        )
+        for child in table.get_children():
+            walk(child)
+
+    walk(symtable.symtable(source, str(path), "exec"))
+    return out
+
+
 def _is_dunder(name: str) -> bool:
     return name.startswith("__") and name.endswith("__")
 
@@ -180,7 +212,7 @@ def unreached(defining: list[pathlib.Path], sources: list[pathlib.Path]) -> list
     for path in defining:
         tree = ast.parse(path.read_text())
         module = _module_name(path)
-        own_names = [(n.id, n.lineno) for n in ast.walk(tree) if isinstance(n, ast.Name)]
+        own_names = _module_scope_uses(path)
         for qualname, node in _definitions(tree):
             if _registered(node):
                 continue
@@ -249,6 +281,25 @@ def test_scan_resolves_names_by_module(tmp_path):
     assert unreached([a, b], [a, b, caller]) == ["b.py:1 _h"]
 
 
+def test_scan_resolves_own_module_names_by_scope(tmp_path):
+    """A function-local ``from other import _h`` shadows the top-level
+    ``_h``, so the call beside it does not reach it and ``_h`` is flagged.
+    ``_k``, named only from a lambda inside a function, binds to the module
+    scope and is reached; so is ``_T``, named only in a postponed
+    annotation."""
+    mod = tmp_path / "m.py"
+    mod.write_text(
+        "from __future__ import annotations\n\n"
+        "def _h():\n    return 1\n\n"
+        "def _k():\n    return 2\n\n"
+        "class _T:\n    pass\n\n"
+        "def f() -> _T:\n    from other import _h\n    return _h() + (lambda: _k())()\n"
+    )
+    caller = tmp_path / "caller.py"
+    caller.write_text("from m import f\nf()\n")
+    assert unreached([mod], [mod, caller]) == ["m.py:3 _h"]
+
+
 def test_scan_follows_package_reexports(tmp_path):
     """``from pkg import run`` reaches ``pkg/impl.py::run`` through the
     package's re-export; the re-export alone reaches nothing."""
@@ -269,6 +320,10 @@ def test_relational2_definitions_are_reached_from_non_test_code():
 
 def test_surfaces_definitions_are_reached_from_non_test_code():
     assert unreached([SURFACES], non_test_sources()) == []
+
+
+def test_core_definitions_are_reached_from_non_test_code():
+    assert unreached([CORE], non_test_sources()) == []
 
 
 def test_streaming_definitions_are_reached_from_non_test_code():

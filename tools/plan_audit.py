@@ -62,7 +62,6 @@ BROADCAST_NLJ_BY_DESIGN = {
     "token_drift_by_source",       # single-row grand-total broadcast
     "token_budget_allocation",     # single-row weight-total + leftover broadcasts
     "quality_signal_correlation",  # corpus-constant token total broadcast (surprisal leg)
-    "q14_promo_share", "q17_small_quantity_revenue", "q6_forecast_revenue",
     "chi2_independence_lang_source",  # lang-marginal x source-marginal lattice (L*S rows), both broadcast aggs
     "degree_powerlaw_fit",         # single-row log-log moment broadcast over the degree histogram
     "ks_test_value_drift",         # single-row totals + single-row max-D broadcasts over the support
