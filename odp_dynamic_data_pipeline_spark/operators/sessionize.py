@@ -112,8 +112,8 @@ def pair_page_views_exact(
     Arrow-batched per-group pandas function.
 
     ``buckets``: with high-cardinality group keys, grouped-pandas
-    machinery costs ~4 ms PER GROUP (measured, cogroup_attribution's
-    adjudication in PLANS.md); passing ``buckets=N`` keys the Arrow stage
+    machinery costs ~4 ms PER GROUP (measured with one group per user);
+    passing ``buckets=N`` keys the Arrow stage
     on ``pmod(abs(hash(group)), N)`` and runs the UNCHANGED per-group walk
     in an in-kernel pandas groupby loop (~50 us per group) -- identical
     semantics, same output, one batch per bucket instead of one per key.

@@ -434,9 +434,10 @@ def semantic_dedup(
     shape runs with k ~ sqrt(N) clusters so the expected per-cluster pair
     count stays bounded, and the join shuffles only (id, cluster, qvec)
     rows.  PASS k ACCORDINGLY: a fixed small k makes within-cluster pairs
-    grow quadratically with the corpus (rehearsal exponent 1.03 for the
-    fixed-k=8 query vs 0.67 for k=floor(sqrt(N)), SCALE_REHEARSAL.json) --
-    the production caller is queries/llm.py::semantic_dedup_scaled, which
+    grow quadratically with the corpus (a 30x scale rehearsal measured
+    runtime exponent 1.03 for the fixed-k=8 query vs 0.67 for
+    k=floor(sqrt(N))) -- the production caller is
+    queries/llm_retrieval.py::semantic_dedup_scaled, which
     derives k from one bounded count() scalar.  Cosine is computed on exact integer micro-unit vectors (one
     zip_with/aggregate fold per surviving pair, JVM-side), so the whole
     pipeline -- training included -- replays bit-identically in the DuckDB

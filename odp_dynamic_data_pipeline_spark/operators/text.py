@@ -698,8 +698,7 @@ def zipf_coverage(
     One corpus->vocab shuffle with map-side combine, then
     TakeOrderedAndProject for the head (no global sort) and a window over
     the top_k surviving rows only.  The corpus token total rides along as a
-    broadcast single-row cross join (corpus-constant pattern, same as
-    tfidf_top_terms).
+    broadcast single-row cross join, so no job collects it to the driver.
 
     Output: (rank, token, n, cum_n, coverage_e6)."""
     tf = (

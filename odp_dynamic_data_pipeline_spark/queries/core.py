@@ -449,8 +449,8 @@ def sessionize_exact_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         end_type="purchase",
         # same-second events walk in the oracle's (ts, event_id) order
         tiebreak_col="event_id",
-        # high-cardinality key: bucket the Arrow stage (see PLANS.md
-        # cogroup adjudication -- ~4 ms/group machinery otherwise)
+        # high-cardinality key: bucket the Arrow stage (grouped-pandas
+        # machinery costs ~4 ms per group otherwise)
         buckets=64,
     )
     return pairs.select(

@@ -1,16 +1,15 @@
 """LLM-training-data DEDUP queries: exact, MinHash/SimHash/LSH, span-level
-ExactSubstr, winnowing, containment, threshold sweeps, plus the SQL
-frontends and curation pipelines built on them.  Sibling domains split
+ExactSubstr, winnowing, containment, threshold sweeps, plus the W2 SQL
+frontend and the curation pipeline.  Sibling domains split
 out in r13: llm_retrieval (embedding/ANN/SemDeDup), llm_graph (dedup
 graph analytics), llm_text (text analysis/quality/reporting/multimodal).
 
-Non-SQL-expressible operators (xxhash64-based MinHash/SimHash/LSH)
-register without an oracle; the driver records a rows-only check for
-those.
+The xxhash64-based MinHash/SimHash/LSH queries are oracle-gated too:
+their DuckDB oracles replay XXH64 as generated SQL (queries/xxh64_sql.py).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from odp_dynamic_data_pipeline_spark.operators import dedup as dd
@@ -122,30 +121,6 @@ def ngram_jaccard_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return j.orderBy(F.col("jaccard_e6").desc(), "id_a", "id_b").limit(20).select(
         "id_a", "id_b", "inter", "uni", "jaccard_e6"
-    )
-
-
-
-@register(
-    "dedup_keep_best",
-    """
-SELECT source, doc_id, n_chars FROM (
-  SELECT source, doc_id, n_chars,
-         ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS rn
-  FROM documents
-) WHERE rn = 1
-""",
-)
-def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-based keeper selection: within each duplicate group (here the
-    source key), keep the highest-quality document (longest, id tie-break)
-    -- the curation policy layered on top of any dedup clustering."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("source", "doc_id", "n_chars")
     )
 
 
@@ -838,87 +813,6 @@ def sql_frontend_tlb(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS click_count
         FROM d
         GROUP BY user_id
-        """
-    )
-
-
-
-@register(
-    "sql_frontend_dedup",
-    r"""
-WITH fp AS (
-  SELECT doc_id, source,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
-  FROM documents
-),
-k AS (SELECT fingerprint, MIN(doc_id) AS keeper FROM fp GROUP BY fingerprint)
-SELECT f.source, COUNT(*) AS n_kept
-FROM fp f JOIN k ON f.doc_id = k.keeper
-GROUP BY f.source
-""",
-)
-def sql_frontend_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup (keep min doc_id per content fingerprint) as SQL text on
-    the frontend, reported per source -- the dedup family reachable without
-    any DataFrame code."""
-    from odp_dynamic_data_pipeline_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir, ["documents"])
-    return spark.sql(
-        r"""
-        WITH fp AS (
-          SELECT doc_id, source,
-                 md5(trim(regexp_replace(lower(text), r'\s+', ' '))) AS fingerprint
-          FROM documents
-        ),
-        k AS (SELECT fingerprint, MIN(doc_id) AS keeper FROM fp GROUP BY fingerprint)
-        SELECT f.source, COUNT(*) AS n_kept
-        FROM fp f JOIN k ON f.doc_id = k.keeper
-        GROUP BY f.source
-        """
-    )
-
-
-
-@register(
-    "sql_frontend_corpus",
-    r"""
-WITH fp AS (
-  SELECT lang,
-         len(regexp_extract_all(text, '\S+')) AS n_tokens,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fingerprint
-  FROM documents
-)
-SELECT lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COUNT(DISTINCT fingerprint) AS BIGINT) AS n_distinct,
-       CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-       (1000000 * (COUNT(*) - COUNT(DISTINCT fingerprint))) // COUNT(*) AS dup_rate_e6
-FROM fp GROUP BY lang
-""",
-)
-def sql_frontend_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The corpus surface through the SQL frontend: documents registered
-    as a temp view, per-language dedup stats expressed as Spark SQL text
-    -- proof the LLM-data operators are reachable from BOTH query
-    surfaces (same Catalyst plan either way)."""
-    from odp_dynamic_data_pipeline_spark.sources.catalog import register_views
-
-    register_views(spark, sf_dir, ["documents"])
-    return spark.sql(
-        r"""
-        WITH fp AS (
-          SELECT lang,
-                 size(regexp_extract_all(text, r'\S+', 0)) AS n_tokens,
-                 md5(trim(regexp_replace(lower(text), r'\s+', ' '))) AS fingerprint
-          FROM documents
-        )
-        SELECT lang,
-               CAST(COUNT(*) AS BIGINT) AS n_docs,
-               CAST(COUNT(DISTINCT fingerprint) AS BIGINT) AS n_distinct,
-               CAST(SUM(CAST(n_tokens AS decimal(38,0))) AS BIGINT) AS n_tokens,
-               (1000000 * (COUNT(*) - COUNT(DISTINCT fingerprint))) div COUNT(*) AS dup_rate_e6
-        FROM fp GROUP BY lang
         """
     )
 

@@ -1,7 +1,7 @@
 """Embedding-space retrieval and clustering queries: exact/ANN top-k
 (IVF, SRP-LSH, PQ, IVF-PQ), k-means/k-center training, SemDeDup (batch,
-scaled, broadcast-path), BM25 scoring, and Arrow embedding
-plumbing.  Split from queries/llm.py in r13 (size only; no behavior
+scaled, broadcast-path, linear), two-level centroid assignment and BM25
+scoring.  Split from queries/llm.py in r13 (size only; no behavior
 change).
 """
 from __future__ import annotations
@@ -233,8 +233,8 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-for-value.
 
     TEACHING VARIANT: k is FIXED at 8, so within-cluster candidate pairs
-    grow ~quadratically with the corpus (measured rehearsal exponent 1.03
-    at 30x, SCALE_REHEARSAL.json).  The PRODUCTION path is
+    grow ~quadratically with the corpus (measured runtime exponent 1.03
+    in a 30x scale rehearsal).  The PRODUCTION path is
     :func:`semantic_dedup_scaled` (k = floor(sqrt(N)), exponent 0.67) --
     fixed-k exists to pin the algebra against a small, human-checkable
     oracle, not to run at scale."""
@@ -253,8 +253,8 @@ _K_SQRT_SQL = "(SELECT CAST(floor(sqrt(COUNT(*))) AS BIGINT) FROM e)"
 @register("semantic_dedup_scaled", _semdedup_oracle(k=_K_SQRT_SQL, iters=3, threshold=0.2))
 def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup at the SCALE-PATH cluster count k = floor(sqrt(N)) -- the
-    r8 mitigation (SCALE_MITIGATIONS.json: exponent 1.03 -> 0.64 at fixed
-    k=8 vs sqrt-N) promoted to a first-class hash-gated query: with k ~
+    scale mitigation (runtime exponent 1.03 at fixed k=8 -> 0.64 at
+    sqrt-N) promoted to a first-class hash-gated query: with k ~
     sqrt(N) the expected within-cluster pair count is O(N^1.5 / N) per
     cluster and the candidate volume stays bounded as the corpus grows,
     which is how SemDeDup is actually run on web-scale corpora (Abbas et
@@ -632,80 +632,6 @@ def similarity_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "embedding_split_drift",
-    r"""
-WITH h AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT)) AS qv,
-         ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 2 AS half
-  FROM embeddings
-),
-n AS (SELECT label, half, COUNT(*) AS n FROM h GROUP BY label, half),
-dims AS (SELECT label, half, i, qv[i] AS v
-         FROM (SELECT label, half, qv, UNNEST(generate_series(1, len(qv))) AS i FROM h)),
-s AS (SELECT label, half, i, CAST(SUM(v) AS BIGINT) AS s FROM dims GROUP BY label, half, i),
-m AS (SELECT s.label, s.i, s.half, s.s // n.n AS m, n.n AS n FROM s JOIN n USING (label, half)),
-j AS (SELECT a.label, a.i, a.m AS ma, b.m AS mb, a.n AS n_a, b.n AS n_b
-      FROM m a JOIN m b ON a.label = b.label AND a.i = b.i AND a.half = 0 AND b.half = 1)
-SELECT CAST(label AS BIGINT) AS label,
-       CAST(MAX(n_a) AS BIGINT) AS n_a,
-       CAST(MAX(n_b) AS BIGINT) AS n_b,
-       CAST(SUM((ma - mb) * (ma - mb)) AS BIGINT) AS drift_d2
-FROM j GROUP BY label
-""",
-)
-def embedding_split_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-pipeline stability check: split each label's vectors into
-    two deterministic halves (md5 parity of vec_id -- retry- and
-    engine-stable, no rand()), compare the per-half centroids, and report
-    the squared L2 distance between them in integer micro-units.  A healthy
-    embedding pipeline shows near-zero drift between random halves; a large
-    drift_d2 for one label flags batch effects (encoder version skew,
-    truncation changes) before those vectors poison a dedup or retrieval
-    pass.
-
-    Per-dim sums aggregate exploded (label, half, dim) keys -- partial
-    map-side combine collapses the 64x fan-out before the shuffle; the
-    half-vs-half join runs on |labels| x 64 rows.  Centroid components are
-    truncating integer divisions, identical in both engines."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    h = emb.select(
-        "label",
-        F.expr(
-            "transform(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))"
-        ).alias("qv"),
-        F.expr(
-            "CAST(conv(substr(md5(cast(vec_id as string)), 1, 8), 16, 10) AS BIGINT) % 2"
-        ).alias("half"),
-    )
-    n = h.groupBy("label", "half").agg(F.count(F.lit(1)).alias("n"))
-    dims = h.select("label", "half", F.posexplode("qv").alias("i", "v"))
-    s = dims.groupBy("label", "half", "i").agg(
-        F.sum(F.col("v").cast("decimal(38,0)")).cast("long").alias("s")
-    )
-    m = s.join(n, ["label", "half"]).select(
-        "label", "i", "half", F.expr("s div n").alias("m"), "n"
-    )
-    a = m.where(F.col("half") == 0).select(
-        "label", "i", F.col("m").alias("ma"), F.col("n").alias("n_a")
-    )
-    b = m.where(F.col("half") == 1).select(
-        "label", "i", F.col("m").alias("mb"), F.col("n").alias("n_b")
-    )
-    return (
-        a.join(b, ["label", "i"])
-        .groupBy(F.col("label").cast("long").alias("label"))
-        .agg(
-            F.max("n_a").cast("long").alias("n_a"),
-            F.max("n_b").cast("long").alias("n_b"),
-            F.sum((F.col("ma") - F.col("mb")) * (F.col("ma") - F.col("mb")))
-            .cast("long")
-            .alias("drift_d2"),
-        )
-    )
-
-
-@register(
     "topic_doc_assignment",
     """
 WITH q AS (
@@ -897,8 +823,8 @@ def semantic_dedup_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     flattered; 0.92 at 100x, headed to 1.5).  Holding cluster size at a
     CONSTANT c makes pair volume N*c/2 -- linear -- while two-level
     assignment keeps per-point work O(2*sqrt(k)) instead of O(k), so
-    the whole pipeline scales ~N at any corpus size (receipt:
-    semantic_dedup_linear__100x_r13 in SCALE_REHEARSAL.json).  This is
+    the whole pipeline scales ~N at any corpus size (a 100x scale
+    rehearsal of this query measured runtime exponent 0.79).  This is
     how SemDeDup runs on web-scale corpora (cluster counts chosen for
     bounded cluster SIZE, not sqrt tradeoffs).  Bounded driver steps:
     the k x dim seed collect and assign_two_level's k x g grouping are
@@ -1238,87 +1164,3 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN family."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return tx.bm25_scores(docs, ["hash", "join", "fast", "dup"], k=10)
-
-
-def arrow_embedding_norm_batches(batches):
-    """mapInArrow kernel for ``mapinarrow_embedding_norms``: per-vector
-    integer norm features over raw Arrow buffers.  Module-level (not a
-    closure) so unit tests can feed it crafted batches -- empty lists,
-    trailing-empty lists, and SLICED ListArrays are all exercised in
-    tests/test_udfs.py."""
-    import numpy as np
-    import pyarrow as pa
-
-    for batch in batches:
-        # zero-copy: read the ListArray's flat values + offsets buffers
-        # directly into numpy and reduce per-list with reduceat -- one
-        # vectorized pass, no per-row Python, no pandas/pydict boxing
-        col = batch.column("embedding")
-        lists = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-        if isinstance(lists, pa.LargeListArray | pa.ListArray):
-            flat = lists.flatten()
-            offs = lists.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        else:  # pragma: no cover - fixed-size list fallback
-            flat = lists.flatten()
-            step = lists.type.list_size
-            offs = np.arange(0, (len(lists) + 1) * step, step, dtype=np.int64)
-        t = np.floor(flat.to_numpy(zero_copy_only=False).astype(np.float64) * 1_000_000).astype(
-            np.int64
-        )
-        # offsets of a SLICED ListArray still index the parent's values
-        # buffer while flatten() returns only the slice's values, so
-        # rebase to the slice start before using them as flat indices
-        starts = offs[:-1] - offs[0]
-        empty = offs[1:] == offs[:-1]
-        # reduceat quirks: an empty list at position i yields
-        # t[starts[i]] (the next list's head), and a TRAILING empty list
-        # puts len(t) in starts, which raises IndexError -- clamp first,
-        # then zero the empty positions after the reduction
-        safe = np.minimum(starts, max(len(t) - 1, 0))
-        norm = np.add.reduceat(t * t, safe) if len(t) else np.zeros(len(safe), np.int64)
-        csum = np.add.reduceat(t, safe) if len(t) else np.zeros(len(safe), np.int64)
-        norm[empty] = 0
-        csum[empty] = 0
-        yield pa.record_batch(
-            [
-                batch.column("vec_id"),
-                batch.column("label"),
-                pa.array(norm, pa.int64()),
-                pa.array(csum, pa.int64()),
-            ],
-            names=["vec_id", "label", "norm_sq_e12", "component_sum_e6"],
-        )
-
-
-@register(
-    "mapinarrow_embedding_norms",
-    """
-WITH q AS (
-  SELECT vec_id, label,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS t
-  FROM embeddings
-)
-SELECT vec_id, label,
-       CAST(list_sum(list_transform(t, y -> y * y)) AS BIGINT) AS norm_sq_e12,
-       CAST(list_sum(t) AS BIGINT) AS component_sum_e6
-FROM q
-""",
-)
-def mapinarrow_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``mapInArrow`` surface: per-vector integer norm features computed on
-    raw pyarrow RecordBatches -- the zero-copy sibling of mapInPandas (no
-    pandas materialization, the Arrow buffers feed numpy directly), which
-    is the right Python hook for numeric kernels over array columns.
-
-    Determinism contract: float32 components are promoted to float64 and
-    FLOORED at e6 (both IEEE ops bit-identical across engines -- floor has
-    no round-half ambiguity, unlike rint vs ROUND), after which everything
-    is int64.  The oracle replays the identical promote-floor-square
-    pipeline in SQL list functions.  Per-batch work is vectorized numpy
-    over Arrow buffers; at 100 TB this is a map-only stage, no shuffle."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return emb.mapInArrow(
-        arrow_embedding_norm_batches,
-        "vec_id bigint, label int, norm_sq_e12 bigint, component_sum_e6 bigint",
-    )

@@ -117,29 +117,6 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "bpe_token_count",
-    """
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text,
-         '''(?:[sdmt]|ll|ve|re)| ?[\\p{L}]+| ?[\\p{N}]+| ?[^\\s\\p{L}\\p{N}]+|\\s+')) AS INTEGER)
-         AS n_bpe_pretokens
-FROM documents
-""",
-)
-def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish pre-tokenizer count (GPT-2-style split regex: contractions,
-    letter runs, digit runs, punctuation runs, whitespace) -- the unit a
-    training-data token budget is estimated in.  Same regex semantics in
-    Java (Spark) and RE2 (DuckDB)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pat = r"'(?:[sdmt]|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+"
-    return docs.select(
-        "doc_id", F.expr(f"CAST(regexp_count(text, r\"{pat}\") AS INT)").alias("n_bpe_pretokens")
-    )
-
-
-
-@register(
     "multimodal_frame_sample",
     """
 WITH d AS (SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS nb FROM documents),
@@ -370,56 +347,6 @@ def pii_scrub_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "tfidf_top_terms",
-    """
-WITH tok AS (
-  SELECT doc_id, UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-),
-tf AS (SELECT doc_id, tok, COUNT(*) AS tf FROM tok GROUP BY doc_id, tok),
-df AS (SELECT tok, COUNT(DISTINCT doc_id) AS df FROM tok GROUP BY tok),
-n AS (SELECT COUNT(DISTINCT doc_id) AS n FROM tok),
-scored AS (
-  SELECT tf.doc_id, tf.tok, tf.tf, df.df,
-         (tf.tf * 1000000 * n.n) // df.df AS score_e6
-  FROM tf JOIN df ON df.tok = tf.tok CROSS JOIN n
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score_e6 DESC, tok) AS rk
-  FROM scored
-)
-SELECT doc_id, tok, tf, df, score_e6
-FROM ranked WHERE rk <= 5 AND doc_id < 100
-""",
-)
-def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log-free TF-IDF surrogate (tf * N / df as an exact scaled integer --
-    ln() is not bitwise-portable across engines) with top-5 terms per
-    document.  Corpus statistics (df, N) computed over the FULL corpus;
-    output restricted to doc_id < 100."""
-    tok = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).alias("tok"))
-    )
-    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tok.groupBy("tok").agg(F.countDistinct("doc_id").alias("df"))
-    n = tok.agg(F.countDistinct("doc_id").alias("n"))
-    scored = (
-        tf.join(df_, "tok")
-        .crossJoin(F.broadcast(n))
-        .select("doc_id", "tok", "tf", "df",
-                F.expr("(tf * 1000000 * n) div df").alias("score_e6"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("score_e6").desc(), "tok")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where((F.col("rk") <= 5) & (F.col("doc_id") < 100))
-        .select("doc_id", "tok", "tf", "df", "score_e6")
-    )
-
-
-
-@register(
     "repetition_quality",
     """
 WITH toks AS (SELECT doc_id, regexp_extract_all(text, '\\S+') AS t FROM documents),
@@ -511,77 +438,6 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("seg_bytes").cast("string")).alias("seg_md5"),
         "seg_len",
     )
-
-
-
-CMS_ORACLE = """
-WITH tok AS (
-  SELECT UNNEST(regexp_extract_all(lower(text), '[a-z0-9]+')) AS t FROM documents
-),
-rows_d AS (SELECT UNNEST([0, 1, 2, 3]) AS d),
-counters AS (
-  SELECT d, ('0x' || substr(md5(d || ':' || t), 1, 8))::BIGINT % 1024 AS bucket,
-         COUNT(*) AS c
-  FROM tok CROSS JOIN rows_d
-  GROUP BY d, bucket
-),
-exact AS (
-  SELECT t, COUNT(*) AS exact_n FROM tok GROUP BY t
-  ORDER BY exact_n DESC, t LIMIT 20
-),
-probes AS (
-  SELECT e.t, e.exact_n, r.d,
-         ('0x' || substr(md5(r.d || ':' || e.t), 1, 8))::BIGINT % 1024 AS bucket
-  FROM exact e CROSS JOIN rows_d r
-)
-SELECT p.t AS token, p.exact_n, MIN(c.c) AS cms_estimate
-FROM probes p JOIN counters c ON c.d = p.d AND c.bucket = p.bucket
-GROUP BY p.t, p.exact_n
-"""
-
-
-
-@register("cms_token_counts", CMS_ORACLE)
-def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch (Cormode/Muthukrishnan 2005) as DataFrame ops:
-    depth-4 x width-1024 counter grid keyed by md5-derived bucket ids, so
-    the sketch itself -- not just its API -- is bit-identical on any engine.
-    Estimate = min over the token's 4 counters (always >= exact count;
-    collisions only inflate).  The sketch is ONE groupBy of fixed 4096-row
-    cardinality regardless of corpus size -- the O(1)-memory frequency
-    table a 100 TB token stream needs; probing the top-20 exact tokens
-    exposes the estimate-vs-exact gap the judge can read off the result."""
-    tok = load_table(spark, sf_dir, "documents").select(
-        F.explode(F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).alias("t")
-    )
-    # one token shuffle feeds BOTH sides: the counters are sums of the
-    # weighted vocabulary (identical numbers to hashing every occurrence --
-    # the sketch update is additive), and the exact top-20 probe reuses the
-    # same table.  In a pure-streaming deployment the counters come
-    # straight from the occurrence stream and this exact table never exists.
-    tok_counts = tok.groupBy("t").agg(F.count(F.lit(1)).alias("exact_n")).persist()
-    depths = F.array(*[F.lit(d) for d in range(4)])
-    keyed = tok_counts.select("t", "exact_n", F.explode(depths).alias("d")).withColumn(
-        "bucket",
-        F.expr("CAST(conv(substr(md5(concat(d, ':', t)), 1, 8), 16, 10) AS BIGINT) % 1024"),
-    )
-    counters = keyed.groupBy("d", "bucket").agg(F.sum("exact_n").alias("c"))
-    exact = tok_counts.orderBy(F.col("exact_n").desc(), "t").limit(20)
-    probes = exact.select("t", "exact_n", F.explode(depths).alias("d")).withColumn(
-        "bucket",
-        F.expr("CAST(conv(substr(md5(concat(d, ':', t)), 1, 8), 16, 10) AS BIGINT) % 1024"),
-    )
-    out = (
-        probes.join(counters, ["d", "bucket"])
-        .groupBy(F.col("t").alias("token"), "exact_n")
-        .agg(F.min("c").alias("cms_estimate"))
-        # 20-row result: materialize eagerly so the vocab cache, shared by
-        # the sketch and the exact probes, can be released before
-        # returning instead of staying pinned for the session
-        .localCheckpoint(eager=True)
-    )
-    tok_counts.unpersist()
-    return out
 
 
 
@@ -716,244 +572,6 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     milli-weights, bigint normalization -- no pow(), no double sums)."""
     docs = load_table(spark, sf_dir, "documents").select("lang", "text")
     return tx.mixture_weights(docs, group_col="lang")
-
-
-
-@register(
-    "tokenizer_fertility_report",
-    r"""
-SELECT lang,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS ws_tokens,
-       CAST(SUM(len(regexp_extract_all(text,
-         '''(?:[sdmt]|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+'))) AS BIGINT)
-         AS bpe_pretokens,
-       CAST(SUM(octet_length(encode(text))) AS BIGINT) AS n_bytes,
-       (1000 * CAST(SUM(len(regexp_extract_all(text,
-         '''(?:[sdmt]|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+'))) AS BIGINT))
-         // greatest(CAST(SUM(len(regexp_extract_all(text, '\S+'))) AS BIGINT), 1) AS fertility_e3,
-       (1000 * CAST(SUM(octet_length(encode(text))) AS BIGINT))
-         // greatest(CAST(SUM(len(regexp_extract_all(text,
-         '''(?:[sdmt]|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+'))) AS BIGINT), 1)
-         AS bytes_per_pretoken_e3
-FROM documents GROUP BY lang
-""",
-)
-def tokenizer_fertility_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Subword fertility per language: BPE-style pre-tokens per whitespace
-    word and bytes per pre-token -- the report that shows which languages a
-    tokenizer will fragment (fertility >> 1000) and where the byte budget
-    goes.  Map-only feature extraction, one rollup shuffle on lang."""
-    pat = r"'(?:[sdmt]|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+"
-    docs = load_table(spark, sf_dir, "documents").select(
-        "lang",
-        F.expr(r"size(regexp_extract_all(text, r'\S+', 0))").alias("ws"),
-        F.expr(f'CAST(regexp_count(text, r"{pat}") AS BIGINT)').alias("bpe"),
-        F.expr("CAST(octet_length(text) AS BIGINT)").alias("nb"),
-    )
-    return docs.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.col("ws").cast("decimal(38,0)")).cast("long").alias("ws_tokens"),
-        F.sum(F.col("bpe").cast("decimal(38,0)")).cast("long").alias("bpe_pretokens"),
-        F.sum(F.col("nb").cast("decimal(38,0)")).cast("long").alias("n_bytes"),
-        F.expr(
-            "(1000 * cast(sum(cast(bpe as decimal(38,0))) as bigint))"
-            " div greatest(cast(sum(cast(ws as decimal(38,0))) as bigint), 1)"
-        ).alias("fertility_e3"),
-        F.expr(
-            "(1000 * cast(sum(cast(nb as decimal(38,0))) as bigint))"
-            " div greatest(cast(sum(cast(bpe as decimal(38,0))) as bigint), 1)"
-        ).alias("bytes_per_pretoken_e3"),
-    )
-
-
-
-@register(
-    "packing_efficiency_report",
-    r"""
-WITH t AS (
-  SELECT lang, CAST(SUM(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS total_tokens
-  FROM documents GROUP BY lang
-)
-SELECT lang, total_tokens,
-       (total_tokens + 255) // 256 AS n_seqs,
-       ((total_tokens + 255) // 256) * 256 - total_tokens AS pad_tokens,
-       (1000000 * (((total_tokens + 255) // 256) * 256 - total_tokens))
-         // greatest(((total_tokens + 255) // 256) * 256, 1) AS pad_ppm
-FROM t
-""",
-)
-def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Padding waste of the concat-and-cut packing (pack_sequences at
-    L=256): per language, how many sequences the token supply fills and
-    what fraction of the final shard is padding -- the efficiency number a
-    packing strategy is judged by.  Pure arithmetic on one per-lang
-    aggregate."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        "lang", F.expr(r"size(regexp_extract_all(text, r'\S+', 0))").alias("nt")
-    )
-    t = docs.groupBy("lang").agg(
-        F.sum(F.col("nt").cast("decimal(38,0)")).cast("long").alias("total_tokens")
-    )
-    return t.select(
-        "lang",
-        "total_tokens",
-        F.expr("(total_tokens + 255) div 256").alias("n_seqs"),
-        F.expr("((total_tokens + 255) div 256) * 256 - total_tokens").alias("pad_tokens"),
-        F.expr(
-            "(1000000 * (((total_tokens + 255) div 256) * 256 - total_tokens))"
-            " div greatest(((total_tokens + 255) div 256) * 256, 1)"
-        ).alias("pad_ppm"),
-    )
-
-
-
-@register(
-    "event_rate_anomalies",
-    """
-WITH c AS (
-  SELECT event_type, CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-m AS (SELECT event_type, quantile_cont(n, 0.5) AS med FROM c GROUP BY 1),
-d AS (SELECT c.event_type, c.hour_epoch, c.n, m.med, abs(c.n - m.med) AS dev
-      FROM c JOIN m USING (event_type)),
-md AS (SELECT event_type, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
-SELECT d.event_type, d.hour_epoch, d.n, d.med, md.mad
-FROM d JOIN md USING (event_type)
-WHERE d.dev > 3 * md.mad AND md.mad > 0
-""",
-)
-def event_rate_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest-rate anomaly detection, median/MAD style (robust to the
-    outliers it is hunting, unlike mean/stddev): hours whose event count
-    deviates from the event-type's median hourly rate by more than 3x the
-    median absolute deviation -- the monitor that catches a stuck producer
-    or a replay storm in the telemetry feed the reference ingests.
-
-    Two exact percentiles over the (type, hour) count table -- percentile()
-    buckets by VALUE, and the count table is |types| x |hours| however big
-    the raw stream; the stream itself is touched by exactly one counting
-    shuffle."""
-    ev = load_table(spark, sf_dir, "events")
-    c = (
-        ev.withColumn("hour_epoch", F.unix_timestamp(F.date_trunc("hour", F.col("ts"))))
-        .groupBy("event_type", "hour_epoch")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    m = c.groupBy("event_type").agg(F.expr("percentile(n, 0.5)").alias("med"))
-    d = c.join(m, "event_type").withColumn("dev", F.abs(F.col("n") - F.col("med")))
-    md = d.groupBy("event_type").agg(F.expr("percentile(dev, 0.5)").alias("mad"))
-    return (
-        d.join(md, "event_type")
-        .where((F.col("dev") > 3 * F.col("mad")) & (F.col("mad") > 0))
-        .select("event_type", "hour_epoch", "n", "med", "mad")
-    )
-
-
-
-@register(
-    "dataset_card_report",
-    r"""
-WITH d AS (
-  SELECT doc_id, lang, source,
-         len(regexp_extract_all(text, '\S+')) AS n_tokens,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-  FROM documents
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-       CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-       CAST(SUM(n_tokens) AS BIGINT) AS n_tokens_total,
-       (1000 * CAST(SUM(n_tokens) AS BIGINT)) // greatest(COUNT(*), 1) AS mean_tokens_e3,
-       quantile_cont(n_tokens, 0.5) AS p50_tokens,
-       (1000000 * (COUNT(*) - COUNT(DISTINCT fp))) // greatest(COUNT(*), 1) AS dup_rate_e6,
-       (1000000 * CAST(SUM(CASE WHEN n_tokens < 20 THEN 1 ELSE 0 END) AS BIGINT))
-         // greatest(COUNT(*), 1) AS short_docs_ppm
-FROM d
-""",
-)
-def dataset_card_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row dataset card: corpus size, language/source diversity, token
-    supply, exact-duplicate rate, median document length, short-doc share
-    -- the summary table a dataset release ships (Gebru et al., Datasheets
-    for Datasets).
-
-    One corpus pass: per-doc stats are map-only, the rollup is a single
-    global aggregate.  The exact median stays scalable because
-    percentile() buckets by VALUE (distinct doc lengths, bounded by the
-    longest document), not by row count; the three distinct-counts ride
-    Spark's Expand rewrite on one-row-per-doc inputs."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "source", "text")
-    d = docs.select(
-        "lang",
-        "source",
-        F.expr(r"size(regexp_extract_all(text, r'\S+', 0))").alias("n_tokens"),
-        F.md5(
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-        ).alias("fp"),
-    )
-    return d.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.count_distinct("lang").cast("long").alias("n_langs"),
-        F.count_distinct("source").cast("long").alias("n_sources"),
-        F.sum(F.col("n_tokens").cast("decimal(38,0)")).cast("long").alias("n_tokens_total"),
-        F.expr(
-            "(1000 * cast(sum(cast(n_tokens as decimal(38,0))) as bigint))"
-            " div greatest(count(1), 1)"
-        ).alias("mean_tokens_e3"),
-        F.expr("percentile(n_tokens, 0.5)").alias("p50_tokens"),
-        F.expr(
-            "(1000000 * (count(1) - count(DISTINCT fp))) div greatest(count(1), 1)"
-        ).alias("dup_rate_e6"),
-        F.expr(
-            "(1000000 * cast(sum(CASE WHEN n_tokens < 20 THEN 1 ELSE 0 END) as bigint))"
-            " div greatest(count(1), 1)"
-        ).alias("short_docs_ppm"),
-    )
-
-
-
-@register(
-    "length_curriculum_buckets",
-    r"""
-WITH d AS (
-  SELECT lang, doc_id, n_chars, len(regexp_extract_all(text, '\S+')) AS n_tokens,
-         NTILE(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS decile
-  FROM documents
-)
-SELECT lang, CAST(decile AS BIGINT) AS decile,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(MIN(n_chars) AS BIGINT) AS min_chars,
-       CAST(MAX(n_chars) AS BIGINT) AS max_chars,
-       CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens
-FROM d GROUP BY lang, decile
-""",
-)
-def length_curriculum_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-curriculum manifest: per-language document deciles by length
-    (shortest first), with the char range and token supply of each bucket
-    -- the table a curriculum sampler walks to serve short documents in
-    early training steps.
-
-    NTILE over a (lang)-partitioned ordering: the sort is per-language
-    partition, never global, so the plan scales with the widest language,
-    not the corpus."""
-    docs = load_table(spark, sf_dir, "documents").select("lang", "doc_id", "n_chars", "text")
-    w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
-    d = docs.select(
-        "lang",
-        "n_chars",
-        F.expr(r"size(regexp_extract_all(text, r'\S+', 0))").alias("n_tokens"),
-        F.ntile(10).over(w).alias("decile"),
-    )
-    return d.groupBy("lang", F.col("decile").cast("long").alias("decile")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.min("n_chars").cast("long").alias("min_chars"),
-        F.max("n_chars").cast("long").alias("max_chars"),
-        F.sum("n_tokens").cast("long").alias("sum_tokens"),
-    )
 
 
 
@@ -1302,47 +920,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return pairs.groupBy("source_a", "source_b").agg(
         F.count(F.lit(1)).alias("n_shared_spans")
-    )
-
-
-
-@register(
-    "join_key_skew_report",
-    """
-WITH k AS (SELECT o_custkey AS key, COUNT(*) AS n FROM orders GROUP BY o_custkey),
-tot AS (SELECT CAST(SUM(n) AS BIGINT) AS n_total, COUNT(*) AS n_keys FROM k),
-top AS (SELECT key, n, CAST(ROW_NUMBER() OVER (ORDER BY n DESC, key) AS BIGINT) AS rank
-        FROM k)
-SELECT rank, key, n,
-       (1000000 * n * n_keys) // n_total AS skew_x_e6
-FROM top, tot WHERE rank <= 20
-""",
-)
-def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnostic: top-20 heaviest keys with their load
-    relative to the mean key (skew_x_e6 = n/mean * 1e6) -- the report that
-    decides whether a join needs salting or AQE skew handling BEFORE it
-    runs at 100 TB.  TakeOrderedAndProject head + broadcast single-row
-    totals; never materializes the full key histogram to the driver."""
-    k = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.col("o_custkey").alias("key"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = k.agg(
-        F.sum(F.col("n").cast("decimal(38,0)")).cast("long").alias("n_total"),
-        F.count(F.lit(1)).alias("n_keys"),
-    )
-    top = k.orderBy(F.desc("n"), "key").limit(20)
-    w = Window.orderBy(F.desc("n"), "key")
-    ranked = top.select(
-        F.row_number().over(w).cast("long").alias("rank"), "key", "n"
-    )
-    return ranked.crossJoin(F.broadcast(tot)).select(
-        "rank",
-        "key",
-        "n",
-        F.expr("(1000000 * n * n_keys) div n_total").alias("skew_x_e6"),
     )
 
 
@@ -1767,272 +1344,6 @@ def entropy_sampling_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "chi2_independence_lang_source",
-    """
-WITH o AS (SELECT lang, source, COUNT(*) AS o FROM documents GROUP BY lang, source),
-r AS (SELECT lang, COUNT(*) AS r FROM documents GROUP BY lang),
-c AS (SELECT source, COUNT(*) AS c FROM documents GROUP BY source),
-n AS (SELECT COUNT(*) AS n FROM documents),
-cells AS (
-  SELECT r.lang, c.source, r.r, c.c, n.n, COALESCE(o.o, 0) AS o
-  FROM r CROSS JOIN c CROSS JOIN n
-  LEFT JOIN o ON o.lang = r.lang AND o.source = c.source
-),
-contrib AS (
-  SELECT lang, r,
-         CAST(((CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c)
-               * (CAST(o AS HUGEINT) * n - CAST(r AS HUGEINT) * c) * 1048576)
-              // (CAST(n AS HUGEINT) * r * c) AS BIGINT) AS fp
-  FROM cells
-)
-SELECT lang, MAX(r) AS n_lang, COUNT(*) AS n_sources,
-       CAST(SUM(fp) AS BIGINT) AS chi2_contrib_fp20
-FROM contrib GROUP BY lang
-""",
-)
-def chi2_independence_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson chi-squared independence test of lang x source (is the
-    language mix uniform across corpus sources?) in EXACT fixed-point
-    arithmetic: each cell's (O - E)^2 / E is computed as the integer
-    ((O*N - r*c)^2 << 20) div (N*r*c) -- multiplying through by N so
-    expected counts never become non-exact rationals, truncating integer
-    division identically in both engines (DECIMAL(38,0) div == HUGEINT //),
-    so the statistic is an order-independent integer SUM, hash-exact.
-
-    Zero cells are real chi-squared terms (E > 0 even when O = 0), so the
-    cell universe is the cross of the lang and source marginal tables --
-    two tiny broadcast aggregates (L x S rows, never data x data), with
-    observed counts left-joined on top.  Scale shape: three partial-agg
-    passes over documents + an L*S-row driver-sized lattice; at 100 TB the
-    only full-data work is the map-side-combined GROUP BYs.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    o = docs.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("o"))
-    r = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("r"))
-    c = docs.groupBy("source").agg(F.count(F.lit(1)).alias("c"))
-    n = docs.agg(F.count(F.lit(1)).alias("n"))
-    cells = (
-        r.crossJoin(F.broadcast(c))
-        .crossJoin(F.broadcast(n))
-        .join(o, ["lang", "source"], "left")
-        .withColumn("o", F.coalesce(F.col("o"), F.lit(0)))
-    )
-    # promote BEFORE multiplying: o*n and r*c in raw int64 overflow once the
-    # corpus passes ~3e9 rows, which is squarely inside the 100 TB framing
-    d38 = "(CAST(o AS DECIMAL(38,0)) * n - CAST(r AS DECIMAL(38,0)) * c)"
-    fp = F.expr(
-        f"CAST(({d38} * {d38} * 1048576) div (CAST(n AS DECIMAL(38,0)) * r * c) AS BIGINT)"
-    )
-    return (
-        cells.withColumn("fp", fp)
-        .groupBy("lang")
-        .agg(
-            F.max("r").alias("n_lang"),
-            F.count(F.lit(1)).alias("n_sources"),
-            F.sum("fp").alias("chi2_contrib_fp20"),
-        )
-    )
-
-
-
-@register(
-    "cohens_kappa_filters",
-    """
-WITH r AS (
-  SELECT lang,
-         CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS a,
-         CASE WHEN len(regexp_extract_all(text, '\\S+')) >= 40 THEN 1 ELSE 0 END AS b
-  FROM documents
-),
-m AS (
-  SELECT lang, COUNT(*) AS n,
-         SUM(CASE WHEN a = 1 AND b = 1 THEN 1 ELSE 0 END) AS n11,
-         SUM(CASE WHEN a = 0 AND b = 0 THEN 1 ELSE 0 END) AS n00,
-         SUM(a) AS a1, SUM(b) AS b1
-  FROM r GROUP BY lang
-)
-SELECT lang, CAST(n AS BIGINT) AS n, CAST(n11 AS BIGINT) AS both_keep,
-       CAST(n00 AS BIGINT) AS both_drop,
-       CAST((CAST(n AS HUGEINT) * (n11 + n00) - (CAST(a1 AS HUGEINT) * b1 + CAST(n - a1 AS HUGEINT) * (n - b1))) * 1000000
-            // nullif(CAST(n AS HUGEINT) * n - (CAST(a1 AS HUGEINT) * b1 + CAST(n - a1 AS HUGEINT) * (n - b1)), 0)
-            AS BIGINT) AS kappa_e6
-FROM m
-""",
-)
-def cohens_kappa_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa agreement between two document-quality raters (a
-    char-length filter vs a token-count filter), per language -- the
-    standard chance-corrected statistic for validating a cheap filter
-    against a reference filter before switching a corpus pipeline over.
-
-    kappa = (p_o - p_e)/(1 - p_e) evaluated as ONE exact integer fixed-point
-    expression by multiplying through by N^2: numerator N*(n11+n00) -
-    (a1*b1 + a0*b0), denominator N^2 - (a1*b1 + a0*b0), truncating e6
-    division identical in both engines.  All inputs are plain conditional
-    counts (map-side combined), so at 100 TB this is one pass + a
-    5-group agg."""
-    docs = load_table(spark, sf_dir, "documents")
-    r = docs.select(
-        "lang",
-        F.when(F.col("n_chars") >= 200, 1).otherwise(0).alias("a"),
-        F.when(F.size(F.expr(r"regexp_extract_all(text, '\\S+', 0)")) >= 40, 1)
-        .otherwise(0)
-        .alias("b"),
-    )
-    m = r.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when((F.col("a") == 1) & (F.col("b") == 1), 1).otherwise(0)).alias("n11"),
-        F.sum(F.when((F.col("a") == 0) & (F.col("b") == 0), 1).otherwise(0)).alias("n00"),
-        F.sum("a").alias("a1"),
-        F.sum("b").alias("b1"),
-    )
-    d = "DECIMAL(38,0)"
-    pe = f"(CAST(a1 AS {d}) * b1 + CAST(n - a1 AS {d}) * (n - b1))"
-    # kappa is undefined when chance agreement is total (both raters
-    # unanimous: pe == N^2) -- emit NULL for that group, never abort
-    kappa = F.expr(
-        f"CAST(((CAST(n AS {d}) * (n11 + n00) - {pe}) * 1000000)"
-        f" div nullif(CAST(n AS {d}) * n - {pe}, 0) AS BIGINT)"
-    )
-    return m.select(
-        "lang",
-        F.col("n").cast("long").alias("n"),
-        F.col("n11").cast("long").alias("both_keep"),
-        F.col("n00").cast("long").alias("both_drop"),
-        kappa.alias("kappa_e6"),
-    )
-
-
-
-@register(
-    "calibration_curve_report",
-    r"""
-WITH t AS (
-  SELECT doc_id, regexp_extract_all(text, '\S+') AS toks
-  FROM documents WHERE len(regexp_extract_all(text, '\S+')) > 0
-),
-sc AS (
-  SELECT doc_id,
-         (1000000 * CAST(len(list_filter(toks, x -> list_contains(['the','and','of','a','to'], x))) AS BIGINT))
-           // CAST(len(toks) AS BIGINT) AS score_e6,
-         (1000000 * CAST(len(list_distinct(toks)) AS BIGINT))
-           // CAST(len(toks) AS BIGINT) >= 500000 AS lab
-  FROM t
-),
-b AS (SELECT score_e6 * 10 // 1000001 AS bin, score_e6, lab FROM sc)
-SELECT bin, COUNT(*) AS n,
-       CAST(SUM(score_e6) // COUNT(*) AS BIGINT) AS mean_score_e6,
-       CAST(1000000 * SUM(CASE WHEN lab THEN 1 ELSE 0 END) // COUNT(*) AS BIGINT) AS pos_rate_e6,
-       CAST(abs(SUM(score_e6) // COUNT(*) - 1000000 * SUM(CASE WHEN lab THEN 1 ELSE 0 END) // COUNT(*)) AS BIGINT) AS gap_e6
-FROM b GROUP BY bin
-""",
-)
-def calibration_curve_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability (calibration) curve for a document-quality scorer: bin
-    predictions into deciles, compare each bin's mean predicted score to
-    its empirical positive rate -- the companion diagnostic to ROC-AUC
-    (AUC measures ranking; THIS checks whether the scores mean what
-    they say, which is what sampling-by-score assumes).  Scorer = stopword
-    ratio, reference label = token-uniqueness threshold, both e6 integer
-    ratios with truncating division; bin = score*10 div 1000001 keeps the
-    perfect-score edge in decile 9.  Map-side expression work + one
-    10-group agg: flat at any corpus size."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.expr(r"regexp_extract_all(text, '\\S+', 0)")
-    t = docs.select(F.col("doc_id"), toks.alias("toks")).where(F.size("toks") > 0)
-    stop = "array('the','and','of','a','to')"
-    sc = t.select(
-        F.expr(
-            f"(1000000 * CAST(size(filter(toks, x -> array_contains({stop}, x))) AS BIGINT))"
-            " div CAST(size(toks) AS BIGINT)"
-        ).alias("score_e6"),
-        (
-            F.expr("(1000000 * CAST(size(array_distinct(toks)) AS BIGINT))"
-                   " div CAST(size(toks) AS BIGINT)")
-            >= 500000
-        ).alias("lab"),
-    )
-    b = sc.select(F.expr("score_e6 * 10 div 1000001").alias("bin"), "score_e6", "lab")
-    return b.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("CAST(SUM(score_e6) div COUNT(*) AS BIGINT)").alias("mean_score_e6"),
-        F.expr(
-            "CAST(1000000 * SUM(CASE WHEN lab THEN 1 ELSE 0 END) div COUNT(*) AS BIGINT)"
-        ).alias("pos_rate_e6"),
-        F.expr(
-            "CAST(abs(SUM(score_e6) div COUNT(*) -"
-            " 1000000 * SUM(CASE WHEN lab THEN 1 ELSE 0 END) div COUNT(*)) AS BIGINT)"
-        ).alias("gap_e6"),
-    )
-
-
-
-@register(
-    "dataset_snapshot_diff",
-    """
-WITH a AS (SELECT doc_id, md5(text) AS fp FROM documents),
-b AS (
-  SELECT doc_id,
-         md5(CASE WHEN doc_id % 13 = 0 THEN upper(text) ELSE text END) AS fp
-  FROM documents WHERE doc_id % 17 <> 0
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, md5(text || ' v2') AS fp
-  FROM documents WHERE doc_id % 11 = 0
-)
-SELECT COALESCE(a.doc_id, b.doc_id) AS doc_id,
-       CASE WHEN a.doc_id IS NULL THEN 'added'
-            WHEN b.doc_id IS NULL THEN 'removed'
-            ELSE 'changed' END AS status,
-       a.fp AS old_fp, b.fp AS new_fp
-FROM a FULL OUTER JOIN b ON a.doc_id = b.doc_id
-WHERE a.doc_id IS NULL OR b.doc_id IS NULL OR a.fp <> b.fp
-""",
-)
-def dataset_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset release diff: content-hash comparison of two corpus
-    snapshots into added / removed / changed manifests -- the audit
-    artifact between training-data versions (what changed since v1 is the
-    first question any data card answers).  Snapshot B is derived
-    deterministically from A (drops, edits, additions), both sides reduce
-    to (id, md5 fingerprint) BEFORE the full outer join, so the shuffle
-    carries 40-byte rows, never document text; unchanged rows are filtered
-    post-join.  At 100 TB this is the standard manifest-diff shape: one
-    equi-join of two fingerprint tables."""
-    docs = load_table(spark, sf_dir, "documents")
-    a = docs.select("doc_id", F.md5("text").alias("fp"))
-    b = (
-        docs.where(F.col("doc_id") % 17 != 0)
-        .select(
-            "doc_id",
-            F.md5(
-                F.when(F.col("doc_id") % 13 == 0, F.upper("text")).otherwise(F.col("text"))
-            ).alias("fp"),
-        )
-        .unionByName(
-            docs.where(F.col("doc_id") % 11 == 0).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"),
-                F.md5(F.concat(F.col("text"), F.lit(" v2"))).alias("fp"),
-            )
-        )
-    )
-    j = a.alias("a").join(b.alias("b"), F.col("a.doc_id") == F.col("b.doc_id"), "full_outer")
-    return j.select(
-        F.coalesce(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_id"),
-        F.when(F.col("a.doc_id").isNull(), "added")
-        .when(F.col("b.doc_id").isNull(), "removed")
-        .otherwise("changed")
-        .alias("status"),
-        F.col("a.fp").alias("old_fp"),
-        F.col("b.fp").alias("new_fp"),
-    ).where(
-        F.col("a.doc_id").isNull()
-        | F.col("b.doc_id").isNull()
-        | (F.col("a.fp") != F.col("b.fp"))
-    )
-
-
-
-@register(
     "quantile_normalize_scores",
     """
 WITH x AS (SELECT doc_id, source, n_chars AS v FROM documents),
@@ -2081,72 +1392,6 @@ def quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ng = g.agg(F.max("p")).first()[0] or 1  # empty-corpus guard, keeps plan analyzable
     s = s.withColumn("p", F.expr(f"(r - 1) * {ng} div ns + 1"))
     return s.join(g, "p").select("doc_id", "source", "v", F.col("gv").alias("norm_v"))
-
-
-
-@register(
-    "categorical_index_langs",
-    """
-WITH c AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang),
-idx AS (
-  SELECT lang, cnt, row_number() OVER (ORDER BY cnt DESC, lang) - 1 AS lang_idx
-  FROM c
-)
-SELECT d.doc_id, d.lang, i.lang_idx, i.cnt AS lang_freq
-FROM documents d JOIN idx i ON d.lang = i.lang
-""",
-)
-def categorical_index_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Categorical string indexing (the StringIndexer ML-prep primitive):
-    assign contiguous integer ids to language values by descending
-    frequency with a deterministic alphabetical tiebreak, then encode
-    every document -- id 0 = most frequent, the layout embedding tables
-    assume.  The vocabulary is a tiny aggregate (one row per distinct
-    value) so its ordering window is K-bounded, and the encode is a
-    broadcast join back onto the corpus: one shuffle for the vocab count,
-    zero for the encode, at any corpus size."""
-    docs = load_table(spark, sf_dir, "documents")
-    c = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("cnt"))
-    idx = c.select(
-        "lang",
-        F.col("cnt").alias("lang_freq"),
-        (F.row_number().over(Window.orderBy(F.desc("cnt"), F.asc("lang"))) - 1).alias(
-            "lang_idx"
-        ),
-    )
-    return docs.select("doc_id", "lang").join(F.broadcast(idx), "lang").select(
-        "doc_id", "lang", "lang_idx", "lang_freq"
-    )
-
-
-
-@register(
-    "k_anonymity_report",
-    """
-WITH q AS (
-  SELECT lang, source, n_chars // 100 AS len_bucket, COUNT(*) AS grp_size
-  FROM documents GROUP BY lang, source, len_bucket
-)
-SELECT lang, source, len_bucket, grp_size,
-       grp_size < 5 AS violates_k5
-FROM q WHERE grp_size < 20
-""",
-)
-def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity audit over quasi-identifiers (lang, source, length
-    bucket): every equivalence class smaller than the reporting floor,
-    flagged when it breaks k=5 -- the pre-release privacy check that
-    catches "this combination of harmless attributes identifies one
-    document/user".  Pure conditional aggregation (map-side combined);
-    the small-group filter makes the output the violation manifest, not
-    the corpus."""
-    docs = load_table(spark, sf_dir, "documents")
-    q = docs.groupBy(
-        "lang", "source", F.expr("n_chars div 100").alias("len_bucket")
-    ).agg(F.count(F.lit(1)).alias("grp_size"))
-    return q.where(F.col("grp_size") < 20).withColumn(
-        "violates_k5", F.col("grp_size") < 5
-    )
 
 
 
@@ -2221,51 +1466,6 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n AS true_count",
         "CAST(((l2 - l1) * 726817) div 1048576 AS BIGINT) AS noise_fp20",
         "CAST((n * 1048576) + ((l2 - l1) * 726817) div 1048576 AS BIGINT) AS noisy_count_fp20",
-    )
-
-
-
-@register(
-    "inverted_index_postings",
-    r"""
-WITH t AS (
-  SELECT DISTINCT doc_id, unnest(regexp_extract_all(text, '\S+')) AS term
-  FROM documents
-),
-df AS (SELECT term, COUNT(*) AS doc_freq FROM t GROUP BY term),
-rare AS (SELECT term, doc_freq FROM df ORDER BY doc_freq, term LIMIT 10)
-SELECT t.term, MAX(rare.doc_freq) AS doc_freq,
-       array_to_string(list(t.doc_id ORDER BY t.doc_id), ',') AS postings
-FROM t JOIN rare ON t.term = rare.term
-GROUP BY t.term
-""",
-)
-def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index build (the retrieval-side data structure BM25 and
-    sparse search assume): per term, document frequency plus the SORTED
-    posting list of containing documents.  Postings are grouped per term
-    -- one shuffle keyed by term, sort_array inside the agg buffer keeps
-    ordering deterministic without an ordered window -- and the rarest-K
-    vocabulary cut bounds list size before collect (an uncapped posting
-    list for a stopword is the classic index-build OOM; production shards
-    those terms into blocks).  Cut to the low-df tail here so
-    the result is a verifiable artifact, not a corpus dump; postings
-    serialize to a csv string so the driver hash sees a scalar column."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = docs.select(
-        "doc_id", F.explode(F.expr(r"regexp_extract_all(text, '\\S+', 0)")).alias("term")
-    ).distinct()
-    df_tab = t.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
-    # 10 rarest terms, deterministic tiebreak: TakeOrderedAndProject over the
-    # vocab aggregate (K rows to the driver-side heap, no global window)
-    band = df_tab.orderBy("doc_freq", "term").limit(10)
-    return (
-        t.join(F.broadcast(band), "term")
-        .groupBy("term")
-        .agg(
-            F.max("doc_freq").alias("doc_freq"),
-            F.array_join(F.sort_array(F.collect_list("doc_id")), ",").alias("postings"),
-        )
     )
 
 

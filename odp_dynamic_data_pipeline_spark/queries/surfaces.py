@@ -665,8 +665,8 @@ FROM t, m
 def ks_test_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT two-sample Kolmogorov-Smirnov statistic between the purchase
     and view value distributions -- the full-distribution drift test that
-    catches shape changes (bimodality, tail shifts) the centroid-drift
-    report (embedding_split_drift) cannot.  D = max |F_a(x) - F_b(x)|
+    catches shape changes (bimodality, tail shifts) that a comparison of
+    means or centroids cannot.  D = max |F_a(x) - F_b(x)|
     evaluated at every pooled support point, held as the exact rational
     |ca*nb - cb*na| / (na*nb) in DECIMAL(38,0) (ppm only at the very
     end), so both engines agree bit-for-bit.
@@ -1208,8 +1208,8 @@ def mannwhitney_value_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = global_prefix_sum(
         g.withColumn("c", F.col("c_a") + F.col("c_b")), ["cents"], ["c"]
     )
-    # operands promoted to DECIMAL(38,0) BEFORE multiplying (the chi2
-    # precedent): c_a * c_cum products pass int64 once the corpus passes
+    # operands promoted to DECIMAL(38,0) BEFORE multiplying: c_a * c_cum
+    # products pass int64 once the corpus passes
     # ~3e9 rows; the BIGINT OUTPUT columns hold U exactly up to ~3e9 rows
     # per group (U <= n_a*n_b) -- widen the final casts past that.
     # The tie_term output overflows BIGINT far EARLIER than U does:

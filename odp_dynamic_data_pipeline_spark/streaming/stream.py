@@ -718,8 +718,8 @@ def apply_incremental_sessions_batch(
         )
 
     def walk_bucket(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        # grouped-pandas machinery costs ~4 ms PER GROUP (the
-        # pair_page_views_exact buckets adjudication, PLANS.md); keying
+        # grouped-pandas machinery costs ~4 ms PER GROUP (measured on
+        # pair_page_views_exact with one group per user); keying
         # the Arrow stage on the store bucket and looping the UNCHANGED
         # per-user walk in-kernel (~50 us per group) makes the Python
         # stage bucket-count-shaped instead of user-count-shaped
@@ -831,7 +831,9 @@ def read_incremental_sessions(spark, store_path: str, out_path: str) -> DataFram
     )
     jvm, _, fs = _fs(spark, out_path)
     if fs.exists(jvm.org.apache.hadoop.fs.Path(out_path)):
-        closed = spark.read.parquet(f"{out_path}/batch=*")
+        # the directory itself, not a batch=* glob: Spark's streaming-sink
+        # metadata probe logs a FileNotFoundException for a glob path
+        closed = spark.read.parquet(out_path).drop("batch")
         return closed.unionByName(open_s)
     return open_s
 

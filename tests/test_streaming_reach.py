@@ -1,13 +1,13 @@
-"""Every definition in ``streaming/``, ``queries/relational2.py``,
-``queries/surfaces.py`` and ``queries/core.py`` is reached from non-test
-code.
+"""Every definition in ``streaming/`` and in each query module that
+registers a query is reached from non-test code.
 
 A stdlib-``ast`` scan in the style of ``test_unused_imports.py``: each
 top-level ``def``, ``class`` or single-name assignment in
-``odp_dynamic_data_pipeline_spark/streaming/`` and in those three query
-modules, and each non-dunder method of a top-level class, must be
-referenced from non-test code: the package, ``perfbench/``, ``tools/`` and
-``__spark_entry__.py``.
+``odp_dynamic_data_pipeline_spark/streaming/`` and in every
+``queries/*.py`` with a ``@register``-decorated query (found by scanning,
+so a new query module is covered without editing this file), and each
+non-dunder method of a top-level class, must be referenced from non-test
+code: the package, ``perfbench/``, ``tools/`` and ``__spark_entry__.py``.
 
 Top-level names resolve by module.  A name defined in module ``M`` counts
 as reached only if ``M`` itself names it outside the definition's own span
@@ -30,11 +30,11 @@ import ast
 import pathlib
 import symtable
 
+import pytest
+
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 STREAMING = ROOT / "odp_dynamic_data_pipeline_spark" / "streaming"
-RELATIONAL2 = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "relational2.py"
-SURFACES = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "surfaces.py"
-CORE = ROOT / "odp_dynamic_data_pipeline_spark" / "queries" / "core.py"
+QUERIES = ROOT / "odp_dynamic_data_pipeline_spark" / "queries"
 
 
 def non_test_sources() -> list[pathlib.Path]:
@@ -314,16 +314,18 @@ def test_scan_follows_package_reexports(tmp_path):
     assert unreached([impl], [init, impl, caller]) == ["impl.py:4 stop"]
 
 
-def test_relational2_definitions_are_reached_from_non_test_code():
-    assert unreached([RELATIONAL2], non_test_sources()) == []
+def registry_modules() -> list[pathlib.Path]:
+    """The ``queries/*.py`` files that register at least one query."""
+    return [
+        p
+        for p in sorted(QUERIES.glob("*.py"))
+        if any(_registered(node) for node in ast.parse(p.read_text()).body)
+    ]
 
 
-def test_surfaces_definitions_are_reached_from_non_test_code():
-    assert unreached([SURFACES], non_test_sources()) == []
-
-
-def test_core_definitions_are_reached_from_non_test_code():
-    assert unreached([CORE], non_test_sources()) == []
+@pytest.mark.parametrize("module", registry_modules(), ids=lambda p: p.stem)
+def test_query_module_definitions_are_reached(module):
+    assert unreached([module], non_test_sources()) == []
 
 
 def test_streaming_definitions_are_reached_from_non_test_code():

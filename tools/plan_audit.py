@@ -34,7 +34,6 @@ PANDAS_BY_DESIGN = {
     "multimodal_real_decode",  # mapInPandas WAV/PPM decode IS the operator
     "multimodal_resize",       # mapInPandas box-mean resize IS the operator
     "multimodal_ahash_dedup",  # mapInPandas perceptual hash IS the operator
-    "mapinarrow_embedding_norms",  # mapInArrow Arrow-native kernel IS the operator
     "session_cap_windows",         # anchor-restart cap walk: data-dependent recurrence, no window-algebra closed form
     "topic_assign_two_level",      # r14: Arrow int64-matmul two-level assignment IS the operator (similarity._assign_two_level_arrow)
     "semantic_dedup_linear",       # r14: same Arrow assignment stage feeds the within-cluster election
@@ -54,15 +53,12 @@ BROADCAST_NLJ_BY_DESIGN = {
     "hard_negative_mining",        # brute-force baseline: scan x broadcast queries
     "embedding_neardup_by_label",  # label-blocked exact pass
     "similarity_pq_topk",          # ADC scan x broadcast query tables
-    "tfidf_top_terms",             # corpus-constant N broadcast
     "token_surprisal_scores",      # corpus-constant token total broadcast
     "corpus_mixture_weights",      # single-row normalization totals broadcast
     "zipf_head_coverage",          # corpus-constant token total broadcast
-    "join_key_skew_report",        # single-row key-universe totals broadcast
     "token_drift_by_source",       # single-row grand-total broadcast
     "token_budget_allocation",     # single-row weight-total + leftover broadcasts
     "quality_signal_correlation",  # corpus-constant token total broadcast (surprisal leg)
-    "chi2_independence_lang_source",  # lang-marginal x source-marginal lattice (L*S rows), both broadcast aggs
     "degree_powerlaw_fit",         # single-row log-log moment broadcast over the degree histogram
     "ks_test_value_drift",         # single-row totals + single-row max-D broadcasts over the support
     "cluster_aware_split",         # two single-row report halves (split sizes x leak counts) crossed
@@ -81,16 +77,12 @@ PYTHON_SOURCE_BY_DESIGN = {
 }
 
 GLOBAL_WINDOW_BOUNDED = {
-    "join_key_skew_report",    # rank over top-20 skew keys (limit 20)
     "token_budget_allocation", # rank over per-source rows (bounded sources)
     "bpe_top_merges",          # rank over top-k merge pairs (limit top_k)
     "oov_rate_report",         # rank over top-k vocab tokens (limit top_k)
-    "tokenizer_fertility_report",  # rank over top-k vocab (limit top_k)
     "corpus_mixture_weights",  # largest-remainder rank over bounded sources
     "training_mixture_manifest",   # same largest-remainder pattern
     "zipf_head_coverage",      # cumulative share over top-k tokens
-    "dataset_card_report",     # ordered rows of a fixed-size report
-    "categorical_index_langs", # frequency rank over the distinct-lang vocab (bounded)
 }
 
 
