@@ -1,7 +1,4 @@
-from odp_dynamic_data_pipeline_spark.operators.aggregate import (
-    conditional_counts,
-    with_zero_default_universe,
-)
+from odp_dynamic_data_pipeline_spark.operators.aggregate import conditional_counts
 from odp_dynamic_data_pipeline_spark.operators.asof import asof_join
 from odp_dynamic_data_pipeline_spark.operators.correlate import (
     correlate_events_logs,
@@ -87,5 +84,4 @@ __all__ = [
     "simhash",
     "stratified_sample",
     "token_stats",
-    "with_zero_default_universe",
 ]

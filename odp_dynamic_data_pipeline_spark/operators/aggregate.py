@@ -1,15 +1,11 @@
-"""A1-A5: grouped and conditional aggregation with zero-defaults.
+"""A1, A3-A5: grouped and conditional aggregation.
 
-Reference semantics: every client touched by *any* user-experience event gets
-a metrics row, with all-zero defaults (src/batch_tlb.py:38,41-43 -- the
-golden 'client2' row is all-zero except log-derived counts).  Conditional
-counts are per-eventType counters (src/batch_tlb.py:72-77).
-
+Conditional counts are per-eventType counters (src/batch_tlb.py:72-77).
 Spark-native: one ``groupBy(keys).agg`` with ``count(when(...))`` legs --
 partial (map-side) aggregation comes free, so at 100 TB each executor
 pre-collapses its partitions before the single shuffle on the group key.
-Zero-defaults for metric legs computed on *other* tables are handled by
-left-joining those legs onto the key universe and coalescing to zero.
+The TLB job's zero-defaults (A2) need no universe join: it groups every
+event row once (``plans/tlb.py``).
 """
 
 from __future__ import annotations
@@ -30,23 +26,6 @@ def conditional_counts(
     aggs = [F.count(F.when(cond, F.lit(1))).alias(name) for name, cond in conditions.items()]
     aggs += [expr.alias(name) for name, expr in (extra_aggs or {}).items()]
     return df.groupBy(*group_cols).agg(*aggs)
-
-
-def with_zero_default_universe(
-    universe: DataFrame,
-    legs: list[tuple[DataFrame, list[str]]],
-    key_cols: list[str] | str,
-) -> DataFrame:
-    """Left-join metric legs onto the key universe, coalescing numeric metric
-    columns to 0 so zero-metric keys survive (A2; golden client2)."""
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    out = universe
-    for leg, metric_cols in legs:
-        out = out.join(leg, on=key_cols, how="left")
-        for c in metric_cols:
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(0)))
-    return out
 
 
 def weighted_median(

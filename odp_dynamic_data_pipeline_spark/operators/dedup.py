@@ -203,10 +203,13 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # verification joins the candidates back to the hashed-shingle table;
-    # intersect/union over bigint arrays (xxhash64 collisions: ~2^-64/pair)
+    # verification joins the candidates back to the hashed-shingle table
+    # and intersects the bigint arrays (xxhash64 collisions: ~2^-64/pair);
+    # both come out of array_distinct, so |A|B| = |A| + |B| - |A&B| needs
+    # no array_union
     ha = hashed.selectExpr(f"{id_col} AS id_a", "hsh AS h_a")
     hb = hashed.selectExpr(f"{id_col} AS id_b", "hsh AS h_b")
+    t = int(threshold_e6)
     return (
         cand.join(ha, "id_a")
         .join(hb, "id_b")
@@ -214,10 +217,14 @@ def minhash_lsh_pairs(
             "id_a",
             "id_b",
             "CAST(size(array_intersect(h_a, h_b)) AS BIGINT) AS inter",
-            "CAST(size(array_union(h_a, h_b)) AS BIGINT) AS uni",
+            "CAST(size(h_a) + size(h_b) AS BIGINT) AS __sizes",
         )
+        # jaccard_e6 >= t with inter used once, since the optimizer inlines
+        # this filter into the join condition: for uni > 0,
+        # (1e6 * inter) div uni >= t  <=>  (1e6 + t) * inter >= t * __sizes
+        .where(f"{1_000_000 + t} * inter >= {t} * __sizes")
+        .selectExpr("id_a", "id_b", "inter", "__sizes - inter AS uni")
         .selectExpr("*", "(1000000 * inter) div uni AS jaccard_e6")
-        .where(f"jaccard_e6 >= {int(threshold_e6)}")
     )
 
 

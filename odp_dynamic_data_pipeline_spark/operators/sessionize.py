@@ -53,7 +53,7 @@ def _with_ordinal(df: DataFrame, tiebreak_col: str | None) -> DataFrame:
     return df.withColumn("__ord", F.col(tiebreak_col) if tiebreak_col else F.monotonically_increasing_id())
 
 
-def pair_page_views(
+def _walk_page_views(
     df: DataFrame,
     *,
     group_col: str = "clientId",
@@ -64,11 +64,8 @@ def pair_page_views(
     tiebreak_col: str | None = None,
     duration_col: str = "page_view_duration",
 ) -> DataFrame:
-    """Emit one row per consumed (start, end) pair:
-    (group_col, end ts, duration seconds as double).
-
-    Same-timestamp events walk in input order (:func:`_with_ordinal`);
-    ``tiebreak_col`` names a column that orders them instead."""
+    """Every row of ``df`` plus ``duration_col``: on an end that consumes a
+    start, the seconds since that start; null on every other row."""
     ordered = Window.partitionBy(group_col).orderBy(F.col(ts_col), F.col("__ord"))
     w = ordered.rowsBetween(Window.unboundedPreceding, -1)
     is_start = F.col(type_col) == start_type
@@ -86,13 +83,39 @@ def pair_page_views(
     return (
         _with_ordinal(df, tiebreak_col)
         .withColumn("__pos", F.row_number().over(ordered))
-        .withColumn("__dur", F.when(is_emit, dur))
-        .filter(F.col("__dur").isNotNull())
-        .select(
-            F.col(group_col),
-            F.col(ts_col).alias("end_ts"),
-            F.col("__dur").alias(duration_col),
-        )
+        .withColumn(duration_col, F.when(is_emit, dur))
+        .drop("__ord", "__pos")
+    )
+
+
+def pair_page_views(
+    df: DataFrame,
+    *,
+    group_col: str = "clientId",
+    ts_col: str = "event_time",
+    type_col: str = "eventType",
+    start_type: str = "page_view_start",
+    end_type: str = "page_view_end",
+    tiebreak_col: str | None = None,
+    duration_col: str = "page_view_duration",
+) -> DataFrame:
+    """Emit one row per consumed (start, end) pair:
+    (group_col, end ts, duration seconds as double).
+
+    Same-timestamp events walk in input order (:func:`_with_ordinal`);
+    ``tiebreak_col`` names a column that orders them instead."""
+    walked = _walk_page_views(
+        df,
+        group_col=group_col,
+        ts_col=ts_col,
+        type_col=type_col,
+        start_type=start_type,
+        end_type=end_type,
+        tiebreak_col=tiebreak_col,
+        duration_col=duration_col,
+    )
+    return walked.filter(F.col(duration_col).isNotNull()).select(
+        F.col(group_col), F.col(ts_col).alias("end_ts"), F.col(duration_col)
     )
 
 

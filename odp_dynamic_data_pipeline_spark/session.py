@@ -81,6 +81,18 @@ BUILD_CONFS: dict[str, str] = {
     # (BNLJ, sort) fall off a cliff (measured: same query 0.8s early in the
     # session, 9s+ after ~90 queries), hence the 1g reservation.
     "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g -XX:TieredStopAtLevel=1",
+    # The driver's memory policy.  An 8g heap gives G1 4 MB regions, and
+    # G1 allocates any array of half a region or more as "humongous": in
+    # its own regions, outside the young generation, each one a possible
+    # GC pause.  Spark's default Tungsten page (up to 64 MB for sorters,
+    # hash-aggregate maps and BytesToBytesMap) and 4 MB broadcast chunks
+    # are all humongous, and in a fresh hourly driver they were half of
+    # the bytes allocated and most of its GC.  1 MB pages and chunks stay
+    # young.  The price: a task's 8,192-entry page table then caps its
+    # Tungsten memory at 8 GB, above the local driver's ~4.4 GB execution
+    # pool (README "The driver JVM's memory policy").
+    "spark.buffer.pageSize": "1m",
+    "spark.broadcast.blockSize": "1m",
 }
 
 

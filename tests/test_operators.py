@@ -1,6 +1,6 @@
 """Unit tests for the hard-part operator semantics (SURVEY.md section 7):
-P2 last-wins, P3 collision-overwrite, J5/J6 multiplicity, A2 zero-defaults,
-P1 nested dot-path."""
+P2 last-wins, P3 collision-overwrite, J5/J6 multiplicity, P1 nested
+dot-path."""
 
 from __future__ import annotations
 
@@ -8,10 +8,7 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
-from odp_dynamic_data_pipeline_spark.operators.aggregate import (
-    conditional_counts,
-    with_zero_default_universe,
-)
+from odp_dynamic_data_pipeline_spark.operators.aggregate import conditional_counts
 from odp_dynamic_data_pipeline_spark.operators.correlate import (
     correlate_events_logs,
     explode_spans,
@@ -93,16 +90,6 @@ def test_explode_spans(spark):
         ("t1", "s1"),
         ("t1", "s2"),
     }
-
-
-def test_zero_default_universe(spark):
-    """Zero-metric clients must survive (golden client2; reference
-    src/batch_tlb.py:38)."""
-    universe = spark.createDataFrame([("c1",), ("c2",)], "clientId string")
-    leg = spark.createDataFrame([("c1", 5)], "clientId string, retry_count long")
-    out = {r["clientId"]: r["retry_count"] for r in
-           with_zero_default_universe(universe, [(leg, ["retry_count"])], "clientId").collect()}
-    assert out == {"c1": 5, "c2": 0}
 
 
 def test_conditional_counts(spark):

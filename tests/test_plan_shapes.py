@@ -265,3 +265,16 @@ def test_minhash_lsh_one_lazy_plan(spark):
     assert "zip_with" not in plan and not re.search(r"\baggregate\(", plan)
     assert re.search(r"\*\(\d+\) HashAggregate\(keys=\[doc_id#\d+L, band#\d+\], functions=\[min\(xxhash64\(", plan)
     assert re.search(r"ReusedExchange \[[^\]]*\b(hsh|h_b)#", plan)
+
+
+def test_minhash_lsh_verifies_without_array_union(spark):
+    """Verification intersects each candidate pair's distinct shingle
+    hashes and derives the union's size from it: the final plan has no
+    array_union, and array_intersect appears only in the join condition
+    (into which the optimizer inlines the threshold filter) and in the
+    projection above it."""
+    df = SPARK_QUERIES["dedup_minhash_lsh"](spark, SF)
+    assert df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert "array_union" not in final
+    assert final.count("array_intersect") == 2, final

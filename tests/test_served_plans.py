@@ -2,16 +2,19 @@
 
 The TLB job over the reference hour, read as ``perfbench/workloads.py``
 reads it: each raw JSON file through ``sources.readers.read_json`` with its
-declared schema, then ``plans.tlb_metrics``.  The executed plan's file scans
-must read no column beyond the ones they read today (column pruning,
-nested fields included).  The bounds are today's values: a change that
-prunes more tightens them, and one that reads more fails here.
+declared schema, then ``plans.tlb_metrics``.  The executed plan must scan
+each raw file once, read no column beyond the ones it reads today (column
+pruning, nested fields included), and run in at most today's jobs and
+exchanges.  The bounds are today's values: a change that prunes more
+tightens them, and one that reads more fails here.
 """
 
 from __future__ import annotations
 
 import os
 import re
+
+import pytest
 
 from odp_dynamic_data_pipeline_spark.plans import tlb_metrics
 from odp_dynamic_data_pipeline_spark.sources import readers, schemas
@@ -27,6 +30,11 @@ TLB_READ_BOUNDS = {
     "trace": {"traceId", "spans.spanId", "spans.server", "spans.log"},
     "log": {"spanId", "eventType"},
 }
+# one pass: two shuffles (the page-view walk by clientId, the per-trace
+# counts by traceId) and two broadcasts (the exploded spans, the per-trace
+# counts), each exchange a job, plus the result job
+TLB_MAX_JOBS = 5
+TLB_MAX_EXCHANGES = 4
 
 
 def _split_top(body: str) -> list[str]:
@@ -66,7 +74,10 @@ def file_scans(plan: str) -> list[tuple[str, set[str]]]:
     return out
 
 
-def test_tlb_scans_read_only_the_columns_they_use(spark):
+@pytest.fixture(scope="module")
+def tlb_run(spark):
+    """(final executed plan, ids of the jobs it ran) of the TLB job."""
+    sc = spark.sparkContext
     # the scan node abbreviates metadata past this many characters, which
     # would cut a ReadSchema short
     with temp_confs(spark, {"spark.sql.maxMetadataStringLength": "100000"}):
@@ -74,10 +85,28 @@ def test_tlb_scans_read_only_the_columns_they_use(spark):
         trc = readers.read_json(spark, f"{FIXTURES}/trace_{HOUR}.json", schemas.TRACE_SCHEMA)
         lg = readers.read_json(spark, f"{FIXTURES}/log_{HOUR}.json", schemas.LOG_SCHEMA)
         df = tlb_metrics(ue, trc, lg)
-        df.collect()
+        sc.setJobGroup("served-plans-tlb", "TLB plan contract")
+        try:
+            df.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         plan = df._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    scans = file_scans(final)
+    jobs = sc.statusTracker().getJobIdsForGroup("served-plans-tlb")
+    return plan.split("== Initial Plan ==")[0], jobs
+
+
+def test_tlb_scans_read_only_the_columns_they_use(tlb_run):
+    scans = file_scans(tlb_run[0])
     assert {stem for stem, _ in scans} == set(TLB_READ_BOUNDS), scans
     for stem, cols in scans:
         assert cols <= TLB_READ_BOUNDS[stem], (stem, sorted(cols - TLB_READ_BOUNDS[stem]))
+
+
+def test_tlb_is_one_pass(tlb_run):
+    final, jobs = tlb_run
+    stems = sorted(stem for stem, _ in file_scans(final))
+    assert stems == sorted(TLB_READ_BOUNDS), stems
+    assert len(jobs) <= TLB_MAX_JOBS, sorted(jobs)
+    # shuffle and broadcast exchanges; a ReusedExchange runs nothing new
+    exchanges = re.findall(r"\b(?:Broadcast)?Exchange ", final)
+    assert len(exchanges) <= TLB_MAX_EXCHANGES, exchanges

@@ -1,10 +1,13 @@
-"""Session policy: string case mapping runs on the JVM, not ICU.
+"""Session policy.
 
-``session.RUNTIME_CONFS`` turns ``spark.sql.icu.caseMappings.enabled``
-off, both on a session ``get_spark`` builds and on a plain session that
-``ensure_runtime_confs`` is applied to (README "Case mapping without
-ICU").  ASCII text maps exactly as before, so the dedup keys of ASCII
-corpora do not move."""
+String case mapping runs on the JVM, not ICU: ``session.RUNTIME_CONFS``
+turns ``spark.sql.icu.caseMappings.enabled`` off, both on a session
+``get_spark`` builds and on a plain session that ``ensure_runtime_confs``
+is applied to (README "Case mapping without ICU").  ASCII text maps
+exactly as before, so the dedup keys of ASCII corpora do not move.
+
+No Tungsten page or broadcast chunk of a ``get_spark`` driver is a G1
+humongous object (README "The driver JVM's memory policy")."""
 
 from __future__ import annotations
 
@@ -44,6 +47,23 @@ def test_ensure_runtime_confs_turns_icu_case_mapping_off_on_a_plain_session(spar
     assert plain.conf.get(ICU_CONF) == "true"
     ensure_runtime_confs(plain)
     assert plain.conf.get(ICU_CONF) == "false"
+
+
+def test_driver_pages_and_broadcast_chunks_are_not_humongous(spark):
+    # G1 allocates an object of half a region or more outside the young
+    # generation; a heap or page change that crosses that line brings the
+    # humongous allocations and their GC pauses back
+    jvm = spark._jvm
+    env = jvm.org.apache.spark.SparkEnv.get()
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    region = int(bean.getVMOption("G1HeapRegionSize").getValue())
+    page = env.memoryManager().pageSizeBytes()
+    block = env.conf().getSizeAsBytes("spark.broadcast.blockSize", "4m")
+    assert region > 0
+    assert 2 * page < region, (page, region)
+    assert 2 * block < region, (block, region)
 
 
 def test_case_mapping_matches_python(spark):
